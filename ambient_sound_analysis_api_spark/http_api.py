@@ -221,6 +221,7 @@ def make_handler(
                     _q(p, "delta_f", "3oct", str),
                     _q(p, "band_low", 63.0, float),
                     _q(p, "band_high", 8000.0, float),
+                    _q(p, "validate", True, bool),
                 )
                 return out, {"X-Point-Count": len(out["points"])}
             if path == "/aggregations/psd":

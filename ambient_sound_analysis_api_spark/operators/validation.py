@@ -2,18 +2,18 @@
 
 The reference validates requests with a linear scan over cached inventory
 options plus an interval-overlap test (``app/services/get_timeseries.py:
-101-184``). Here it is the same logic as a **broadcast semi-join**: a 1-row
-request against the tiny catalog with an equi-condition on the product key
-and a range condition on coverage — the shape Spark would use even if the
-catalog had millions of rows.
+101-184``). Here it is the same scan over the catalog *snapshot*: the
+catalog has one row per product, so the serving Engine collects it once at
+construction into a tuple of rows and every preflight is pure Python on
+the driver — no Spark job on the request path.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Row
 
 from ..errors import (
     OutsideCoverageError,
@@ -23,42 +23,8 @@ from ..errors import (
 )
 
 
-def coverage_lookup(
-    spark: SparkSession,
-    catalog: DataFrame,
-    hydrophone: str,
-    freq_type: str,
-    delta_f: int | None,
-    delta_t: int,
-    start: datetime,
-    end: datetime,
-) -> DataFrame:
-    """Catalog rows matching the requested product that overlap [start, end).
-
-    Overlap predicate matches the reference's rejection condition
-    ``end < coverage_start or start > coverage_end``
-    (``app/services/get_timeseries.py:135-143, 176-184``).
-    """
-    request = spark.createDataFrame(
-        [(hydrophone, freq_type, delta_f, delta_t, start, end)],
-        "r_hydrophone string, r_freq_type string, r_delta_f int, "
-        "r_delta_t int, r_start timestamp, r_end timestamp",
-    )
-    cond = (
-        (F.col("hydrophone") == F.col("r_hydrophone"))
-        & (F.col("freq_type") == F.col("r_freq_type"))
-        & (F.col("delta_t") == F.col("r_delta_t"))
-        # broadband products carry delta_f = null → null-safe equality
-        & F.col("delta_f").eqNullSafe(F.col("r_delta_f"))
-        & (F.col("r_start") <= F.col("last_end"))
-        & (F.col("r_end") >= F.col("first_start"))
-    )
-    return catalog.join(F.broadcast(request), cond, "inner").select(catalog.columns)
-
-
 def validate_request(
-    spark: SparkSession,
-    catalog: DataFrame,
+    catalog: Sequence[Row],
     hydrophone: str,
     freq_type: str,
     delta_f: int | None,
@@ -70,10 +36,12 @@ def validate_request(
 
     Raises UnknownHydrophoneError / UnavailableCombinationError /
     OutsideCoverageError in the same precedence order the reference checks
-    (``app/services/get_timeseries.py:101-184``). The catalog is tiny, so the
-    three probes collapse into driver-side checks over one collected slice.
+    (``app/services/get_timeseries.py:101-184``) over the collected catalog
+    rows. Overlap matches the reference's rejection condition
+    ``end < coverage_start or start > coverage_end``
+    (``app/services/get_timeseries.py:135-143, 176-184``).
     """
-    rows = catalog.filter(F.col("hydrophone") == hydrophone).collect()
+    rows = [r for r in catalog if r["hydrophone"] == hydrophone]
     if not rows:
         raise UnknownHydrophoneError(f"unknown hydrophone {hydrophone!r}")
     combo = [
@@ -81,6 +49,7 @@ def validate_request(
         for r in rows
         if r["freq_type"] == freq_type
         and r["delta_t"] == delta_t
+        # broadband products carry delta_f = None; == is null-safe here
         and (r["delta_f"] == delta_f or freq_type == "broadband")
     ]
     if not combo:

@@ -10,7 +10,13 @@ Driver/executor discipline: counts and caps are computed DataFrame-side;
 only the bounded serving payload (≤ MAX_AGGREGATION_POINTS buckets, or a
 ≤31-day raw window) is ever collected, so the driver never materializes an
 unbounded result (contrast: the reference loads whole months into process
-memory, ``docs/upstream-notes.md:65-71``).
+memory, ``docs/upstream-notes.md:65-71``). Because that payload is bounded,
+an uncached request runs one Spark plan and one collect; ordering, the PSD
+pivot and the catalog preflight are plain Python over collected rows.
+
+An Engine serves a snapshot of ``root`` taken at construction: the catalog
+rows and the parquet listing of ``root/data`` are both read once in
+``__init__``. Archives added later are picked up by a new Engine.
 
 Request memoization mirrors the reference's ``lru_cache`` layer
 (``app/services/*.py``, measured 24.67 s → 0.016 s on repeat,
@@ -97,10 +103,13 @@ class Engine:
             from .sources.listing import auto_lister
 
             key_lister = auto_lister(path=f"{root}/archive_keys.parquet")
-        # catalog: tiny (one row per product), cached and reused by every
-        # preflight validation (reference C4/C5)
-        self._catalog = build_catalog(key_lister.list_keys(spark)).cache()
-        self._catalog.count()  # materialize once
+        # catalog snapshot: one row per product, collected once and read
+        # by every preflight validation and /options in pure Python
+        # (reference C4/C5); immutable, so request threads share it
+        self._catalog = tuple(build_catalog(key_lister.list_keys(spark)).collect())
+        # one data frame: the parquet listing and schema inference run here,
+        # not per request; every scan filters this frame
+        self._frame = spark.read.parquet(f"{root}/data")
         # memoized request entry points (reference lru_cache sizes,
         # app/services/get_options.py:54, get_timeseries.py:233,287,
         # get_aggregations.py:310-548)
@@ -116,7 +125,7 @@ class Engine:
     # ------------------------------------------------------------------ scans
 
     def _data(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.root}/data")
+        return self._frame
 
     def _scan(
         self,
@@ -144,16 +153,17 @@ class Engine:
         start: datetime, end: datetime,
     ) -> int:
         """Catalog-side probe for the integrity check (reference
-        ``_matching_file_count``, ``get_timeseries.py:71-81``)."""
-        rows = self._catalog.filter(
-            (F.col("hydrophone") == slug)
-            & (F.col("freq_type") == freq_type)
-            & (F.col("delta_t") == delta_t)
-            & F.col("delta_f").eqNullSafe(F.lit(delta_f))
-            & (F.lit(start) <= F.col("last_end"))
-            & (F.lit(end) >= F.col("first_start"))
-        ).collect()
-        return int(sum(r["file_count"] for r in rows))
+        ``_matching_file_count``, ``get_timeseries.py:71-81``); tuple
+        equality keeps the ``delta_f`` match null-safe."""
+        product = (slug, freq_type, delta_f, delta_t)
+        return sum(
+            r["file_count"]
+            for r in self._catalog
+            if (r["hydrophone"], r["freq_type"], r["delta_f"], r["delta_t"])
+            == product
+            and start <= r["last_end"]
+            and end >= r["first_start"]
+        )
 
     # ----------------------------------------------------------- cap preflight
 
@@ -197,15 +207,14 @@ class Engine:
     def _options(self, hydrophone: str | None = None) -> dict:
         """Archive inventory (reference GET /options,
         ``app/services/get_options.py:216-224``)."""
-        cat = self._catalog
         if hydrophone is not None:
-            cat = cat.filter(F.col("hydrophone") == _norm_slug(hydrophone))
+            slug = _norm_slug(hydrophone)
+            rows = [r for r in self._catalog if r["hydrophone"] == slug]
         else:
             # C7: the all-hydrophone listing omits the untrustworthy sandbox
             # archive; an explicit request still reaches it (reference
             # ``app/services/get_options.py:59-64``, ``README.md:66-70``)
-            cat = cat.filter(F.col("hydrophone") != "SANDBOX")
-        rows = cat.collect()
+            rows = [r for r in self._catalog if r["hydrophone"] != "SANDBOX"]
         if hydrophone is not None and not rows:
             raise UnknownHydrophoneError(f"unknown hydrophone {hydrophone!r}")
         out: dict = {}
@@ -244,16 +253,15 @@ class Engine:
         validate_window(start, end, max_days=MAX_WINDOW_DAYS)
         if validate:
             validate_request(
-                self.spark, self._catalog, slug, "broadband", None, delta_t,
+                self._catalog, slug, "broadband", None, delta_t,
                 start, end,
             )
         pts_df = (
             self._scan("broadband", None, delta_t, slug, start, end)
             .filter(is_finite(F.col("value")))
             .select(F.date_format("ts", _ISO).alias("ts"), "value")
-            .orderBy("ts")
         )
-        points = [(r["ts"], float(r["value"])) for r in pts_df.collect()]
+        points = sorted((r["ts"], float(r["value"])) for r in pts_df.collect())
         integrity_probe(
             len(points),
             self._matching_file_count(slug, "broadband", None, delta_t, start, end)
@@ -286,15 +294,14 @@ class Engine:
         validate_window(start, end, max_days=MAX_WINDOW_DAYS)
         if validate:
             validate_request(
-                self.spark, self._catalog, slug, freq_type, freq_value,
+                self._catalog, slug, freq_type, freq_value,
                 delta_t, start, end,
             )
         scan = self._scan(freq_type, freq_value, delta_t, slug, start, end)
-        bands = [
-            r["band_hz"]
-            for r in scan.select("band_hz").distinct().orderBy("band_hz").collect()
-        ]
-        if not bands:
+        cells = scan.groupBy("ts", "band_hz").agg(
+            F.avg("value").alias("value")
+        ).collect()
+        if not cells:
             integrity_probe(
                 0,
                 self._matching_file_count(
@@ -305,18 +312,12 @@ class Engine:
                 "hydrophone": slug, "delta_t": delta_t, "delta_f": delta_f,
                 "times": [], "frequencies": [], "values": [],
             }
-        wide = ts_ops.psd_matrix(
-            scan.select("ts", "band_hz", "value"), bands
-        ).collect()
-        times = [r["ts"].isoformat() for r in wide]
-        values = [
-            [_json_float(r[ts_ops._band_col(b)]) for b in bands] for r in wide
-        ]
+        times, bands, values = _pivot(cells, "ts", "value")
         return {
             "hydrophone": slug,
             "delta_t": delta_t,
             "delta_f": delta_f,
-            "times": times,
+            "times": [t.isoformat() for t in times],
             "frequencies": [str(b) for b in bands],
             "values": values,
         }
@@ -341,7 +342,7 @@ class Engine:
         validate_interval_fits(start, end, interval)
         if validate:
             validate_request(
-                self.spark, self._catalog, slug, "broadband", None, delta_t,
+                self._catalog, slug, "broadband", None, delta_t,
                 start, end,
             )
         scan = self._scan("broadband", None, delta_t, slug, start, end)
@@ -349,19 +350,11 @@ class Engine:
         self._precollect_point_cap(
             bucketed, start, end, INTERVALS[interval], "broadband aggregation"
         )
-        buckets = (
-            bucketed.select(
-                F.date_format("bucket_ts", _ISO).alias("t"), "mean_value"
-            )
-            .orderBy("t")
-            .collect()
-        )
+        buckets = bucketed.select(
+            F.date_format("bucket_ts", _ISO).alias("t"), "mean_value"
+        ).collect()
         check_point_cap(len(buckets), "broadband aggregation")
-        points = [
-            (r["t"], float(r["mean_value"]))
-            for r in buckets
-            if math.isfinite(r["mean_value"])
-        ]
+        points = _finite_points(buckets)
         return {
             "hydrophone": slug, "interval": interval, "points": points,
             "point_count": len(points),
@@ -389,35 +382,30 @@ class Engine:
         validate_interval_fits(start, end, interval)
         if validate:
             validate_request(
-                self.spark, self._catalog, slug, freq_type, freq_value,
+                self._catalog, slug, freq_type, freq_value,
                 delta_t, start, end,
             )
         scan = self._scan(freq_type, freq_value, delta_t, slug, start, end)
-        n_bands = scan.filter(
-            F.col("band_hz").between(band_low, band_high)
-        ).select("band_hz").distinct().count()
-        if n_bands == 0:
-            raise RequestValidationError(
-                f"no PSD bands in range [{band_low}, {band_high}]"
-            )
         bucketed = agg.band_mean(scan, INTERVALS[interval], band_low, band_high)
         self._precollect_point_cap(
             bucketed, start, end, INTERVALS[interval], "band aggregation"
         )
-        buckets = (
-            bucketed.select(F.date_format("bucket_ts", _ISO).alias("t"), "mean_value")
-            .orderBy("t")
-            .collect()
-        )
+        buckets = bucketed.select(
+            F.date_format("bucket_ts", _ISO).alias("t"), "mean_value"
+        ).collect()
         check_point_cap(len(buckets), "band aggregation")
+        # no finite bucket: tell "no band in range" (a 400) apart from
+        # in-band rows that are all non-finite (an empty series)
+        if not buckets and scan.filter(
+            F.col("band_hz").between(band_low, band_high)
+        ).limit(1).count() == 0:
+            raise RequestValidationError(
+                f"no PSD bands in range [{band_low}, {band_high}]"
+            )
         return {
             "hydrophone": slug, "interval": interval,
             "band_low": float(band_low), "band_high": float(band_high),
-            "points": [
-                (r["t"], float(r["mean_value"]))
-                for r in buckets
-                if math.isfinite(r["mean_value"])
-            ],
+            "points": _finite_points(buckets),
         }
 
     def _psd_heatmap(
@@ -445,7 +433,7 @@ class Engine:
         validate_interval_fits(start, end, interval)
         if validate:
             validate_request(
-                self.spark, self._catalog, slug, freq_type, freq_value,
+                self._catalog, slug, freq_type, freq_value,
                 delta_t, start, end,
             )
         scan = self._scan(freq_type, freq_value, delta_t, slug, start, end)
@@ -454,18 +442,13 @@ class Engine:
             cell_df, start, end, INTERVALS[interval], "psd heatmap",
             time_col="bucket_ts",
         )
-        cells = cell_df.collect()
-        times = sorted({r["bucket_ts"] for r in cells})
+        times, bands, values = _pivot(cell_df.collect(), "bucket_ts", "mean_value")
         check_point_cap(len(times), "psd heatmap")
-        bands = sorted({r["band_hz"] for r in cells})
-        by_cell = {(r["bucket_ts"], r["band_hz"]): r["mean_value"] for r in cells}
         return {
             "hydrophone": slug, "interval": interval, "delta_f": delta_f,
             "times": [t.isoformat() for t in times],
             "frequencies": [str(b) for b in bands],
-            "values": [
-                [_json_float(by_cell.get((t, b))) for b in bands] for t in times
-            ],
+            "values": values,
         }
 
     def _daily_summary(
@@ -548,6 +531,34 @@ def _parse_delta_f(delta_f: str) -> tuple[str, int | None]:
     if s.endswith("hz") and s[:-2].isdigit():
         return "delta_hz", int(s[:-2])
     raise RequestValidationError(f"invalid delta_f selector {delta_f!r}")
+
+
+def _finite_points(buckets: list) -> list[tuple[str, float]]:
+    """Collected ``(t, mean_value)`` buckets → time-ordered finite points.
+    The payload is capped, so ordering on the driver replaces a global
+    ``orderBy`` (a sampling job plus a range exchange)."""
+    return sorted(
+        (r["t"], float(r["mean_value"]))
+        for r in buckets
+        if math.isfinite(r["mean_value"])
+    )
+
+
+def _pivot(cells: list, time_col: str, value_col: str):
+    """Long ``(time, band_hz, value)`` cells → ``(times, bands, values)``:
+    sorted times and bands and a time × band matrix, missing and non-finite
+    cells as None. A time whose cells are all null is dropped, as in
+    ``timeseries.psd_matrix`` (reference ``dropna(how='all')``)."""
+    by_time: dict = {}
+    for r in cells:
+        by_time.setdefault(r[time_col], {})[r["band_hz"]] = r[value_col]
+    bands = sorted({r["band_hz"] for r in cells})
+    times = sorted(
+        t for t, row in by_time.items() if any(v is not None for v in row.values())
+    )
+    return times, bands, [
+        [_json_float(by_time[t].get(b)) for b in bands] for t in times
+    ]
 
 
 def _json_float(v) -> float | None:

@@ -107,6 +107,24 @@ def test_band_aggregation_endpoint(api):
     assert len(body["points"]) == int(headers["X-Point-Count"]) > 0
 
 
+def test_band_aggregation_honours_validate_false(api):
+    """``validate=false`` skips the coverage preflight on the band route as
+    on every other validating route: a window outside coverage then fails
+    on the empty band range, not on the preflight."""
+    url = (
+        f"{api}/aggregations/band?hydrophone=view"
+        "&start=2030-01-01T00:00:00&end=2030-01-02T00:00:00"
+    )
+    details = []
+    for suffix in ("", "&validate=false"):
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            _get(url + suffix)
+        assert exc.value.code == 400
+        details.append(json.loads(exc.value.read())["detail"])
+    assert "outside the coverage area" in details[0]
+    assert "no PSD bands in range" in details[1]
+
+
 def test_timing_log_line_per_request(api):
     """S7: every completed request (success or error) appends one timing
     line with wall-time and payload size (reference ``app/main.py:48-81``)."""

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
-from datetime import datetime
+import json
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+from datetime import datetime, timedelta
 
 import pytest
 
@@ -11,7 +14,8 @@ from ambient_sound_analysis_api_spark.errors import (
     UnknownHydrophoneError,
     WindowTooLargeError,
 )
-from ambient_sound_analysis_api_spark.serving import Engine
+from ambient_sound_analysis_api_spark.http_api import _jsonable
+from ambient_sound_analysis_api_spark.serving import Engine, _json_float
 from ambient_sound_analysis_api_spark.sources.domain import materialize_domain
 
 START = datetime(2024, 1, 5)
@@ -258,3 +262,148 @@ def test_options_skips_sandbox_unless_explicit(spark, tmp_path_factory, sf_dir):
     eng = Engine(spark, root)
     assert "SANDBOX" not in eng.options()
     assert "broadband" in eng.options("sandbox")["SANDBOX"]
+
+
+# one request per route on the module test domain: (route, args, kwargs)
+ROUTE_CALLS = (
+    ("options", (), {}),
+    ("broadband_timeseries", ("click", START, END), {}),
+    ("psd_timeseries", ("view", START, datetime(2024, 1, 6)), {}),
+    ("broadband_aggregation", ("click", START, END), {}),
+    ("band_aggregation", ("view", START, END),
+     {"band_low": 100, "band_high": 1000}),
+    ("psd_heatmap", ("view", START, END), {}),
+    ("daily_summary", ("view", datetime(2024, 1, 1)), {"num_days": 30}),
+    ("daily_broadband_summary", ("click", datetime(2024, 1, 1)),
+     {"num_days": 30}),
+)
+
+# Spark jobs one uncached request runs on the module test domain; a plan
+# regression (an extra collect, a global sort, a per-request listing)
+# raises a count above its pin
+JOB_PINS = {
+    "broadband_timeseries": 1,
+    "psd_timeseries": 2,
+    "broadband_aggregation": 2,
+    "band_aggregation": 2,
+    "psd_heatmap": 2,
+    "daily_summary": 5,
+    "daily_broadband_summary": 4,
+}
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs started by ``fn``, counted through its own job group."""
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_uncached_request_job_counts(spark, engine):
+    """Validation and /options read the catalog snapshot (0 jobs); each
+    data route runs its one plan and stays at its pinned job count."""
+    counts = {}
+    for route, args, kwargs in ROUTE_CALLS:
+        entry = getattr(engine, route)
+        entry.cache_clear()
+        counts[route] = _jobs_run(spark, lambda: entry(*args, **kwargs))
+
+    def rejected():
+        with pytest.raises(OutsideCoverageError):
+            engine.broadband_timeseries(
+                "click", datetime(2030, 1, 1), datetime(2030, 1, 2)
+            )
+
+    assert counts.pop("options") == 0
+    assert _jobs_run(spark, rejected) == 0
+    assert all(counts[r] <= JOB_PINS[r] for r in JOB_PINS), counts
+
+
+def test_concurrent_requests_match_sequential(engine):
+    """4 threads × the 8 routes on one Engine (shared data frame and
+    catalog snapshot, memo bypassed) give byte-equal responses to a
+    sequential run of the same requests."""
+    def body(call) -> bytes:
+        route, args, kwargs = call
+        out = getattr(engine, f"_{route}")(*args, **kwargs)
+        return json.dumps(_jsonable(out), default=str).encode()
+
+    expected = [body(c) for c in ROUTE_CALLS]
+
+    def worker(shift: int) -> list[bytes]:
+        # each thread walks the routes in its own order, so different
+        # plans run at the same time
+        order = ROUTE_CALLS[shift:] + ROUTE_CALLS[:shift]
+        got = [body(c) for c in order]
+        return got[-shift:] + got[:-shift] if shift else got
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        results = list(pool.map(worker, (0, 2, 4, 6), timeout=600))
+    assert all(r == expected for r in results)
+
+
+@pytest.fixture(scope="module")
+def parity_engine(spark, tmp_path_factory):
+    """A tiny PSD archive with a null cell, an all-null timestamp, a NaN
+    cell, a missing cell, a duplicated cell and a band (250 Hz) whose rows
+    are all non-finite."""
+    root = str(tmp_path_factory.mktemp("parity_domain"))
+    t = [START + timedelta(seconds=i) for i in range(4)]
+    nan = float("nan")
+    cells = [
+        (t[0], 63.0, 1.0), (t[0], 125.0, None), (t[0], 250.0, nan),
+        (t[1], 63.0, None), (t[1], 125.0, None), (t[1], 250.0, None),
+        (t[2], 63.0, 2.0), (t[2], 63.0, 4.0), (t[2], 125.0, 5.0),
+        (t[3], 250.0, nan),
+    ]
+    spark.createDataFrame(
+        [("PARITY", 1, "octave_bands", 3, ts, b, v) for ts, b, v in cells],
+        "hydrophone string, delta_t int, freq_type string, delta_f int, "
+        "ts timestamp, band_hz double, value double",
+    ).write.parquet(f"{root}/data")
+    spark.createDataFrame(
+        [("archive/parity/20240105T000000_20240106T000000_1s_3oct.parquet",)],
+        "key string",
+    ).write.parquet(f"{root}/archive_keys.parquet")
+    return Engine(spark, root)
+
+
+def test_psd_timeseries_pivot_matches_psd_matrix(parity_engine):
+    from ambient_sound_analysis_api_spark.operators.timeseries import (
+        _band_col,
+        psd_matrix,
+    )
+
+    out = parity_engine.psd_timeseries("parity", START, END)
+    bands = [63.0, 125.0, 250.0]
+    wide = psd_matrix(
+        parity_engine._data().select("ts", "band_hz", "value"), bands
+    ).collect()
+    assert out["frequencies"] == [str(b) for b in bands]
+    assert out["times"] == [r["ts"].isoformat() for r in wide]
+    assert out["values"] == [
+        [_json_float(r[_band_col(b)]) for b in bands] for r in wide
+    ]
+    # all-null t1 dropped; NaN-only t3 kept with every cell null
+    assert out["values"] == [
+        [1.0, None, None], [3.0, 5.0, None], [None, None, None],
+    ]
+
+
+def test_band_aggregation_nonfinite_band_and_empty_range(parity_engine):
+    out = parity_engine.band_aggregation(
+        "parity", START, END, interval="1h", band_low=200, band_high=300
+    )
+    assert out["points"] == []
+    with pytest.raises(RequestValidationError):
+        parity_engine.band_aggregation(
+            "parity", START, END, interval="1h", band_low=9e5, band_high=9e6
+        )

@@ -22,7 +22,6 @@ from ambient_sound_analysis_api_spark.operators.timeseries import (
     window_filter,
 )
 from ambient_sound_analysis_api_spark.operators.validation import (
-    coverage_lookup,
     integrity_probe,
     validate_request,
 )
@@ -42,7 +41,7 @@ def catalog(spark):
         rows,
         "hydrophone string, freq_type string, delta_f int, delta_t int, "
         "first_start timestamp, last_end timestamp, file_count long",
-    ).cache()
+    )
 
 
 def test_window_filter_inclusivity(spark):
@@ -80,36 +79,28 @@ def test_psd_matrix_drops_all_null_rows(spark):
     assert wide[0]["band_63"] == 1.0 and wide[0]["band_125"] == 2.0
 
 
-def test_validate_request_taxonomy(spark, catalog):
+def test_validate_request_taxonomy(catalog):
+    rows = catalog.collect()
     ok = dict(freq_type="broadband", delta_f=None, delta_t=1,
               start=datetime(2020, 6, 1), end=datetime(2020, 6, 2))
-    validate_request(spark, catalog, "ORCASOUND_LAB", **ok)
+    validate_request(rows, "ORCASOUND_LAB", **ok)
+    validate_request(
+        rows, "ORCASOUND_LAB", freq_type="octave_bands", delta_f=3,
+        delta_t=1, start=ok["start"], end=ok["end"],
+    )
     with pytest.raises(UnknownHydrophoneError):
-        validate_request(spark, catalog, "NOPE", **ok)
+        validate_request(rows, "NOPE", **ok)
     with pytest.raises(UnavailableCombinationError):
         validate_request(
-            spark, catalog, "ORCASOUND_LAB", freq_type="octave_bands",
+            rows, "ORCASOUND_LAB", freq_type="octave_bands",
             delta_f=6, delta_t=1, start=ok["start"], end=ok["end"],
         )
     with pytest.raises(OutsideCoverageError):
         validate_request(
-            spark, catalog, "ORCASOUND_LAB", freq_type="broadband",
+            rows, "ORCASOUND_LAB", freq_type="broadband",
             delta_f=None, delta_t=1,
             start=datetime(2025, 1, 1), end=datetime(2025, 1, 2),
         )
-
-
-def test_coverage_lookup_joins(spark, catalog):
-    hit = coverage_lookup(
-        spark, catalog, "ORCASOUND_LAB", "octave_bands", 3, 1,
-        datetime(2020, 6, 1), datetime(2020, 6, 2),
-    ).collect()
-    assert len(hit) == 1 and hit[0]["freq_type"] == "octave_bands"
-    miss = coverage_lookup(
-        spark, catalog, "ORCASOUND_LAB", "octave_bands", 3, 1,
-        datetime(2025, 1, 1), datetime(2025, 1, 2),
-    ).collect()
-    assert miss == []
 
 
 def test_integrity_probe():
