@@ -47,8 +47,3 @@ class TimeseriesDataIntegrityError(EngineError):
     """Files matched by catalog metadata but the pruned scan returned zero
     rows — filename/content disagreement
     (reference ``app/services/get_timeseries.py:223-229``)."""
-
-
-class TimeseriesLookupError(EngineError):
-    """Underlying storage read failed (reference 502 analog,
-    ``app/services/get_timeseries.py:214-221``)."""

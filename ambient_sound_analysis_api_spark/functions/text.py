@@ -1,8 +1,12 @@
 """Text-analysis columns for large-scale training-data pipelines.
 
-All hot-path functions are built-in Catalyst expressions (JVM-side, codegen)
-— no Python UDFs — so they scale linearly with the scan at 100 TB. These go
-beyond the reference surface (which has no text ops) per the engine's
+All hot-path functions but one are built-in Catalyst expressions (JVM-side,
+codegen, no Python UDFs), so they scale linearly with the scan at 100 TB.
+The exception is the Karp-Rabin fingerprint (``rolling_hash`` and
+``min_gram_hash``): a per-character fold cannot be vectorized in Catalyst,
+where it runs as an interpreted higher-order function doing O(n·L) work per
+row, so it is one Arrow-batched pandas UDF over ``kr_window_hashes``. These
+go beyond the reference surface (which has no text ops) per the engine's
 extension charter (SURVEY.md §7.7).
 """
 
@@ -38,10 +42,6 @@ def word_tokens(col: Column) -> Column:
         F.split(col, r"(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])"),
         lambda t: F.trim(t) != "",
     )
-
-
-def char_count(col: Column) -> Column:
-    return F.length(col)
 
 
 def letter_tokens(col: Column) -> Column:
@@ -233,17 +233,66 @@ ROLLING_BASE = 31
 ROLLING_MOD = 2_147_483_647
 
 
-def _char_codes(col: Column) -> Column:
-    """Codepoints of a string column → array<long>.
+def _pow_table(base: int, n: int):
+    """``[base^0 .. base^n]`` mod ``ROLLING_MOD`` as int64, by repeated
+    squaring: each step squares the multiplier and doubles the filled
+    prefix (every product < M² < 2^62)."""
+    import numpy as np
 
-    ``col`` must be a *plain column reference* (pre-projected), not an
-    expression subtree: it is referenced from inside a higher-order-function
-    lambda, where any closed-over expression re-evaluates per element.
-    """
-    return F.transform(
-        F.sequence(F.lit(1), F.length(col)),
-        lambda i: F.ascii(col.substr(i, F.lit(1))).cast("long"),
-    )
+    out = np.ones(n + 1, dtype=np.int64)
+    k, bk = 1, base % ROLLING_MOD
+    while k <= n:
+        m = min(k, n + 1 - k)
+        out[k : k + m] = (out[:m] * bk) % ROLLING_MOD
+        bk = (bk * bk) % ROLLING_MOD
+        k <<= 1
+    return out
+
+
+def kr_window_hashes(texts, width: int | None = None):
+    """The shared Karp-Rabin kernel: for each string of the sequence
+    ``texts``, yield an int64 array holding the rolling hash of every
+    ``width``-code-point window, in start-offset order.
+
+    A string shorter than ``width`` (or any string when ``width`` is None)
+    is one window spanning the whole string, and ``""`` hashes to 0. Each
+    value equals the fold ``h = (h*31 + c) mod 2^31-1`` over the window's
+    code points, computed in O(n) vectorized integer math per string:
+    code points via utf-32, prefix sums of ``c_j·B^-(j+1)``, and window
+    differences scaled by ``B^(o+L)`` — every intermediate fits int64
+    (terms < 2^52, prefix sums < n·2^31, products < 2^62)."""
+    import numpy as np
+
+    M = ROLLING_MOD
+    n_max = max(map(len, texts), default=0)
+    P = _pow_table(ROLLING_BASE, n_max)
+    Q = _pow_table(pow(ROLLING_BASE, M - 2, M), n_max)
+    for t in texts:
+        n = len(t)
+        L = n if width is None else min(width, n)
+        c = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
+        s = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum((c.astype(np.int64) * Q[1 : n + 1]) % M, out=s[1:])
+        yield ((s[L:] - s[: n - L + 1]) % M) * P[L : n + 1] % M
+
+
+def _min_window_hash(col: Column, width: int | None) -> Column:
+    """Per row, the minimum of ``kr_window_hashes`` over the string's
+    windows, as one Arrow-batched pandas UDF (null in, null out)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def _hash(s):
+        valid = s.notna().to_numpy()
+        mins = np.zeros(len(s), dtype=np.int64)
+        mins[valid] = [
+            h.min() for h in kr_window_hashes(s[valid].tolist(), width)
+        ]
+        return pd.Series(pd.arrays.IntegerArray(mins, ~valid))
+
+    return _hash(col)
 
 
 def rolling_hash(col: Column) -> Column:
@@ -252,15 +301,9 @@ def rolling_hash(col: Column) -> Column:
     document fingerprint, reproducible across engines (unlike xxhash/md5
     truncations, the arithmetic is portable integer math).
 
-    Empty strings hash to 0. See ``_char_codes`` for the pre-projection
-    requirement on ``col``.
+    Empty strings hash to 0; null stays null.
     """
-    folded = F.aggregate(
-        _char_codes(col),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(ROLLING_BASE) + c) % F.lit(ROLLING_MOD),
-    )
-    return F.when(F.length(col) == 0, F.lit(0).cast("long")).otherwise(folded)
+    return _min_window_hash(col, None)
 
 
 def min_gram_hash(col: Column, n: int = 8) -> Column:
@@ -268,23 +311,10 @@ def min_gram_hash(col: Column, n: int = 8) -> Column:
     ``n``-grams of the string (the min-sampled variant of MOSS winnowing —
     one representative hash per document, robust to local edits).
 
-    Strings shorter than ``n`` fall back to the whole-string hash. ``col``
-    must be a plain column reference (see ``_char_codes``).
+    Strings shorter than ``n`` fall back to the whole-string hash; empty
+    strings hash to 0 and null stays null.
     """
-    gram_hash = F.transform(
-        F.sequence(F.lit(1), F.length(col) - F.lit(n - 1)),
-        lambda i: F.aggregate(
-            F.transform(
-                F.sequence(i, i + F.lit(n - 1)),
-                lambda j: F.ascii(col.substr(j, F.lit(1))).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, c: (acc * F.lit(ROLLING_BASE) + c) % F.lit(ROLLING_MOD),
-        ),
-    )
-    return F.when(F.length(col) < n, rolling_hash(col)).otherwise(
-        F.array_min(gram_hash)
-    )
+    return _min_window_hash(col, n)
 
 
 def token_ngram_hashes(col: Column, n: int) -> Column:

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import (
     fingerprint,
+    kr_window_hashes,
     normalize_text,
     token_ngram_hashes,
     token_ngrams,
@@ -1582,8 +1583,8 @@ def kr_gram_positions(
     ``(id, carry..., o, kh)`` with ``kh`` the polynomial hash of the
     L-gram starting at 1-based char offset ``o`` — computed in ONE
     Arrow-batched pass of O(n) vectorized integer math per document
-    (code points via utf-32, power tables by binary exponentiation,
-    prefix-sum window diffs; every intermediate provably fits int64).
+    (the shared ``functions.text.kr_window_hashes`` kernel, the
+    one ``rolling_hash``/``min_gram_hash`` use).
     No L-char substring is ever materialized and the emitted key is an
     8-byte long. Equal strings always collide; unequal ones with ~n²/2³¹
     probability — consumers that need exactness md5-verify ONLY the
@@ -1597,58 +1598,18 @@ def kr_gram_positions(
         import numpy as np
         import pandas as pd
 
-        M = (1 << 31) - 1
-        B = 31
-        invB = pow(B, M - 2, M)
-
-        def pow_table(base, n):
-            """[base^0 .. base^{n-1}] mod M by binary exponentiation —
-            O(n log n) vectorized modmuls (every product < M² < 2^62)."""
-            out = np.ones(n, dtype=np.int64)
-            j = np.arange(n)
-            bit, k = base % M, 1
-            while k < n:
-                mask = (j & k) != 0
-                out[mask] = (out[mask] * bit) % M
-                bit = (bit * bit) % M
-                k <<= 1
-            return out
-
-        P = Q = np.ones(0, dtype=np.int64)
         for pdf in batches:
-            ids, offs, khs = [], [], []
-            extras = {c: [] for c in carry}
-            rows = zip(
-                pdf[id_col], pdf[text_col], *[pdf[c] for c in carry]
+            keep = pdf[pdf[text_col].str.len() >= L]
+            if keep.empty:
+                continue
+            khs = list(kr_window_hashes(keep[text_col].tolist(), L))
+            npos = [len(g) for g in khs]
+            out = {c: np.repeat(keep[c].to_numpy(), npos) for c in (id_col, *carry)}
+            out["o"] = np.concatenate(
+                [np.arange(1, m + 1, dtype=np.int32) for m in npos]
             )
-            for did, t, *cv in rows:
-                n = len(t)
-                if n < L:
-                    continue
-                if n > len(P):
-                    P, Q = pow_table(B, n), pow_table(invB, n)
-                # code points, vectorized (matches Spark's substring /
-                # length code-point semantics)
-                c = np.frombuffer(
-                    t.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                s = np.cumsum((c * Q[:n]) % M)  # terms < M, exact in i64
-                win = s[L - 1 :].copy()
-                win[1:] -= s[: n - L]
-                g = ((win % M) * P[L - 1 : n]) % M
-                npos = n - L + 1
-                ids.append(np.full(npos, did))
-                offs.append(np.arange(1, npos + 1, dtype=np.int32))
-                khs.append(g)
-                for cname, val in zip(carry, cv):
-                    extras[cname].append(np.full(npos, val))
-            if ids:
-                out = {id_col: np.concatenate(ids)}
-                for cname in carry:
-                    out[cname] = np.concatenate(extras[cname])
-                out["o"] = np.concatenate(offs)
-                out["kh"] = np.concatenate(khs)
-                yield pd.DataFrame(out)
+            out["kh"] = np.concatenate(khs)
+            yield pd.DataFrame(out)
 
     schema = ", ".join(
         [f"{id_col} {id_type}"]

@@ -38,13 +38,3 @@ def get_spark(app_name: str = "ambient-sound-analysis-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
-
-
-def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable defaults to an externally provided session.
-
-    Only touches confs that are safe to set post-startup.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark

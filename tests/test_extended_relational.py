@@ -14,7 +14,10 @@ from ambient_sound_analysis_api_spark.functions.text import (
     min_gram_hash,
     rolling_hash,
 )
-from ambient_sound_analysis_api_spark.operators.dedup import embedding_near_pairs
+from ambient_sound_analysis_api_spark.operators.dedup import (
+    embedding_near_pairs,
+    kr_gram_positions,
+)
 from ambient_sound_analysis_api_spark.operators.joins import range_join_buckets
 from ambient_sound_analysis_api_spark.operators.similarity import (
     cosine_topk_by_id,
@@ -29,25 +32,65 @@ def _py_rolling(s: str) -> int:
     return h
 
 
+# Cases the documents table never holds: null, empty, lengths around the
+# gram width, non-ASCII BMP and supplementary-plane code points, and a
+# 20,000-character string that stresses the int64 range of the prefix sum.
+_LONG = "".join(chr(0x21 + (i * 7919) % 0x2F00) for i in range(20_000))
+_HASH_CASES = [
+    (1, "hello world"), (2, ""), (3, "a"), (4, "abcdefghij"),
+    (5, "abcdefg"), (6, "abcdefgh"), (7, "abcdefghi"),
+    (8, "café crème brûlée"), (9, "orca 🐋 pod 🐋🐋 call"), (10, "🐋é"),
+    (11, _LONG), (12, None),
+]
+
+
+def _hash_cases(spark, fn):
+    df = spark.createDataFrame(_HASH_CASES, "doc_id long, s string")
+    return {r["doc_id"]: r["h"] for r in
+            df.select("doc_id", fn(F.col("s")).alias("h")).collect()}
+
+
 def test_rolling_hash_matches_python(spark):
-    rows = [(1, "hello world"), (2, ""), (3, "a"), (4, "abcdefghij")]
-    df = spark.createDataFrame(rows, "doc_id long, s string")
-    out = {r["doc_id"]: r["h"] for r in
-           df.select("doc_id", rolling_hash(F.col("s")).alias("h")).collect()}
-    for i, s in rows:
-        assert out[i] == _py_rolling(s), s
+    out = _hash_cases(spark, rolling_hash)
+    for i, s in _HASH_CASES:
+        assert out[i] == (None if s is None else _py_rolling(s)), i
 
 
 def test_min_gram_hash(spark):
-    rows = [(1, "abcdefghij"), (2, "short"), (3, "")]
-    df = spark.createDataFrame(rows, "doc_id long, s string")
-    out = {r["doc_id"]: r["h"] for r in
-           df.select("doc_id", min_gram_hash(F.col("s"), n=8).alias("h")).collect()}
-    grams = ["abcdefghij"[i:i + 8] for i in range(3)]
-    assert out[1] == min(_py_rolling(g) for g in grams)
-    # shorter than n falls back to the whole-string hash
-    assert out[2] == _py_rolling("short")
-    assert out[3] == 0
+    out = _hash_cases(spark, lambda c: min_gram_hash(c, n=8))
+    for i, s in _HASH_CASES:
+        if s is None:
+            want = None
+        elif len(s) < 8:
+            # shorter than n falls back to the whole-string hash
+            want = _py_rolling(s)
+        else:
+            want = min(_py_rolling(s[k:k + 8]) for k in range(len(s) - 7))
+        assert out[i] == want, i
+    assert out[2] == 0
+
+
+def test_kr_gram_positions_min_matches_min_gram_hash(spark):
+    # dedup's gram stream and the fingerprint share one kernel: the
+    # per-document minimum gram hash is min_gram_hash
+    rows = [(i, s) for i, s in _HASH_CASES if s is not None and len(s) >= 8]
+    df = spark.createDataFrame(rows, "doc_id long, _t string")
+    kr = {r["doc_id"]: r["m"] for r in kr_gram_positions(df, 8)
+          .groupBy("doc_id").agg(F.min("kh").alias("m")).collect()}
+    fp = {r["doc_id"]: r["h"] for r in
+          df.select("doc_id", min_gram_hash(F.col("_t"), 8).alias("h")).collect()}
+    assert kr == fp and len(kr) == len(rows)
+
+
+def test_text_rolling_fingerprint_plan_has_no_fold(spark, sf_dir):
+    # the fingerprint is one Arrow-batched UDF, not an interpreted
+    # per-character higher-order fold; planned only, never executed
+    from ambient_sound_analysis_api_spark import registry
+
+    df = registry.queries()["text_rolling_fingerprint"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "ArrowEvalPython" in plan
+    assert "aggregate(" not in plan and "lambda" not in plan
 
 
 @pytest.fixture(scope="module")

@@ -433,6 +433,9 @@ def test_all_registry_queries_avoid_pathological_plans(spark, sf_dir):
         "mm_frame_sample",
         "mm_audio_psd_peak",
         "dedup_embedding_cosine_arrow",  # the Arrow kernel IS the operator
+        # Karp-Rabin fold: no Catalyst form avoids an O(n·L) interpreted
+        # per-character fold, so the Arrow kernel IS the operator
+        "text_rolling_fingerprint",
     }
     problems = []
     for name, fn in queries().items():
