@@ -25,6 +25,10 @@ and order-insensitive value hashes between Spark and DuckDB):
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 from datetime import datetime
 
@@ -177,49 +181,73 @@ _DECMEAN_DUCK = "CAST(sum(CAST(value AS DECIMAL(20,2))) AS DOUBLE) / count(value
 
 _SPECS: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
-# session-keyed fit caches: fitted index artifacts (Bloom words, PQ
-# codebooks) per dataset, so repeated invocations of the same query measure
-# probe/query cost, not refit — an index is fit once and queried many times.
-# Keys include a cheap file-stat fingerprint of the source table, not just
-# its path: a dataset regenerated in-place at the same sf_dir must refit
-# (a stale codebook over new data would be silently wrong), and the
-# fingerprint change also evicts the dead entry (one artifact per path).
-_BLOOM_FIT_MEMO: dict[tuple, list[int]] = {}
-_PQ_FIT_MEMO: dict[tuple, list] = {}
-# trained BPE merge list [(a, b), ...] — model-sized (n_rounds rows),
-# the same model-memo contract as the PQ/k-means fits: the trainer
-# entry (pipeline_bpe_train_rounds) always times the full trainer;
-# the encode entry times tokenizer APPLICATION over a trained model
-_BPE_MEMO: dict[tuple, list] = {}
-# (standardization stats, weight vector) of the fitted quality classifier
-_LOGIT_FIT_MEMO: dict[tuple, tuple] = {}
-# persisted cell-partitioned IVF-PQ code indexes: fingerprint-keyed temp
-# dirs (build once, serve many). Unlike the in-memory memos these own
-# DISK, so eviction rmtrees the stale dir and an atexit hook reclaims
-# everything at process end — the streaming-store leak (ADVICE r9) is
-# not reintroduced by the index store.
-# table-path → (store root, fingerprint, current version path). The store
-# root is a VERSIONED index store (operators/pq.py::ivfpq_publish_index):
-# a dataset regenerated in place publishes a NEW immutable version into
-# the same root and the manifest pointer flips atomically — a previously
-# returned lazy DataFrame keeps reading its (retained) version instead of
-# hitting a FileNotFoundException from an eager rmtree (ADVICE round-10);
-# retention GC reclaims versions two refreshes behind, and the atexit
-# hook removes the whole root at process end.
-_IVFPQ_INDEX_MEMO: dict[tuple, tuple] = {}
+# (table path, kind, *params) → (fingerprint, artifact); see _artifact
+_ARTIFACTS: dict[tuple, tuple] = {}
 
 
-def _cleanup_index_stores() -> None:
-    import shutil
+def _artifact(sf_dir: str, table: str, kind: str, *params, build):
+    """Get-or-build a fitted artifact of ``table``: a model (PQ codebooks,
+    Bloom words, BPE merges, logit weights, k-means centroids) or a
+    persisted index store. A model or index is fit once and served many
+    times, so repeated invocations time the serve, not the refit.
 
-    for entry in _IVFPQ_INDEX_MEMO.values():
-        shutil.rmtree(entry[0], ignore_errors=True)
-    _IVFPQ_INDEX_MEMO.clear()
+    ``_ARTIFACTS`` is keyed ``(table path, kind, *params)`` and holds
+    ``(fingerprint, artifact)``. Each call stats the table once with
+    ``_dataset_fingerprint``. A matching fingerprint returns the stored
+    artifact; otherwise ``build(prev, fp)`` runs and its result replaces
+    the entry. A table regenerated in place is therefore rebuilt on the
+    next use of each kind (a stale codebook over new data would be
+    silently wrong), and the store holds one entry per key.
+
+    ``prev`` is the artifact being replaced, ``None`` on the first build.
+    Fits ignore it. Index stores take their root from it and publish a
+    new immutable version there: the manifest pointer flips atomically
+    and a lazy DataFrame over the old version keeps reading until
+    retention GC (``operators/pq.py::ivfpq_publish_index``). ``fp`` is
+    the fingerprint the artifact is stored under; stores stamp
+    ``repr(fp)`` into their manifests.
+
+    The helper does one ``get`` and one set and never iterates the store,
+    so concurrent callers cannot trip over each other. Two racing misses
+    both build and the last write wins.
+
+    Disk: index-store roots come from ``_store_root``, under one
+    process-level parent directory that an atexit hook removes."""
+    fp = _dataset_fingerprint(sf_dir, table)
+    key = (fp[0], kind, *params)
+    entry = _ARTIFACTS.get(key)
+    if entry is not None and entry[0] == fp:
+        return entry[1]
+    artifact = build(None if entry is None else entry[1], fp)
+    _ARTIFACTS[key] = (fp, artifact)
+    return artifact
 
 
-import atexit as _atexit  # noqa: E402
+@functools.cache
+def _store_parent() -> str:
+    """The process-level directory that owns every index-store root."""
+    path = tempfile.mkdtemp(prefix="graft_stores_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
-_atexit.register(_cleanup_index_stores)
+
+def _store_root(prev_root: str | None, prefix: str) -> str:
+    """The root an index store publishes into: the one it already owns,
+    else a new directory under ``_store_parent``."""
+    return prev_root or tempfile.mkdtemp(prefix=prefix, dir=_store_parent())
+
+
+def _pq_books(
+    sf_dir: str, emb: DataFrame, m: int = 4, k: int = 8, n_iter: int = 2
+) -> list:
+    """PQ codebooks of the ``embeddings`` table ``emb``, fit once per
+    dataset and parameter set (``_artifact``)."""
+    from .operators.pq import pq_fit
+
+    return _artifact(
+        sf_dir, "embeddings", "pq", m, k, n_iter,
+        build=lambda *_: pq_fit(emb, m=m, k=k, n_iter=n_iter),
+    )
 
 
 def _dataset_fingerprint(sf_dir: str, table: str) -> tuple:
@@ -257,17 +285,6 @@ def _min_id_vector(
     ``(SELECT min(vec_id))`` convention exactly."""
     row = df.orderBy(id_col).select(id_col, vec_col).first()
     return int(row[0]), [float(x) for x in row[1]]
-
-
-def _memo_put(memo: dict, key: tuple, value) -> None:
-    """Insert a fit artifact under ``key = (fingerprint, *params)``,
-    evicting entries for the same table path whose fingerprint is now
-    stale so regenerated datasets don't leak dead artifacts."""
-    path = key[0][0]
-    stale = [k for k in memo if k[0][0] == path and k[0] != key[0]]
-    for k in stale:
-        del memo[k]
-    memo[key] = value
 
 
 def register(name: str, oracle: str | None):
@@ -2320,8 +2337,6 @@ def _lsh_plane_table(spark: SparkSession) -> DataFrame:
     table.
     """
     import os
-    import shutil
-    import tempfile
     import time
     import uuid
 
@@ -2367,7 +2382,6 @@ def _publish_plane_table(
     """Holding the flock: sweep any pre-publish crash artifact and rename
     the staged table into place (or adopt a finished concurrent publish)."""
     import os
-    import shutil
 
     if not os.path.exists(success):
         shutil.rmtree(path, ignore_errors=True)
@@ -5674,14 +5688,10 @@ def q_emb_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset like the Bloom words and the persisted LSH plane table: a PQ
     index is fit once and queried many times, so repeated invocations
     time encode+ADC query cost, not the Lloyd refit."""
-    from .operators.pq import pq_adc_topk, pq_encode, pq_fit
+    from .operators.pq import pq_adc_topk, pq_encode
 
     emb = _table(spark, sf_dir, "embeddings")
-    key = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _pq_books(sf_dir, emb)
     codes = pq_encode(emb, books)
     qrow = emb.orderBy("vec_id").limit(1).select("embedding").first()
     query = [float(x) for x in qrow[0]]
@@ -6076,32 +6086,20 @@ def q_emb_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector column. The oracle replays the fitted chains + centroid probe
     + ADC over the logical candidate set — codes are deterministic, so
     serving from disk or from the formula is value-identical."""
-    import tempfile
-
-    from .operators.pq import ivfpq_persisted_topk, ivfpq_publish_index, pq_fit
+    from .operators.pq import ivfpq_persisted_topk, ivfpq_publish_index
 
     emb = _table(spark, sf_dir, "embeddings")
-    fkey = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(fkey)
-    if books is None:
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, fkey, books)
-    skey = (fkey[0][0], 4, 8, 2, "cellidx")
-    entry = _IVFPQ_INDEX_MEMO.get(skey)
-    if entry is None or entry[1] != fkey[0]:
-        # first build, or the dataset was regenerated in place: publish a
-        # new immutable version into the (existing) store root — the
-        # manifest pointer flips atomically and readers of the previous
-        # version keep working until retention GC, two refreshes later
-        root = entry[0] if entry is not None else tempfile.mkdtemp(
-            prefix="ivfpq_store_"
+    books = _pq_books(sf_dir, emb)
+
+    def publish(prev, fp):
+        root = _store_root(prev and prev[0], "ivfpq_store_")
+        return root, ivfpq_publish_index(
+            emb, books, root, retain=2, fingerprint=repr(fp)
         )
-        path = ivfpq_publish_index(
-            emb, books, root, retain=2, fingerprint=repr(fkey[0])
-        )
-        _IVFPQ_INDEX_MEMO[skey] = (root, fkey[0], path)
-    else:
-        path = entry[2]
+
+    _, path = _artifact(
+        sf_dir, "embeddings", "cellidx", 4, 8, 2, build=publish
+    )
     qid, query = _min_id_vector(emb)
     return ivfpq_persisted_topk(
         spark, path, emb, books, query, query_id=qid, k=12, nprobe=3
@@ -6109,7 +6107,7 @@ def q_emb_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_seg_del_root(
-    spark: SparkSession, sf_dir: str, key: str, compact: bool
+    spark: SparkSession, sf_dir: str, kind: str, compact: bool
 ) -> "tuple[str, list]":
     """Get-or-build the SEGMENTED code store with a tombstone delete:
     publish the whole corpus as one code segment, then
@@ -6117,39 +6115,29 @@ def _ivfpq_seg_del_root(
     followed by a compaction that folds the tombstones out. Returns
     ``(root, codebooks)``; fit is frozen at publish time (deletes never
     refit)."""
-    import tempfile
-
     from .operators.pq import (
         ivfpq_compact_segments, ivfpq_delete_ids, ivfpq_publish_segmented,
-        pq_fit,
     )
 
     emb = _table(spark, sf_dir, "embeddings")
-    fkey = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(fkey)
-    if books is None:
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, fkey, books)
-    skey = (fkey[0][0], 4, 8, 2, key)
-    entry = _IVFPQ_INDEX_MEMO.get(skey)
-    if entry is None or entry[1] != fkey[0]:
-        root = entry[0] if entry is not None else tempfile.mkdtemp(
-            prefix=f"{key}_"
-        )
+    books = _pq_books(sf_dir, emb)
+
+    def publish(prev, fp):
+        root = _store_root(prev, f"{kind}_")
         ivfpq_publish_segmented(
-            emb, books, root, retain=2, fingerprint=repr(fkey[0])
+            emb, books, root, retain=2, fingerprint=repr(fp)
         )
         ivfpq_delete_ids(
             emb.filter(F.col("vec_id") % 9 == 4).select("vec_id"),
-            root, retain=2, fingerprint=repr(fkey[0]),
+            root, retain=2, fingerprint=repr(fp),
         )
         if compact:
             ivfpq_compact_segments(
-                spark, root, retain=2, fingerprint=repr(fkey[0])
+                spark, root, retain=2, fingerprint=repr(fp)
             )
-        _IVFPQ_INDEX_MEMO[skey] = (root, fkey[0], root)
-    else:
-        root = entry[0]
+        return root
+
+    root = _artifact(sf_dir, "embeddings", kind, 4, 8, 2, build=publish)
     return root, books
 
 
@@ -6441,9 +6429,6 @@ def q_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     hash-match a direct SQL aggregation over the raw rows. Three layers of
     machinery (real streaming, algebraic merge, transactional swap) with
     zero numeric drift."""
-    import shutil
-    import tempfile
-
     from .operators.aggregations import merge_partials_monthly
     from .streaming.rollup import incremental_rollup_query, read_store
 
@@ -6919,31 +6904,25 @@ def q_emb_ivfpq_residual_persisted_topk(
     code size at every SF; this is the shape that serves it). Identical
     model and probe as ``emb_ivfpq_residual_topk`` → the SAME oracle, so
     the persisted path is hash-equal to the in-process one."""
-    import tempfile
+    import uuid
 
     from .operators.pq import (
         ivfpq_residual_persisted_topk, ivfpq_write_residual_index,
     )
 
     emb = _table(spark, sf_dir, "embeddings")
-    fkey = _dataset_fingerprint(sf_dir, "embeddings")
-    skey = (fkey[0], "respq-idx")
-    entry = _IVFPQ_INDEX_MEMO.get(skey)
-    if entry is None or entry[1] != fkey:
-        import uuid
 
-        root = entry[0] if entry is not None else tempfile.mkdtemp(
-            prefix="respq_idx_"
-        )
+    def write(prev, fp):
+        root = _store_root(prev and prev[0], "respq_idx_")
         # fresh subdir per (re)build: the writes are errorifexists and a
         # regenerated dataset must not collide with the stale version
         path = f"{root}/v-{uuid.uuid4().hex[:8]}"
-        books = ivfpq_write_residual_index(
-            emb, path, m=4, k=8, n_iter=2
-        )
-        _IVFPQ_INDEX_MEMO[skey] = (root, fkey, (path, books))
-    else:
-        path, books = entry[2]
+        books = ivfpq_write_residual_index(emb, path, m=4, k=8, n_iter=2)
+        return root, path, books
+
+    _, path, books = _artifact(
+        sf_dir, "embeddings", "respq-idx", 4, 8, 2, build=write
+    )
     qid, query = _min_id_vector(emb)
     return ivfpq_residual_persisted_topk(
         spark, path, books, query, qid, topk=10, nprobe=2
@@ -7697,16 +7676,15 @@ def q_pipeline_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # model-sized driver fetch: 4096 bits / 63 → at most 66 words. The
-    # fitted filter is an index artifact — fit once per (dataset) and
-    # memoize, the same session-keyed fit-cache pattern as the PQ
-    # codebooks, so repeated invocations time the probe, not the refit.
-    bloom_key = (_dataset_fingerprint(sf_dir, "documents"),)
-    words = _BLOOM_FIT_MEMO.get(bloom_key)
-    if words is None:
+    # fitted filter is an index artifact, fit once per dataset
+    # (``_artifact``), so repeated invocations time the probe.
+    def fit_words(*_):
         words = [0] * 66
         for r in bloom.collect():
             words[r["slot"]] = r["word"]
-        _memo_put(_BLOOM_FIT_MEMO, bloom_key, words)
+        return words
+
+    words = _artifact(sf_dir, "documents", "bloom", build=fit_words)
     words_sql = "array(" + ",".join(f"{w}L" for w in words) + ")"
     bit_sql = (
         f"(element_at({words_sql}, CAST(_p{{j}} / 63 AS INT) + 1)"
@@ -10001,16 +9979,12 @@ def q_emb_ivfpq_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     entire composite — four subspace k-means fits, encode argmins, ADC
     lookups, centroid ranking, the probe fan-out, and the exact-decimal
     baseline — so every point of the curve is value-hash-checked. Reuses
-    the per-dataset PQ codebook memo (index fit once, queried many
-    times)."""
-    from .operators.pq import ivfpq_recall_curve, pq_fit
+    the per-dataset PQ codebooks (``_pq_books``: index fit once, queried
+    many times)."""
+    from .operators.pq import ivfpq_recall_curve
 
     emb = _table(spark, sf_dir, "embeddings")
-    key = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _pq_books(sf_dir, emb)
     qid, query = _min_id_vector(emb)
     return ivfpq_recall_curve(
         emb, books, query, query_id=qid, k=10, nprobes=(1, 2, 4)
@@ -10068,9 +10042,6 @@ def q_streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials need the committed-batch-id check. Daily estimates served
     FROM THE STORE hash-match the direct batch computation (the oracle),
     proving the incremental merge loses nothing."""
-    import shutil
-    import tempfile
-
     from .operators import sketches as sk
     from .streaming.hll import hll_rollup_query, read_store
 
@@ -10328,17 +10299,16 @@ def q_text_bpe_encode_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _table(spark, sf_dir, "documents")
     # tokenizer application over the TRAINED merges (the entry's charter:
     # "tokenizer application over the trained merges" — bench.py): the
-    # merge list is model state and memoizes per dataset like the PQ
-    # codebooks; application is one lazy window chain (bpe_apply), no
-    # per-round pair counting, no driver collects, no checkpoints
-    key = (_dataset_fingerprint(sf_dir, "documents"), "bpe", 3)
-    merges = _BPE_MEMO.get(key)
-    if merges is None:
-        mdf = bpe_train(docs, n_rounds=3)
-        merges = [
-            (r["a"], r["b"]) for r in mdf.orderBy("round").collect()
-        ]
-        _memo_put(_BPE_MEMO, key, merges)
+    # merge list is model state, trained once per dataset (``_artifact``);
+    # application is one lazy window chain (bpe_apply), no per-round pair
+    # counting, no driver collects, no checkpoints
+    merges = _artifact(
+        sf_dir, "documents", "bpe", 3,
+        build=lambda *_: [
+            (r["a"], r["b"])
+            for r in bpe_train(docs, n_rounds=3).orderBy("round").collect()
+        ],
+    )
     sym = bpe_apply(docs, merges)
     return (
         sym.groupBy(F.col("s").alias("piece"))
@@ -11105,16 +11075,12 @@ def q_emb_ivfpq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nprobe-only partitions of the single-query path. The oracle
     unrolls the full composite — four subspace k-means fits, encode
     argmins, per-query ADC tables, exact-decimal cell ranking, the
-    probe fan-out — per query. Reuses the per-dataset PQ codebook memo
-    (fit once, serve many)."""
-    from .operators.pq import ivfpq_batch_topk, pq_fit
+    probe fan-out — per query. Reuses the per-dataset PQ codebooks
+    (``_pq_books``: fit once, serve many)."""
+    from .operators.pq import ivfpq_batch_topk
 
     emb = _table(spark, sf_dir, "embeddings")
-    key = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _pq_books(sf_dir, emb)
     # serving batch by LITERAL id predicate, not orderBy().limit(): the
     # demo must not imply sorting the corpus to pick queries — the filter
     # reaches the parquet scan as PushedFilters and reads ~3 rows (ids are
@@ -11252,18 +11218,14 @@ def q_emb_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     then top-10 serves over old ∪ new through one shared ADC projection.
     Refitting per batch is the anti-pattern a growing 100 TB corpus
     cannot afford (and it would silently shift every existing code); the
-    fit memo already holds the model, so the delta costs one broadcast
+    artifact store already holds the model, so the delta costs one broadcast
     centroid ranking + one encode projection. The oracle unrolls the
     same composite: the fitted chains, exact-decimal cell assignment of
     the delta, its codes, and the union scan."""
-    from .operators.pq import ivfpq_incremental_topk, pq_fit
+    from .operators.pq import ivfpq_incremental_topk
 
     emb = _table(spark, sf_dir, "embeddings")
-    key = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _pq_books(sf_dir, emb)
     new = emb.filter(F.col("vec_id") % 10 == 3).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         F.reverse("embedding").alias("embedding"),
@@ -11367,14 +11329,10 @@ def q_emb_ivfpq_incremental_recall(
     the exact baseline ranks on order-independent snapped-decimal
     distances (the recall-curve contract), so the whole gate is
     hash-checked."""
-    from .operators.pq import ivfpq_incremental_topk, pq_fit
+    from .operators.pq import ivfpq_incremental_topk
 
     emb = _table(spark, sf_dir, "embeddings")
-    key = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _pq_books(sf_dir, emb)
     new = emb.filter(F.col("vec_id") % 10 == 3).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         F.reverse("embedding").alias("embedding"),
@@ -12648,6 +12606,19 @@ def q_text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _logit_fit(raw: DataFrame, cols: list[str]) -> tuple:
+    """(standardization stats, weights) of the quality logit over the
+    feature frame ``raw``: 4 full-batch GD steps at lr 2.0 on label y."""
+    from .operators.mlfit import (
+        apply_standardize, logit_gd_fit, standardize_stats,
+    )
+
+    stats = standardize_stats(raw, cols)
+    feat = apply_standardize(raw, cols, stats, label_cols=["y"])
+    _, wts = logit_gd_fit(feat, cols, "y", n_steps=4, lr=2.0)
+    return stats, wts
+
+
 @register(
     "pipeline_logit_select",
     f"""
@@ -12675,12 +12646,7 @@ def q_pipeline_logit_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores through the final weights CTE, hash-checking every document's
     score and decision."""
     from .functions.text import punct_ratio, quality_score, stopword_ratio, token_count
-    from .operators.mlfit import (
-        apply_standardize,
-        logit_gd_fit,
-        logit_weights_expr,
-        standardize_stats,
-    )
+    from .operators.mlfit import apply_standardize, logit_weights_expr
 
     docs = _table(spark, sf_dir, "documents")
     t = F.col("text")
@@ -12701,15 +12667,10 @@ def q_pipeline_logit_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.caching import tracked_persist
 
     raw = tracked_persist(raw)
-    key = (_dataset_fingerprint(sf_dir, "documents"), "logit", 4, 2.0, 0.75)
-    model = _LOGIT_FIT_MEMO.get(key)
-    if model is None:
-        stats = standardize_stats(raw, cols)
-        feat = apply_standardize(raw, cols, stats, label_cols=["y"])
-        _, wts = logit_gd_fit(feat, cols, "y", n_steps=4, lr=2.0)
-        model = (stats, wts)
-        _memo_put(_LOGIT_FIT_MEMO, key, model)
-    stats, wts = model
+    stats, wts = _artifact(
+        sf_dir, "documents", "logit", 4, 2.0, 0.75,
+        build=lambda *_: _logit_fit(raw, cols),
+    )
     scored = apply_standardize(raw, cols, stats, label_cols=["doc_id"])
     p = logit_weights_expr(wts, cols)
     return scored.select(
@@ -12786,9 +12747,6 @@ def q_streaming_dual_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     precisely what the oracle's direct monthly computation checks).
     Both stores' numerics hash-match direct SQL over the raw rows:
     exact-decimal means and the portable md5 register algebra."""
-    import shutil
-    import tempfile
-
     from .operators import sketches as sk
     from .operators.aggregations import merge_partials_monthly
     from .streaming import hll as hllmod
@@ -13373,14 +13331,10 @@ def q_emb_ivfpq_incremental_recall_gate(
     chain — fitted chains, cell probe, ADC shortlist cut, decimal
     re-rank, gate readout — is hash-checked against the unrolled
     oracle."""
-    from .operators.pq import ivfpq_incremental_rerank_topk, pq_fit
+    from .operators.pq import ivfpq_incremental_rerank_topk
 
     emb = _table(spark, sf_dir, "embeddings")
-    key = (_dataset_fingerprint(sf_dir, "embeddings"), 8, 16, 3)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        books = pq_fit(emb, m=8, k=16, n_iter=3)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _pq_books(sf_dir, emb, 8, 16, 3)
     new = emb.filter(F.col("vec_id") % 10 == 3).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         F.reverse("embedding").alias("embedding"),
@@ -13473,20 +13427,11 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_streaming_ann.py`` adds the crash-replay and
     rename-race proofs). Temp tree reclaimed in ``finally`` after an
     eager localCheckpoint of the (batch-sized) readout."""
-    import shutil
-    import tempfile
-
     from .operators.similarity import ivf_cell_centroids
     from .streaming.ann import read_streamed_codes, streamed_ann_ingest
 
     emb = _table(spark, sf_dir, "embeddings")
-    key = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        from .operators.pq import pq_fit
-
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _pq_books(sf_dir, emb)
     cents = ivf_cell_centroids(emb)
     new = emb.filter(F.col("vec_id") % 10 == 3).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
@@ -14638,9 +14583,6 @@ def q_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and prove the wins the index is designed for: high recall at nprobe≤3,
 # and a genuinely hot cell for the capacity-rebalance family.
 
-_KMEANS_FIT_MEMO: dict[tuple, list] = {}
-
-
 def _clustered_edim_sql(skew: bool = False) -> str:
     """DuckDB dimension-table CTE body for the clustered fixture — the
     ``edim_sql`` plug for ``_kmeans_ctes``. Mirrors
@@ -14675,11 +14617,10 @@ def _clustered_fit(spark: SparkSession, sf_dir: str, skew: bool) -> tuple:
 
     emb = _table(spark, sf_dir, "embeddings")
     ce = clustered_embeddings(emb, skew=skew)
-    key = ("clustered", _dataset_fingerprint(sf_dir, "embeddings"), skew)
-    cent = _KMEANS_FIT_MEMO.get(key)
-    if cent is None:
-        cent = kmeans_fit(ce, k=8, n_iter=4)
-        _memo_put(_KMEANS_FIT_MEMO, key, cent)
+    cent = _artifact(
+        sf_dir, "embeddings", "clustered-kmeans", skew,
+        build=lambda *_: kmeans_fit(ce, k=8, n_iter=4),
+    )
     return cent, ce
 
 
@@ -15169,12 +15110,7 @@ def q_eval_quality_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
         punct_ratio, quality_score, stopword_ratio, token_count,
     )
     from .operators.evalmetrics import binary_auc
-    from .operators.mlfit import (
-        apply_standardize,
-        logit_gd_fit,
-        logit_weights_expr,
-        standardize_stats,
-    )
+    from .operators.mlfit import apply_standardize, logit_weights_expr
 
     docs = _table(spark, sf_dir, "documents")
     t = F.col("text")
@@ -15197,18 +15133,10 @@ def q_eval_quality_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = tracked_persist(raw)
     train_raw = raw.filter(F.col("_h") < "ccc")
     hold_raw = raw.filter(F.col("_h") >= "ccc")
-    key = (
-        _dataset_fingerprint(sf_dir, "documents"),
-        "logit-holdout", 4, 2.0, 0.75,
+    stats, wts = _artifact(
+        sf_dir, "documents", "logit-holdout", 4, 2.0, 0.75,
+        build=lambda *_: _logit_fit(train_raw, cols),
     )
-    model = _LOGIT_FIT_MEMO.get(key)
-    if model is None:
-        stats = standardize_stats(train_raw, cols)
-        feat = apply_standardize(train_raw, cols, stats, label_cols=["y"])
-        _, wts = logit_gd_fit(feat, cols, "y", n_steps=4, lr=2.0)
-        model = (stats, wts)
-        _memo_put(_LOGIT_FIT_MEMO, key, model)
-    stats, wts = model
     p = logit_weights_expr(wts, cols)
 
     def _auc(split_raw, auc_name, n_name):
@@ -15260,61 +15188,61 @@ def q_retrieval_bm25_persisted_topk(
 
 
 def _bm25_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Get-or-publish the persisted BM25 index for a dataset (fingerprint
-    keyed, shared by the plain and RM3 serve twins; atexit-reclaimed with
-    the other index stores)."""
-    import tempfile
-
+    """Get-or-publish the persisted BM25 index for a dataset, shared by
+    the plain and RM3 serve twins (``_artifact``)."""
     from .operators.retrieval import bm25_publish_index
 
     docs = _table(spark, sf_dir, "documents")
-    fkey = _dataset_fingerprint(sf_dir, "documents")
-    skey = (fkey[0], "bm25idx")
-    entry = _IVFPQ_INDEX_MEMO.get(skey)
-    if entry is None or entry[1] != fkey:
-        root = entry[0] if entry is not None else tempfile.mkdtemp(
-            prefix="bm25_store_"
+
+    def publish(prev, fp):
+        root = _store_root(prev and prev[0], "bm25_store_")
+        return root, bm25_publish_index(
+            docs, root, retain=2, fingerprint=repr(fp)
         )
-        path = bm25_publish_index(
-            docs, root, retain=2, fingerprint=repr(fkey)
-        )
-        _IVFPQ_INDEX_MEMO[skey] = (root, fkey, path)
-    else:
-        path = entry[2]
-    return path
+
+    return _artifact(sf_dir, "documents", "bm25idx", build=publish)[1]
 
 
-def _bm25_seg_root(spark: SparkSession, sf_dir: str) -> str:
-    """Get-or-build the SEGMENTED BM25 store for a dataset: base publish
-    over 90% of the corpus (doc_id % 10 != 0), then one
+def _bm25_seg_root(
+    spark: SparkSession, sf_dir: str, kind: str, delete: bool = False,
+    compact: bool = False,
+) -> str:
+    """Get-or-build the SEGMENTED BM25 store ``kind`` (``_artifact``):
+    base publish over 90% of the corpus (doc_id % 10 != 0), then one
     ``bm25_admit_delta`` of the remaining 10% — so the served version is
     genuinely two segments deep and the delta admission path (not a
-    monolithic rebuild) produced it. Fingerprint-keyed and
-    atexit-reclaimed like the other index stores."""
-    import tempfile
-
-    from .operators.retrieval import bm25_admit_delta, bm25_publish_segmented
+    monolithic rebuild) produced it. ``delete`` then tombstones every
+    ``doc_id % 7 == 3`` (``bm25_delete_docs``); ``compact`` finally
+    merges the segments and folds any tombstones out physically."""
+    from .operators.retrieval import (
+        bm25_admit_delta, bm25_compact_segments, bm25_delete_docs,
+        bm25_publish_segmented,
+    )
 
     docs = _table(spark, sf_dir, "documents")
-    fkey = _dataset_fingerprint(sf_dir, "documents")
-    skey = (fkey[0], "bm25seg")
-    entry = _IVFPQ_INDEX_MEMO.get(skey)
-    if entry is None or entry[1] != fkey:
-        root = entry[0] if entry is not None else tempfile.mkdtemp(
-            prefix="bm25_seg_"
-        )
+
+    def publish(prev, fp):
+        root = _store_root(prev, f"{kind}_")
         bm25_publish_segmented(
             docs.filter(F.col("doc_id") % 10 != 0), root, retain=2,
-            fingerprint=repr(fkey),
+            fingerprint=repr(fp),
         )
         bm25_admit_delta(
             docs.filter(F.col("doc_id") % 10 == 0), root, retain=2,
-            fingerprint=repr(fkey),
+            fingerprint=repr(fp),
         )
-        _IVFPQ_INDEX_MEMO[skey] = (root, fkey, root)
-    else:
-        root = entry[0]
-    return root
+        if delete:
+            bm25_delete_docs(
+                docs.filter(F.col("doc_id") % 7 == 3).select("doc_id"),
+                root, retain=2, fingerprint=repr(fp),
+            )
+        if compact:
+            bm25_compact_segments(
+                spark, root, retain=2, fingerprint=repr(fp)
+            )
+        return root
+
+    return _artifact(sf_dir, "documents", kind, build=publish)
 
 
 @register("retrieval_bm25_incremental", _BM25_TOPK_SQL)
@@ -15335,7 +15263,7 @@ def q_retrieval_bm25_incremental(
     value-equal to a full rebuild."""
     from .operators.retrieval import bm25_segmented_topk
 
-    root = _bm25_seg_root(spark, sf_dir)
+    root = _bm25_seg_root(spark, sf_dir, "bm25_seg")
     return bm25_segmented_topk(
         spark, root, ["vector", "hash", "merge"], k=20
     )
@@ -15355,81 +15283,12 @@ def q_retrieval_bm25_compacted(
     compact, all by hash. The store lifecycle is now complete —
     publish → admit* → compact → admit* — all through the one
     manifest-pointer version store."""
-    import tempfile
+    from .operators.retrieval import bm25_segmented_topk
 
-    from .operators.retrieval import (
-        bm25_admit_delta, bm25_compact_segments, bm25_publish_segmented,
-        bm25_segmented_topk,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
-    fkey = _dataset_fingerprint(sf_dir, "documents")
-    skey = (fkey[0], "bm25cmp")
-    entry = _IVFPQ_INDEX_MEMO.get(skey)
-    if entry is None or entry[1] != fkey:
-        root = entry[0] if entry is not None else tempfile.mkdtemp(
-            prefix="bm25_cmp_"
-        )
-        bm25_publish_segmented(
-            docs.filter(F.col("doc_id") % 10 != 0), root, retain=2,
-            fingerprint=repr(fkey),
-        )
-        bm25_admit_delta(
-            docs.filter(F.col("doc_id") % 10 == 0), root, retain=2,
-            fingerprint=repr(fkey),
-        )
-        bm25_compact_segments(spark, root, retain=2, fingerprint=repr(fkey))
-        _IVFPQ_INDEX_MEMO[skey] = (root, fkey, root)
-    else:
-        root = entry[0]
+    root = _bm25_seg_root(spark, sf_dir, "bm25_cmp", compact=True)
     return bm25_segmented_topk(
         spark, root, ["vector", "hash", "merge"], k=20
     )
-
-
-def _bm25_del_root(
-    spark: SparkSession, sf_dir: str, key: str, compact: bool
-) -> str:
-    """Get-or-build the segmented BM25 store WITH a tombstone delete:
-    base publish (90%), delta admit (10%), then ``bm25_delete_docs`` of
-    every ``doc_id % 7 == 3`` — and optionally a compaction that folds
-    the tombstones out physically. Fingerprint-keyed like the other
-    index stores."""
-    import tempfile
-
-    from .operators.retrieval import (
-        bm25_admit_delta, bm25_compact_segments, bm25_delete_docs,
-        bm25_publish_segmented,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
-    fkey = _dataset_fingerprint(sf_dir, "documents")
-    skey = (fkey[0], key)
-    entry = _IVFPQ_INDEX_MEMO.get(skey)
-    if entry is None or entry[1] != fkey:
-        root = entry[0] if entry is not None else tempfile.mkdtemp(
-            prefix=f"{key}_"
-        )
-        bm25_publish_segmented(
-            docs.filter(F.col("doc_id") % 10 != 0), root, retain=2,
-            fingerprint=repr(fkey),
-        )
-        bm25_admit_delta(
-            docs.filter(F.col("doc_id") % 10 == 0), root, retain=2,
-            fingerprint=repr(fkey),
-        )
-        bm25_delete_docs(
-            docs.filter(F.col("doc_id") % 7 == 3).select("doc_id"),
-            root, retain=2, fingerprint=repr(fkey),
-        )
-        if compact:
-            bm25_compact_segments(
-                spark, root, retain=2, fingerprint=repr(fkey)
-            )
-        _IVFPQ_INDEX_MEMO[skey] = (root, fkey, root)
-    else:
-        root = entry[0]
-    return root
 
 
 @register("retrieval_bm25_delete", _bm25_topk_sql("WHERE doc_id % 7 <> 3"))
@@ -15449,7 +15308,7 @@ def q_retrieval_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete-in-place == rebuild-without-deleted."""
     from .operators.retrieval import bm25_segmented_topk
 
-    root = _bm25_del_root(spark, sf_dir, "bm25del", compact=False)
+    root = _bm25_seg_root(spark, sf_dir, "bm25del", delete=True)
     return bm25_segmented_topk(
         spark, root, ["vector", "hash", "merge"], k=20
     )
@@ -15472,7 +15331,9 @@ def q_retrieval_bm25_delete_compacted(
     amplification back to one file set and zero serve-time anti-join."""
     from .operators.retrieval import bm25_segmented_topk
 
-    root = _bm25_del_root(spark, sf_dir, "bm25delc", compact=True)
+    root = _bm25_seg_root(
+        spark, sf_dir, "bm25delc", delete=True, compact=True
+    )
     return bm25_segmented_topk(
         spark, root, ["vector", "hash", "merge"], k=20
     )
@@ -15491,9 +15352,6 @@ def q_streaming_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash check the batch-equivalence proof: streamed admission ==
     one-shot tokenize. Temp tree reclaimed in ``finally`` after an eager
     localCheckpoint of the k-row readout."""
-    import shutil
-    import tempfile
-
     from .streaming.lexical import bm25_streamed_topk, streamed_lexical_ingest
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -15686,11 +15544,10 @@ def q_emb_ivfpq_clustered_adc_audit(
     cent, ce = _clustered_fit(spark, sf_dir, skew=False)
     assigned = kmeans_predict(ce, cent).select("vec_id", "cluster")
     cec = ce.join(assigned, "vec_id")
-    key = ("clustered-pq", _dataset_fingerprint(sf_dir, "embeddings"), 8, 16, 3)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        books = pq_fit(ce, m=8, k=16, n_iter=3)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _artifact(
+        sf_dir, "embeddings", "clustered-pq", 8, 16, 3,
+        build=lambda *_: pq_fit(ce, m=8, k=16, n_iter=3),
+    )
     qid, query = _min_id_vector(ce)
     top = ivfpq_topk(
         cec, books, query, qid, k=10, nprobe=2, cell_col="cluster"
@@ -15712,6 +15569,23 @@ def q_emb_ivfpq_clustered_adc_audit(
         hits.cast("bigint").alias("n_hits"),
         (hits.cast("double") / F.lit(10.0)).alias("recall_at_10"),
         F.lit(2).cast("int").alias("nprobe"),
+    )
+
+
+def _clustered_respq_books(sf_dir: str, cec: DataFrame, m: int) -> list:
+    """Residual PQ codebooks (k=16, 3 Lloyd's iterations) of the
+    clustered fixture ``cec`` (vec_id, embedding, cluster), fit once per
+    dataset and ``m`` (``_artifact``)."""
+    from .operators.pq import pq_fit, residual_vectors
+    from .operators.similarity import ivf_cell_centroids
+
+    def fit(*_):
+        cents = ivf_cell_centroids(cec, cell_col="cluster")
+        res = residual_vectors(cec, cents, cell_col="cluster")
+        return pq_fit(res, m=m, k=16, n_iter=3)
+
+    return _artifact(
+        sf_dir, "embeddings", "clustered-respq", m, 16, 3, build=fit
     )
 
 
@@ -15772,22 +15646,12 @@ def q_emb_ivfpq_residual_adc_audit(
     shortlist+exact-rerank (``ivfpq_incremental_rerank_topk``) — residual
     encoding narrows code distortion, it does not eliminate it."""
     from .operators.clustering import kmeans_predict
-    from .operators.pq import ivfpq_residual_topk, pq_fit, residual_vectors
-    from .operators.similarity import ivf_cell_centroids
+    from .operators.pq import ivfpq_residual_topk
 
     cent, ce = _clustered_fit(spark, sf_dir, skew=False)
     assigned = kmeans_predict(ce, cent).select("vec_id", "cluster")
     cec = ce.select("vec_id", "embedding").join(assigned, "vec_id")
-    key = (
-        "clustered-respq", _dataset_fingerprint(sf_dir, "embeddings"),
-        8, 16, 3,
-    )
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        cents = ivf_cell_centroids(cec, cell_col="cluster")
-        res = residual_vectors(cec, cents, cell_col="cluster")
-        books = pq_fit(res, m=8, k=16, n_iter=3)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _clustered_respq_books(sf_dir, cec, 8)
     qid, query = _min_id_vector(ce)
     top = ivfpq_residual_topk(
         cec, query, qid, topk=10, nprobe=2, cell_col="cluster",
@@ -15891,8 +15755,7 @@ def q_emb_ivfpq_code_budget_curve(
     Returns one row per budget: (m, code_bytes, n_hits, recall_at_10).
     """
     from .operators.clustering import kmeans_predict
-    from .operators.pq import ivfpq_residual_topk, pq_fit, residual_vectors
-    from .operators.similarity import ivf_cell_centroids
+    from .operators.pq import ivfpq_residual_topk
 
     cent, ce = _clustered_fit(spark, sf_dir, skew=False)
     assigned = kmeans_predict(ce, cent).select("vec_id", "cluster")
@@ -15918,16 +15781,7 @@ def q_emb_ivfpq_code_budget_curve(
     hits = F.sum(F.when(F.col("_hit"), 1).otherwise(0))
     outs = []
     for m in (8, 16):
-        key = (
-            "clustered-respq", _dataset_fingerprint(sf_dir, "embeddings"),
-            m, 16, 3,
-        )
-        books = _PQ_FIT_MEMO.get(key)
-        if books is None:
-            cents = ivf_cell_centroids(cec, cell_col="cluster")
-            res = residual_vectors(cec, cents, cell_col="cluster")
-            books = pq_fit(res, m=m, k=16, n_iter=3)
-            _memo_put(_PQ_FIT_MEMO, key, books)
+        books = _clustered_respq_books(sf_dir, cec, m)
         top = ivfpq_residual_topk(
             cec, query, qid, topk=10, nprobe=2, cell_col="cluster",
             codebooks=books,
@@ -15989,9 +15843,6 @@ def q_streaming_bm25_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed takedown == batch delete == from-scratch build over the
     surviving corpus. The reference has no deletion surface (append-only
     S3 archive, SURVEY.md §4) — extension charter."""
-    import shutil
-    import tempfile
-
     from .streaming.lexical import bm25_streamed_topk, streamed_lexical_ingest
     from .streaming.takedown import streamed_takedown_ingest
 
@@ -16081,21 +15932,12 @@ def q_streaming_ann_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     never-admitted-the-deleted index, bit-identical. Physical
     reclamation stays with ``ivfpq_compact_segments`` (stream admits
     verdicts; batch compaction reclaims bytes)."""
-    import shutil
-    import tempfile
-
     from .operators.similarity import ivf_cell_centroids
     from .streaming.ann import read_streamed_codes, streamed_ann_ingest
     from .streaming.takedown import streamed_takedown_ingest
 
     emb = _table(spark, sf_dir, "embeddings")
-    key = (_dataset_fingerprint(sf_dir, "embeddings"), 4, 8, 2)
-    books = _PQ_FIT_MEMO.get(key)
-    if books is None:
-        from .operators.pq import pq_fit
-
-        books = pq_fit(emb, m=4, k=8, n_iter=2)
-        _memo_put(_PQ_FIT_MEMO, key, books)
+    books = _pq_books(sf_dir, emb)
     cents = ivf_cell_centroids(emb)
     new = emb.filter(F.col("vec_id") % 10 == 3).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),

@@ -148,13 +148,16 @@ def test_logit_select_memoizes_and_is_consistent(spark, sf_dir):
     """The apply step: one fit populates the model memo, a second
     invocation serves from it, and the keep decision is exactly the
     p >= 0.5 gate on the emitted score."""
+    import os
+
     from ambient_sound_analysis_api_spark import registry
 
-    registry._LOGIT_FIT_MEMO.clear()
+    key = (os.path.join(sf_dir, "documents.parquet"), "logit", 4, 2.0, 0.75)
+    registry._ARTIFACTS.pop(key, None)
     first = registry.q_pipeline_logit_select(spark, sf_dir).collect()
-    assert len(registry._LOGIT_FIT_MEMO) == 1
+    entry = registry._ARTIFACTS[key]
     again = registry.q_pipeline_logit_select(spark, sf_dir).collect()
-    assert len(registry._LOGIT_FIT_MEMO) == 1  # served from the memo
+    assert registry._ARTIFACTS[key] is entry  # served from the store
     assert first == again
     assert all(r["keep"] == (1 if r["score"] >= 0.5 else 0) for r in first)
     assert {r["keep"] for r in first} == {0, 1}  # the gate actually splits

@@ -664,13 +664,16 @@ def test_ivfpq_incremental_serve_has_no_fit_stages(spark, sf_dir):
     codebook memo populated, invoking the query runs zero k-means jobs
     (memo size stable, no refit) and the plan is the bounded serve shape
     — shared cached centroid build, no Python, no cartesian product."""
+    import os
+
     from ambient_sound_analysis_api_spark import registry
 
     fn = registry.queries()["emb_ivfpq_incremental"]
-    fn(spark, sf_dir)  # populates the codebook memo on first use
-    n_memo = len(registry._PQ_FIT_MEMO)
+    fn(spark, sf_dir)  # populates the codebook store on first use
+    key = (os.path.join(sf_dir, "embeddings.parquet"), "pq", 4, 8, 2)
+    entry = registry._ARTIFACTS[key]
     df = fn(spark, sf_dir)
-    assert len(registry._PQ_FIT_MEMO) == n_memo  # served, not refit
+    assert registry._ARTIFACTS[key] is entry  # served, not refit
     plan = explain_str(df, "simple")
     # the nlist-row centroid table is built ONCE and served from cache to
     # all three consumers (probe ranking + both probe broadcasts / the
@@ -679,6 +682,34 @@ def test_ivfpq_incremental_serve_has_no_fit_stages(spark, sf_dir):
     assert plan.count("InMemoryTableScan") >= 2
     assert "EvalPython" not in plan and "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan  # top-k without a global sort
+
+
+def test_clustered_pq_fits_do_not_evict_each_other(
+    spark, sf_dir, monkeypatch
+):
+    """The raw and residual PQ fits of the clustered fixture are two
+    kinds on one table: building either audit must keep the other's
+    codebooks, so building both a second time runs no ``pq_fit``. Build
+    only, no action."""
+    from ambient_sound_analysis_api_spark import registry
+    from ambient_sound_analysis_api_spark.operators import pq
+
+    calls = []
+    real_fit = pq.pq_fit
+
+    def counting_fit(*args, **kwargs):
+        calls.append(kwargs)
+        return real_fit(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "pq_fit", counting_fit)
+    q = registry.queries()
+    names = ("emb_ivfpq_clustered_adc_audit", "emb_ivfpq_residual_adc_audit")
+    for name in names:
+        q[name](spark, sf_dir)
+    n_first = len(calls)
+    for name in names:
+        q[name](spark, sf_dir)
+    assert len(calls) == n_first
 
 
 def test_ivfpq_persisted_serve_prunes_partitions_and_columns(spark, sf_dir):

@@ -88,10 +88,11 @@ def test_persisted_index_refresh_keeps_old_version_readable(
 
     q = R.queries()["emb_ivfpq_persisted_topk"]
     before = q(spark, sf_dir)
-    skey = next(
-        k for k in R._IVFPQ_INDEX_MEMO if k[0].startswith(sf_dir)
-    )
-    root, fp1, v1 = R._IVFPQ_INDEX_MEMO[skey]
+    skey = (os.path.join(sf_dir, "embeddings.parquet"), "cellidx", 4, 8, 2)
+    fp1, (root, v1) = R._ARTIFACTS[skey]
+    # the store root is owned by the process-level dir the atexit hook
+    # removes
+    assert os.path.dirname(root) == R._store_parent()
     lazy_old = spark.read.parquet(v1)
     n_old = lazy_old.count()
 
@@ -104,7 +105,7 @@ def test_persisted_index_refresh_keeps_old_version_readable(
 
     monkeypatch.setattr(R, "_dataset_fingerprint", fake_fp)
     after = q(spark, sf_dir)
-    root2, fp2, v2 = R._IVFPQ_INDEX_MEMO[skey]
+    fp2, (root2, v2) = R._ARTIFACTS[skey]
     assert root2 == root and v2 != v1 and fp2 != fp1
     # the pre-refresh lazy handle still reads its immutable version
     assert os.path.exists(v1)
@@ -112,5 +113,5 @@ def test_persisted_index_refresh_keeps_old_version_readable(
     # both serves return the same 12-row top-k (same data after all)
     assert before.count() == after.count() == 12
     monkeypatch.setattr(R, "_dataset_fingerprint", real_fp)
-    # restore the true-fingerprint entry so later tests reuse the memo
-    R._IVFPQ_INDEX_MEMO.pop(skey, None)
+    # drop the fake-fingerprint entry; the next use rebuilds on the real one
+    R._ARTIFACTS.pop(skey, None)

@@ -134,25 +134,39 @@ def test_kcenter_still_exact_after_guard(spark):
     assert rows[2].min_dist == 1.0
 
 
-# ------------------------------------------------ fit-memo fingerprinting
+# ------------------------------------------ fitted-artifact fingerprinting
 
 
-def test_dataset_fingerprint_changes_on_rewrite(tmp_path):
-    from ambient_sound_analysis_api_spark.registry import (
-        _dataset_fingerprint,
-        _memo_put,
-    )
+def test_dataset_fingerprint_changes_on_rewrite(tmp_path, monkeypatch):
+    """A rewritten table gets a new fingerprint, so its stored artifact is
+    rebuilt exactly once (with the replaced artifact as ``prev``) and the
+    key keeps one entry, not one per generation."""
+    from ambient_sound_analysis_api_spark import registry as R
 
+    monkeypatch.setattr(R, "_ARTIFACTS", {})
+    sf = str(tmp_path)
     p = tmp_path / "documents.parquet"
     p.write_bytes(b"v1-bytes")
-    fp1 = _dataset_fingerprint(str(tmp_path), "documents")
-    memo: dict = {}
-    _memo_put(memo, (fp1, 4, 8), "artifact-v1")
-    assert memo[(fp1, 4, 8)] == "artifact-v1"
+    fp1 = R._dataset_fingerprint(sf, "documents")
+    calls = []
+
+    def build(prev, fp):
+        calls.append((prev, fp))
+        return f"artifact-v{len(calls)}"
+
+    for _ in range(2):
+        assert R._artifact(sf, "documents", "k", 4, 8, build=build) == (
+            "artifact-v1"
+        )
+    assert calls == [(None, fp1)]
 
     p.write_bytes(b"v2-bytes-longer")
-    fp2 = _dataset_fingerprint(str(tmp_path), "documents")
-    assert fp2 != fp1  # regenerated data -> new key -> refit
-    _memo_put(memo, (fp2, 4, 8), "artifact-v2")
-    # stale artifact for the same path is evicted, no unbounded growth
-    assert list(memo) == [(fp2, 4, 8)]
+    fp2 = R._dataset_fingerprint(sf, "documents")
+    assert fp2 != fp1  # regenerated data -> rebuild
+    for _ in range(2):
+        assert R._artifact(sf, "documents", "k", 4, 8, build=build) == (
+            "artifact-v2"
+        )
+    assert calls == [(None, fp1), ("artifact-v1", fp2)]
+    # the stale artifact was replaced in place: no unbounded growth
+    assert R._ARTIFACTS == {(fp2[0], "k", 4, 8): (fp2, "artifact-v2")}

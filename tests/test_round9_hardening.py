@@ -1,4 +1,4 @@
-"""Round-9 hardening: fit-memo eviction precision and the
+"""Round-9 hardening: fitted-artifact store precision and the
 embedding_near_pairs truncation warning (the knn_graph contract)."""
 
 from __future__ import annotations
@@ -6,32 +6,96 @@ from __future__ import annotations
 import warnings
 
 
-def test_memo_put_same_fingerprint_params_coexist():
-    """Two fits of the SAME dataset with different params must coexist —
-    eviction is for stale fingerprints only, not sibling param keys
-    (evicting siblings would turn the memo into refit-per-invocation)."""
-    from ambient_sound_analysis_api_spark.registry import _memo_put
+def test_artifact_kinds_on_one_table_coexist(tmp_path, monkeypatch):
+    """Artifacts of different kinds or params on the SAME table coexist
+    (evicting siblings would turn the store into refit-per-invocation),
+    and a table's rewrite never touches other table paths. A rewrite
+    does not evict sibling kinds up front: each is rebuilt on its own
+    next use, so the store stays at one entry per (table path, kind,
+    params)."""
+    from ambient_sound_analysis_api_spark import registry as R
 
-    memo: dict = {}
-    fp = (("/x/embeddings.parquet", 111, 222),)
-    k1 = fp + (4, 8, 2)
-    k2 = fp + (8, 16, 2)
-    _memo_put(memo, k1, "a")
-    _memo_put(memo, k2, "b")
-    assert memo == {k1: "a", k2: "b"}
+    monkeypatch.setattr(R, "_ARTIFACTS", {})
+    sf = str(tmp_path)
+    emb = tmp_path / "embeddings.parquet"
+    emb.write_bytes(b"e1")
+    (tmp_path / "documents.parquet").write_bytes(b"d1")
+    builds = []
 
-    # a regenerated dataset (new fingerprint, same path) evicts ALL old
-    # fingerprints for that path, regardless of params
-    fp2 = (("/x/embeddings.parquet", 999, 222),)
-    k3 = fp2 + (4, 8, 2)
-    _memo_put(memo, k3, "c")
-    assert memo == {k3: "c"}
+    def get(table, kind, *params):
+        def build(prev, fp):
+            builds.append((kind, params, prev))
+            return (kind, params, fp[2])
+
+        return R._artifact(sf, table, kind, *params, build=build)
+
+    keys = [
+        ("embeddings", "pq", 4, 8, 2),
+        ("embeddings", "pq", 8, 16, 2),
+        ("embeddings", "clustered-pq", 4, 8, 2),
+        ("documents", "bloom"),
+    ]
+    first = [get(*k) for k in keys]
+    assert [get(*k) for k in keys] == first
+    assert len(builds) == 4 and len(R._ARTIFACTS) == 4
+
+    # regenerate embeddings: only the kind in use is rebuilt
+    emb.write_bytes(b"e2-longer")
+    assert get(*keys[0]) == ("pq", (4, 8, 2), 9)
+    assert builds[-1] == ("pq", (4, 8, 2), first[0])
+    assert len(builds) == 5 and len(R._ARTIFACTS) == 4
+    # a sibling kind is replaced on its next use, not before
+    assert get(*keys[2]) == ("clustered-pq", (4, 8, 2), 9)
+    assert len(builds) == 6 and len(R._ARTIFACTS) == 4
 
     # other table paths are never touched
-    other = (("/y/documents.parquet", 1, 1), 7)
-    _memo_put(memo, other, "d")
-    _memo_put(memo, fp2 + (8, 16, 2), "e")
-    assert other in memo and k3 in memo
+    assert get(*keys[3]) == first[3] and len(builds) == 6
+
+
+def test_artifact_store_concurrent_get_or_build(tmp_path, monkeypatch):
+    """16 threads share the store while one of them keeps rewriting the
+    table: no call raises, every entry holds the artifact built for its
+    own fingerprint, and a racing stale write is rebuilt on next use."""
+    import sys
+    import threading
+
+    from ambient_sound_analysis_api_spark import registry as R
+
+    monkeypatch.setattr(R, "_ARTIFACTS", {})
+    sf = str(tmp_path)
+    table = tmp_path / "embeddings.parquet"
+    table.write_bytes(b"v")
+    errors = []
+
+    def echo_fp(prev, fp):
+        return fp
+
+    def worker(i):
+        try:
+            for j in range(300):
+                if i == 0 and j % 50 == 0:
+                    table.write_bytes(b"v" * (j + 2))
+                R._artifact(sf, "embeddings", "k", j % 8, build=echo_fp)
+        except Exception as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(R._ARTIFACTS) == 8
+    assert all(fp == art for fp, art in R._ARTIFACTS.values())
+    fp = R._dataset_fingerprint(sf, "embeddings")
+    for p in range(8):
+        assert R._artifact(sf, "embeddings", "k", p, build=echo_fp) == fp
 
 
 def test_embedding_near_pairs_warns_when_cap_engages(spark):
