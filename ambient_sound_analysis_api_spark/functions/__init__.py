@@ -3,7 +3,6 @@ from .scalars import (  # noqa: F401
     is_finite,
     iso_format,
     normalize_hydrophone,
-    parse_delta_f_expr,
     second_of_day,
     time_bucket,
     tod_bucket,

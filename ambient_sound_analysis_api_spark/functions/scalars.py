@@ -20,32 +20,6 @@ def normalize_hydrophone(col: Column) -> Column:
     return F.upper(F.regexp_replace(F.trim(col), "[ -]", "_"))
 
 
-def parse_delta_f_expr(col: Column) -> Column:
-    """Parse the delta_f selector grammar into ``struct(freq_type, freq_value)``.
-
-    ``"<n>oct"`` → ('octave_bands', n); ``"<n>hz"`` → ('delta_hz', n);
-    ``"broadband"`` → ('broadband', null); anything else → null struct
-    (caller rejects). Parity with reference
-    ``app/services/get_timeseries.py:84-98`` and filename-suffix grammar
-    ``docs/upstream-notes.md:139-144``.
-    """
-    lowered = F.lower(F.trim(col))
-    oct_n = F.regexp_extract(lowered, r"^(\d+)oct$", 1)
-    hz_n = F.regexp_extract(lowered, r"^(\d+)hz$", 1)
-    return (
-        F.when(lowered == "broadband",
-               F.struct(F.lit("broadband").alias("freq_type"),
-                        F.lit(None).cast("int").alias("freq_value")))
-        .when(oct_n != "",
-              F.struct(F.lit("octave_bands").alias("freq_type"),
-                       oct_n.cast("int").alias("freq_value")))
-        .when(hz_n != "",
-              F.struct(F.lit("delta_hz").alias("freq_type"),
-                       hz_n.cast("int").alias("freq_value")))
-        .otherwise(F.lit(None).cast("struct<freq_type:string,freq_value:int>"))
-    )
-
-
 def md5_hash60(col: Column) -> Column:
     """Engine-portable 60-bit hash: the first 15 hex chars of md5 as a
     non-negative BIGINT.

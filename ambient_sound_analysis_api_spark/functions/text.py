@@ -35,23 +35,12 @@ def token_count(col: Column) -> Column:
     return F.when(F.trim(col) == "", F.lit(0)).otherwise(F.size(tokens(col)))
 
 
-def word_tokens(col: Column) -> Column:
-    """BPE-ish word-piece tokenization: runs of letters/digits or single
-    non-space punctuation — a deterministic stand-in for a real tokenizer."""
-    return F.filter(
-        F.split(col, r"(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])"),
-        lambda t: F.trim(t) != "",
-    )
-
-
 def letter_tokens(col: Column) -> Column:
     """Letter/digit-run tokens of the lowercased text → array<string>.
 
     Uses ``regexp_extract_all`` with an RE2-safe pattern (no lookarounds),
     so the *identical* pattern runs in DuckDB — the tokenization used by the
-    oracle-checked vocabulary/TF-IDF queries. ``word_tokens`` (lookaround
-    split keeping punctuation) remains the richer variant for quality
-    scoring, where no cross-engine oracle is involved.
+    oracle-checked vocabulary/TF-IDF queries.
     """
     return F.regexp_extract_all(F.lower(col), F.lit("[a-z0-9]+"), 0)
 
@@ -117,22 +106,6 @@ def fingerprint(col: Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def char_ngrams(col: Column, n: int) -> Column:
-    """Character n-gram shingles of the normalized text → array<string>.
-
-    Built from ``sequence`` + ``transform`` (JVM-side); empty/short texts
-    yield an empty array.
-    """
-    s = normalize_text(col)
-    count = F.greatest(F.length(s) - F.lit(n - 1), F.lit(0))
-    return F.when(count == 0, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: s.substr(i, F.lit(n)),
-        )
-    )
-
-
 def bind_once(expr: Column, body) -> Column:
     """Let-binding for Catalyst expressions: evaluate ``expr`` ONCE per row
     and pass the result to ``body`` as a lambda variable.
@@ -192,25 +165,6 @@ def token_ngrams(col: Column, n: int) -> Column:
     return bind_once(
         tokens(normalize_text(col)), lambda toks: array_ngrams(toks, n)
     )
-
-
-def dup_segment_fraction(col: Column, sep: str = "\n") -> Column:
-    """Gopher-style duplicate-line fraction: the share of non-blank segments
-    (lines by default) that are repeats of an earlier segment —
-    ``1 - distinct/total``. One of the MassiveText repetition filters; docs
-    dominated by repeated lines (boilerplate, scraped menus) score high and
-    get dropped. Pure array expressions (split → trim-filter →
-    array_distinct), no shuffle, no Python.
-    """
-    segs = F.filter(
-        F.transform(F.split(col, sep), lambda t: F.trim(t)),
-        lambda s: s != "",
-    )
-    n = F.size(segs)
-    return F.when(
-        n > 0,
-        F.lit(1.0) - F.size(F.array_distinct(segs)) / n.cast("double"),
-    ).otherwise(F.lit(0.0))
 
 
 def mean_token_length(arr: Column) -> Column:

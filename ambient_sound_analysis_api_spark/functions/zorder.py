@@ -47,17 +47,3 @@ def morton_sql(a: str, b: str, bits: int) -> str:
         terms.append(f"((({a} >> {j}) & 1) << {2 * j})")
         terms.append(f"((({b} >> {j}) & 1) << {2 * j + 1})")
     return " | ".join(terms)
-
-
-def zorder_layout(df, a: Column, b: Column, bits: int, n_partitions: int):
-    """Return ``df`` re-laid-out along the Z-curve of (a, b): range
-    partitioning gives contiguous curve segments per output file, the
-    within-partition sort packs row groups tightly — together the min/max
-    stats of every file bound BOTH dimensions. Write the result with any
-    parquet writer to make the layout durable."""
-    keyed = df.withColumn("_zkey", morton_code(a, b, bits))
-    return (
-        keyed.repartitionByRange(n_partitions, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-    )

@@ -1,4 +1,4 @@
-"""Crash-safe table rewrites for plain Parquet: staging dir + atomic swap.
+"""Crash-safe store rewrites for plain Parquet: staging dir + atomic swap.
 
 ``mode("overwrite")`` to the path being rewritten deletes the table before
 the new files land — a mid-write failure (OOM, preemption, kill -9) loses
@@ -15,9 +15,9 @@ portable equivalent is the classic staging protocol:
 A crash before the swap leaves the original table untouched (staging is
 garbage to be collected); a crash between the two renames of a swap leaves
 the old table at ``<path>.__old__.<token>`` and/or the new one staged —
-both fully readable, nothing lost. Per-partition swaps give the same
-guarantee partition-by-partition, like Hive dynamic overwrite but without
-its delete-first window.
+both fully readable, nothing lost (:func:`recover_path` puts the newest
+complete copy back). The streaming rollup and HLL stores swap through this
+protocol; the index stores share :func:`_fs_and_path`.
 
 All filesystem calls go through the JVM Hadoop ``FileSystem`` API, so the
 protocol works unchanged on ``file:``/HDFS/GCS URIs.
@@ -28,9 +28,6 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import SparkSession
-
-# Hive's sentinel dir name for a NULL partition value.
-HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -119,113 +116,3 @@ def recover_path(spark: SparkSession, path: str) -> str | None:
     if not fs.rename(best, dst):
         raise IOError(f"recover rename {best} -> {dst} failed")
     return cands[-1][1]
-
-
-def cleanup_staging(spark: SparkSession, staging: str) -> None:
-    fs, p = _fs_and_path(spark, staging)
-    fs.delete(p, True)
-
-
-def unescape_partition_value(dirval: str) -> str | None:
-    """Decode a Hive-escaped partition *directory* value back to the column
-    value: ``%XX`` sequences percent-decode, and the Hive NULL sentinel maps
-    to ``None``. (Spark escapes ``/:%#?`` etc. on write via
-    ``ExternalCatalogUtils.escapePathName``; ``%`` itself becomes ``%25``,
-    so percent-decoding is an exact inverse.)"""
-    if dirval == HIVE_DEFAULT_PARTITION:
-        return None
-    from urllib.parse import unquote
-
-    return unquote(dirval)
-
-
-def _versions(fs, jvm, path: str):
-    """Retained version dirs for ``path``, oldest→newest (token order =
-    creation order because tokens are zero-padded counters)."""
-    parent = jvm.org.apache.hadoop.fs.Path(path).getParent()
-    base = jvm.org.apache.hadoop.fs.Path(path).getName()
-    out = []
-    if parent is None or not fs.exists(parent):
-        return out
-    for st in fs.listStatus(parent):
-        name = st.getPath().getName()
-        if name.startswith(f"{base}.__v__."):
-            out.append((name.rsplit(".", 1)[-1], str(st.getPath())))
-    return sorted(out)
-
-
-def versioned_swap_in(
-    spark: SparkSession, staging: str, path: str, keep: int = 2
-) -> None:
-    """Like :func:`swap_in`, but the replaced table is RETAINED as a
-    numbered ``<path>.__v__.<counter>`` sibling instead of deleted —
-    poor-man's time travel on plain parquet (the one-feature slice of what
-    Delta/Iceberg snapshots provide). ``keep`` bounds retained versions;
-    older ones are pruned after the swap succeeds, so a crash can strand
-    an extra version dir but never lose one. Readers use
-    :func:`read_version`; :func:`rollback` restores the newest retained
-    version.
-    """
-    if keep < 1:
-        raise ValueError(
-            f"versioned_swap_in: keep must be >= 1 (got {keep}); use "
-            "swap_in for plain no-retention swaps"
-        )
-    jvm = spark._jvm
-    fs, dst = _fs_and_path(spark, path)
-    src = jvm.org.apache.hadoop.fs.Path(staging)
-    had_dst = fs.exists(dst)
-    if had_dst:
-        vers = _versions(fs, jvm, path)
-        nxt = int(vers[-1][0]) + 1 if vers else 0
-        vdst = jvm.org.apache.hadoop.fs.Path(f"{path}.__v__.{nxt:012d}")
-        if not fs.rename(dst, vdst):
-            raise IOError(f"rename {dst} -> {vdst} failed")
-        if not fs.rename(src, dst):
-            fs.rename(vdst, dst)
-            raise IOError(f"rename {src} -> {dst} failed")
-        for _, vpath in _versions(fs, jvm, path)[:-keep]:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(vpath), True)
-    else:
-        if not fs.rename(src, dst):
-            raise IOError(f"rename {src} -> {dst} failed")
-
-
-def read_version(spark: SparkSession, path: str, steps_back: int = 1):
-    """Read a retained previous version (``steps_back=1`` = the version
-    replaced by the most recent swap). Returns a DataFrame; raises
-    ``ValueError`` if that many versions aren't retained."""
-    jvm = spark._jvm
-    fs, _ = _fs_and_path(spark, path)
-    vers = _versions(fs, jvm, path)
-    if steps_back < 1 or steps_back > len(vers):
-        raise ValueError(
-            f"only {len(vers)} retained version(s) for {path}, "
-            f"asked for steps_back={steps_back}"
-        )
-    return spark.read.parquet(vers[-steps_back][1])
-
-
-def rollback(spark: SparkSession, path: str) -> None:
-    """Restore the newest retained version: the current table is renamed
-    aside (kept as a new retained version — a rollback is itself undoable),
-    the retained version renamed into place. Same crash-safety contract as
-    ``swap_in`` — two renames, so an interruption (or a concurrent read)
-    between them can observe the path absent, but every state is fully
-    recoverable: at least one complete copy always exists under a
-    well-known name."""
-    jvm = spark._jvm
-    fs, dst = _fs_and_path(spark, path)
-    vers = _versions(fs, jvm, path)
-    if not vers:
-        raise ValueError(f"no retained versions for {path}")
-    newest = jvm.org.apache.hadoop.fs.Path(vers[-1][1])
-    nxt = int(vers[-1][0]) + 1
-    aside = jvm.org.apache.hadoop.fs.Path(f"{path}.__v__.{nxt:012d}")
-    had_dst = fs.exists(dst)
-    if had_dst and not fs.rename(dst, aside):
-        raise IOError(f"rename {dst} -> {aside} failed")
-    if not fs.rename(newest, dst):
-        if had_dst:
-            fs.rename(aside, dst)
-        raise IOError(f"rename {newest} -> {dst} failed")

@@ -1,163 +1,15 @@
-"""Table-maintenance operators: small-file compaction for plain Parquet.
+"""Table-maintenance audits for plain Parquet snapshots.
 
-Long-running ingestion (streaming sinks, frequent MERGEs, per-hour jobs)
-fragments a table into thousands of KB-sized files; at 100 TB the scan cost
-becomes dominated by file-open overhead and the driver's file-listing blows
-up long before the data does. Delta/Iceberg ship OPTIMIZE/rewrite_data_files
-for this; on plain Parquet the same bin-packing rewrite is a
-read → repartition → dynamic-overwrite cycle, which this module provides.
-
-Sizing uses the Hadoop ``FileSystem`` API (works unchanged on HDFS/S3A/GCS,
-not just ``file:``), and the rewrite is crash-safe: it stages to a sibling
-directory and atomically renames into place (``operators.atomic_swap``) —
-a failure at any point leaves the original table readable, and staging to
-a different path also sidesteps Spark's read/overwrite-same-path refusal
-without a ``localCheckpoint`` materialization.
+Schema evolution (:func:`schema_diff`, with the :func:`type_change_compat`
+widening rule) and row-level change detection (:func:`snapshot_diff`)
+between two versions of a table: the changelog a Delta/Iceberg table
+publishes with every snapshot, expressed over plain Parquet.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
-
-
-def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) for every data file under ``path``, via the JVM Hadoop
-    FileSystem — portable across local/HDFS/object-store URIs."""
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(hpath, True)  # recursive
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            out.append((p, int(st.getLen())))
-    return out
-
-
-def compaction_plan(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-) -> dict:
-    """Inspect a Parquet table and report what a compaction would do:
-    ``{"files": n, "bytes": b, "target_files": t}`` — ``target_files`` is
-    the bin-packed file count ``ceil(bytes / target_file_bytes)``."""
-    files = _list_parquet_files(spark, path)
-    total = sum(b for _, b in files)
-    return {
-        "files": len(files),
-        "bytes": total,
-        "target_files": max(1, math.ceil(total / target_file_bytes)),
-    }
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    partition_col: str | None = None,
-    min_files_to_compact: int = 2,
-) -> dict:
-    """Bin-pack the Parquet table at ``path`` into ~``target_file_bytes``
-    files, in place. Returns the before/after stats dict.
-
-    - **Unpartitioned**: one round-robin ``repartition(target_files)`` of
-      the whole table — even output sizes regardless of input skew.
-    - **Partitioned** (``partition_col``): only partitions holding more
-      than ``min_files_to_compact`` files are rewritten, via dynamic
-      partition overwrite — untouched partitions keep their original files
-      (at 100 TB you compact yesterday's hot partition, not the table).
-      Each rewritten partition is clustered to one task → one output file;
-      a partition larger than ``target_file_bytes`` stays a single file
-      per rewrite (split-table parquet keeps it scan-parallel), which is
-      the standard OPTIMIZE trade-off on formats without file-level
-      manifests.
-
-    No-op (returns stats with ``"rewritten": 0``) when the table is already
-    compact. Row content is preserved exactly; only file layout changes.
-    """
-    from . import atomic_swap as aswap
-
-    before = compaction_plan(spark, path, target_file_bytes)
-    df = spark.read.parquet(path)
-    if partition_col is None:
-        if before["files"] <= max(before["target_files"], min_files_to_compact - 1):
-            return {**before, "rewritten": 0}
-        staging = aswap.staging_path(path)
-        try:
-            df.repartition(before["target_files"]).write.parquet(staging)
-            aswap.swap_in(spark, staging, path)
-        finally:
-            aswap.cleanup_staging(spark, staging)
-        after = compaction_plan(spark, path, target_file_bytes)
-        return {**before, "rewritten": before["files"], "files_after": after["files"]}
-
-    # partitioned: find partitions with too many files from the file listing.
-    # Directory values are Hive-escaped (%XX for special chars, the
-    # __HIVE_DEFAULT_PARTITION__ sentinel for NULL) — decode them back to
-    # column values for the filter; the swap below reuses the escaped dir
-    # names verbatim, so escaped and NULL partitions compact like any other.
-    files = _list_parquet_files(spark, path)
-    by_part: dict[str, int] = {}
-    marker = f"/{partition_col}="
-    for p, _ in files:
-        if marker not in p:
-            raise ValueError(f"{p} is not partitioned by {partition_col}")
-        val = p.split(marker, 1)[1].split("/", 1)[0]
-        by_part[val] = by_part.get(val, 0) + 1
-    touched = sorted(v for v, n in by_part.items() if n > min_files_to_compact)
-    if not touched:
-        return {**before, "rewritten": 0}
-    values = [aswap.unescape_partition_value(v) for v in touched]
-    cond = F.col(partition_col).cast("string").isin(
-        [v for v in values if v is not None]
-    )
-    if any(v is None for v in values):
-        cond = cond | F.col(partition_col).isNull()
-    sub = df.filter(cond)
-    staging = aswap.staging_path(path)
-    swapped = 0
-    try:
-        # one shuffle partition per table partition → one output file each
-        (
-            sub.repartition(len(touched), F.col(partition_col))
-            .write.partitionBy(partition_col)
-            .parquet(staging)
-        )
-        # Swap only the partition dirs the staged write actually produced
-        # (never blind-rename from the `touched` list): if the decoded dir
-        # value didn't round-trip through the column filter — e.g. the
-        # partition column's inferred type renders values differently than
-        # the dir names an external writer used — the staged dir is simply
-        # absent and that partition degrades to an untouched no-op, instead
-        # of a live partition being renamed aside for a missing source.
-        fs, sroot = aswap._fs_and_path(spark, staging)
-        prefix = f"{partition_col}="
-        for st in fs.listStatus(sroot):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(prefix)):
-                continue
-            aswap.swap_in(
-                spark, str(st.getPath().toString()), f"{path}/{name}"
-            )
-            swapped += 1
-    finally:
-        aswap.cleanup_staging(spark, staging)
-    after = compaction_plan(spark, path, target_file_bytes)
-    return {
-        **before,
-        "rewritten": swapped,
-        "files_after": after["files"],
-    }
 
 
 #: Safe type widenings (old → new reads every old value losslessly under
@@ -218,7 +70,7 @@ def schema_diff(spark: SparkSession, old_schema, new_schema) -> DataFrame:
     rather than guessing (unit-pinned).
 
     Schemas are footer metadata (``spark.read.parquet(path).schema`` is a
-    footer-only read — see :func:`schema_diff_paths`), so the comparison
+    footer-only read), so the comparison
     is legitimately driver-side: the output is bounded by column count,
     never data size.
     """
@@ -261,17 +113,6 @@ def schema_diff(spark: SparkSession, old_schema, new_schema) -> DataFrame:
         rows,
         "column_name string, status string, old_type string, "
         "new_type string, renamed_from string, compat string",
-    )
-
-
-def schema_diff_paths(spark: SparkSession, old_path: str, new_path: str) -> DataFrame:
-    """:func:`schema_diff` over two Parquet locations — the
-    footer-driven form (``spark.read.parquet`` resolves the merged footer
-    schema without scanning data)."""
-    return schema_diff(
-        spark,
-        spark.read.parquet(old_path).schema,
-        spark.read.parquet(new_path).schema,
     )
 
 

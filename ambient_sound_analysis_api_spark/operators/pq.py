@@ -1505,42 +1505,6 @@ def ivfpq_publish_segmented(
     )
 
 
-def ivfpq_admit_codes(
-    delta_codes: DataFrame,
-    root: str,
-    retain: int = 2,
-    fingerprint: "str | None" = None,
-) -> str:
-    """Admit pre-assigned code rows (the :func:`ivfpq_delta_index` output
-    shape: ``id, cell, code_0..code_{m-1}``) as a NEW segment — the only
-    encode cost is the delta's; standing segments are untouched on disk
-    and the standing tombstone table carries forward (delta ids must be
-    disjoint from the standing corpus, deleted ids included)."""
-    import uuid
-
-    from .retrieval import _read_tombstones
-
-    spark = delta_codes.sparkSession
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
-    (
-        delta_codes.repartition("cell")
-        .write.mode("errorifexists")
-        .partitionBy("cell")
-        .parquet(f"{root}/segs/{seg}")
-    )
-    cur = ivfpq_resolve_index(spark, root)
-    if cur is None:
-        return publish_segment_membership(
-            spark, root, [seg], retain=retain, fingerprint=fingerprint
-        )
-    _, vpath = cur
-    return publish_segment_membership(
-        spark, root, _segment_membership(spark, vpath) + [seg],
-        retain=retain, fingerprint=fingerprint,
-        tombstones=_read_tombstones(spark, vpath),
-    )
-
-
 def ivfpq_delete_ids(
     delete_ids: DataFrame,
     root: str,

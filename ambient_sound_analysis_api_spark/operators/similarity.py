@@ -63,26 +63,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k by cosine similarity to a literal query vector.
-
-    Ties broken by id for determinism. The query vector is a literal array
-    (broadcast in the plan), so the scan is embarrassingly parallel.
-    """
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = emb.select(
-        F.col(id_col),
-        cosine(F.col(vec_col), q).alias("cosine_sim"),
-    )
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col(id_col)).limit(k)
-
-
 def cosine_topk_by_id(
     emb: DataFrame,
     query_id: int,
@@ -339,7 +319,10 @@ def lsh_topk_table(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``lsh_topk`` over a persisted plane table (see ``lsh_bucket_table``)."""
+    """ANN via random-hyperplane LSH over a persisted plane table (see
+    ``lsh_bucket_table``): score only vectors sharing the query's
+    sign-pattern bucket. Recall < 1 by construction — the brute-force scan
+    is the oracle."""
     bucketed = lsh_bucket_table(emb, planes_df, vec_col=vec_col)
     q = bucketed.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("_qvec"), F.col("lsh_bucket").alias("_qbucket")
@@ -396,38 +379,6 @@ def lsh_topk_multiprobe(
     )
     scored = (
         bucketed.join(F.broadcast(probes), F.col("lsh_bucket") == F.col("_pb"))
-        .filter(F.col(id_col) != query_id)
-        .select(
-            F.col(id_col),
-            cosine(F.col(vec_col), F.col("_qvec")).alias("cosine_sim"),
-        )
-    )
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col(id_col)).limit(k)
-
-
-def lsh_topk(
-    emb: DataFrame,
-    query_id: int,
-    planes: list[list[float]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN via random-hyperplane LSH: score only vectors sharing the query's
-    sign-pattern bucket.
-
-    With the table written bucketed/partitioned by the (cheap, persistable)
-    ``lsh_bucket`` column, the probe reads ~1/2^p of the data; here the
-    bucket is computed on the fly and the candidate restriction is an
-    equi-join on the bucket id. Recall < 1 by construction — the brute-force
-    scan is the oracle (unit-tested recall, rows-only driver check).
-    """
-    bucketed = lsh_bucket(emb, planes, vec_col=vec_col)
-    q = bucketed.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("_qvec"), F.col("lsh_bucket").alias("_qbucket")
-    )
-    scored = (
-        bucketed.join(F.broadcast(q), F.col("lsh_bucket") == F.col("_qbucket"))
         .filter(F.col(id_col) != query_id)
         .select(
             F.col(id_col),

@@ -49,29 +49,6 @@ def broadband_points(
     return out.orderBy("ts")
 
 
-def psd_long(
-    df: DataFrame,
-    hydrophone: str,
-    start: datetime,
-    end: datetime,
-    *,
-    band_low: float | None = None,
-    band_high: float | None = None,
-) -> DataFrame:
-    """PSD rows ``(ts, band_hz, value)`` with optional band-range selection.
-
-    Band selection is a row filter on ``band_hz`` — the long-form equivalent
-    of the reference's select-columns-whose-label-parses-into-range
-    (``app/services/get_aggregations.py:57-75``).
-    """
-    out = window_filter(df, start, end).filter(F.col("hydrophone") == hydrophone)
-    if band_low is not None:
-        out = out.filter(F.col("band_hz") >= F.lit(float(band_low)))
-    if band_high is not None:
-        out = out.filter(F.col("band_hz") <= F.lit(float(band_high)))
-    return out.select("ts", "band_hz", "value")
-
-
 def psd_matrix(psd: DataFrame, bands: list[float]) -> DataFrame:
     """Serving projection: long PSD → wide matrix rows.
 

@@ -7,16 +7,13 @@ replacing matching base rows, new rows appending. Without a table format
 is still expressible as one full-outer join with column-wise precedence —
 which is exactly what those formats execute underneath.
 
-Scale notes: the join shuffles both sides on the key — with the base
-bucketed on the key (``sources/ingest.py::write_bucketed``) the base side's
-shuffle disappears and only the (small) changes side moves. At 100 TB the
-write-back pairs this with dynamic partition overwrite so only partitions
-containing matched keys rewrite.
+Scale notes: the join shuffles both sides on the key; with the base
+bucketed on the key only the (small) changes side moves.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,242 +49,13 @@ def merge_upsert(base: DataFrame, changes: DataFrame, keys: list[str]) -> DataFr
     return joined.select(*cols)
 
 
-def merge_write(
-    spark: SparkSession,
-    path: str,
-    changes: DataFrame,
-    keys: list[str],
-    partition_col: str | None = None,
-) -> None:
-    """MERGE ``changes`` INTO the Parquet table at ``path``, crash-safely.
-
-    The Delta/Iceberg-shaped write path on plain Parquet: the relational
-    merge (``merge_upsert``) plus a rewrite that touches only what changed,
-    executed via the staging-dir + atomic-rename protocol
-    (``operators.atomic_swap``) — a failure at ANY point leaves the
-    original table readable (the old in-place ``overwrite`` deleted the
-    table before the new files landed).
-
-    With ``partition_col`` the table is partitioned on disk and the rewrite
-    is *partition-pruned*: only partitions that appear in ``changes`` are
-    re-merged, staged, and swapped in one directory-rename each — at
-    100 TB a merge of one day's corrections rewrites one day, not the
-    table, and each partition is old-or-new complete at every instant.
-    ``partition_col`` must be stable per key (part of the key, or derived
-    from it): if a key's partition value changed between base and changes,
-    the stale copy in the old partition would survive — the same contract
-    Hive-style dynamic-overwrite MERGEs have.
-
-    Without ``partition_col`` the whole table rewrites (unavoidable on a
-    format without file-level deletes), still old-or-new atomically.
-
-    Because the staged write targets a *different* path than the scan,
-    Spark's read/overwrite-same-path refusal never triggers and no
-    ``localCheckpoint`` pin (extra materialization) is needed.
-    """
-    from . import atomic_swap as aswap
-
-    base = spark.read.parquet(path)
-    if set(base.columns) != set(changes.columns):
-        raise ValueError("merge_write requires identical schemas")
-    staging = aswap.staging_path(path)
-    try:
-        if partition_col is None:
-            merged = merge_upsert(base, changes, keys)
-            merged.write.parquet(staging)
-            aswap.swap_in(spark, staging, path)
-            return
-        touched = [
-            r[0] for r in changes.select(partition_col).distinct().collect()
-        ]
-        # NULL partition values need an explicit isNull branch: isin() never
-        # matches NULL (three-valued logic), so without it the base's NULL
-        # partition would be EXCLUDED from the re-merge while the staged
-        # NULL-partition dir still swaps in — silently deleting base rows.
-        non_null = [v for v in touched if v is not None]
-        cond = (
-            F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-        )
-        if any(v is None for v in touched):
-            cond = cond | F.col(partition_col).isNull()
-        sub = base.filter(cond)
-        # keep the partition column last, matching partitioned-write layout
-        merged = merge_upsert(sub, changes, keys)
-        merged.write.partitionBy(partition_col).parquet(staging)
-        _swap_partitions(spark, staging, path, partition_col)
-    finally:
-        aswap.cleanup_staging(spark, staging)
-
-
-def _swap_partitions(
-    spark: SparkSession, staging: str, path: str, partition_col: str
-) -> None:
-    """Swap every ``partition_col=...`` dir written under ``staging`` into
-    ``path``, one atomic rename per partition (new partitions just move)."""
-    from . import atomic_swap as aswap
-
-    fs, sroot = aswap._fs_and_path(spark, staging)
-    prefix = f"{partition_col}="
-    for st in fs.listStatus(sroot):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(prefix)):
-            continue
-        aswap.swap_in(spark, str(st.getPath().toString()), f"{path}/{name}")
-
-
 def forget_rows(
     base: DataFrame, tombstones: DataFrame, keys: list[str]
 ) -> DataFrame:
     """The relational core of right-to-be-forgotten erasure: every base
     row whose key appears in ``tombstones`` is removed (left-anti join —
     duplicate tombstones are harmless, the join is set-semantic). This is
-    what DELETE FROM ... WHERE key IN (...) executes underneath; the
-    crash-safe, partition-pruned storage form is :func:`forget_write`."""
+    what DELETE FROM ... WHERE key IN (...) executes underneath."""
     return base.join(
         tombstones.select(*keys).distinct(), keys, "left_anti"
     )
-
-
-def forget_write(
-    spark: SparkSession,
-    path: str,
-    tombstones: DataFrame,
-    keys: list[str],
-    partition_col: str | None = None,
-):
-    """DELETE the tombstoned keys from the Parquet table at ``path``,
-    crash-safely — the right-to-be-forgotten / GDPR-erasure write path,
-    the delete sibling of :func:`merge_write`.
-
-    With ``partition_col`` the rewrite is *partition-pruned on actual
-    containment*: a semi-join finds the partitions that really hold
-    tombstoned keys (not just partitions named by the request), only
-    those re-stage and atomically swap, and a partition whose every row
-    is erased is REMOVED outright (``partitionBy`` writes no dir for an
-    empty partition, so the swap loop alone would silently leave the old
-    data in place — the deleted-everything case needs the explicit
-    directory delete). Untouched partitions see zero IO: at 100 TB,
-    erasing one user's documents rewrites the handful of partitions that
-    contain them, not the corpus.
-
-    Without ``partition_col`` the whole table rewrites old-or-new
-    atomically (staging + rename, ``operators/atomic_swap.py``).
-
-    Returns the erasure manifest as a DataFrame —
-    ``(partition, rows_before, rows_deleted, rows_after)``, one row per
-    touched partition (one row total when unpartitioned) — the audit
-    artifact an erasure request is answered with. The manifest is
-    computed from the SAME pruned subset that rewrites, so it is exact.
-    """
-    from . import atomic_swap as aswap
-
-    base = spark.read.parquet(path)
-    tomb = tombstones.select(*keys).distinct()
-
-    def manifest_of(sub: DataFrame, part_expr) -> DataFrame:
-        flagged = sub.join(
-            F.broadcast(tomb.withColumn("__t", F.lit(1))), keys, "left"
-        )
-        return (
-            flagged.groupBy(part_expr.alias("partition"))
-            .agg(
-                F.count("*").alias("rows_before"),
-                F.sum(F.coalesce("__t", F.lit(0))).cast("long").alias(
-                    "rows_deleted"
-                ),
-            )
-            .select(
-                "partition",
-                "rows_before",
-                "rows_deleted",
-                (F.col("rows_before") - F.col("rows_deleted")).alias(
-                    "rows_after"
-                ),
-            )
-        )
-
-    staging = aswap.staging_path(path)
-    try:
-        if partition_col is None:
-            manifest = manifest_of(base, F.lit("<table>")).collect()
-            survivors = forget_rows(base, tomb, keys)
-            survivors.write.parquet(staging)
-            aswap.swap_in(spark, staging, path)
-            return spark.createDataFrame(
-                manifest,
-                "partition string, rows_before long, rows_deleted long,"
-                " rows_after long",
-            )
-
-        # partitions that actually CONTAIN tombstoned keys (containment,
-        # not request-naming: a key listed but absent touches nothing)
-        # collect BOTH the raw value (for the pruning filter) and Spark's
-        # own cast-to-string form (for matching on-disk dir names):
-        # partitionBy stringifies through the engine's cast, which differs
-        # from Python's str() for booleans ('true' vs 'True') and similar
-        # primitives — a str()-based compare would silently skip the
-        # fully-erased-partition delete for such columns.
-        touched_rows = (
-            base.join(F.broadcast(tomb), keys, "left_semi")
-            .select(
-                F.col(partition_col).alias("_v"),
-                F.col(partition_col).cast("string").alias("_s"),
-            )
-            .distinct()
-            .collect()
-        )
-        touched = [r["_v"] for r in touched_rows]
-        if not touched:
-            return spark.createDataFrame(
-                [],
-                "partition string, rows_before long, rows_deleted long,"
-                " rows_after long",
-            )
-        non_null = [v for v in touched if v is not None]
-        cond = (
-            F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-        )
-        if any(v is None for v in touched):
-            cond = cond | F.col(partition_col).isNull()
-        sub = base.filter(cond)
-        manifest = manifest_of(
-            sub, F.col(partition_col).cast("string")
-        ).collect()
-        survivors = forget_rows(sub, tomb, keys)
-        survivors.write.partitionBy(partition_col).parquet(staging)
-
-        # capture the staged partition names BEFORE the swap renames them
-        # away, then swap rewritten partitions in, then remove touched
-        # partitions the staged write produced NO dir for (every row
-        # erased). Touched values compare via Spark's cast-to-string form
-        # (collected above) — the same stringification partitionBy uses
-        # when writing the dir name.
-        fs, sroot = aswap._fs_and_path(spark, staging)
-        staged_names = {
-            st.getPath().getName()
-            for st in fs.listStatus(sroot)
-            if st.getPath().getName().startswith(f"{partition_col}=")
-        }
-        _swap_partitions(spark, staging, path, partition_col)
-        _, troot = aswap._fs_and_path(spark, path)
-        touched_strs = {r["_s"] for r in touched_rows if r["_s"] is not None}
-        touched_null = any(v is None for v in touched)
-        for st in fs.listStatus(troot):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith(f"{partition_col}=")):
-                continue
-            val = aswap.unescape_partition_value(
-                name[len(partition_col) + 1 :]
-            )
-            hit = (val is None and touched_null) or (
-                val is not None and val in touched_strs
-            )
-            if hit and name not in staged_names:
-                fs.delete(st.getPath(), True)
-        return spark.createDataFrame(
-            manifest,
-            "partition string, rows_before long, rows_deleted long,"
-            " rows_after long",
-        )
-    finally:
-        aswap.cleanup_staging(spark, staging)

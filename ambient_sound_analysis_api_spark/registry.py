@@ -48,6 +48,7 @@ from .operators import aggregations as agg
 from .operators import dedup, joins, multimodal, similarity, sketches, timeseries
 from .operators.planner import AUTO_INTERVAL_TARGET_POINTS, INTERVALS, expected_point_count
 from .sources.catalog import build_catalog
+from .sources.domain import _read_events as _events
 
 # ---------------------------------------------------------------------------
 # shared constants
@@ -69,59 +70,6 @@ _BANDS_SQL = "[" + ", ".join(f"CAST({b} AS DOUBLE)" for b in BANDS) + "]"
 
 _ISO_SPARK = "yyyy-MM-dd'T'HH:mm:ss"
 _ISO_DUCK = "%Y-%m-%dT%H:%M:%S"
-
-
-def _events(
-    spark: SparkSession,
-    sf_dir: str,
-    start: datetime | None = None,
-    end: datetime | None = None,
-) -> DataFrame:
-    """events table with ``ts`` normalized to a microsecond TIMESTAMP.
-
-    The synthetic events parquet carries TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects; ``nanosAsLong`` reads it as raw nanos and the
-    exact integer division below truncates to micros — matching DuckDB's own
-    nanos→micros truncation at scan time.
-
-    ``start``/``end`` (naive-UTC, start-inclusive / end-exclusive) are
-    applied *before* the long→timestamp conversion, as integer comparisons
-    on the raw nanos column — predicates on the converted timestamp are
-    expressions Parquet pushdown cannot see, while the long bounds reach the
-    reader as ``PushedFilters`` and prune row groups. At archive scale this
-    is the difference between scanning a window and scanning the table.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover - conf may not exist on some builds
-        pass
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-
-    def _ns(dt: datetime) -> int:
-        from datetime import timezone
-
-        return int(dt.replace(tzinfo=timezone.utc).timestamp()) * 1_000_000_000
-
-    ts_dtype = dict(df.dtypes).get("ts")
-    if ts_dtype in ("bigint", "long"):
-        if start is not None:
-            df = df.filter(F.col("ts") >= F.lit(_ns(start)))
-        if end is not None:
-            df = df.filter(F.col("ts") < F.lit(_ns(end)))
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        # Filter on the raw scan column first (pushdown-eligible), then
-        # normalize TIMESTAMP_NTZ → TIMESTAMP. With the session TZ pinned
-        # UTC the cast is value-preserving, and every downstream
-        # ``unix_micros`` / window call requires plain TIMESTAMP.
-        if start is not None:
-            df = df.filter(F.col("ts") >= F.lit(start))
-        if end is not None:
-            df = df.filter(F.col("ts") < F.lit(end))
-        if ts_dtype == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -5947,8 +5895,8 @@ def q_layout_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH dimensions — the per-file min/max stats a Z-ordered parquet write
     would expose, i.e. the reason a filter on either dimension can skip
     most row groups. The key is a pure shiftleft/AND/OR codegen fold (zero
-    Python, zero extra shuffle); ``zorder_layout`` turns the same key into
-    an actual ``repartitionByRange`` + sorted write."""
+    Python, zero extra shuffle); a ``repartitionByRange`` + sorted write on
+    the same key makes the layout durable."""
     from .functions.zorder import morton_code
 
     ev = _events(spark, sf_dir).select(
@@ -10916,17 +10864,13 @@ def q_dedup_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pipeline_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten erasure audit
-    (``operators.upsert.forget_rows`` / ``forget_write``): tombstoned
+    (``operators.upsert.forget_rows``): tombstoned
     documents (synthetic erasure requests: doc_id % 97 == 0) are removed
     by the anti-join DELETE core, and the audit reports per-language
     rows_before / rows_deleted / rows_after PLUS ``n_tomb_surviving`` —
     computed from the ACTUAL survivor set (semi-join back against the
     tombstones), so the query self-verifies complete erasure rather than
-    asserting it. The storage form (``forget_write``) prunes the rewrite
-    to partitions that really contain tombstoned keys, removes
-    fully-erased partition dirs, and swaps atomically
-    (crash-safety + zero-IO-untouched-partitions pinned in
-    ``tests/test_atomic_write.py``)."""
+    asserting it."""
     from .operators.upsert import forget_rows
 
     docs = _table(spark, sf_dir, "documents")
@@ -13154,8 +13098,8 @@ def q_layout_zorder_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame
     """File-skipping proof for the Z-order layout (functions/zorder.py):
     the SAME 2-D range query (minute-of-day ∈ [600, 660), low user bits ∈
     [64, 128)) priced against three file layouts — Z-curve range
-    sharding (``zkey >> 14``, the file boundaries
-    ``zorder_layout``'s ``repartitionByRange`` produces), single-dimension
+    sharding (``zkey >> 14``, the file boundaries a ``repartitionByRange``
+    on the key produces), single-dimension
     sort sharding (``a >> 5``), and insertion-order sharding
     (``event_id % 64``, the no-layout baseline). A min/max-pruning reader
     opens a file only when its per-file bounding box intersects the query
@@ -13163,7 +13107,7 @@ def q_layout_zorder_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame
     buys: Z-order bounds BOTH dimensions per file (few files touched),
     the a-sort prunes a but never b, insertion order touches everything.
     ``tests/test_zorder_diagnostics.py`` proves the same effect on REAL
-    parquet: events written through ``zorder_layout`` answer this box
+    parquet: events range-partitioned on the Morton key answer this box
     from fewer files (``input_file_name()`` distinct count) than an
     unordered write of the same file count, and exactly the files whose
     footer-level min/max intersect. One explode-free scan, one

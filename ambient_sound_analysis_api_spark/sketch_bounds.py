@@ -1,92 +1,15 @@
 """Error-bound checks for approximate-sketch queries against exact answers.
 
-Engine-internal sketches (Spark's HLL++ ``approx_count_distinct``, GK
-``percentile_approx``, the count-min grid) cannot hash-match a DuckDB
-oracle — the estimates are engine-specific. But such sketches carry
+Engine-internal sketches (the count-min grid) cannot hash-match a DuckDB
+oracle: the estimates are engine-specific. But such sketches carry
 *published* error bounds, and the exact answers are one SQL query away;
 asserting the estimates land inside those bounds is a far stronger gate
-than a rows-only count:
-
-- ``approx_count_distinct(rsd=0.02)``: HLL++ standard error is the
-  requested ``rsd``; we allow 5 standard deviations (±10%) plus an absolute
-  floor of 2 for tiny groups.
-- ``percentile_approx(q, accuracy=10000)``: the KLL/GK-style sketch bounds
-  *rank* error at ``1/accuracy``. We assert the estimate lies between the
-  exact discrete quantiles at ``q ± eps`` where ``eps`` covers 10× the
-  sketch's rank bound and never less than 3 rows of rank slack (small
-  groups quantize coarsely).
+than a rows-only count. ``BOUNDS_QUERIES`` is derived from the
+``_CHECKERS`` dispatch table at the bottom of this module (one checker per
+bounds-gated query).
 """
 
 from __future__ import annotations
-
-# NOTE: BOUNDS_QUERIES is derived from the _CHECKERS dispatch table at the
-# bottom of this module (one checker per bounds-gated query).
-
-_RSD = 0.02            # matches the query's approx_count_distinct rsd
-_RANK_ACCURACY = 10_000  # matches the query's percentile_approx accuracy
-
-
-def _quantile_window(con, event_type: str, q: float, n: int) -> tuple:
-    eps = max(10.0 / _RANK_ACCURACY, 3.0 / max(n, 1))
-    lo_q, hi_q = max(q - eps, 0.0), min(q + eps, 1.0)
-    row = con.execute(
-        """
-        SELECT quantile_cont(value, ?) AS lo, quantile_cont(value, ?) AS hi
-        FROM events WHERE event_type = ?
-        """,
-        [lo_q, hi_q, event_type],
-    ).fetchone()
-    return row[0], row[1]
-
-
-def bounds_problems(con, cols: list[str], rows: list[tuple]) -> list[str]:
-    """Check ``agg_approx_sketches`` rows against DuckDB exact answers.
-
-    Returns a list of human-readable problems (empty = all bounds hold).
-    """
-    idx = {c: i for i, c in enumerate(cols)}
-    need = ["event_type", "approx_users", "approx_p50", "approx_p99"]
-    missing = [c for c in need if c not in idx]
-    if missing:
-        return [f"bounds check: missing columns {missing}"]
-
-    # count(value), not count(*): the percentile sketch ranks only non-null
-    # values, so rank slack must be computed over the population it ranks —
-    # count(*) on a NULL-heavy group would shrink eps below one real row
-    exact = {
-        r[0]: (r[1], r[2])
-        for r in con.execute(
-            "SELECT event_type, count(DISTINCT user_id), count(value) "
-            "FROM events GROUP BY event_type"
-        ).fetchall()
-    }
-    problems = []
-    if len(rows) != len(exact):
-        problems.append(
-            f"bounds check: group count {len(rows)} != exact {len(exact)}"
-        )
-    for r in rows:
-        et = r[idx["event_type"]]
-        if et not in exact:
-            problems.append(f"bounds check: unexpected group {et!r}")
-            continue
-        exact_users, n = exact[et]
-        approx_users = float(r[idx["approx_users"]])
-        tol = max(2.0, 5 * _RSD * exact_users)
-        if abs(approx_users - exact_users) > tol:
-            problems.append(
-                f"{et}: approx_users {approx_users} outside "
-                f"{exact_users}±{tol:.1f} (5·rsd)"
-            )
-        for col, q in (("approx_p50", 0.5), ("approx_p99", 0.99)):
-            lo, hi = _quantile_window(con, et, q, n)
-            v = float(r[idx[col]])
-            if not (lo - 1e-9 <= v <= hi + 1e-9):
-                problems.append(
-                    f"{et}: {col} {v} outside exact rank window "
-                    f"[{lo}, {hi}]"
-                )
-    return problems
 
 
 def _cms_problems(con, cols: list[str], rows: list[tuple]) -> list[str]:
@@ -135,11 +58,9 @@ def _cms_problems(con, cols: list[str], rows: list[tuple]) -> list[str]:
     return problems
 
 
-# agg_approx_sketches left this table in round 7: it now runs the explicit
-# portable sketches (operators/sketches.py) and carries an exact DuckDB
-# oracle, a strictly stronger check than an error-bound envelope. The
-# ``bounds_problems`` checker above is retained for the accuracy unit test
-# of Spark's NATIVE sketch functions (tests/test_stateful_sessions.py).
+# agg_approx_sketches is not in this table: it runs the explicit portable
+# sketches (operators/sketches.py) and carries an exact DuckDB oracle, a
+# strictly stronger check than an error-bound envelope.
 _CHECKERS = {
     "agg_countmin_heavy_hitters": _cms_problems,
 }

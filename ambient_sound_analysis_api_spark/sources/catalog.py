@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import normalize_hydrophone
@@ -60,19 +60,6 @@ def keys_from_listing(
         )
         out = part if out is None else out.unionAll(part)
     return out
-
-
-def key_matches_hydrophone(key: Column, hydrophone: str) -> Column:
-    """Hydrophone-attribution predicate for shared/mixed prefixes.
-
-    Parity with ``_key_matches_hydrophone``
-    (``app/services/get_options.py:75-83``): a key belongs to ``name`` if it
-    contains a ``/{name}/`` path segment or a ``hydrophone={name}``
-    partition-style component (fixes the cross-hydrophone bleed documented in
-    ``docs/upstream-notes.md:43-58``).
-    """
-    name = hydrophone.strip().lower()
-    return key.contains(f"/{name}/") | key.contains(f"hydrophone={name}")
 
 
 def parse_archive_keys(keys_df: DataFrame, key_col: str = "key") -> DataFrame:
@@ -230,102 +217,3 @@ def build_catalog(keys_df: DataFrame, key_col: str = "key") -> DataFrame:
         )
         .orderBy("hydrophone", "freq_type", "delta_f", "delta_t")
     )
-
-
-def parquet_footer_audit(spark: SparkSession, paths) -> DataFrame:
-    """Distributed parquet-footer integrity probe: ``(path, ok, n_rows,
-    error)`` per file. The 100 TB reality behind round-12 VERDICT #7 —
-    torn writes and truncated uploads leave files whose NAME parses fine
-    but whose footer doesn't; by default one such file fails the whole
-    scan job. This probe opens each footer where the data lives
-    (Arrow-batched ``mapInPandas`` over the path list — the listing is
-    catalog-sized, thousands of rows at 100 TB, so the probe is a tiny
-    parallel job), so ingestion can SKIP-WITH-COUNT instead of dying or
-    silently dropping.
-
-    Scope: validates footer + metadata (the torn-write/truncation class).
-    A file with a valid footer but a corrupt page body needs
-    ``spark.sql.files.ignoreCorruptFiles`` at scan time as the second
-    line of defense. Paths are opened with pyarrow directly — on object
-    storage, hand the probe fuse/s3fs-style paths or swap the opener.
-    """
-    import pandas as pd
-
-    if not isinstance(paths, DataFrame):
-        paths = spark.createDataFrame(
-            [(str(p),) for p in paths], "path string"
-        )
-
-    def _probe(batches):
-        import glob as _glob
-        import os as _os
-
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                # an object-store listing carries file keys; a Spark-written
-                # TABLE path is a directory of part files — probe every part
-                parts = (
-                    sorted(
-                        _glob.glob(_os.path.join(p, "**", "*.parquet"),
-                                   recursive=True)
-                    )
-                    if _os.path.isdir(p)
-                    else [p]
-                )
-                n, err = 0, None
-                if not parts:
-                    err = "NoParquetParts: directory has no *.parquet files"
-                for part in parts:
-                    try:
-                        n += int(pq.ParquetFile(part).metadata.num_rows)
-                    except Exception as e:  # noqa: BLE001 - the audit IS the handler
-                        err = f"{type(e).__name__}: {e}"[:200]
-                        break
-                rows.append(
-                    (p, err is None, n if err is None else None, err)
-                )
-            yield pd.DataFrame(
-                rows, columns=["path", "ok", "n_rows", "error"]
-            )
-
-    return paths.select("path").mapInPandas(
-        _probe, "path string, ok boolean, n_rows long, error string"
-    )
-
-
-def scan_with_corruption_audit(
-    spark: SparkSession, paths, schema=None
-) -> "tuple[DataFrame, DataFrame]":
-    """Catalog → scan with corrupt files SKIPPED AND COUNTED: footer-probe
-    the listing (:func:`parquet_footer_audit`), scan only the readable
-    files, and return ``(data, audit)`` so the caller can alert on
-    ``audit.filter(~ok)`` instead of choosing between a dead job and a
-    silent gap. The ok-path collect is catalog-sized (file names, never
-    data).
-
-    When EVERY listed file fails the probe there is no footer to infer a
-    schema from: with ``schema`` given, the empty frame carries the
-    caller's real schema (downstream column resolution keeps working and
-    sees emptiness, not a phantom layout); without one, raise — a
-    hardcoded placeholder schema would surface as an unrelated
-    column-resolution error far from the cause (round-13 ADVICE)."""
-    audit = parquet_footer_audit(spark, paths)
-    ok = [r["path"] for r in audit.filter(F.col("ok")).collect()]
-    if ok:
-        data = spark.read.parquet(*ok)
-    elif schema is not None:
-        data = spark.createDataFrame([], schema)
-    else:
-        bad = [
-            (r["path"], r["error"])
-            for r in audit.filter(~F.col("ok")).limit(3).collect()
-        ]
-        raise ValueError(
-            "scan_with_corruption_audit: every listed file failed the "
-            f"footer probe and no fallback schema was given; first "
-            f"failures: {bad}"
-        )
-    return data, audit

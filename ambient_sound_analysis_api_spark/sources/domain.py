@@ -18,6 +18,8 @@ failure modes require (``docs/upstream-notes.md:19-25``).
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,18 +33,54 @@ OCTAVE_BANDS = [
 ]
 
 
-def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _read_events(
+    spark: SparkSession,
+    sf_dir: str,
+    start: datetime | None = None,
+    end: datetime | None = None,
+) -> DataFrame:
+    """events table with ``ts`` normalized to a microsecond TIMESTAMP: the
+    one read boundary for ``events.parquet`` (the registry reads it as
+    ``registry._events``).
+
+    The file's ``ts`` encoding drifts between regenerations. TIMESTAMP(NANOS)
+    is rejected by Spark's vectorized reader; ``nanosAsLong`` reads it as raw
+    nanos and the exact integer division below truncates to micros, matching
+    DuckDB's own nanos→micros truncation at scan time. ``timestamp[us]``
+    without UTC adjustment reads as TIMESTAMP_NTZ, which ``unix_micros`` and
+    windows reject; with the session TZ pinned UTC the cast to TIMESTAMP is
+    value-preserving.
+
+    ``start``/``end`` (naive-UTC, start-inclusive / end-exclusive) are
+    applied *before* the conversion, on the raw scan column — predicates on
+    the converted timestamp are expressions Parquet pushdown cannot see,
+    while bounds on the raw column reach the reader as ``PushedFilters`` and
+    prune row groups. At archive scale this is the difference between
+    scanning a window and scanning the table.
+    """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover
+    except Exception:  # pragma: no cover - conf may not exist on some builds
         pass
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     ts_dtype = dict(df.dtypes).get("ts")
-    if ts_dtype in ("bigint", "long"):
+    nanos = ts_dtype in ("bigint", "long")
+
+    def _bound(dt: datetime):
+        if not nanos:
+            return F.lit(dt)
+        return F.lit(
+            int(dt.replace(tzinfo=timezone.utc).timestamp()) * 1_000_000_000
+        )
+
+    if start is not None:
+        df = df.filter(F.col("ts") >= _bound(start))
+    if end is not None:
+        df = df.filter(F.col("ts") < _bound(end))
+    if nanos:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_dtype == "timestamp_ntz":
-        # Session TZ is pinned UTC, so NTZ → TIMESTAMP is value-preserving.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 

@@ -1,10 +1,11 @@
-"""Ingest: wide archived PSD matrices → canonical long-form tables.
+"""Ingest: write canonical long-form tables in a layout Catalyst can prune.
 
 The reference consumes wide pandas frames (DatetimeIndex × N band columns,
 ``app/services/get_timeseries.py:309-328``) whose column sets drift across
-archives (``docs/upstream-notes.md:55``). The engine normalizes to long form
-at ingest — band-set drift becomes a *data* difference, not a *schema*
-difference (SURVEY.md §1.3) — and writes a layout Catalyst can prune:
+archives (``docs/upstream-notes.md:55``). The engine keeps products in long
+form (``sources/domain.py`` derives them from ``events``), so band-set drift
+becomes a *data* difference, not a *schema* difference (SURVEY.md §1.3),
+and writes them as:
 
     <root>/product=<freq_type>_<delta_f>_<delta_t>/hydrophone=<slug>/
         month=<yyyy-MM>/part-*.parquet
@@ -20,58 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LONG_SCHEMA = (
-    "hydrophone string, delta_t int, freq_type string, delta_f int, "
-    "ts timestamp, band_hz double, value double"
-)
-
-
-def melt_wide_psd(
-    wide: DataFrame,
-    hydrophone: str,
-    delta_t: int,
-    freq_type: str,
-    delta_f: int,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Melt a wide PSD frame (ts + one column per numeric band label) to long.
-
-    Non-numeric column labels are skipped, mirroring the reference's
-    band-membership test that *attempts float conversion of the label*
-    (``app/services/get_aggregations.py:70-75``).
-    """
-    band_cols = []
-    for c in wide.columns:
-        if c == ts_col:
-            continue
-        try:
-            band_cols.append((float(c), c))
-        except ValueError:
-            continue
-    if not band_cols:
-        raise ValueError("no numeric band columns to melt")
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(hz).alias("band_hz"),
-                F.col(f"`{c}`").cast("double").alias("value"),
-            )
-            for hz, c in band_cols
-        ]
-    )
-    return wide.select(
-        F.lit(hydrophone).alias("hydrophone"),
-        F.lit(delta_t).cast("int").alias("delta_t"),
-        F.lit(freq_type).alias("freq_type"),
-        F.lit(delta_f).cast("int").alias("delta_f"),
-        F.col(ts_col).alias("ts"),
-        F.explode(pairs).alias("band"),
-    ).select(
-        "hydrophone", "delta_t", "freq_type", "delta_f", "ts",
-        F.col("band.band_hz").alias("band_hz"),
-        F.col("band.value").alias("value"),
-    )
-
 
 def write_partitioned(df: DataFrame, root: str, mode: str = "overwrite") -> None:
     """Write a long-form table in the prunable layout described above."""
@@ -82,28 +31,4 @@ def write_partitioned(df: DataFrame, root: str, mode: str = "overwrite") -> None
         .write.mode(mode)
         .partitionBy("freq_type", "delta_f", "delta_t", "hydrophone", "month")
         .parquet(root)
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: list[str],
-    num_buckets: int = 32,
-) -> None:
-    """Persist a table bucketed (and sorted) by join/aggregation keys.
-
-    Both sides of a recurring large-large equi-join written with the same
-    ``(keys, num_buckets)`` join WITHOUT any exchange: Spark trusts the
-    bucket layout and zips matching buckets (sort-merge with no shuffle, no
-    sort when ``sortBy`` matches). This is the pre-shuffle amortization for
-    pipelines that join the same fact tables every run — at 100 TB the
-    avoided exchange dominates total cost.
-    """
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, *keys)
-        .sortBy(*keys)
-        .saveAsTable(table)
     )

@@ -1,10 +1,9 @@
 """Structured-Streaming variants of the batch window aggregations.
 
 The reference is batch-only over archived data (SURVEY.md §2.10), but its
-tumbling-window mean (A3) maps 1:1 onto a streaming
-``groupBy(window(ts, ...))`` with a watermark for late hydrophone packets.
-Provided as the live-feed extension point; semantics match
-``operators.aggregations.resample_mean`` bucket-for-bucket.
+window mean (A3) maps onto a streaming ``groupBy(window(ts, ...))`` with a
+watermark for late hydrophone packets; :func:`run_available_now` drives
+these transforms over a batch source for the registry's streaming queries.
 """
 
 from __future__ import annotations
@@ -13,38 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalars import is_finite
-
-
-def streaming_resample_mean(
-    stream: DataFrame,
-    interval_s: int,
-    watermark: str = "10 minutes",
-    *,
-    keys: list[str] | None = None,
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming tumbling-window mean with late-data watermark.
-
-    Uses ``F.window`` (required for streaming state management rather than
-    the batch epoch-arithmetic bucket); ``window.start`` equals the batch
-    ``bucket_ts`` for the same interval, so downstream consumers see the
-    same keys either way.
-    """
-    agged = (
-        stream.withWatermark(ts_col, watermark)
-        .filter(is_finite(F.col(value_col)))
-        .groupBy(
-            *(keys or []),
-            F.window(F.col(ts_col), f"{interval_s} seconds").alias("w"),
-        )
-        .agg(F.avg(value_col).alias("mean_value"))
-    )
-    return agged.select(
-        *(keys or []),
-        F.col("w.start").alias("bucket_ts"),
-        "mean_value",
-    )
 
 
 def streaming_sliding_mean(
@@ -59,8 +26,8 @@ def streaming_sliding_mean(
 ) -> DataFrame:
     """Streaming sliding-window mean: every event contributes to
     ``interval_s / slide_s`` overlapping windows (``F.window`` with a slide
-    duration — the hopping-window form the tumbling variant generalizes
-    to). State per key×window is one partial aggregate; the watermark
+    duration — the hopping-window generalization of the tumbling
+    bucket). State per key×window is one partial aggregate; the watermark
     bounds how long closed windows linger. Window starts are the
     ``slide_s`` grid, so downstream consumers join them like any bucket
     key."""

@@ -1,39 +1,17 @@
-"""Crash-safety of the staging + atomic-swap write path
-(operators/atomic_swap.py, used by merge_write and compact_parquet):
-a failure at any point must leave the original table fully readable,
-and Hive-escaped / NULL partition values must compact like any other.
+"""The staging + atomic-swap primitive (operators/atomic_swap.py) that the
+streaming rollup and HLL stores rewrite through: the staged copy replaces
+the table via renames, and no staging or old copy is left behind.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
 from ambient_sound_analysis_api_spark.operators import atomic_swap
-from ambient_sound_analysis_api_spark.operators.maintenance import compact_parquet
-from ambient_sound_analysis_api_spark.operators.upsert import merge_write
-
-
-def _files(root):
-    out = []
-    for dirpath, _, names in os.walk(root):
-        for n in names:
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                out.append(os.path.join(dirpath, n))
-    return sorted(out)
-
-
-def _snapshot(spark, path):
-    return sorted(map(tuple, spark.read.parquet(path).collect()))
 
 
 def _no_staging_leftovers(tmp_path):
     return [p for p in os.listdir(tmp_path) if "__staging__" in p or "__old__" in p]
-
-
-# ---------------------------------------------------------------------------
-# swap_in primitive
 
 
 def test_swap_in_replaces_existing_dir(spark, tmp_path):
@@ -52,270 +30,3 @@ def test_swap_in_creates_missing_dst(spark, tmp_path):
     spark.range(3).write.parquet(staging)
     atomic_swap.swap_in(spark, staging, dst)
     assert spark.read.parquet(dst).count() == 3
-
-
-# ---------------------------------------------------------------------------
-# merge_write crash-safety
-
-
-def test_merge_write_staging_failure_leaves_table_intact(spark, tmp_path):
-    """A failure while *computing/writing* the staged result (here: schema
-    mismatch surfaced mid-plan via a bad column) must not touch the base."""
-    path = str(tmp_path / "base")
-    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.parquet(path)
-    want = _snapshot(spark, path)
-    bad = spark.createDataFrame([(3,)], "k int")  # schema mismatch → raises
-    with pytest.raises(ValueError):
-        merge_write(spark, path, bad, ["k"])
-    assert _snapshot(spark, path) == want
-    assert _no_staging_leftovers(tmp_path) == []
-
-
-def test_merge_write_swap_failure_leaves_table_intact(spark, tmp_path, monkeypatch):
-    """Simulated crash between staging write and swap: base unchanged and
-    no staging garbage after the failed call returns."""
-    path = str(tmp_path / "base2")
-    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.parquet(path)
-    want = _snapshot(spark, path)
-    changes = spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string")
-
-    def boom(*a, **k):
-        raise IOError("injected crash before swap")
-
-    monkeypatch.setattr(atomic_swap, "swap_in", boom)
-    with pytest.raises(IOError):
-        merge_write(spark, path, changes, ["k"])
-    assert _snapshot(spark, path) == want
-    assert _no_staging_leftovers(tmp_path) == []
-
-
-def test_merge_write_partitioned_swap_failure_partitionwise(
-    spark, tmp_path, monkeypatch
-):
-    """Partitioned merge: an injected failure during the per-partition swap
-    loop leaves every partition either fully old or fully new — the table
-    stays readable with consistent rows per partition."""
-    path = str(tmp_path / "pbase")
-    base = spark.createDataFrame(
-        [(1, "d1", "a"), (2, "d1", "b"), (3, "d2", "c")], "k int, day string, v string"
-    )
-    base.write.partitionBy("day").parquet(path)
-    changes = spark.createDataFrame([(2, "d1", "B")], "k int, day string, v string")
-
-    real_swap = atomic_swap.swap_in
-    calls = []
-
-    def failing_swap(spark_, src, dst):
-        calls.append(dst)
-        raise IOError("injected")
-
-    monkeypatch.setattr(atomic_swap, "swap_in", failing_swap)
-    with pytest.raises(IOError):
-        merge_write(spark, path, changes, ["k"], partition_col="day")
-    # nothing swapped → base rows fully intact
-    got = _snapshot(spark, path)
-    assert sorted(r[0] for r in got) == [1, 2, 3]
-    assert ("b", "d1") in {(r[1], r[2]) for r in got}  # old d1 row survives
-    monkeypatch.setattr(atomic_swap, "swap_in", real_swap)
-    merge_write(spark, path, changes, ["k"], partition_col="day")
-    got = {(r[0], r[1]) for r in _snapshot(spark, path)}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-
-
-# ---------------------------------------------------------------------------
-# compact_parquet crash-safety
-
-
-def test_compact_swap_failure_leaves_table_intact(spark, tmp_path, monkeypatch):
-    path = str(tmp_path / "frag")
-    spark.range(100).repartition(8).write.parquet(path)
-    want = _snapshot(spark, path)
-    files_before = _files(path)
-
-    def boom(*a, **k):
-        raise IOError("injected crash before swap")
-
-    monkeypatch.setattr(atomic_swap, "swap_in", boom)
-    with pytest.raises(IOError):
-        compact_parquet(spark, path)
-    assert _files(path) == files_before  # bit-for-bit untouched
-    assert _snapshot(spark, path) == want
-    assert _no_staging_leftovers(tmp_path) == []
-
-
-# ---------------------------------------------------------------------------
-# Hive-escaped and NULL partition values
-
-
-def test_compact_partitioned_escaped_and_null_values(spark, tmp_path):
-    """Partition values needing Hive escaping (':' → %3A) and NULLs must be
-    compacted, not silently skipped (they land in escaped/sentinel dirs)."""
-    path = str(tmp_path / "esc")
-    df = spark.createDataFrame(
-        [(i, "a:b" if i % 3 == 0 else ("plain" if i % 3 == 1 else None))
-         for i in range(30)],
-        "id int, p string",
-    )
-    df.repartition(6).write.partitionBy("p").parquet(path)
-    # every partition dir is fragmented (6-way round-robin before partitionBy)
-    assert len(_files(path)) > 3
-    want = _snapshot(spark, path)
-
-    stats = compact_parquet(spark, path, partition_col="p")
-    assert stats["rewritten"] == 3  # a:b, plain, AND the null partition
-    assert _snapshot(spark, path) == want
-    # each partition is now exactly one file, including escaped + null dirs
-    for d in ("p=a%3Ab", "p=plain", f"p={atomic_swap.HIVE_DEFAULT_PARTITION}"):
-        part_files = [f for f in _files(path) if f"/{d}/" in f]
-        assert len(part_files) == 1, d
-
-
-def test_unescape_partition_value():
-    assert atomic_swap.unescape_partition_value("plain") == "plain"
-    assert atomic_swap.unescape_partition_value("a%3Ab") == "a:b"
-    assert atomic_swap.unescape_partition_value("100%25") == "100%"
-    assert (
-        atomic_swap.unescape_partition_value(atomic_swap.HIVE_DEFAULT_PARTITION)
-        is None
-    )
-
-
-def test_merge_write_null_partition_preserves_base_rows(spark, tmp_path):
-    """Changes touching the NULL partition must re-merge it, not replace it:
-    isin() never matches NULL, so without an explicit isNull branch the
-    staged NULL-partition dir would swap in containing only the changes
-    rows — silently deleting the base's other NULL-partition rows."""
-    path = str(tmp_path / "nullpart")
-    base = spark.createDataFrame(
-        [(10, None, "a"), (11, None, "b"), (12, "d1", "c")],
-        "k int, day string, v string",
-    )
-    base.write.partitionBy("day").parquet(path)
-    changes = spark.createDataFrame([(10, None, "A")], "k int, day string, v string")
-    merge_write(spark, path, changes, ["k"], partition_col="day")
-    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(10, "A"), (11, "b"), (12, "c")}  # 11 survives, 12 untouched
-
-
-# ---------------------------------------------------------------- forget_write
-
-
-def _forget_fixture(spark, tmp_path, partitioned=True):
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "docs")
-    rows = [(i, ["en", "de", "fr", "es"][i % 4], f"text {i}") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    if partitioned:
-        df.write.partitionBy("lang").parquet(path)
-    else:
-        df.write.parquet(path)
-    return path
-
-
-def test_forget_write_partition_pruned_erasure(spark, tmp_path):
-    """Tombstones hitting two languages: those partitions rewrite, the
-    others' files are byte-identical untouched, the manifest is exact,
-    and zero tombstoned keys survive."""
-    import os
-
-    from ambient_sound_analysis_api_spark.operators.upsert import forget_write
-
-    path = _forget_fixture(spark, tmp_path)
-
-    def files_of(lang):
-        d = f"{path}/lang={lang}"
-        return sorted(
-            (f, os.path.getmtime(f"{d}/{f}"))
-            for f in os.listdir(d) if f.endswith(".parquet")
-        )
-
-    before_fr, before_es = files_of("fr"), files_of("es")
-    # erase doc_ids 0,4,8,12 (lang=en) and 1 (lang=de): en + de touched
-    tomb = spark.createDataFrame(
-        [(0,), (4,), (8,), (12,), (1,), (99999,)], "doc_id long"
-    )
-    manifest = {
-        r["partition"]: r
-        for r in forget_write(
-            spark, path, tomb, ["doc_id"], partition_col="lang"
-        ).collect()
-    }
-    assert set(manifest) == {"en", "de"}  # containment pruning: fr/es untouched
-    assert manifest["en"]["rows_deleted"] == 4
-    assert manifest["en"]["rows_after"] == 6
-    assert manifest["de"]["rows_deleted"] == 1
-
-    got = spark.read.parquet(path)
-    assert got.count() == 40 - 5
-    assert got.filter(got.doc_id.isin([0, 4, 8, 12, 1])).count() == 0
-    # untouched partitions: identical file lists AND mtimes (zero IO)
-    assert files_of("fr") == before_fr and files_of("es") == before_es
-
-
-def test_forget_write_removes_fully_erased_partition(spark, tmp_path):
-    """Erasing EVERY row of a partition must remove its directory —
-    partitionBy writes no dir for an empty partition, so the swap alone
-    would leave the old data behind."""
-    import os
-
-    from ambient_sound_analysis_api_spark.operators.upsert import forget_write
-
-    path = _forget_fixture(spark, tmp_path)
-    all_fr = [(i,) for i in range(40) if i % 4 == 2]  # lang=fr rows
-    tomb = spark.createDataFrame(all_fr, "doc_id long")
-    manifest = forget_write(
-        spark, path, tomb, ["doc_id"], partition_col="lang"
-    ).collect()
-    assert manifest[0]["partition"] == "fr"
-    assert manifest[0]["rows_after"] == 0
-    assert not os.path.exists(f"{path}/lang=fr")
-    got = spark.read.parquet(path)
-    assert got.count() == 30 and got.filter("lang = 'fr'").count() == 0
-
-
-def test_forget_write_unpartitioned_and_noop(spark, tmp_path):
-    from ambient_sound_analysis_api_spark.operators.upsert import forget_write
-
-    path = _forget_fixture(spark, tmp_path, partitioned=False)
-    tomb = spark.createDataFrame([(3,), (7,)], "doc_id long")
-    m = forget_write(spark, path, tomb, ["doc_id"]).collect()
-    assert m[0]["rows_deleted"] == 2 and m[0]["rows_after"] == 38
-    assert spark.read.parquet(path).count() == 38
-
-    # a tombstone for keys the table doesn't contain touches nothing
-    path2 = _forget_fixture(spark, tmp_path.joinpath("x"), partitioned=True)
-    ghost = spark.createDataFrame([(12345,)], "doc_id long")
-    from ambient_sound_analysis_api_spark.operators.upsert import forget_write as fw
-    assert fw(spark, path2, ghost, ["doc_id"], partition_col="lang").count() == 0
-    assert spark.read.parquet(path2).count() == 40
-
-
-def test_forget_write_boolean_partition_fully_erased(spark, tmp_path):
-    """Spark stringifies a boolean partition value as 'true' in the dir
-    name while Python str(True) is 'True' — the fully-erased-partition
-    delete must compare via Spark's own cast, or the tombstoned rows
-    silently survive on disk while the manifest reports them deleted."""
-    import os
-
-    from ambient_sound_analysis_api_spark.operators.upsert import forget_write
-
-    path = str(tmp_path / "flags")
-    rows = [(i, i % 2 == 0) for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id long, flag boolean")
-    df.write.partitionBy("flag").parquet(path)
-    assert os.path.exists(f"{path}/flag=true")
-
-    tomb = spark.createDataFrame(
-        [(i,) for i in range(0, 10, 2)], "doc_id long"
-    )
-    manifest = forget_write(
-        spark, path, tomb, ["doc_id"], partition_col="flag"
-    ).collect()
-    assert len(manifest) == 1
-    assert manifest[0]["partition"] == "true"
-    assert manifest[0]["rows_deleted"] == 5 and manifest[0]["rows_after"] == 0
-    # the erased partition's directory must actually be gone
-    assert not os.path.exists(f"{path}/flag=true")
-    got = spark.read.parquet(path)
-    assert got.count() == 5 and got.filter("flag = true").count() == 0

@@ -2,11 +2,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import functions as F
-
 from ambient_sound_analysis_api_spark.sources.catalog import (
     build_catalog,
-    key_matches_hydrophone,
     keys_from_listing,
     parse_archive_keys,
 )
@@ -39,53 +36,6 @@ def test_catalog_coverage(spark):
     assert bb["last_end"] == datetime(2020, 3, 1)
     assert ("octave_bands", 3, 1) in by_key
     assert ("delta_hz", 50, 10) in by_key
-
-
-def test_key_matches_hydrophone(spark):
-    df = spark.createDataFrame(
-        [
-            ("bucket/orcasound_lab/a.parquet",),
-            ("bucket/hydrophone=orcasound_lab/a.parquet",),
-            ("bucket/sunset_bay/a.parquet",),
-        ],
-        "key string",
-    )
-    kept = df.filter(key_matches_hydrophone(F.col("key"), "orcasound_lab")).collect()
-    assert len(kept) == 2
-
-
-def test_melt_wide_psd_handles_band_drift(spark):
-    """Wide frames with different band sets melt into one long table —
-    band-set drift becomes data, not schema (SURVEY.md §1.3); non-numeric
-    labels are skipped like the reference's float-conversion membership
-    test."""
-    from datetime import datetime
-
-    from ambient_sound_analysis_api_spark.sources.ingest import melt_wide_psd
-
-    t0 = datetime(2024, 1, 1)
-    wide_a = spark.createDataFrame(
-        [(t0, 1.0, 2.0, "x")],
-        "ts timestamp, `63.0` double, `125.0` double, junk string",
-    )
-    wide_b = spark.createDataFrame(
-        [(t0, 3.0, 4.0)], "ts timestamp, `63.0` double, `8000.0` double"
-    )
-    la = melt_wide_psd(wide_a, "h1", 1, "octave_bands", 3)
-    lb = melt_wide_psd(wide_b, "h1", 1, "octave_bands", 3)
-    rows = sorted(
-        (r["band_hz"], r["value"]) for r in la.unionByName(lb).collect()
-    )
-    assert rows == [(63.0, 1.0), (63.0, 3.0), (125.0, 2.0), (8000.0, 4.0)]
-    assert la.schema == lb.schema
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        melt_wide_psd(
-            spark.createDataFrame([(t0, "y")], "ts timestamp, junk string"),
-            "h1", 1, "octave_bands", 3,
-        )
 
 
 def test_coverage_islands_merges_nested_and_reports_gaps(spark):

@@ -13,7 +13,6 @@ from ambient_sound_analysis_api_spark.operators.dedup import (
     simhash,
 )
 from ambient_sound_analysis_api_spark.operators.similarity import (
-    cosine_topk,
     cosine_topk_by_id,
     ivf_topk,
     lsh_bucket,
@@ -94,12 +93,6 @@ def vecs(spark):
     return spark.createDataFrame(
         VECS, "vec_id long, embedding array<float>, label int"
     ).cache()
-
-
-def test_cosine_topk_literal(vecs):
-    top = cosine_topk(vecs, [1.0, 0.0, 0.0], k=2).collect()
-    assert top[0]["vec_id"] == 0 and top[0]["cosine_sim"] == pytest.approx(1.0)
-    assert top[1]["vec_id"] == 1
 
 
 def test_cosine_topk_by_id_excludes_query(vecs):

@@ -6,10 +6,11 @@ Round 3 shipped broken because the driver regenerated ``events.parquet`` as
 on it) reject. Earlier rounds carried ``TIMESTAMP(NANOS)``, which the
 vectorized reader only accepts as raw longs via ``nanosAsLong``.
 
-Both encodings are committed here as tiny fixtures; the read boundaries
-(``registry._events`` and ``sources.domain._read_events``) must normalize
-each to a plain microsecond TIMESTAMP with identical values. If the
-normalization branch is removed, these tests fail before the driver does.
+Both encodings are committed here as tiny fixtures; the one read boundary
+(``sources.domain._read_events``, which the registry imports as
+``registry._events``) must normalize each to a plain microsecond TIMESTAMP
+with identical values. If the normalization branch is removed, these tests
+fail first.
 """
 
 from __future__ import annotations
@@ -48,6 +49,9 @@ def _stage(tmp_path, fixture: str) -> str:
 
 @pytest.mark.parametrize("fixture", ["events_ntz", "events_nanos"])
 def test_events_boundary_normalizes_to_timestamp(spark, tmp_path, fixture):
+    """The registry and the domain materialization read events through the
+    same function."""
+    assert registry._events is domain._read_events
     sf_dir = _stage(tmp_path, fixture)
     df = registry._events(spark, sf_dir)
     assert dict(df.dtypes)["ts"] == "timestamp"

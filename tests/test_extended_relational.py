@@ -19,10 +19,6 @@ from ambient_sound_analysis_api_spark.operators.dedup import (
     kr_gram_positions,
 )
 from ambient_sound_analysis_api_spark.operators.joins import range_join_buckets
-from ambient_sound_analysis_api_spark.operators.similarity import (
-    cosine_topk_by_id,
-    lsh_topk,
-)
 
 
 def _py_rolling(s: str) -> int:
@@ -118,27 +114,6 @@ def test_embedding_near_pairs_blocking(vectors):
     # cross-block identical pair is NOT found (blocking trade-off)
     assert (0, 5) not in pairs
     assert pairs[(0, 1)] == pytest.approx(0.99 / math.sqrt(0.99**2 + 0.1**2), abs=1e-3)
-
-
-def test_lsh_topk_recall(spark):
-    # deterministic ring of vectors: neighbors of query share the bucket
-    import random
-
-    rng = random.Random(7)
-    dim = 16
-    rows = []
-    base = [rng.gauss(0, 1) for _ in range(dim)]
-    for i in range(40):
-        noise = 0.1 if i < 10 else 3.0  # first 10 are near the query
-        rows.append(
-            (i, [b + rng.gauss(0, noise) for b in base], 0)
-        )
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(4)]
-    exact = [r["vec_id"] for r in cosine_topk_by_id(emb, query_id=0, k=5).collect()]
-    approx = [r["vec_id"] for r in lsh_topk(emb, query_id=0, planes=planes, k=5).collect()]
-    # at least 3 of the exact top-5 survive 4-plane bucketing
-    assert len(set(exact) & set(approx)) >= 3
 
 
 def test_range_join_buckets(spark):

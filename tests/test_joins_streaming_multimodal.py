@@ -14,9 +14,6 @@ from ambient_sound_analysis_api_spark.operators.multimodal import (
     documents_as_media,
     extract_features,
 )
-from ambient_sound_analysis_api_spark.streaming.windows import (
-    streaming_resample_mean,
-)
 
 T = lambda s: datetime(2024, 1, 1, 0, 0, s)  # noqa: E731
 
@@ -68,43 +65,6 @@ def test_multimodal_feature_extraction(spark):
     assert feats[1]["payload_md5"] == hashlib.md5(b"abc").hexdigest()
     assert sum(feats[1]["feature"]) == pytest.approx(1.0)
     assert feats[2]["n_bytes"] == 0
-
-
-def test_streaming_resample_matches_batch(spark, tmp_path):
-    rows = [(T(i), float(i)) for i in range(0, 50)]
-    src = str(tmp_path / "stream_src")
-    spark.createDataFrame(rows, "ts timestamp, value double").write.parquet(src)
-    stream = spark.readStream.schema("ts timestamp, value double").parquet(src)
-    out = streaming_resample_mean(stream, 10, watermark="1 minute")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stream_buckets")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = {
-        r["bucket_ts"]: r["mean_value"]
-        for r in spark.sql("select * from stream_buckets").collect()
-    }
-    assert len(got) == 5
-    assert got[T(0)] == pytest.approx(4.5)
-    assert got[T(40)] == pytest.approx(44.5)
-
-
-def test_resize_media_deterministic(spark):
-    from ambient_sound_analysis_api_spark.operators.multimodal import (
-        documents_as_media,
-        resize_media,
-    )
-
-    docs = spark.createDataFrame([(1, "abcd"), (2, "")], "doc_id long, text string")
-    out = {r["media_id"]: r for r in
-           resize_media(documents_as_media(docs), 3, 2).collect()}
-    assert bytes(out[1]["payload"]) == b"abcdab"
-    assert bytes(out[2]["payload"]) == b"\x00" * 6
-    assert out[1]["width"] == 3 and out[1]["height"] == 2
 
 
 def test_sample_frames_one_to_many(spark):
@@ -227,31 +187,3 @@ def test_streaming_dedup_keeps_one_row_per_key(spark):
         for r in run_available_now(spark, src, xform, output_mode="append").collect()
     )
     assert got == [(1, "a"), (1, "b"), (2, "a")]
-
-
-def test_perceptual_hash_flags_identical_payloads(spark):
-    from pyspark.sql import functions as F
-
-    from ambient_sound_analysis_api_spark.operators.dedup import (
-        hamming_near_pairs,
-    )
-    from ambient_sound_analysis_api_spark.operators.multimodal import (
-        documents_as_media,
-        perceptual_hash,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the same exact payload body repeated for hashing"),
-            (2, "the same exact payload body repeated for hashing"),
-            (3, "an entirely different and unrelated document body"),
-        ],
-        "doc_id long, text string",
-    )
-    ph = perceptual_hash(documents_as_media(docs))
-    rows = {r.id: r.simhash for r in ph.collect()}
-    assert rows[1] == rows[2] != rows[3]
-    assert all(h >= 0 for h in rows.values())  # sign bit kept clear
-    pairs = hamming_near_pairs(ph, max_dist=3).collect()
-    assert {(p.id_a, p.id_b) for p in pairs} >= {(1, 2)}
-    assert all(p.hamming == 0 for p in pairs if (p.id_a, p.id_b) == (1, 2))

@@ -1,83 +1,7 @@
-"""Small-file compaction (operators/maintenance.py): row-exact rewrites,
-file-count reduction, and partition-pruned compaction that leaves healthy
-partitions' files untouched."""
+"""Table-maintenance audits (operators/maintenance.py): row-level
+snapshot diffs and column-level schema-evolution diffs."""
 
 from __future__ import annotations
-
-import os
-
-from ambient_sound_analysis_api_spark.operators.maintenance import (
-    compact_parquet,
-    compaction_plan,
-)
-
-
-def _files(root):
-    out = []
-    for dirpath, _, names in os.walk(root):
-        for n in names:
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                out.append(os.path.join(dirpath, n))
-    return sorted(out)
-
-
-def test_compact_unpartitioned_preserves_rows(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "frag")
-    src = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    src.repartition(64).write.parquet(path)
-    assert len(_files(path)) == 64
-    want = sorted(map(tuple, src.collect()))
-
-    stats = compact_parquet(spark, path)
-    assert stats["files"] == 64 and stats["rewritten"] == 64
-    assert stats["files_after"] == stats["target_files"] == 1  # tiny table
-    assert len(_files(path)) == 1
-    got = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert got == want
-
-
-def test_compact_respects_target_size(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "sized")
-    spark.read.parquet(f"{sf_dir}/customer.parquet").repartition(16).write.parquet(
-        path
-    )
-    plan = compaction_plan(spark, path, target_file_bytes=1)
-    # 1-byte target → every byte its own bin: target == ceil(bytes/1)
-    assert plan["target_files"] == plan["bytes"]
-    stats = compact_parquet(spark, path, target_file_bytes=10_000)
-    assert stats["files_after"] == stats["target_files"] > 1
-    assert len(_files(path)) == stats["files_after"]
-
-
-def test_compact_already_compact_is_noop(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "ok")
-    spark.read.parquet(f"{sf_dir}/region.parquet").coalesce(1).write.parquet(path)
-    before = _files(path)
-    stats = compact_parquet(spark, path)
-    assert stats["rewritten"] == 0
-    assert _files(path) == before  # bit-for-bit untouched
-
-
-def test_compact_partitioned_rewrites_only_fragmented(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "part")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    # nation 0 fragmented into many files; all other nations 1 file each
-    frag = cust.filter("c_nationkey = 0").repartition(8)
-    rest = cust.filter("c_nationkey <> 0").repartition(1, "c_nationkey")
-    frag.unionByName(rest).write.partitionBy("c_nationkey").parquet(path)
-    before = {f for f in _files(path)}
-    healthy_before = {f for f in before if "/c_nationkey=0/" not in f}
-    # round-robin repartition may be AQE-coalesced; enough files to trigger
-    assert len([f for f in before if "/c_nationkey=0/" in f]) >= 3
-    want = sorted(map(tuple, spark.read.parquet(path).collect()))
-
-    stats = compact_parquet(spark, path, partition_col="c_nationkey")
-    assert stats["rewritten"] == 1  # only nation 0
-    after = {f for f in _files(path)}
-    assert healthy_before <= after  # healthy partitions' files untouched
-    assert len([f for f in after if "/c_nationkey=0/" in f]) == 1
-    got = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert got == want
 
 
 def test_snapshot_diff_statuses_and_null_safety(spark):
@@ -205,11 +129,12 @@ def test_schema_diff_ambiguous_rename_degrades(spark):
 
 def test_schema_diff_decimal_rule_and_paths(spark, sf_dir, tmp_path):
     """Decimal widening (precision-scale and scale both grow) vs
-    incompatible scale loss; the _paths form reads footers only."""
+    incompatible scale loss; the schemas of two parquet paths, read off
+    their footers, diff like any other."""
     from pyspark.sql import functions as F
 
     from ambient_sound_analysis_api_spark.operators.maintenance import (
-        schema_diff_paths,
+        schema_diff,
         type_change_compat,
     )
 
@@ -225,7 +150,10 @@ def test_schema_diff_decimal_rule_and_paths(spark, sf_dir, tmp_path):
         "c_custkey",
         F.col("c_acctbal").cast("float").alias("c_acctbal"),
     ).write.parquet(pb)
-    rows = {r.column_name: r for r in schema_diff_paths(spark, pa, pb).collect()}
+    diff = schema_diff(
+        spark, spark.read.parquet(pa).schema, spark.read.parquet(pb).schema
+    )
+    rows = {r.column_name: r for r in diff.collect()}
     assert rows["c_custkey"].status == "unchanged"
     # double → float is a NARROW read off real parquet footers
     assert rows["c_acctbal"].status == "type_changed"

@@ -210,40 +210,6 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
             salted_join(o, c, ["o_custkey"], how=bad)
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
-    from ambient_sound_analysis_api_spark.sources.ingest import write_bucketed
-
-    # a previous session may have left the managed-table dirs behind:
-    # saveAsTable(overwrite) refuses a location it doesn't know about
-    import shutil
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    for t in ("b_orders", "b_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if warehouse:
-            shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    write_bucketed(o.select("o_orderkey", "o_totalprice"), "b_orders", ["o_orderkey"], 8)
-    write_bucketed(
-        li.select("l_orderkey", "l_quantity"), "b_lineitem", ["l_orderkey"], 8
-    )
-    joined = spark.table("b_orders").join(
-        spark.table("b_lineitem"),
-        F.col("o_orderkey") == F.col("l_orderkey"),
-    )
-    # below the broadcast threshold Spark would broadcast; force the
-    # bucketed path to show the exchange-free sort-merge join
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = explain_str(joined, "simple")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan
-
-
 def test_events_window_pushes_to_parquet_scan(spark, sf_dir):
     from ambient_sound_analysis_api_spark.registry import _events
 

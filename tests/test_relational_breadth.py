@@ -208,71 +208,6 @@ def test_merge_upsert_semantics(spark):
     assert len(out) == 4
 
 
-def test_merge_write_roundtrip(spark, tmp_path):
-    """Write base → merge changes in place → re-read equals merge_upsert
-    (VERDICT r1 next-step #6: MERGE as an operation on a table, not only a
-    query shape)."""
-    from ambient_sound_analysis_api_spark.operators.upsert import (
-        merge_upsert,
-        merge_write,
-    )
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "k int, name string, v double"
-    )
-    changes = spark.createDataFrame(
-        [(2, "b2", None), (4, "d", 40.0)], "k int, name string, v double"
-    )
-    base.write.parquet(path)
-    expected = {
-        r.k: (r.name, r.v) for r in merge_upsert(base, changes, ["k"]).collect()
-    }
-    merge_write(spark, path, changes, ["k"])
-    got = {r.k: (r.name, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == expected
-
-
-def test_merge_write_partition_pruned(spark, tmp_path):
-    """Partitioned merge_write rewrites ONLY partitions present in the
-    changes (dynamic partition overwrite): untouched partition files are
-    byte-identical afterwards."""
-    import os
-
-    from ambient_sound_analysis_api_spark.operators.upsert import merge_write
-
-    path = str(tmp_path / "ptbl")
-    base = spark.createDataFrame(
-        [(1, "d1", 10.0), (2, "d1", 20.0), (3, "d2", 30.0)],
-        "k int, day string, v double",
-    )
-    base.write.partitionBy("day").parquet(path)
-
-    def listing(day):
-        d = os.path.join(path, f"day={day}")
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    untouched_before = listing("d2")
-    changes = spark.createDataFrame(
-        [(2, "d1", 99.0), (5, "d3", 50.0)],
-        "k int, day string, v double",
-    )
-    merge_write(spark, path, changes, ["k"], partition_col="day")
-    # untouched partition: same files, same mtimes
-    assert listing("d2") == untouched_before
-    got = {r.k: (r.day, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {
-        1: ("d1", 10.0),
-        2: ("d1", 99.0),   # updated in place
-        3: ("d2", 30.0),   # untouched partition passthrough
-        5: ("d3", 50.0),   # new partition inserted
-    }
-
-
 def test_merge_upsert_rejects_schema_mismatch(spark):
     import pytest
 

@@ -297,30 +297,6 @@ def test_wav_decode_path_equals_direct_pcm_path(spark):
     assert sorted(map(tuple, via_wav)) == sorted(map(tuple, direct))
 
 
-def test_decode_audio_impl_wav_and_nonwav():
-    import io
-    import wave as wavelib
-
-    import pytest as _pytest
-
-    from ambient_sound_analysis_api_spark.operators.multimodal import (
-        DecodeUnavailable, _decode_audio_impl,
-    )
-
-    buf = io.BytesIO()
-    with wavelib.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(b"\x00\x01\x02\x03")
-    meta = _decode_audio_impl(buf.getvalue())
-    assert meta["sample_rate"] == 8000
-    assert meta["n_frames"] == 2
-    assert meta["pcm"] == b"\x00\x01\x02\x03"
-    with _pytest.raises(DecodeUnavailable):
-        _decode_audio_impl(b"ID3\x04not-a-wav-payload")
-
-
 def test_wav_decode_rejects_stereo(spark):
     import io
     import wave as wavelib
@@ -391,52 +367,3 @@ def test_bmp_roundtrip_matches_generator_arithmetic(spark):
         assert (r.mean_r, r.mean_g, r.mean_b) == (
             round(sr / n, 6), round(sg / n, 6), round(sb / n, 6)
         )
-
-
-def test_decode_image_impl_bmp_and_nonbmp():
-    import pytest as _pytest
-
-    from ambient_sound_analysis_api_spark.operators.multimodal import (
-        DecodeUnavailable, _decode_image_impl,
-    )
-
-    import struct
-    w, h = 2, 1
-    stride = w * 3 + ((-(w * 3)) % 4)
-    header = b"BM" + struct.pack("<IHHI", 54 + stride * h, 0, 0, 54)
-    header += struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h,
-                          0, 0, 0, 0)
-    payload = header + b"\x01\x02\x03\x04\x05\x06\x00\x00"
-    meta = _decode_image_impl(payload)
-    assert (meta["width"], meta["height"], meta["bpp"]) == (2, 1, 24)
-    assert meta["pixel_bytes"][:6] == b"\x01\x02\x03\x04\x05\x06"
-    with _pytest.raises(DecodeUnavailable):
-        _decode_image_impl(b"\x89PNG\r\n\x1a\nnot-decodable-here")
-
-
-def test_decode_image_impl_rejects_truncated_and_degenerate_bmp():
-    """Round-13 ADVICE: a truncated or malformed BMP must FAIL loudly,
-    never silently return short pixel_bytes."""
-    import struct
-
-    import pytest as _pytest
-
-    from ambient_sound_analysis_api_spark.operators.multimodal import (
-        _decode_image_impl,
-    )
-
-    w, h = 4, 2
-    stride = w * 3 + ((-(w * 3)) % 4)
-    header = b"BM" + struct.pack("<IHHI", 54 + stride * h, 0, 0, 54)
-    header += struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h,
-                          0, 0, 0, 0)
-    full = header + bytes(range(stride)) * h
-    assert len(_decode_image_impl(full)["pixel_bytes"]) == stride * h
-    # truncated payload: header declares stride*h pixel bytes, body short
-    with _pytest.raises(ValueError, match="truncated BMP"):
-        _decode_image_impl(full[:-5])
-    # degenerate dimensions: zero/negative width
-    bad = b"BM" + struct.pack("<IHHI", 54, 0, 0, 54)
-    bad += struct.pack("<IiiHHIIiiII", 40, 0, h, 1, 24, 0, 0, 0, 0, 0, 0)
-    with _pytest.raises(ValueError, match="invalid BMP dimensions"):
-        _decode_image_impl(bad)

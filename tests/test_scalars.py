@@ -9,7 +9,6 @@ from ambient_sound_analysis_api_spark.functions.scalars import (
     decimal_mean,
     is_finite,
     normalize_hydrophone,
-    parse_delta_f_expr,
     second_of_day,
     time_bucket,
     tod_bucket,
@@ -59,20 +58,6 @@ def test_normalize_hydrophone(spark):
         _one(spark, normalize_hydrophone(F.lit("  orcasound lab-1 ")))
         == "ORCASOUND_LAB_1"
     )
-
-
-def test_parse_delta_f(spark):
-    for raw, expect in [
-        ("3oct", ("octave_bands", 3)),
-        ("50hz", ("delta_hz", 50)),
-        ("broadband", ("broadband", None)),
-        ("garbage", None),
-    ]:
-        v = _one(spark, parse_delta_f_expr(F.lit(raw)))
-        if expect is None:
-            assert v is None
-        else:
-            assert (v["freq_type"], v["freq_value"]) == expect
 
 
 def test_is_finite(spark):

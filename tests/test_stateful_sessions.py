@@ -1,5 +1,5 @@
-"""Tests for session windows, the stateful streaming anomaly operator, and
-sketch-aggregate accuracy."""
+"""Tests for session windows, streaming dedup, and sketch-aggregate
+accuracy."""
 
 from __future__ import annotations
 
@@ -9,9 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ambient_sound_analysis_api_spark.operators.aggregations import sessionize
-from ambient_sound_analysis_api_spark.streaming.stateful import (
-    flag_anomalies_stateful,
-)
 
 
 def T(minute: int, hour: int = 0) -> datetime:
@@ -44,51 +41,6 @@ def test_sessionize_exact_gap_merges(spark):
     )
     out = sessionize(df, 600, keys=["user"]).collect()
     assert sorted(r["n_events"] for r in out) == [1, 2]
-
-
-def test_stateful_anomaly_carries_state_across_batches(spark, tmp_path):
-    src = str(tmp_path / "anom_src")
-    # batch 1: 20 calm points (value ~100) for key A — builds state, no flags
-    calm = [("A", T(i), 100.0 + (i % 3)) for i in range(20)]
-    spark.createDataFrame(
-        calm, "hydrophone string, ts timestamp, value double"
-    ).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        "hydrophone string, ts timestamp, value double"
-    ).parquet(src)
-    out = flag_anomalies_stateful(stream, z_threshold=3.0, min_obs=10)
-    # one long-lived query: micro-batch state carries across the two feeds
-    q = (
-        out.writeStream.format("memory")
-        .queryName("anomalies")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("select * from anomalies").count() == 0
-
-        # batch 2: one wild point among calm ones — flagged via batch-1 state
-        batch2 = [("A", T(i, hour=1), 100.0 + (i % 3)) for i in range(5)]
-        batch2.append(("A", T(30, hour=1), 500.0))
-        spark.createDataFrame(
-            batch2, "hydrophone string, ts timestamp, value double"
-        ).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    flagged = spark.sql("select * from anomalies").collect()
-    assert len(flagged) == 1
-    r = flagged[0]
-    assert r["key"] == "A" and r["value"] == 500.0
-    # state included batch 1: n_seen covers at least the 20 calm batch-1
-    # points (exactly 25 when batch 2 lands in one micro-batch, but the
-    # file source may split a batch across triggers under load — the
-    # invariant is cross-batch state carry, not the trigger boundary)
-    assert 20 <= r["n_seen"] <= 25
-    assert r["zscore"] > 3
 
 
 def test_approx_sketches_accuracy(spark):

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ambient_sound_analysis_api_spark.functions.text import (
-    char_ngrams,
     fingerprint,
     lang_id,
     normalize_text,
@@ -40,14 +39,8 @@ def test_stopword_hits_counts_all_occurrences(spark):
 
 
 def test_ngrams(spark):
-    r = _vals(
-        spark,
-        "a b c d",
-        token_ngrams(F.col("text"), 3),
-        char_ngrams(F.lit("abcd"), 2),
-    )
+    r = _vals(spark, "a b c d", token_ngrams(F.col("text"), 3))
     assert r["c0"] == ["a b c", "b c d"]
-    assert r["c1"] == ["ab", "bc", "cd"]
 
 
 def test_ngrams_short_input_empty(spark):
@@ -68,23 +61,6 @@ def test_unigram_hashes_blank_doc_empty(spark):
         assert r["c0"] == []
     r = _vals(spark, "one two", token_ngram_hashes(F.col("text"), 1))
     assert len(r["c0"]) == 2
-
-
-def test_dup_segment_fraction(spark):
-    """Gopher duplicate-line fraction: repeats / total non-blank lines."""
-    from ambient_sound_analysis_api_spark.functions.text import (
-        dup_segment_fraction,
-    )
-
-    cases = {
-        "a\nb\nc": 0.0,                  # all distinct
-        "a\na\na\nb": 0.5,               # 2 repeats of 4 lines
-        "x\n\n  \nx": 0.5,               # blank lines ignored
-        "": 0.0,
-    }
-    for text, want in cases.items():
-        r = _vals(spark, text, dup_segment_fraction(F.col("text")))
-        assert r["c0"] == pytest.approx(want), text
 
 
 def test_repetition_signals_detect_stuffing(spark):

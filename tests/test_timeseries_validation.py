@@ -17,7 +17,6 @@ from ambient_sound_analysis_api_spark.operators.planner import (
 )
 from ambient_sound_analysis_api_spark.operators.timeseries import (
     broadband_points,
-    psd_long,
     psd_matrix,
     window_filter,
 )
@@ -66,14 +65,11 @@ def test_broadband_points_order_and_nonfinite(spark):
 
 def test_psd_matrix_drops_all_null_rows(spark):
     rows = [
-        ("h1", T0, 63.0, 1.0),
-        ("h1", T0, 125.0, 2.0),
-        ("h1", T0 + timedelta(seconds=1), 8000.0, 9.0),  # outside band list
+        (T0, 63.0, 1.0),
+        (T0, 125.0, 2.0),
+        (T0 + timedelta(seconds=1), 8000.0, 9.0),  # outside band list
     ]
-    df = spark.createDataFrame(
-        rows, "hydrophone string, ts timestamp, band_hz double, value double"
-    )
-    long = psd_long(df, "h1", T0, T0 + timedelta(days=1))
+    long = spark.createDataFrame(rows, "ts timestamp, band_hz double, value double")
     wide = psd_matrix(long, [63.0, 125.0]).collect()
     assert len(wide) == 1  # second timestamp row is all-null → dropped
     assert wide[0]["band_63"] == 1.0 and wide[0]["band_125"] == 2.0
