@@ -43,8 +43,6 @@ def MapOf(key_spec: Any, val_spec: Any) -> _Marker:   # noqa: N802
     return _Marker("map", key_spec, val_spec)
 
 
-_NUMBER = (int, float)
-
 #: (iso_timestamp, value) serving point
 POINT = (str, float)
 #: (label, value) time-of-day point

@@ -669,16 +669,11 @@ MINHASH_MOD = (1 << 61) - 1
 # member's argmin lands on the same "small" shingles — signatures of
 # unrelated docs collide and near-dup signatures miss (observed: 5× the
 # candidate pairs at sf0.001 AND a dropped true near-dup pair).
-_MINHASH_MEMBER_SQL = (
-    "((({a} * (h0 >> 30)) >> 31)"
-    " + ((({a} * (h0 >> 30)) & 2147483647) << 30)"
-    " + {a} * (h0 & 1073741823) + {c}) % "
-    f"{MINHASH_MOD}"
-)
-
-#: the same member map with shift FUNCTIONS instead of operators — the
-#: only spelling the parser accepts inside array(...)/struct(...) calls,
-#: where ``>>``/``<<`` collide with generic-type brackets
+#
+# The shifts are spelled as FUNCTIONS (shiftright/shiftleft), not
+# operators: it is the only spelling the parser accepts inside
+# array(...)/struct(...) calls, where ``>>``/``<<`` collide with
+# generic-type brackets.
 _MINHASH_MEMBER_FN_SQL = (
     "(shiftright({a} * shiftright(h0, 30), 31)"
     " + shiftleft(({a} * shiftright(h0, 30)) & 2147483647, 30)"
@@ -722,7 +717,7 @@ def minhash_signatures(
 
     evaluated via a Mersenne fold of the 90-bit product (split h0 into
     30-bit halves, fold the high partial product ``a·(h0>>30)·2³⁰`` back
-    under the prime — see ``_MINHASH_MEMBER_SQL``; a single coefficient
+    under the prime — see ``_MINHASH_MEMBER_FN_SQL``; a single coefficient
     ``a`` multiplies BOTH halves, there is no independent high-half
     coefficient). 30-bit constants ``(a_i, c_i)`` are drawn from md5
     (``minhash_coeffs``). Every intermediate term stays under 2⁶² so the

@@ -18,11 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, mime string, "
-    "width int, height int, sample_rate int, n_frames int"
-)
-
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, payload_md5 string, "
     "feature array<double>"

@@ -48,6 +48,7 @@ from .operators import aggregations as agg
 from .operators import dedup, joins, multimodal, similarity, sketches, timeseries
 from .operators.planner import AUTO_INTERVAL_TARGET_POINTS, INTERVALS, expected_point_count
 from .sources.catalog import build_catalog
+from .sources.domain import OCTAVE_BANDS, octave_band
 from .sources.domain import _read_events as _events
 
 # ---------------------------------------------------------------------------
@@ -58,17 +59,9 @@ WINDOW_END = datetime(2024, 1, 12)
 _WS = "2024-01-05 00:00:00"
 _WE = "2024-01-12 00:00:00"
 
-# 1/3-octave nominal band centers, 63–8000 Hz (reference
-# docs/upstream-notes.md:143,153-158 and default band range
-# app/api/aggregations.py:29-30).
-BANDS = [
-    63.0, 80.0, 100.0, 125.0, 160.0, 200.0, 250.0, 315.0, 400.0, 500.0,
-    630.0, 800.0, 1000.0, 1250.0, 1600.0, 2000.0, 2500.0, 3150.0, 4000.0,
-    5000.0, 6300.0, 8000.0,
-]
-_BANDS_SQL = "[" + ", ".join(f"CAST({b} AS DOUBLE)" for b in BANDS) + "]"
+# the DuckDB twin of sources.domain.octave_band
+_BANDS_SQL = "[" + ", ".join(f"CAST({b} AS DOUBLE)" for b in OCTAVE_BANDS) + "]"
 
-_ISO_SPARK = "yyyy-MM-dd'T'HH:mm:ss"
 _ISO_DUCK = "%Y-%m-%dT%H:%M:%S"
 
 
@@ -102,21 +95,17 @@ def _psd_view(
     """events → PSD long-form view: a deterministic band assignment
     (1/3-octave center indexed by user_id) exercises the band-filter and
     per-band aggregation paths of SURVEY.md §2 P4/A4/A5."""
-    band = F.element_at(
-        F.array(*[F.lit(b) for b in BANDS]),
-        (F.col("user_id") % 22 + 1).cast("int"),
-    )
     return _events(spark, sf_dir, start, end).select(
         F.col("event_type").alias("hydrophone"),
         F.col("ts"),
-        band.alias("band_hz"),
+        octave_band().alias("band_hz"),
         F.col("value"),
     )
 
 
 _PSD_VIEW_SQL = f"""
     SELECT event_type AS hydrophone, ts,
-           list_extract({_BANDS_SQL}, CAST(user_id % 22 + 1 AS INTEGER)) AS band_hz,
+           list_extract({_BANDS_SQL}, CAST(user_id % {len(OCTAVE_BANDS)} + 1 AS INTEGER)) AS band_hz,
            value
     FROM events
 """

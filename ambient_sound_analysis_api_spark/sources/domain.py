@@ -20,17 +20,28 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ingest import write_partitioned
 
-# 1/3-octave nominal centers 63–8000 Hz (docs/upstream-notes.md:143,153-158)
+# 1/3-octave nominal centers 63–8000 Hz (docs/upstream-notes.md:143,153-158
+# and the default band range of app/api/aggregations.py:29-30)
 OCTAVE_BANDS = [
     63.0, 80.0, 100.0, 125.0, 160.0, 200.0, 250.0, 315.0, 400.0, 500.0,
     630.0, 800.0, 1000.0, 1250.0, 1600.0, 2000.0, 2500.0, 3150.0, 4000.0,
     5000.0, 6300.0, 8000.0,
 ]
+
+
+def octave_band() -> Column:
+    """The band of an ``events`` row in its PSD form: the 1/3-octave
+    center ``OCTAVE_BANDS`` indexes by ``user_id``, a deterministic band
+    assignment."""
+    return F.element_at(
+        F.array(*[F.lit(b) for b in OCTAVE_BANDS]),
+        (F.col("user_id") % len(OCTAVE_BANDS) + 1).cast("int"),
+    )
 
 
 def _read_events(
@@ -97,17 +108,13 @@ def derive_long_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("band_hz"),
         F.col("value"),
     )
-    band = F.element_at(
-        F.array(*[F.lit(b) for b in OCTAVE_BANDS]),
-        (F.col("user_id") % len(OCTAVE_BANDS) + 1).cast("int"),
-    )
     psd = ev.select(
         F.col("event_type").alias("hydrophone"),
         F.lit(1).cast("int").alias("delta_t"),
         F.lit("octave_bands").alias("freq_type"),
         F.lit(3).cast("int").alias("delta_f"),
         F.col("ts"),
-        band.alias("band_hz"),
+        octave_band().alias("band_hz"),
         F.col("value"),
     )
     return broadband.unionByName(psd)

@@ -1,8 +1,9 @@
 """Ad-hoc scale probe for FastSS entity resolution.
 
-The generic 10× corpus builder (scripts/scale_probe.py) does not
-replicate the ``customer`` table, so ``pipeline_entity_resolution``
-probes as a no-op there. This probe replicates customers K× with
+The K× corpus that ``bench.py --scale`` times over
+(``scripts/scale_probe.build_corpus``) does not replicate the
+``customer`` table, so ``pipeline_entity_resolution`` would probe as a
+no-op there. This probe replicates customers K× with
 digit-shifted keys/names into a temp dir — every original name gains
 K-1 near-miss variants plus its own shifted copies, an adversarial
 near-match-dense input — and times the blocked operator at 1× and K×.

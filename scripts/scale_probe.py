@@ -1,47 +1,24 @@
-"""Scale probe: re-run selected registry plans on K×-replicated inputs.
+"""Scale-probe corpus builder for ``bench.py --scale``.
 
-Builds a synthetic K× corpus in a temp dir (events replicated with shifted
-ids/timestamps; documents replicated with fresh doc_ids — an adversarial
-dup-heavy corpus, since every text gains K-1 exact copies), symlinks the
-untouched tables, then times each probed query at 1× and K×. The point is
-the *scaling exponent*, not the absolute numbers: a plan that is ~linear
-here has no hidden all-pairs/driver-side bottleneck to ambush a 1000×
-cluster run.
-
-Usage: python scripts/scale_probe.py [K] [--runs N] [query ...]
-(``--runs 1`` single-shots each timing — for known output-bound entries
-where best-of-2 doubles a minutes-long measurement without changing the
-scaling verdict.)
-Results land in stdout as one JSON line; methodology + measured numbers are
-recorded in NOTES.md.
+``build_corpus`` writes a synthetic K× corpus to a temp dir: events
+replicated with shifted ids/timestamps, embeddings with shifted ids, and
+documents with fresh doc_ids (an adversarial dup-heavy corpus, since every
+text gains K-1 exact copies); the untouched tables are symlinked.
+``bench.py --scale`` times each probed query at 1× and K× over it. The
+point is the *scaling exponent*, not the absolute numbers: a plan that is
+~linear here has no hidden all-pairs/driver-side bottleneck to ambush a
+1000× cluster run.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import tempfile
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from ambient_sound_analysis_api_spark.registry import queries  # noqa: E402
-from ambient_sound_analysis_api_spark.session import get_spark  # noqa: E402
+from pyspark.sql import functions as F
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DEFAULT_QUERIES = [
-    "win_lag_event_gap",
-    "scalar_json_props",
-    "streaming_tumbling_mean_15m",
-    "text_vocab_topk",
-    "text_tfidf_topk",
-    "pipeline_train_test_split",
-    "mm_audio_psd_peak",
-]
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -99,61 +76,3 @@ def build_corpus(spark, k: int) -> str:
         file=sys.stderr,
     )
     return out
-
-
-def time_query(fn, spark, sf_dir: str, runs: int = 2) -> tuple[float, int]:
-    # Timing sink is a NOOP WRITE, not count(): count() lets Catalyst
-    # prune whole subtrees (e.g. the left-join elimination rule dropped
-    # dedup_exact_substring's entire span pipeline in a round-14 probe —
-    # 0.6 s phantom vs 17 s real), so the measured wall would not be the
-    # cost any real consumer pays. The noop sink evaluates every output
-    # column. Row count is taken separately, untimed.
-    best, n = float("inf"), 0
-    for _ in range(runs):
-        df = fn(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    n = fn(spark, sf_dir).count()
-    return best, n
-
-
-def main() -> None:
-    argv = sys.argv[1:]
-    runs = 2
-    if "--runs" in argv:
-        i = argv.index("--runs")
-        runs = int(argv[i + 1])
-        argv = argv[:i] + argv[i + 2 :]
-    k = int(argv[0]) if argv else 10
-    names = argv[1:] or DEFAULT_QUERIES
-    spark = get_spark("scale-probe")
-    big = build_corpus(spark, k)
-    try:
-        qs = queries()
-        out = {"k": k, "base": BASE, "queries": {}}
-        for name in names:
-            t1, n1 = time_query(qs[name], spark, BASE, runs=runs)
-            tk, nk = time_query(qs[name], spark, big, runs=runs)
-            ratio = tk / t1 if t1 > 0 else float("inf")
-            out["queries"][name] = {
-                "t_1x": round(t1, 2), "rows_1x": n1,
-                f"t_{k}x": round(tk, 2), f"rows_{k}x": nk,
-                "time_ratio": round(ratio, 1),
-            }
-            print(
-                f"# {name}: {t1:.2f}s -> {tk:.2f}s ({ratio:.1f}x)",
-                file=sys.stderr,
-            )
-        print(json.dumps(out))
-    finally:
-        # the K× corpus is dataset-sized: reclaim it even on a failed
-        # probe (the same leak class ADVICE r9 flagged on the streaming
-        # stores — probe runs were accumulating ~10 trees per round)
-        import shutil
-
-        shutil.rmtree(big, ignore_errors=True)
-
-
-if __name__ == "__main__":
-    main()

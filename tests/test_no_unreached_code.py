@@ -1,12 +1,16 @@
 """Every top-level package definition must be reachable from a product path.
 
-A definition is *reached* when live code outside it names it: an
-``ast.Name``, an ``ast.Attribute``, an import alias, or an identifier-shaped
-string constant (docstrings and comments do not count).  Live code starts at
-the roots: module-level statements of every package module except the
-``__init__.py`` re-export files, plus ``__spark_entry__.py``, ``bench.py``,
-``perfbench/*.py`` and ``scripts/*.py``; registry ``q_*`` builders are live
-because ``@register`` reaches them.  The walk repeats until nothing changes,
+A definition is a top-level ``def`` or ``class`` in a package module, or a
+top-level assignment to a single name (a module constant); dunder
+assignments (``__all__``, ``__version__``) and tuple targets are not
+definitions but live code.  A definition is *reached* when live code
+outside it names it: an ``ast.Name``, an ``ast.Attribute``, an import alias,
+or an identifier-shaped string constant (docstrings and comments do not
+count).  Live code starts at the roots: the other module-level statements
+of every package module except the ``__init__.py`` re-export files, plus
+``__spark_entry__.py``, ``bench.py``, ``perfbench/*.py`` and
+``scripts/*.py``; registry ``q_*`` builders are live because ``@register``
+reaches them.  The walk repeats until nothing changes,
 so code that only dead code calls is dead too.  Tests are not roots: a
 package function only tests call is either wired to a product surface or
 deleted with its tests.
@@ -48,6 +52,22 @@ def _docstrings(tree: ast.AST) -> set[int]:
     return out
 
 
+def _defined(stmt: ast.stmt) -> str | None:
+    """The name a top-level statement defines: a def or class, or a
+    single-name assignment other than a dunder (tuple targets stay roots)."""
+    if isinstance(stmt, _DEFS):
+        return stmt.name
+    if isinstance(stmt, ast.Assign) and len(stmt.targets) == 1:
+        target = stmt.targets[0]
+    elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+        target = stmt.target
+    else:
+        return None
+    if isinstance(target, ast.Name) and not re.fullmatch(r"__\w+__", target.id):
+        return target.id
+    return None
+
+
 def _names(nodes, skip: set[int]) -> set[str]:
     out = set()
     for top in nodes:
@@ -81,12 +101,15 @@ def unreached() -> set[str]:
         rel = os.path.relpath(path, os.path.join(REPO, PKG))
         top_code = []
         for stmt in tree.body:
-            if in_pkg and isinstance(stmt, _DEFS):
-                defs[f"{rel}::{stmt.name}"] = (stmt.name, _names([stmt], skip))
-                if stmt.name.startswith("q_") and rel == "registry.py":
-                    live.add(stmt.name)
-            else:
+            name = _defined(stmt) if in_pkg else None
+            if name is None:
                 top_code.append(stmt)
+                continue
+            key = f"{rel}::{name}"
+            used = defs[key][1] if key in defs else set()
+            defs[key] = (name, used | _names([stmt], skip))
+            if name.startswith("q_") and rel == "registry.py":
+                live.add(name)
         if is_root:
             live |= _names(top_code, skip)
     done: set[str] = set()

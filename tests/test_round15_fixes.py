@@ -1,70 +1,13 @@
-"""Round-15 fixes: bench contention-guard keying + ADVICE cache hygiene.
+"""Round-15 fixes: ADVICE cache hygiene.
 
-The round-14 judged bench was a drift-2.397 contended run printed RAW
-because the quiet-representative record was keyed on the git HEAD — and
-the commit that published the record moved HEAD, invalidating it. These
-pin the round-15 re-keying (working-tree source fingerprint, per-cpus
-records, contended baselines skipped) and the ADVICE-flagged cache
-behaviors.
+These pin the ADVICE-flagged cache behaviors: k-center frees its persists
+on error, standardize does not persist an already-cached frame twice, and
+BPE apply truncates lineage on long merge lists.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-
 import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-import bench  # noqa: E402
-
-
-def test_baseline_skips_contended_round_files(tmp_path):
-    """A committed round record stamped contended must not become the
-    drift baseline: normalizing against contention inverts the guard
-    (an equally-contended run reads drift ~1.0 and evades the >1.25
-    substitution threshold)."""
-    doc = {
-        "parsed": {
-            "metric": "headline_total_runtime",
-            "value": 100.0,
-            "queries": {"q": 1.0},
-            "sf": 0.1,
-            "contended": True,
-        }
-    }
-    p = tmp_path / "BENCH_r98.json"
-    p.write_text(json.dumps(doc))
-    assert bench._parse_baseline_file(str(p)) is None
-    doc["parsed"].pop("contended")
-    p.write_text(json.dumps(doc))
-    got = bench._parse_baseline_file(str(p))
-    assert got is not None and got[1] == {"q": 1.0}
-
-
-def test_code_fingerprint_is_deterministic_and_source_keyed(tmp_path):
-    """Same tree → same fingerprint; non-source artifacts (logs, JSON)
-    don't participate, so committing a bench log cannot invalidate the
-    quiet-representative record (the round-14 failure mode)."""
-    a = bench._code_fingerprint()
-    b = bench._code_fingerprint()
-    assert a == b
-    assert len(a) == 16 and all(c in "0123456789abcdef" for c in a)
-    # the walk only hashes .py files under the package + the two entry
-    # points — nothing under logs/ — so a changed log leaves it fixed
-    logs = os.path.join(REPO, "logs")
-    probe = os.path.join(logs, "_fingerprint_probe.tmp")
-    os.makedirs(logs, exist_ok=True)
-    try:
-        with open(probe, "w") as f:
-            f.write("x")
-        assert bench._code_fingerprint() == a
-    finally:
-        if os.path.exists(probe):
-            os.remove(probe)
 
 
 def test_kcenter_error_path_releases_caches(spark):
