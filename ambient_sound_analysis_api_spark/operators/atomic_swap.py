@@ -1,33 +1,59 @@
-"""Crash-safe store rewrites for plain Parquet: staging dir + atomic swap.
+"""The one home of the engine's on-disk store protocols.
 
-``mode("overwrite")`` to the path being rewritten deletes the table before
-the new files land — a mid-write failure (OOM, preemption, kill -9) loses
-the data. Delta/Iceberg solve this with manifests; on plain Parquet the
-portable equivalent is the classic staging protocol:
+Every persisted store (the streaming rollup/HLL stores, the streamed
+batch stores, the versioned IVF-PQ and BM25 indexes) commits through a
+filesystem ``rename`` here; the operator modules keep only their
+index-specific writes and scoring. All filesystem calls go through the
+JVM Hadoop ``FileSystem`` API (:func:`_fs_and_path`), so the protocols
+work unchanged on ``file:``/HDFS/GCS URIs. The protocols:
 
-1. write the full result to a sibling ``<path>.__staging__.<token>`` dir
-   (the read plan streams from the original files — no ``localCheckpoint``
-   pin needed, since source and sink paths now differ);
-2. swap directories via filesystem ``rename`` — atomic on POSIX and HDFS
-   (on S3A, rename is copy+delete; there you'd front this with a real
-   table format, which is exactly what those formats exist for).
+- **Staging + swap** (:func:`staging_path`, :func:`swap_in`,
+  :func:`recover_path`, :func:`read_store`): a crash-safe rewrite of a
+  whole plain-Parquet table, used by ``streaming/rollup.py`` and
+  ``streaming/hll.py``. ``mode("overwrite")`` to the path being
+  rewritten deletes the table before the new files land — a mid-write
+  failure (OOM, preemption, kill -9) loses the data. Delta/Iceberg solve
+  this with manifests; on plain Parquet the portable equivalent is:
 
-A crash before the swap leaves the original table untouched (staging is
-garbage to be collected); a crash between the two renames of a swap leaves
-the old table at ``<path>.__old__.<token>`` and/or the new one staged —
-both fully readable, nothing lost (:func:`recover_path` puts the newest
-complete copy back). The streaming rollup and HLL stores swap through this
-protocol; the index stores share :func:`_fs_and_path`.
+  1. write the full result to a sibling ``<path>.__staging__.<token>``
+     dir (the read plan streams from the original files — no
+     ``localCheckpoint`` pin needed, since source and sink paths differ);
+  2. swap directories via ``rename`` — atomic on POSIX and HDFS (on S3A,
+     rename is copy+delete; there you'd front this with a real table
+     format, which is exactly what those formats exist for).
 
-All filesystem calls go through the JVM Hadoop ``FileSystem`` API, so the
-protocol works unchanged on ``file:``/HDFS/GCS URIs.
+  A crash before the swap leaves the original table untouched (staging
+  is garbage to be collected); a crash between the two renames of a swap
+  leaves the old table at ``<path>.__old__.<token>`` and/or the new one
+  staged — both fully readable, nothing lost (:func:`recover_path` puts
+  the newest complete copy back, and :func:`read_store` runs it).
+- **Batch admit** (:func:`admit_batch`): exactly-once admission of one
+  micro-batch into its own ``<root>/batch=<id>`` directory via a
+  dot-prefixed staging dir and one rename, used by ``streaming/ann.py``,
+  ``streaming/lexical.py`` and ``streaming/takedown.py``. The rename is
+  the commit and the target's existence is the replay gate.
+- **Versioned manifest store** (:func:`publish_version`,
+  :func:`resolve_version`): immutable ``v-<seq>-<token>`` version
+  directories published by an atomic rename of ``_manifests/m-<seq>.json``,
+  with a same-sequence race retry and retention GC. The IVF-PQ and BM25
+  indexes publish through it.
+- **Segmented store** (:func:`publish_segments`,
+  :func:`current_segments`, :func:`gc_unreferenced_segments`): versions
+  of the manifest store that hold only a ``segments.json`` membership
+  list, an optional ``tombstones/`` table and the caller's extra tables;
+  segment data lives under ``<root>/segs`` and is reclaimed once no
+  retained version references it. The IVF-PQ code store and the BM25
+  segmented index share it.
 """
 
 from __future__ import annotations
 
+import json
+import re
 import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.utils import AnalysisException
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -35,6 +61,12 @@ def _fs_and_path(spark: SparkSession, path: str):
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, hpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on its filesystem (one ``exists`` probe)."""
+    fs, p = _fs_and_path(spark, path)
+    return fs.exists(p)
 
 
 def staging_path(path: str) -> str:
@@ -116,3 +148,329 @@ def recover_path(spark: SparkSession, path: str) -> str | None:
     if not fs.rename(best, dst):
         raise IOError(f"recover rename {best} -> {dst} failed")
     return cands[-1][1]
+
+
+def read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
+    """The current swapped store, or None before the first commit.
+
+    A missing path is NOT trusted as "no store yet": a crash inside the
+    swap's rename window leaves the store under a sibling name, and
+    treating that as empty would permanently lose history (the rollup
+    store) or undercount (the HLL store). :func:`recover_path` renames
+    the newest complete sibling copy back first; only when no complete
+    copy exists anywhere is None returned."""
+    try:
+        return spark.read.parquet(store_path)
+    except AnalysisException:
+        if recover_path(spark, store_path) is not None:
+            return spark.read.parquet(store_path)
+        return None
+
+
+# ---------------------------------------------------------------------------
+# batch admit: one micro-batch per ``batch=<id>`` directory, one rename
+
+
+def admit_batch(spark: SparkSession, root: str, batch_id: int, write) -> bool:
+    """Admit ONE micro-batch into ``<root>/batch=<batch_id>`` exactly once:
+    ``write(staging)`` materializes the batch into a fresh staging dir and
+    one rename commits it. Returns False when the batch was already
+    admitted (crash replay) or a concurrent admission of the same batch
+    id won the rename race; ``write`` then either never runs or its
+    output is deleted.
+
+    Crash anywhere: before the rename only a staging dir exists (readers,
+    who scan ``batch=*``, never see it, and the replayed batch stages
+    again and commits); after the rename the replayed batch finds
+    ``batch=<id>`` present and skips.
+
+    Hadoop renames a directory onto an EXISTING directory by moving it
+    inside (HDFS semantics, and the local filesystem's copy fallback), so
+    a lost race shows up as our staging dir under the winner's target,
+    not as a failed rename; either way ours is deleted. The winner
+    committed identical rows (every admitter's ``write`` is deterministic
+    in the batch), so dropping ours is correct."""
+    target = f"{root}/batch={batch_id}"
+    fs, dst = _fs_and_path(spark, target)
+    if fs.exists(dst):
+        return False
+    # dot-prefixed staging: partition discovery ignores hidden dirs, so a
+    # crashed (never-renamed) staging can NEVER pollute the batch=*
+    # partition column or leak rows to readers — a sibling
+    # "batch=<id>.__staging__" name would be parsed as a partition VALUE
+    name = f".staging-batch-{batch_id}-{uuid.uuid4().hex[:12]}"
+    write(f"{root}/{name}")
+    fs.mkdirs(dst.getParent())
+    src = spark._jvm.org.apache.hadoop.fs.Path(f"{root}/{name}")
+    if fs.rename(src, dst):
+        # landed inside an existing target: the race was lost after all
+        src = spark._jvm.org.apache.hadoop.fs.Path(f"{target}/{name}")
+        if not fs.exists(src):
+            return True
+    fs.delete(src, True)
+    return False
+
+
+# ---------------------------------------------------------------------------
+# versioned manifest store: immutable versions + manifest-pointer publish
+
+
+def _index_manifest_dir(root: str) -> str:
+    return f"{root}/_manifests"
+
+
+def _list_index_manifests(spark, root: str) -> "list[tuple[int, str]]":
+    """(seq, manifest path) for every published manifest under ``root``,
+    ascending. A manifest only ever appears via an atomic rename, so
+    anything listed is complete."""
+    fs, mdir = _fs_and_path(spark, _index_manifest_dir(root))
+    if not fs.exists(mdir):
+        return []
+    out = []
+    for st in fs.listStatus(mdir):
+        m = re.fullmatch(r"m-(\d{9})\.json", st.getPath().getName())
+        if m:
+            out.append((int(m.group(1)), str(st.getPath())))
+    out.sort()
+    return out
+
+
+def _read_small_file(spark, path: str) -> str:
+    """Read a small FS file (a manifest) through the JVM FileSystem API —
+    py4j passes byte arrays by value, so the copy-free route is commons-io
+    ``IOUtils.toString`` on the JVM side."""
+    fs, p = _fs_and_path(spark, path)
+    stream = fs.open(p)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+
+
+def _write_small_file(spark, path: str, text: str) -> None:
+    """Write a small FS file (segments.json) through the JVM FileSystem
+    API — same route as the manifest writes in :func:`publish_version`."""
+    fs, p = _fs_and_path(spark, path)
+    out = fs.create(p, False)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def resolve_version(spark, root: str) -> "tuple[int, str] | None":
+    """Resolve the CURRENT version under ``root``: the version directory
+    named by the highest-sequence manifest. Returns ``(seq,
+    version_path)`` or None when nothing is published yet.
+
+    Contract: version directories are immutable once published and are
+    retained for ``retain`` further refreshes (see
+    :func:`publish_version`), so a reader may hold the resolved path —
+    including inside a lazy DataFrame — across concurrent refreshes
+    without ever observing a half-written or deleted table."""
+    manifests = _list_index_manifests(spark, root)
+    if not manifests:
+        return None
+    seq, mpath = manifests[-1]
+    doc = json.loads(_read_small_file(spark, mpath))
+    return seq, f"{root}/{doc['version_dir']}"
+
+
+def publish_version(
+    spark,
+    root: str,
+    write_fn,
+    retain: int = 2,
+    fingerprint: "str | None" = None,
+) -> str:
+    """Write a NEW immutable version under ``root`` and atomically
+    publish it via a manifest pointer: ``write_fn`` materializes the
+    version into the directory it is handed, then the pointer flips.
+    Any index family — IVF-PQ codes, the lexical BM25 postings store —
+    publishes through this one code path so the store contract tests
+    cover them all.
+
+    - **writers never break readers**: the new version lands in its own
+      ``v-<seq>-<token>`` directory; publication is ONE atomic rename of
+      a manifest temp file to ``_manifests/m-<seq>.json``. A reader that
+      resolved the previous manifest keeps scanning the previous
+      version's directory, which is immutable and still on disk.
+    - **crash-safe**: a writer dying mid-write leaves an orphan version
+      directory with NO manifest — invisible to readers, reclaimed by a
+      later publish's GC. A writer dying after the rename has published
+      a complete version (the write finished before the rename).
+    - **concurrent writers**: the manifest rename never overwrites; the
+      loser of a same-sequence race retries with the next sequence
+      number, so both versions publish in a total order and the higher
+      sequence wins the pointer.
+    - **cross-process GC with a read grace window**: after publishing
+      sequence S, version directories (and manifests) with sequence
+      ≤ S − ``retain`` are deleted — any reader is safe while it holds a
+      version no more than ``retain`` refreshes old; long-lived handles
+      should re-resolve per query (the registry serve path does).
+
+    ``fingerprint`` (optional) is recorded in the manifest so a serving
+    tier can skip republishing an unchanged dataset. Returns the
+    published version path."""
+    if retain < 1:
+        raise ValueError("publish_version: retain must be >= 1")
+    manifests = _list_index_manifests(spark, root)
+    seq = (manifests[-1][0] if manifests else 0) + 1
+    vname = f"v-{seq:09d}-{uuid.uuid4().hex[:8]}"
+    write_fn(f"{root}/{vname}")
+    fs, mdir = _fs_and_path(spark, _index_manifest_dir(root))
+    jvm = spark._jvm
+    fs.mkdirs(mdir)
+    payload = json.dumps(
+        {"version_dir": vname, "seq": seq, "fingerprint": fingerprint}
+    ).encode("utf-8")
+    while True:
+        tmp = jvm.org.apache.hadoop.fs.Path(
+            f"{_index_manifest_dir(root)}/.tmp-{uuid.uuid4().hex[:12]}"
+        )
+        out = fs.create(tmp, False)
+        try:
+            out.write(bytearray(payload))
+        finally:
+            out.close()
+        dst = jvm.org.apache.hadoop.fs.Path(
+            f"{_index_manifest_dir(root)}/m-{seq:09d}.json"
+        )
+        if fs.rename(tmp, dst):
+            break
+        # same-seq race lost: another writer published this sequence —
+        # re-point the manifest at OUR version under the next sequence
+        fs.delete(tmp, False)
+        payload = json.dumps(
+            {"version_dir": vname, "seq": seq + 1, "fingerprint": fingerprint}
+        ).encode("utf-8")
+        seq += 1
+
+    # GC: anything retain-or-more refreshes behind the one just published
+    cutoff = seq - retain
+    for mseq, mpath in _list_index_manifests(spark, root):
+        if mseq > cutoff:
+            continue
+        try:
+            vdir = json.loads(_read_small_file(spark, mpath))["version_dir"]
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{vdir}"), True)
+        except Exception:  # pragma: no cover - GC is best-effort
+            pass
+        fs.delete(jvm.org.apache.hadoop.fs.Path(mpath), False)
+    # orphan version dirs (crashed writers: no manifest) older than the
+    # grace window
+    froot, rpath = _fs_and_path(spark, root)
+    live = set()
+    for mseq, mpath in _list_index_manifests(spark, root):
+        try:
+            live.add(json.loads(_read_small_file(spark, mpath))["version_dir"])
+        except Exception:  # pragma: no cover
+            pass
+    for st in froot.listStatus(rpath):
+        name = st.getPath().getName()
+        m = re.fullmatch(r"v-(\d{9})-[0-9a-f]{8}", name)
+        if m and name not in live and int(m.group(1)) <= cutoff:
+            froot.delete(st.getPath(), True)
+    return f"{root}/{vname}"
+
+
+# ---------------------------------------------------------------------------
+# segmented store: membership versions + tombstone deletion
+
+
+def gc_unreferenced_segments(spark, root: str) -> None:
+    """Delete ``root/segs`` entries referenced by NO live version (runs
+    after each segmented publish; :func:`publish_version`'s own GC has
+    already dropped out-of-retention versions and manifests).
+
+    Fail-safe contract: a version without ``segments.json`` legitimately
+    contributes zero live segments, but ANY OTHER failure while building
+    the liveness set — a transient manifest read error, malformed JSON —
+    aborts the pass without deleting anything. Proceeding with a partial
+    liveness set would let GC reclaim a segment a live (even the current)
+    version still references; skipping a pass merely defers reclamation
+    to the next publish."""
+    live: set[str] = set()
+    try:
+        for _seq, mpath in _list_index_manifests(spark, root):
+            doc = json.loads(_read_small_file(spark, mpath))
+            sj_path = f"{root}/{doc['version_dir']}/segments.json"
+            if not path_exists(spark, sj_path):
+                continue
+            sj = _read_small_file(spark, sj_path)
+            live |= set(json.loads(sj)["segments"])
+    except Exception:  # pragma: no cover - transient read failure
+        return
+    fs, segdir = _fs_and_path(spark, f"{root}/segs")
+    if not fs.exists(segdir):
+        return
+    for st in fs.listStatus(segdir):
+        if st.getPath().getName() not in live:
+            fs.delete(st.getPath(), True)
+
+
+def publish_segments(
+    spark,
+    root: str,
+    seg_names: "list[str]",
+    retain: int = 2,
+    fingerprint: "str | None" = None,
+    tombstones: "DataFrame | None" = None,
+    write_tables=None,
+) -> str:
+    """Publish a membership version of a segmented store: the version
+    directory holds ``segments.json``, the optional ``tombstones`` table
+    and whatever ``write_tables(version_path)`` adds (BM25 writes its
+    merged termstats/stats there). Segment data is shared across
+    versions under ``root/segs`` and reclaimed by
+    :func:`gc_unreferenced_segments` once no retained version references
+    it. Returns the published version path.
+
+    Segment GC assumes single-writer publishes: a concurrent writer's
+    not-yet-published segment is invisible to the liveness scan."""
+
+    def write_fn(vpath: str) -> None:
+        if write_tables is not None:
+            write_tables(vpath)
+        if tombstones is not None:
+            tombstones.write.mode("errorifexists").parquet(
+                f"{vpath}/tombstones"
+            )
+        _write_small_file(
+            spark, f"{vpath}/segments.json",
+            json.dumps({"segments": sorted(seg_names)}),
+        )
+
+    path = publish_version(
+        spark, root, write_fn, retain=retain, fingerprint=fingerprint
+    )
+    gc_unreferenced_segments(spark, root)
+    return path
+
+
+def _read_tombstones(spark, vpath: str) -> "DataFrame | None":
+    """The version's tombstone table (``doc_id``/``vec_id`` rows), or
+    None for the tombstone-free layout (absence IS the common case: a
+    version only carries the file when a delete published it and no
+    compaction has folded it out yet)."""
+    if not path_exists(spark, f"{vpath}/tombstones"):
+        return None
+    return spark.read.parquet(f"{vpath}/tombstones")
+
+
+def current_segments(
+    spark, root: str, caller: str
+) -> "tuple[str, list[str], DataFrame | None]":
+    """``(version path, segment names, tombstones or None)`` of the
+    current version of the segmented store under ``root``; raises
+    ``ValueError`` naming ``caller`` when nothing is published."""
+    cur = resolve_version(spark, root)
+    if cur is None:
+        raise ValueError(f"{caller}: nothing published under {root}")
+    vpath = cur[1]
+    segs = json.loads(
+        _read_small_file(spark, f"{vpath}/segments.json")
+    )["segments"]
+    return vpath, segs, _read_tombstones(spark, vpath)

@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import letter_tokens
+from .atomic_swap import (
+    current_segments, publish_segments, publish_version, resolve_version,
+)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -585,11 +588,9 @@ def bm25_publish_index(
     fingerprint: "str | None" = None,
 ) -> str:
     """Publish a new immutable version of the BM25 index under ``root``
-    via the shared manifest-pointer store (``operators.pq.
-    publish_version`` — atomic rename, concurrent-writer total order,
-    retention GC). Returns the published version path."""
-    from .pq import publish_version
-
+    via the shared manifest-pointer store (``atomic_swap.publish_version``
+    — atomic rename, concurrent-writer total order, retention GC).
+    Returns the published version path."""
     return publish_version(
         docs.sparkSession,
         root,
@@ -696,29 +697,17 @@ def bm25_rm3_persisted_topk(
 # vocabulary-sized merged termstats and the 1-row merged stats — both
 # algebraic sums of per-segment partials (the ``daily_partials`` /
 # ``merge_partials_monthly`` pattern from operators/aggregations.py).
-# Publication rides the SAME manifest-pointer store as the IVF-PQ and
-# full-rebuild BM25 indexes (``operators.pq.publish_version``), so the
-# atomicity/race/retention contract tests cover it too. Serving
-# multi-path-reads every live segment's postings in ONE scan (term
-# predicate still pushed to each range-sorted file's footer).
+# Publication rides the SAME segmented manifest-pointer store as the
+# IVF-PQ code store (``atomic_swap.publish_segments`` over
+# ``publish_version``), so the atomicity/race/retention contract tests
+# cover it too; the streamed batch admit is ``atomic_swap.admit_batch``.
+# Serving multi-path-reads every live segment's postings in ONE scan
+# (term predicate still pushed to each range-sorted file's footer).
 #
 # Hash-equality with a full rebuild holds by algebra: with append-only
 # disjoint doc_ids, ∪ segment tf == full-corpus tf, Σ segment df == full
 # df, Σ (n_docs, sum_dl) == full stats — proven by the registry twin
 # ``retrieval_bm25_incremental`` sharing ``text_bm25_topk``'s oracle.
-
-
-def _write_small_file(spark, path: str, text: str) -> None:
-    """Write a small FS file (segments.json) through the JVM FileSystem
-    API — same route as the manifest writes in ``pq.publish_version``."""
-    from .atomic_swap import _fs_and_path
-
-    fs, p = _fs_and_path(spark, path)
-    out = fs.create(p, False)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
 
 
 def bm25_write_segment(docs: DataFrame, seg_path: str) -> None:
@@ -752,21 +741,13 @@ def bm25_write_segment(docs: DataFrame, seg_path: str) -> None:
     ).write.mode("errorifexists").parquet(f"{seg_path}/stats")
 
 
-def _publish_segmented_version(
-    spark,
-    root: str,
-    seg_names: list[str],
-    termstats: DataFrame,
-    stats: DataFrame,
-    retain: int,
-    fingerprint: "str | None",
-    tombstones: "DataFrame | None" = None,
-) -> str:
-    import json
+def _write_merged_stats(termstats: DataFrame, stats: DataFrame):
+    """The version-table writer a segmented BM25 publish hands
+    ``atomic_swap.publish_segments``: the merged ``termstats``
+    (range-sorted for footer-level term skipping) and the 1-row merged
+    ``stats``."""
 
-    from .pq import publish_version
-
-    def write_fn(vpath: str) -> None:
+    def write(vpath: str) -> None:
         (
             termstats.repartitionByRange(4, "term")
             .sortWithinPartitions("term")
@@ -774,33 +755,8 @@ def _publish_segmented_version(
             .parquet(f"{vpath}/termstats")
         )
         stats.write.mode("errorifexists").parquet(f"{vpath}/stats")
-        if tombstones is not None:
-            tombstones.write.mode("errorifexists").parquet(
-                f"{vpath}/tombstones"
-            )
-        _write_small_file(
-            spark, f"{vpath}/segments.json",
-            json.dumps({"segments": sorted(seg_names)}),
-        )
 
-    path = publish_version(
-        spark, root, write_fn, retain=retain, fingerprint=fingerprint
-    )
-    _bm25_gc_segments(spark, root)
-    return path
-
-
-def _read_tombstones(spark, vpath: str) -> "DataFrame | None":
-    """The version's tombstone table (``doc_id``/``vec_id`` rows), or
-    None for the tombstone-free layout (absence IS the common case: a
-    version only carries the file when a delete published it and no
-    compaction has folded it out yet)."""
-    from .atomic_swap import _fs_and_path
-
-    fs, p = _fs_and_path(spark, f"{vpath}/tombstones")
-    if not fs.exists(p):
-        return None
-    return spark.read.parquet(f"{vpath}/tombstones")
+    return write
 
 
 def bm25_publish_segmented(
@@ -817,11 +773,12 @@ def bm25_publish_segmented(
     spark = docs.sparkSession
     seg = f"seg-{uuid.uuid4().hex[:12]}"
     bm25_write_segment(docs, f"{root}/segs/{seg}")
-    return _publish_segmented_version(
-        spark, root, [seg],
-        spark.read.parquet(f"{root}/segs/{seg}/termstats"),
-        spark.read.parquet(f"{root}/segs/{seg}/stats"),
-        retain, fingerprint,
+    return publish_segments(
+        spark, root, [seg], retain=retain, fingerprint=fingerprint,
+        write_tables=_write_merged_stats(
+            spark.read.parquet(f"{root}/segs/{seg}/termstats"),
+            spark.read.parquet(f"{root}/segs/{seg}/stats"),
+        ),
     )
 
 
@@ -844,21 +801,16 @@ def bm25_admit_delta(
     single-writer admits (concurrent VERSION writers stay safe via the
     manifest total order, but a concurrent admit's not-yet-published
     segment is invisible to the GC's liveness scan)."""
-    import json
     import uuid
 
-    from .pq import _read_small_file, ivfpq_resolve_index
-
     spark = delta_docs.sparkSession
-    cur = ivfpq_resolve_index(spark, root)
-    if cur is None:
+    if resolve_version(spark, root) is None:
         return bm25_publish_segmented(
             delta_docs, root, retain=retain, fingerprint=fingerprint
         )
-    _, vpath = cur
-    seg_names = json.loads(
-        _read_small_file(spark, f"{vpath}/segments.json")
-    )["segments"]
+    vpath, seg_names, tomb = current_segments(
+        spark, root, "bm25_admit_delta"
+    )
     seg = f"seg-{uuid.uuid4().hex[:12]}"
     bm25_write_segment(delta_docs, f"{root}/segs/{seg}")
     merged_ts = (
@@ -875,13 +827,14 @@ def bm25_admit_delta(
             F.sum("sum_dl").cast("long").alias("sum_dl"),
         )
     )
-    return _publish_segmented_version(
-        spark, root, list(seg_names) + [seg], merged_ts, merged_st,
-        retain, fingerprint,
+    return publish_segments(
+        spark, root, list(seg_names) + [seg],
+        retain=retain, fingerprint=fingerprint,
         # standing deletions carry forward (delta ids are disjoint from
         # the whole standing corpus, deleted docs included — readmitting
         # a deleted id needs a compaction first, which clears the list)
-        tombstones=_read_tombstones(spark, vpath),
+        tombstones=tomb,
+        write_tables=_write_merged_stats(merged_ts, merged_st),
     )
 
 
@@ -912,20 +865,9 @@ def bm25_delete_docs(
     Idempotent under re-deletion: already-tombstoned ids contribute no
     further stat adjustment. Deleting an id that never existed is a
     no-op row in the tombstone table."""
-    import json
-
-    from .pq import _read_small_file, ivfpq_resolve_index
-
     spark = delete_ids.sparkSession
-    cur = ivfpq_resolve_index(spark, root)
-    if cur is None:
-        raise ValueError(f"bm25_delete_docs: nothing published under {root}")
-    _, vpath = cur
-    segs = json.loads(
-        _read_small_file(spark, f"{vpath}/segments.json")
-    )["segments"]
+    vpath, segs, old_tomb = current_segments(spark, root, "bm25_delete_docs")
     ids = delete_ids.select(F.col("doc_id").cast("long")).distinct()
-    old_tomb = _read_tombstones(spark, vpath)
     if old_tomb is not None:
         fresh = ids.join(old_tomb, "doc_id", "left_anti")
         all_tomb = old_tomb.unionByName(fresh).distinct()
@@ -966,29 +908,11 @@ def bm25_delete_docs(
         )
         .filter(F.col("df") > 0)
     )
-    return _publish_segmented_version(
-        spark, root, list(segs), merged_ts, merged_st, retain, fingerprint,
+    return publish_segments(
+        spark, root, list(segs), retain=retain, fingerprint=fingerprint,
         tombstones=all_tomb,
+        write_tables=_write_merged_stats(merged_ts, merged_st),
     )
-
-
-def _bm25_gc_segments(spark, root: str) -> None:
-    """Delete segments referenced by NO live manifest's version (runs
-    after each publish; publish_version's own GC has already dropped
-    out-of-retention versions and manifests).
-
-    Fail-safe contract: a version with no ``segments.json`` is a
-    legitimately non-segmented version (contributes no live segments),
-    but ANY OTHER failure while building the liveness set — a transient
-    manifest read error, malformed JSON — aborts the pass without
-    deleting anything. Proceeding with a partial liveness set would let
-    GC delete segments still referenced by a live (even the current)
-    version; skipping a pass merely defers reclamation to the next
-    publish. (Shared machinery: ``pq.gc_unreferenced_segments`` — the
-    ANN code store publishes through the same membership layout.)"""
-    from .pq import gc_unreferenced_segments
-
-    gc_unreferenced_segments(spark, root)
 
 
 def bm25_segmented_topk(
@@ -1007,23 +931,12 @@ def bm25_segmented_topk(
     re-tokenizes, no matter how many admits built the index. Scoring is
     the shared :func:`_bm25_score_topk` arithmetic, so the result is
     hash-equal to a full rebuild (registry twin pins it)."""
-    import json
-
-    from .pq import _read_small_file, ivfpq_resolve_index
-
-    cur = ivfpq_resolve_index(spark, root)
-    if cur is None:
-        raise ValueError(f"bm25_segmented_topk: nothing published under {root}")
-    _, vpath = cur
-    segs = json.loads(
-        _read_small_file(spark, f"{vpath}/segments.json")
-    )["segments"]
+    vpath, segs, tomb = current_segments(spark, root, "bm25_segmented_topk")
     terms = [t.lower() for t in query_terms]
     tf = spark.read.parquet(
         *[f"{root}/segs/{s}/postings" for s in segs]
     ).filter(F.col("term").isin(terms))
     dl = spark.read.parquet(*[f"{root}/segs/{s}/doclens" for s in segs])
-    tomb = _read_tombstones(spark, vpath)
     if tomb is not None:
         # takedown-sized broadcast anti-join; df/avgdl/N need no
         # correction — the delete publish already adjusted them
@@ -1056,20 +969,12 @@ def bm25_compact_segments(
     its membership still references) survives until retention GC ages it
     out — the standard crash-safe publish contract. Returns the new
     version path."""
-    import json
     import uuid
 
-    from .pq import _read_small_file, ivfpq_resolve_index
-
-    cur = ivfpq_resolve_index(spark, root)
-    if cur is None:
-        raise ValueError(f"bm25_compact_segments: nothing published under {root}")
-    _, vpath = cur
-    segs = json.loads(
-        _read_small_file(spark, f"{vpath}/segments.json")
-    )["segments"]
+    vpath, segs, tomb = current_segments(
+        spark, root, "bm25_compact_segments"
+    )
     seg = f"seg-{uuid.uuid4().hex[:12]}"
-    tomb = _read_tombstones(spark, vpath)
     postings_src = spark.read.parquet(
         *[f"{root}/segs/{s}/postings" for s in segs]
     )
@@ -1106,9 +1011,10 @@ def bm25_compact_segments(
     spark.read.parquet(f"{vpath}/stats").write.mode(
         "errorifexists"
     ).parquet(f"{root}/segs/{seg}/stats")
-    return _publish_segmented_version(
-        spark, root, [seg],
-        spark.read.parquet(f"{root}/segs/{seg}/termstats"),
-        spark.read.parquet(f"{root}/segs/{seg}/stats"),
-        retain, fingerprint,
+    return publish_segments(
+        spark, root, [seg], retain=retain, fingerprint=fingerprint,
+        write_tables=_write_merged_stats(
+            spark.read.parquet(f"{root}/segs/{seg}/termstats"),
+            spark.read.parquet(f"{root}/segs/{seg}/stats"),
+        ),
     )

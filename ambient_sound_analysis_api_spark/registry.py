@@ -2256,76 +2256,25 @@ def _lsh_planes(n_planes: int = 6, dim: int = 64) -> list[list[float]]:
     return planes
 
 
+_LSH_PLANE_PATH: str | None = None
+
+
 def _lsh_plane_table(spark: SparkSession) -> DataFrame:
-    """The hyperplane set as a *persisted* Parquet table (write-once,
-    content-deterministic): the LSH index definition lives next to the data,
-    and every producer/consumer broadcast-joins the same table instead of
-    compiling plane literals into each plan.
+    """The hyperplane set as a *persisted* Parquet table: the LSH index
+    definition lives next to the data, and every producer/consumer
+    broadcast-joins the same table instead of compiling plane literals
+    into each plan.
 
-    The path is per-user (uid-suffixed, ``SPARK_GRAFT_LSH_DIR`` overrides
-    the base dir) and publication is race-safe: the table is written to a
-    unique staging dir and atomically ``rename``d into place while holding
-    an exclusive ``flock`` on a permanent lock inode, so concurrent
-    processes can't observe a half-written table and a crash artifact (dir
-    without ``_SUCCESS``) is swept only by the lock holder — never while
-    another process is mid-publish. A holder that dies releases the flock
-    automatically (kernel-managed), so there is no stale-lock heuristic to
-    race on; late lock winners find ``_SUCCESS`` and adopt the published
-    table.
-    """
-    import os
-    import time
-    import uuid
-
-    base = os.environ.get("SPARK_GRAFT_LSH_DIR", tempfile.gettempdir())
-    # v2: portable md5-derived ±1/0 planes (v1 was an LCG float family)
-    path = os.path.join(base, f"ambient_lsh_planes_v2_uid{os.getuid()}.parquet")
-    success = os.path.join(path, "_SUCCESS")
-    if os.path.exists(success):
-        return spark.read.parquet(path)
-
-    staging = f"{path}.__staging__.{uuid.uuid4().hex[:12]}"
-    similarity.write_plane_table(spark, staging, _lsh_planes())
-    # Mutual exclusion via flock on a permanent lock inode, not lockfile
-    # existence: the kernel releases the lock when the holder's fd closes —
-    # including on crash — so there is no staleness heuristic and therefore
-    # no judge-then-remove TOCTOU (any path-based break scheme can remove a
-    # lock a concurrent breaker just re-created, admitting two publishers).
-    # Advisory flock is reliable on local filesystems and NFSv4; the lock
-    # directory here is driver-local tmp by construction.
-    lockfile = f"{path}.lock"
-    fd = os.open(lockfile, os.O_CREAT | os.O_RDWR)
-    try:
-        import fcntl
-
-        for _ in range(1200):  # up to 60s; publishing takes ~seconds
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                break
-            except OSError:
-                time.sleep(0.05)
-        else:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise TimeoutError(f"waiting for plane table lock at {lockfile}")
-        # lock held: either publish our staging or adopt a finished publish
-        return _publish_plane_table(spark, staging, path, success)
-    finally:
-        os.close(fd)  # releases the flock; the lock inode stays forever
-
-
-def _publish_plane_table(
-    spark: SparkSession, staging: str, path: str, success: str
-) -> DataFrame:
-    """Holding the flock: sweep any pre-publish crash artifact and rename
-    the staged table into place (or adopt a finished concurrent publish)."""
-    import os
-
-    if not os.path.exists(success):
-        shutil.rmtree(path, ignore_errors=True)
-        os.rename(staging, path)
-    else:  # someone published while we were writing staging
-        shutil.rmtree(staging, ignore_errors=True)
-    return spark.read.parquet(path)
+    The planes are content-deterministic and tiny (6×64), so each process
+    writes them once, into its own directory under ``_store_parent``
+    (removed at exit), and caches the path. Two racing first calls each
+    write a directory of their own and the last path cached wins."""
+    global _LSH_PLANE_PATH
+    if _LSH_PLANE_PATH is None:
+        path = tempfile.mkdtemp(prefix="lsh_planes_", dir=_store_parent())
+        similarity.write_plane_table(spark, path, _lsh_planes())
+        _LSH_PLANE_PATH = path
+    return spark.read.parquet(_LSH_PLANE_PATH)
 
 
 # Shared oracle CTEs for the hyperplane-LSH pair: re-derive the md5 plane
@@ -6117,7 +6066,7 @@ def q_emb_ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     #2 — until now the code store only grew or rewrote): the corpus
     publishes as one cell-partitioned code SEGMENT (the BM25 membership
     layout applied to codes: versions are a segment list + optional
-    tombstone table under ``operators/pq.py::publish_segment_membership``),
+    tombstone table under ``operators/atomic_swap.py::publish_segments``),
     then every ``vec_id % 9 == 4`` is deleted via ``ivfpq_delete_ids`` —
     a membership-identical version whose tombstone table the serve path
     anti-joins (broadcast, takedown-sized). No code row is rewritten and
@@ -6367,7 +6316,8 @@ def q_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     machinery (real streaming, algebraic merge, transactional swap) with
     zero numeric drift."""
     from .operators.aggregations import merge_partials_monthly
-    from .streaming.rollup import incremental_rollup_query, read_store
+    from .operators.atomic_swap import read_store
+    from .streaming.rollup import incremental_rollup_query
 
     ev = _events(spark, sf_dir).select("event_type", "ts", "value")
     root = tempfile.mkdtemp(prefix="roll_")
@@ -9980,7 +9930,8 @@ def q_streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM THE STORE hash-match the direct batch computation (the oracle),
     proving the incremental merge loses nothing."""
     from .operators import sketches as sk
-    from .streaming.hll import hll_rollup_query, read_store
+    from .operators.atomic_swap import read_store
+    from .streaming.hll import hll_rollup_query
 
     ev = (
         _events(spark, sf_dir)
@@ -12682,8 +12633,7 @@ def q_streaming_dual_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-decimal means and the portable md5 register algebra."""
     from .operators import sketches as sk
     from .operators.aggregations import merge_partials_monthly
-    from .streaming import hll as hllmod
-    from .streaming import rollup as rollupmod
+    from .operators.atomic_swap import read_store
     from .streaming.dual import dual_rollup_query
 
     ev = _events(spark, sf_dir).select("event_type", "ts", "value", "user_id")
@@ -12705,8 +12655,8 @@ def q_streaming_dual_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        monthly = merge_partials_monthly(rollupmod.read_store(spark, pstore))
-        regs = hllmod.read_store(spark, hstore)
+        monthly = merge_partials_monthly(read_store(spark, pstore))
+        regs = read_store(spark, hstore)
         month_regs = (
             regs.select(
                 "event_type",

@@ -8,15 +8,10 @@ embeddings is cell-assigned and PQ-encoded against the STANDING model
 admitted into a partitioned code store exactly once.
 
 Exactly-once here needs no meta file at all: each batch's codes land in
-their own ``batch=<id>`` partition directory via stage-then-rename —
-the rename is the commit, and its target's existence IS the replay
-gate. Crash anywhere:
-
-- before the rename → only a staging dir exists; readers (who scan
-  ``batch=*``) never see it, and the replayed batch overwrites staging
-  and commits;
-- after the rename → the replayed batch finds ``batch=<id>`` present
-  and skips (idempotent admission).
+their own ``batch=<id>`` partition directory via the stage-then-rename
+batch admit (``operators/atomic_swap.py::admit_batch``) — the rename is
+the commit, and its target's existence IS the replay gate, at every
+crash point.
 
 The store layout is ``<root>/batch=<id>/cell=<c>/*.parquet`` — standard
 two-level hive partitioning, so a serving scan prunes to the probed
@@ -31,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.atomic_swap import admit_batch
+
 
 def admit_embedding_batch(
     spark: SparkSession,
@@ -44,37 +41,19 @@ def admit_embedding_batch(
 ) -> bool:
     """Encode + admit ONE micro-batch into the streamed code store;
     returns False when the batch was already admitted (crash replay) or
-    a concurrent admission of the same batch id won the rename race.
-    The encode is ``ivfpq_delta_index`` — exact-decimal cell assignment
-    plus the codegen code projection, no refit, no corpus scan."""
-    import uuid
-
-    from ..operators.atomic_swap import _fs_and_path
+    a concurrent admission of the same batch id won the rename race
+    (``atomic_swap.admit_batch``). The encode is ``ivfpq_delta_index`` —
+    exact-decimal cell assignment plus the codegen code projection, no
+    refit, no corpus scan."""
     from ..operators.pq import ivfpq_delta_index
 
-    jvm = spark._jvm
-    target = f"{store_root}/batch={batch_id}"
-    fs, dst = _fs_and_path(spark, target)
-    if fs.exists(dst):
-        return False
-    codes = ivfpq_delta_index(
-        batch_df, cents, codebooks, id_col=id_col, vec_col=vec_col
-    )
-    # dot-prefixed staging: partition discovery ignores hidden dirs, so a
-    # crashed (never-renamed) staging can NEVER pollute the batch=*
-    # partition column or leak rows to readers — a sibling
-    # "batch=<id>.__staging__" name would be parsed as a partition VALUE
-    staging = f"{store_root}/.staging-batch-{batch_id}-{uuid.uuid4().hex[:12]}"
-    codes.repartition("cell").write.partitionBy("cell").parquet(staging)
-    fs.mkdirs(dst.getParent())
-    src = jvm.org.apache.hadoop.fs.Path(staging)
-    if not fs.rename(src, dst):
-        # replay/concurrent race lost after our existence probe: the
-        # other admission committed identical codes (the encode is
-        # deterministic), so dropping ours is correct
-        fs.delete(src, True)
-        return False
-    return True
+    def write(staging: str) -> None:
+        codes = ivfpq_delta_index(
+            batch_df, cents, codebooks, id_col=id_col, vec_col=vec_col
+        )
+        codes.repartition("cell").write.partitionBy("cell").parquet(staging)
+
+    return admit_batch(spark, store_root, batch_id, write)
 
 
 def streamed_ann_ingest(

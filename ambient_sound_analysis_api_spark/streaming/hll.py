@@ -19,40 +19,23 @@ The swap uses the staging + atomic-rename protocol
 every on-disk copy is complete — but the protocol's two renames leave one
 crash window where ``store_path`` itself is briefly absent (the registers
 live under ``<path>.__old__.<token>`` and the fully staged replacement).
-``read_store`` closes that window by recovering the newest complete
-sibling copy back into place (``atomic_swap.recover_path``) instead of
-silently restarting from an empty store; combined with max-merge
+``atomic_swap.read_store`` closes that window by recovering the newest
+complete sibling copy back into place (``atomic_swap.recover_path``)
+instead of silently restarting from an empty store; combined with max-merge
 idempotence on the batch replay, a kill at ANY point reproduces the
 batch-oracle registers (crash-injection-tested in
-``tests/test_streaming_hll.py``).
+``tests/test_streaming_rollup.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
-from ..operators.atomic_swap import recover_path, staging_path, swap_in
+from ..operators.atomic_swap import read_store, staging_path, swap_in
 from ..operators.sketches import hll_registers
 
 KEYS = ["event_type", "day"]
-
-
-def read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """The current register store, or None before the first commit.
-
-    A missing path is NOT trusted as "no store yet": a crash inside the
-    swap's rename window leaves the registers under a sibling name, and
-    treating that as empty would permanently undercount. ``recover_path``
-    renames the newest complete sibling copy back first; only when no
-    complete copy exists anywhere is None returned."""
-    try:
-        return spark.read.parquet(store_path)
-    except AnalysisException:
-        if recover_path(spark, store_path) is not None:
-            return spark.read.parquet(store_path)
-        return None
 
 
 def merge_register_batch(

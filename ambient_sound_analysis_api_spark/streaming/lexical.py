@@ -3,9 +3,9 @@
 The sparse twin of ``streaming/ann.py``: each micro-batch of documents
 is tokenized ONCE (the batch is the only thing that ever touches the
 text column) into its own postings + doclens segment and admitted
-exactly once via stage-then-rename — the rename is the commit, its
-target's existence is the replay gate (identical contract and crash
-matrix to ``admit_embedding_batch``; see that module docstring).
+exactly once via the stage-then-rename batch admit
+(``operators/atomic_swap.py::admit_batch``) — the rename is the commit,
+its target's existence is the replay gate.
 
 Store layout: ``<root>/batch=<id>/{postings,doclens}/*.parquet`` — ONE
 rename commits both tables atomically (they share the staged directory),
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.atomic_swap import admit_batch
 from ..operators.retrieval import (
     BM25_B, BM25_K1, _bm25_score_topk, term_frequencies,
 )
@@ -35,39 +36,22 @@ def admit_document_batch(
 ) -> bool:
     """Tokenize + admit ONE micro-batch of documents; returns False when
     the batch was already admitted (crash replay) or a concurrent
-    admission of the same batch id won the rename race."""
-    import uuid
-
-    from ..operators.atomic_swap import _fs_and_path
+    admission of the same batch id won the rename race
+    (``atomic_swap.admit_batch``)."""
     from ..functions.text import letter_tokens
 
-    jvm = spark._jvm
-    target = f"{store_root}/batch={batch_id}"
-    fs, dst = _fs_and_path(spark, target)
-    if fs.exists(dst):
-        return False
-    # dot-prefixed staging: hidden from any directory listing/partition
-    # discovery, so a crashed (never-renamed) staging never leaks rows
-    staging = (
-        f"{store_root}/.staging-batch-{batch_id}-{uuid.uuid4().hex[:12]}"
-    )
-    (
-        term_frequencies(batch_df)
-        .repartitionByRange(4, "term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.parquet(f"{staging}/postings")
-    )
-    batch_df.select(
-        "doc_id", F.size(letter_tokens(F.col("text"))).alias("dl")
-    ).write.parquet(f"{staging}/doclens")
-    fs.mkdirs(dst.getParent())
-    src = jvm.org.apache.hadoop.fs.Path(staging)
-    if not fs.rename(src, dst):
-        # replay/concurrent race lost after our existence probe: the
-        # winner committed identical rows (tokenize is deterministic)
-        fs.delete(src, True)
-        return False
-    return True
+    def write(staging: str) -> None:
+        (
+            term_frequencies(batch_df)
+            .repartitionByRange(4, "term")
+            .sortWithinPartitions("term", "doc_id")
+            .write.parquet(f"{staging}/postings")
+        )
+        batch_df.select(
+            "doc_id", F.size(letter_tokens(F.col("text"))).alias("dl")
+        ).write.parquet(f"{staging}/doclens")
+
+    return admit_batch(spark, store_root, batch_id, write)
 
 
 def streamed_lexical_ingest(

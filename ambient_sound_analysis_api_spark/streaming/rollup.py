@@ -25,33 +25,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..operators.aggregations import daily_partials
-from ..operators.atomic_swap import recover_path, staging_path, swap_in
+from ..operators.atomic_swap import (
+    read_store, recover_path, staging_path, swap_in,
+)
 
 _SUM_T = "decimal(38,2)"
 
 
-def read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """The current partials store, or None before the first commit.
-
-    A missing path is not trusted as "no store yet": a crash inside the
-    swap's rename window leaves the store under a sibling name
-    (``atomic_swap.recover_path`` renames the newest complete copy back);
-    restarting from empty would permanently lose history."""
-    try:
-        return spark.read.parquet(store_path)
-    except AnalysisException:
-        if recover_path(spark, store_path) is not None:
-            return spark.read.parquet(store_path)
-        return None
-
-
 def last_merged_batch(spark: SparkSession, store_path: str) -> int:
     """Committed batch id carried by the store (-1 before the first
-    commit). Runs the same rename-window recovery as ``read_store`` FIRST:
-    this is the replay gate, and reading -1 off a mid-swap crash would
-    both lose history and double-merge the replayed batch (the staged
-    ``_meta`` travels with the staged parquet, so a recovered staging dir
-    still carries its batch id)."""
+    commit). Runs the same rename-window recovery as
+    ``atomic_swap.read_store`` FIRST: this is the replay gate, and reading
+    -1 off a mid-swap crash would both lose history and double-merge the
+    replayed batch (the staged ``_meta`` travels with the staged parquet,
+    so a recovered staging dir still carries its batch id)."""
     recover_path(spark, store_path)
     try:
         row = spark.read.json(f"{store_path}/_meta").first()

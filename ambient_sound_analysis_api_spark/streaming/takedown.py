@@ -12,10 +12,10 @@ Design: deletions are data, not mutations. A micro-batch of ids is
 admitted into its own ``batch=<id>`` directory under a DEDICATED
 takedown root (a sibling of the code/postings store — sharing the store
 root would poison its hive partition discovery with a second partition
-column), via the exact stage-then-rename contract of
-``admit_embedding_batch`` / ``admit_document_batch``: the rename is the
-commit, its target's existence is the replay gate, and the dot-prefixed
-staging directory is invisible to readers at every crash point. Nothing
+column), via the stage-then-rename batch admit
+(``operators/atomic_swap.py::admit_batch``): the rename is the commit,
+its target's existence is the replay gate, and the dot-prefixed staging
+directory is invisible to readers at every crash point. Nothing
 in the admitted index is rewritten — a takedown batch is O(ids), never
 O(corpus).
 
@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.atomic_swap import admit_batch, path_exists
+
 
 def admit_takedown_batch(
     spark: SparkSession,
@@ -50,32 +52,16 @@ def admit_takedown_batch(
 ) -> bool:
     """Admit ONE micro-batch of takedown ids; returns False when the
     batch was already admitted (crash replay) or a concurrent admission
-    of the same batch id won the rename race. Ids are deduplicated
-    within the batch (re-deleting an already-deleted doc is a no-op by
-    construction — the anti-join is set semantics)."""
-    import uuid
+    of the same batch id won the rename race (``atomic_swap.admit_batch``).
+    Ids are deduplicated within the batch (re-deleting an already-deleted
+    doc is a no-op by construction — the anti-join is set semantics)."""
 
-    from ..operators.atomic_swap import _fs_and_path
+    def write(staging: str) -> None:
+        # takedown batches are id-sized: one file keeps the store at
+        # O(batches) files instead of O(batches * shuffle partitions)
+        batch_df.select(id_col).distinct().coalesce(1).write.parquet(staging)
 
-    jvm = spark._jvm
-    target = f"{takedown_root}/batch={batch_id}"
-    fs, dst = _fs_and_path(spark, target)
-    if fs.exists(dst):
-        return False
-    staging = (
-        f"{takedown_root}/.staging-batch-{batch_id}-{uuid.uuid4().hex[:12]}"
-    )
-    # takedown batches are id-sized: one file keeps the store at
-    # O(batches) files instead of O(batches * shuffle partitions)
-    batch_df.select(id_col).distinct().coalesce(1).write.parquet(staging)
-    fs.mkdirs(dst.getParent())
-    src = jvm.org.apache.hadoop.fs.Path(staging)
-    if not fs.rename(src, dst):
-        # lost the race after our existence probe: the winner committed
-        # the identical id set (distinct of the same batch)
-        fs.delete(src, True)
-        return False
-    return True
+    return admit_batch(spark, takedown_root, batch_id, write)
 
 
 def streamed_takedown_ingest(
@@ -102,10 +88,7 @@ def read_streamed_takedowns(
     common case — most serves carry no tombstones, and None lets the
     caller skip the anti-join entirely instead of anti-joining an empty
     frame)."""
-    from ..operators.atomic_swap import _fs_and_path
-
-    fs, root = _fs_and_path(spark, takedown_root)
-    if not fs.exists(root):
+    if not path_exists(spark, takedown_root):
         return None
     return (
         spark.read.parquet(f"{takedown_root}/batch=*")

@@ -93,24 +93,29 @@ def run_available_now(
     how the engine proves streaming/batch parity on real streaming
     machinery rather than on a batch re-interpretation of the same plan;
     in production the same ``transform`` attaches to a live file/Kafka
-    source unchanged.
+    source unchanged. The staged directory is removed once the query has
+    terminated: the memory sink holds the result and never reads it.
     """
+    import shutil
     import tempfile
 
     global _RUN_COUNTER
     _RUN_COUNTER += 1
     name = f"{prefix}_{_RUN_COUNTER}"
     src_dir = tempfile.mkdtemp(prefix=f"{name}_src_")
-    batch_df.write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    q = (
-        transform(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        batch_df.write.mode("overwrite").parquet(src_dir)
+        schema = spark.read.parquet(src_dir).schema
+        stream = spark.readStream.schema(schema).parquet(src_dir)
+        q = (
+            transform(stream)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(src_dir, ignore_errors=True)
     return spark.table(name)

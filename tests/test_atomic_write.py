@@ -1,6 +1,8 @@
-"""The staging + atomic-swap primitive (operators/atomic_swap.py) that the
-streaming rollup and HLL stores rewrite through: the staged copy replaces
-the table via renames, and no staging or old copy is left behind.
+"""The store module (operators/atomic_swap.py): the staging + atomic-swap
+primitive the streaming rollup and HLL stores rewrite through (the staged
+copy replaces the table via renames, and no staging or old copy is left
+behind), the batch admit's lost-race branch, and a guard that keeps the
+filesystem protocol in that one module.
 """
 
 from __future__ import annotations
@@ -30,3 +32,76 @@ def test_swap_in_creates_missing_dst(spark, tmp_path):
     spark.range(3).write.parquet(staging)
     atomic_swap.swap_in(spark, staging, dst)
     assert spark.read.parquet(dst).count() == 3
+
+
+def test_admit_batch_lost_race_drops_staging(spark, tmp_path):
+    """A concurrent admission that commits the same batch between the
+    existence gate and the rename wins: the loser returns False, its
+    staging dir is gone, and the winner's files are untouched."""
+    root = str(tmp_path / "store")
+    target = os.path.join(root, "batch=3")
+
+    def write(staging):
+        spark.range(4).write.parquet(staging)
+        # the winner commits while this admission is still staging
+        os.makedirs(target)
+        with open(os.path.join(target, "winner.parquet"), "w") as fh:
+            fh.write("winner")
+
+    assert atomic_swap.admit_batch(spark, root, 3, write) is False
+    assert [p for p in os.listdir(root) if p.startswith(".staging")] == []
+    assert sorted(os.listdir(target)) == ["winner.parquet"]
+    with open(os.path.join(target, "winner.parquet")) as fh:
+        assert fh.read() == "winner"
+
+
+def test_store_protocol_lives_in_one_module():
+    """Only operators/atomic_swap.py touches the filesystem protocol: no
+    other package module names ``_fs_and_path`` or ``org.apache.hadoop``
+    in code, or calls ``os.rename``. Needs no SparkSession."""
+    import ast
+    import glob
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "ambient_sound_analysis_api_spark",
+    )
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == os.path.join("operators", "atomic_swap.py"):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.FunctionDef,
+                                 ast.AsyncFunctionDef, ast.ClassDef))
+            and node.body and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                hit = node.id == "_fs_and_path"
+            elif isinstance(node, ast.alias):
+                hit = node.name == "_fs_and_path"
+            elif isinstance(node, ast.Attribute):
+                dotted = ast.unparse(node)
+                hit = (node.attr == "_fs_and_path"
+                       or dotted.endswith("org.apache.hadoop")
+                       or dotted == "os.rename")
+            elif isinstance(node, ast.ImportFrom):
+                hit = node.module == "os" and any(
+                    a.name == "rename" for a in node.names
+                )
+            elif isinstance(node, ast.Constant):
+                hit = (isinstance(node.value, str) and id(node) not in docstrings
+                       and "org.apache.hadoop" in node.value)
+            else:
+                continue
+            if hit:
+                offenders.append((rel, node.lineno))
+    assert offenders == [], "store protocol outside atomic_swap.py: " + ", ".join(
+        f"{rel}:{line}" for rel, line in sorted(offenders)
+    )

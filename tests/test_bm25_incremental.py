@@ -58,11 +58,11 @@ def test_admit_writes_only_delta_segment_and_serve_never_tokenizes(
     root = str(tmp_path / "bm25seg")
     R.bm25_publish_segmented(_docs(spark, 0, 12), root, retain=2)
     R.bm25_admit_delta(_docs(spark, 12, 16), root, retain=2)
-    from ambient_sound_analysis_api_spark.operators.pq import (
-        _read_small_file, ivfpq_resolve_index,
+    from ambient_sound_analysis_api_spark.operators.atomic_swap import (
+        _read_small_file, resolve_version,
     )
 
-    _, vpath = ivfpq_resolve_index(spark, root)
+    _, vpath = resolve_version(spark, root)
     segs = json.loads(_read_small_file(spark, f"{vpath}/segments.json"))[
         "segments"
     ]
@@ -115,11 +115,11 @@ def test_stats_and_termstats_merge_algebraically(spark, tmp_path):
     root = str(tmp_path / "bm25seg")
     R.bm25_publish_segmented(_docs(spark, 0, 12), root, retain=2)
     R.bm25_admit_delta(_docs(spark, 12, 16), root, retain=2)
-    from ambient_sound_analysis_api_spark.operators.pq import (
-        ivfpq_resolve_index,
+    from ambient_sound_analysis_api_spark.operators.atomic_swap import (
+        resolve_version,
     )
 
-    _, vpath = ivfpq_resolve_index(spark, root)
+    _, vpath = resolve_version(spark, root)
     got = spark.read.parquet(f"{vpath}/stats").collect()[0]
     full = _full(spark).select(
         F.size(R.letter_tokens(F.col("text"))).alias("dl")
@@ -175,11 +175,11 @@ def test_compaction_preserves_results_and_membership(spark, tmp_path):
         spark, root, ["vector", "hash", "merge"], k=20
     ).collect()
     R.bm25_compact_segments(spark, root, retain=2)
-    from ambient_sound_analysis_api_spark.operators.pq import (
-        _read_small_file, ivfpq_resolve_index,
+    from ambient_sound_analysis_api_spark.operators.atomic_swap import (
+        _read_small_file, resolve_version,
     )
 
-    seq, vpath = ivfpq_resolve_index(spark, root)
+    seq, vpath = resolve_version(spark, root)
     segs = json.loads(_read_small_file(spark, f"{vpath}/segments.json"))[
         "segments"
     ]
@@ -257,12 +257,15 @@ def test_compaction_folds_tombstones_out(spark, tmp_path):
     gone = spark.createDataFrame([(1,), (4,)], "doc_id long")
     R.bm25_delete_docs(gone, root, retain=6)
     R.bm25_compact_segments(spark, root, retain=6)
-    from ambient_sound_analysis_api_spark.operators.pq import (
-        ivfpq_resolve_index,
+    from ambient_sound_analysis_api_spark.operators.atomic_swap import (
+        resolve_version,
     )
-    _, vpath = ivfpq_resolve_index(spark, root)
+    _, vpath = resolve_version(spark, root)
     # compacted version is tombstone-free and physically excludes them
-    assert R._read_tombstones(spark, vpath) is None
+    from ambient_sound_analysis_api_spark.operators.atomic_swap import (
+        _read_tombstones,
+    )
+    assert _read_tombstones(spark, vpath) is None
     import json as _json
     got = R.bm25_segmented_topk(
         spark, root, ["vector", "hash", "merge"], k=20
@@ -271,7 +274,7 @@ def test_compaction_folds_tombstones_out(spark, tmp_path):
     full = R.bm25_topk(survivors, ["vector", "hash", "merge"], k=20).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in full]
     # and the deleted ids are physically absent from the live segment
-    from ambient_sound_analysis_api_spark.operators.pq import _read_small_file
+    from ambient_sound_analysis_api_spark.operators.atomic_swap import _read_small_file
     segs = _json.loads(_read_small_file(spark, f"{vpath}/segments.json"))[
         "segments"
     ]

@@ -272,89 +272,31 @@ def test_ivf_cell_centroids_stable(spark, sf_dir):
     assert a == b and len(a) == 10  # bit-identical across partitionings
 
 
-def test_plane_table_publication_race_safe(spark, tmp_path, monkeypatch):
-    """_lsh_plane_table publishes via staging + atomic rename into a
-    per-user path under SPARK_GRAFT_LSH_DIR: a crash artifact (dir without
-    _SUCCESS) is swept and replaced, and no staging garbage survives."""
+def test_plane_table_written_once_under_store_parent(spark, monkeypatch):
+    """_lsh_plane_table writes the content-deterministic planes once per
+    process, under the process-level store directory removed at exit, and
+    reads back exactly _lsh_planes()."""
     import os
 
-    from ambient_sound_analysis_api_spark.registry import _lsh_plane_table
+    from ambient_sound_analysis_api_spark import registry
 
-    base = str(tmp_path / "lshbase")
-    os.makedirs(base)
-    monkeypatch.setenv("SPARK_GRAFT_LSH_DIR", base)
-    path = os.path.join(base, f"ambient_lsh_planes_v2_uid{os.getuid()}.parquet")
+    writes = []
+    real = registry.similarity.write_plane_table
 
-    # simulate a pre-rename crash artifact: dir exists, no _SUCCESS
-    os.makedirs(path)
-    with open(os.path.join(path, "part-junk.parquet"), "w") as fh:
-        fh.write("garbage")
+    def counting(spark_, path, planes):
+        writes.append(path)
+        real(spark_, path, planes)
 
-    df = _lsh_plane_table(spark)
-    assert df.count() > 0
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    leftovers = [p for p in os.listdir(base) if "__staging__" in p]
-    assert leftovers == []
-    # second call reuses the published table (no rewrite)
-    mtime = os.path.getmtime(os.path.join(path, "_SUCCESS"))
-    _lsh_plane_table(spark).count()
-    assert os.path.getmtime(os.path.join(path, "_SUCCESS")) == mtime
-
-
-def test_plane_table_abandoned_lockfile_does_not_block(
-    spark, tmp_path, monkeypatch
-):
-    """A leftover lock inode from a dead holder never blocks publication:
-    mutual exclusion is flock-based (kernel releases on holder death), not
-    lockfile-existence-based, so there is no staleness heuristic — and no
-    judge-then-remove race — at all. The lock inode is permanent."""
-    import os
-
-    from ambient_sound_analysis_api_spark.registry import _lsh_plane_table
-
-    base = str(tmp_path / "lshstale")
-    os.makedirs(base)
-    monkeypatch.setenv("SPARK_GRAFT_LSH_DIR", base)
-    path = os.path.join(base, f"ambient_lsh_planes_v2_uid{os.getuid()}.parquet")
-    lockfile = f"{path}.lock"
-    with open(lockfile, "w") as fh:  # abandoned lock inode, arbitrarily old
-        fh.write("")
-    os.utime(lockfile, (os.path.getmtime(lockfile) - 3600,) * 2)
-
-    df = _lsh_plane_table(spark)
-    assert df.count() > 0
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    assert [p for p in os.listdir(base) if ".stale." in p] == []
-
-
-def test_plane_table_flock_times_out_under_live_holder(
-    spark, tmp_path, monkeypatch
-):
-    """While another process HOLDS the flock, a second publisher cannot
-    acquire it (LOCK_NB fails) — proving the exclusion is the kernel lock,
-    not file existence. Verified directly on the lock inode."""
-    import fcntl
-    import os
-
-    from ambient_sound_analysis_api_spark.registry import _lsh_plane_table
-
-    base = str(tmp_path / "lshheld")
-    os.makedirs(base)
-    monkeypatch.setenv("SPARK_GRAFT_LSH_DIR", base)
-    path = os.path.join(base, f"ambient_lsh_planes_v2_uid{os.getuid()}.parquet")
-    _lsh_plane_table(spark).count()  # publish once; lock inode now exists
-
-    fd = os.open(f"{path}.lock", os.O_RDWR)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        fd2 = os.open(f"{path}.lock", os.O_RDWR)
-        try:
-            with pytest.raises(OSError):
-                fcntl.flock(fd2, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        finally:
-            os.close(fd2)
-    finally:
-        os.close(fd)
+    monkeypatch.setattr(registry.similarity, "write_plane_table", counting)
+    monkeypatch.setattr(registry, "_LSH_PLANE_PATH", None)
+    first = registry._lsh_plane_table(spark).collect()
+    second = registry._lsh_plane_table(spark).collect()
+    assert len(writes) == 1
+    parent = os.path.realpath(registry._store_parent())
+    assert os.path.realpath(writes[0]).startswith(parent + os.sep)
+    rows = sorted((r["plane_id"], list(r["plane"])) for r in first)
+    assert rows == list(enumerate(registry._lsh_planes()))
+    assert sorted((r["plane_id"], list(r["plane"])) for r in second) == rows
 
 
 def test_repeated_span_stats_semantics(spark):

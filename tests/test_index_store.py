@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ambient_sound_analysis_api_spark.operators import atomic_swap
 from ambient_sound_analysis_api_spark.operators import pq as PQ
 
 
@@ -40,7 +41,7 @@ def test_publish_resolve_roundtrip(spark, tmp_path):
     root = str(tmp_path / "idx")
     emb = _emb(spark)
     v1 = PQ.ivfpq_publish_index(emb, _fit(emb), root, retain=2)
-    got = PQ.ivfpq_resolve_index(spark, root)
+    got = atomic_swap.resolve_version(spark, root)
     assert got is not None
     seq, path = got
     assert seq == 1 and path == v1
@@ -56,7 +57,7 @@ def test_refresh_never_breaks_concurrent_reader(spark, tmp_path):
     root = str(tmp_path / "idx")
     emb1 = _emb(spark, n=30)
     PQ.ivfpq_publish_index(emb1, _fit(emb1), root, retain=2)
-    _, p1 = PQ.ivfpq_resolve_index(spark, root)
+    _, p1 = atomic_swap.resolve_version(spark, root)
     lazy_reader = spark.read.parquet(p1).filter(F.col("vec_id") >= 0)
 
     emb2 = _emb(spark, seed_shift=5, n=50)
@@ -65,7 +66,7 @@ def test_refresh_never_breaks_concurrent_reader(spark, tmp_path):
     # old handle still collects fully — v1's directory is immutable and
     # inside the retain window
     assert lazy_reader.count() == 30
-    seq2, p2 = PQ.ivfpq_resolve_index(spark, root)
+    seq2, p2 = atomic_swap.resolve_version(spark, root)
     assert seq2 == 2 and p2 != p1
     assert len(_ids(spark, p2)) == 50
 
@@ -84,7 +85,7 @@ def test_retention_gc_prunes_old_versions(spark, tmp_path):
     # away while v3 stays resolvable
     assert not os.path.exists(p1)
     assert not os.path.exists(p2)
-    seq, path = PQ.ivfpq_resolve_index(spark, root)
+    seq, path = atomic_swap.resolve_version(spark, root)
     assert seq == 3 and path == p3 and os.path.exists(p3)
     # retain=2 keeps one refresh of grace
     root2 = str(tmp_path / "idx2")
@@ -108,12 +109,12 @@ def test_crashed_writer_is_invisible_then_reclaimed(spark, tmp_path):
     # simulate the crash: version written, manifest never renamed in
     orphan = f"{root}/v-000000001-deadbeef"
     PQ.ivfpq_write_index(emb, books, orphan)
-    seq, path = PQ.ivfpq_resolve_index(spark, root)
+    seq, path = atomic_swap.resolve_version(spark, root)
     assert seq == 1 and "deadbeef" not in path
     # orphan seq (1) <= cutoff after the next publish (2-1=1) → reclaimed
     PQ.ivfpq_publish_index(emb, books, root, retain=1)
     assert not os.path.exists(orphan)
-    seq2, _ = PQ.ivfpq_resolve_index(spark, root)
+    seq2, _ = atomic_swap.resolve_version(spark, root)
     assert seq2 == 2
 
 
@@ -127,7 +128,7 @@ def test_same_sequence_race_retries_to_next(spark, tmp_path, monkeypatch):
     PQ.ivfpq_publish_index(emb, books, root, retain=5)
     # make the next writer believe nothing is published (stale listing,
     # i.e. it raced another writer that landed seq 1 first)
-    real = PQ._list_index_manifests
+    real = atomic_swap._list_index_manifests
     calls = {"n": 0}
 
     def stale_once(spark_, root_):
@@ -136,10 +137,10 @@ def test_same_sequence_race_retries_to_next(spark, tmp_path, monkeypatch):
             return []
         return real(spark_, root_)
 
-    monkeypatch.setattr(PQ, "_list_index_manifests", stale_once)
+    monkeypatch.setattr(atomic_swap, "_list_index_manifests", stale_once)
     PQ.ivfpq_publish_index(emb, books, root, retain=5)
-    monkeypatch.setattr(PQ, "_list_index_manifests", real)
-    seq, path = PQ.ivfpq_resolve_index(spark, root)
+    monkeypatch.setattr(atomic_swap, "_list_index_manifests", real)
+    seq, path = atomic_swap.resolve_version(spark, root)
     assert seq == 2, "raced writer must land on the next sequence"
     assert _ids(spark, path) == list(range(40))
 

@@ -12,6 +12,7 @@ VERDICT #2). Claims under test:
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -91,13 +92,15 @@ def test_compaction_folds_tombstones_out(spark, tmp_path):
     P.ivfpq_delete_ids(gone, root, retain=6)
     before = _serve(spark, root, emb, books)
     P.ivfpq_compact_segments(spark, root, retain=6)
-    _, vpath = P.ivfpq_resolve_index(spark, root)
-    from ambient_sound_analysis_api_spark.operators.retrieval import (
-        _read_tombstones,
+    from ambient_sound_analysis_api_spark.operators.atomic_swap import (
+        _read_small_file, _read_tombstones, resolve_version,
     )
 
+    _, vpath = resolve_version(spark, root)
     assert _read_tombstones(spark, vpath) is None
-    segs = P._segment_membership(spark, vpath)
+    segs = json.loads(_read_small_file(spark, f"{vpath}/segments.json"))[
+        "segments"
+    ]
     assert len(segs) == 1
     live = spark.read.parquet(f"{root}/segs/{segs[0]}")
     assert live.filter(F.col("vec_id").isin(2, 14)).count() == 0

@@ -86,10 +86,14 @@ def test_sample_frames_one_to_many(spark):
     assert 8 not in by_id  # payload shorter than one frame → no rows
 
 
-def test_run_available_now_matches_batch_agg(spark, sf_dir):
+def test_run_available_now_matches_batch_agg(spark, sf_dir, tmp_path, monkeypatch):
     """run_available_now executes the transform on real streaming machinery;
     the final memory-sink table must equal the same aggregation run as a
-    plain batch plan over the same rows."""
+    plain batch plan over the same rows. The staged source directory is
+    gone when it returns, and the memory-sink table still collects."""
+    import glob
+    import tempfile
+
     from ambient_sound_analysis_api_spark.registry import (
         WINDOW_END,
         WINDOW_START,
@@ -109,9 +113,10 @@ def test_run_available_now_matches_batch_agg(spark, sf_dir):
             .select("hydrophone", F.col("w.start").alias("bucket_ts"), "n")
         )
 
-    streamed = sorted(
-        tuple(r) for r in run_available_now(spark, src, agg_stream).collect()
-    )
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    table = run_available_now(spark, src, agg_stream)
+    assert glob.glob(str(tmp_path / "*_src_*")) == []
+    streamed = sorted(tuple(r) for r in table.collect())
     batch = sorted(
         tuple(r)
         for r in src.groupBy(

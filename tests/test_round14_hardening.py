@@ -1,6 +1,6 @@
 """Round-14 hardening: the round-13 ADVICE items that warrant pinning.
 
-- ``_bm25_gc_segments`` must be FAIL-SAFE: an unreadable/malformed
+- ``gc_unreferenced_segments`` must be FAIL-SAFE: an unreadable/malformed
   manifest aborts the pass (no deletion) rather than contributing an
   empty liveness set that lets GC delete segments a live version still
   references.
@@ -18,6 +18,9 @@ import struct
 import pytest
 
 from ambient_sound_analysis_api_spark.operators import retrieval as R
+from ambient_sound_analysis_api_spark.operators.atomic_swap import (
+    gc_unreferenced_segments,
+)
 
 
 def _docs(spark, lo, hi):
@@ -51,12 +54,12 @@ def test_bm25_gc_aborts_on_malformed_manifest(spark, tmp_path):
     blob = open(victim, "rb").read()
     open(victim, "wb").write(blob[: len(blob) // 2])
 
-    R._bm25_gc_segments(spark, root)
+    gc_unreferenced_segments(spark, root)
     assert sorted(os.listdir(segdir)) == before  # nothing deleted
 
     # restore and confirm GC still works normally afterwards
     open(victim, "wb").write(blob)
-    R._bm25_gc_segments(spark, root)
+    gc_unreferenced_segments(spark, root)
     assert sorted(os.listdir(segdir)) == before  # both still live
 
 
@@ -79,7 +82,7 @@ def test_bm25_gc_missing_segments_json_is_nonsegmented(spark, tmp_path):
     open(
         os.path.join(root, "_manifests", "m-999999999.json"), "w"
     ).write(json.dumps(doc))
-    R._bm25_gc_segments(spark, root)
+    gc_unreferenced_segments(spark, root)
     segs = sorted(os.listdir(segdir))
     assert "batch=zzz-orphan" not in segs  # orphan reclaimed
     assert len(segs) == 1  # the published segment survives
