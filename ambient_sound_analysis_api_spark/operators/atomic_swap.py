@@ -1,11 +1,11 @@
 """The one home of the engine's on-disk store protocols.
 
 Every persisted store (the streaming rollup/HLL stores, the streamed
-batch stores, the versioned IVF-PQ and BM25 indexes) commits through a
-filesystem ``rename`` here; the operator modules keep only their
-index-specific writes and scoring. All filesystem calls go through the
-JVM Hadoop ``FileSystem`` API (:func:`_fs_and_path`), so the protocols
-work unchanged on ``file:``/HDFS/GCS URIs. The protocols:
+batch stores, the IVF-PQ, residual IVF-PQ and BM25 indexes) commits
+through a filesystem ``rename`` here; the operator modules keep only
+their index-specific writes and scoring. All filesystem calls go
+through the JVM Hadoop ``FileSystem`` API (:func:`_fs_and_path`), so the
+protocols work unchanged on ``file:``/HDFS/GCS URIs. The protocols:
 
 - **Staging + swap** (:func:`staging_path`, :func:`swap_in`,
   :func:`recover_path`, :func:`read_store`): a crash-safe rewrite of a
@@ -27,23 +27,27 @@ work unchanged on ``file:``/HDFS/GCS URIs. The protocols:
   leaves the old table at ``<path>.__old__.<token>`` and/or the new one
   staged — both fully readable, nothing lost (:func:`recover_path` puts
   the newest complete copy back, and :func:`read_store` runs it).
-- **Batch admit** (:func:`admit_batch`): exactly-once admission of one
-  micro-batch into its own ``<root>/batch=<id>`` directory via a
-  dot-prefixed staging dir and one rename, used by ``streaming/ann.py``,
-  ``streaming/lexical.py`` and ``streaming/takedown.py``. The rename is
-  the commit and the target's existence is the replay gate.
+- **Batch admit** (:func:`admit_batch`, :func:`admitted_batches`):
+  exactly-once admission of one micro-batch into its own
+  ``<root>/batch=<id>`` directory via a dot-prefixed staging dir and one
+  rename, used by ``streaming/ann.py``, ``streaming/lexical.py`` and
+  ``streaming/takedown.py``. The rename is the commit and the target's
+  existence is the replay gate; readers list the committed batches as
+  explicit paths.
 - **Versioned manifest store** (:func:`publish_version`,
   :func:`resolve_version`): immutable ``v-<seq>-<token>`` version
   directories published by an atomic rename of ``_manifests/m-<seq>.json``,
-  with a same-sequence race retry and retention GC. The IVF-PQ and BM25
-  indexes publish through it.
-- **Segmented store** (:func:`publish_segments`,
+  with a same-sequence race retry and retention GC. It is the layer
+  under the segmented store.
+- **Segmented store** (:func:`new_segment`, :func:`publish_segments`,
   :func:`current_segments`, :func:`gc_unreferenced_segments`): versions
   of the manifest store that hold only a ``segments.json`` membership
   list, an optional ``tombstones/`` table and the caller's extra tables;
-  segment data lives under ``<root>/segs`` and is reclaimed once no
-  retained version references it. The IVF-PQ code store and the BM25
-  segmented index share it.
+  segment data lives under ``<root>/segs/seg-<token>`` and is reclaimed
+  once no retained version references it. Every persisted index
+  publishes through it — the raw and residual IVF-PQ code stores and the
+  BM25 postings store; a plain publish is the one-segment,
+  tombstone-free case.
 """
 
 from __future__ import annotations
@@ -180,9 +184,9 @@ def admit_batch(spark: SparkSession, root: str, batch_id: int, write) -> bool:
     output is deleted.
 
     Crash anywhere: before the rename only a staging dir exists (readers,
-    who scan ``batch=*``, never see it, and the replayed batch stages
-    again and commits); after the rename the replayed batch finds
-    ``batch=<id>`` present and skips.
+    who read :func:`admitted_batches`, never see it, and the replayed
+    batch stages again and commits); after the rename the replayed
+    batch finds ``batch=<id>`` present and skips.
 
     Hadoop renames a directory onto an EXISTING directory by moving it
     inside (HDFS semantics, and the local filesystem's copy fallback), so
@@ -194,9 +198,10 @@ def admit_batch(spark: SparkSession, root: str, batch_id: int, write) -> bool:
     fs, dst = _fs_and_path(spark, target)
     if fs.exists(dst):
         return False
-    # dot-prefixed staging: partition discovery ignores hidden dirs, so a
-    # crashed (never-renamed) staging can NEVER pollute the batch=*
-    # partition column or leak rows to readers — a sibling
+    # dot-prefixed staging: neither admitted_batches nor partition
+    # discovery lists hidden dirs, so a crashed (never-renamed) staging
+    # can NEVER pollute the batch partition column or leak rows to
+    # readers — a sibling
     # "batch=<id>.__staging__" name would be parsed as a partition VALUE
     name = f".staging-batch-{batch_id}-{uuid.uuid4().hex[:12]}"
     write(f"{root}/{name}")
@@ -209,6 +214,24 @@ def admit_batch(spark: SparkSession, root: str, batch_id: int, write) -> bool:
             return True
     fs.delete(src, True)
     return False
+
+
+def admitted_batches(spark: SparkSession, root: str) -> "list[str]":
+    """The read half of :func:`admit_batch`: the committed
+    ``<root>/batch=<id>`` directories in ascending id order (``[]`` when
+    ``root`` does not exist). Dot-prefixed staging dirs are never
+    listed. Readers pass these explicit paths to ``spark.read`` instead
+    of a ``batch=*`` glob, for which Spark logs a
+    ``FileNotFoundException`` stack trace on every read."""
+    fs, p = _fs_and_path(spark, root)
+    if not fs.exists(p):
+        return []
+    ids = []
+    for st in fs.listStatus(p):
+        m = re.fullmatch(r"batch=(\d+)", st.getPath().getName())
+        if m and st.isDirectory():
+            ids.append(int(m.group(1)))
+    return [f"{root}/batch={i}" for i in sorted(ids)]
 
 
 # ---------------------------------------------------------------------------
@@ -288,9 +311,9 @@ def publish_version(
     """Write a NEW immutable version under ``root`` and atomically
     publish it via a manifest pointer: ``write_fn`` materializes the
     version into the directory it is handed, then the pointer flips.
-    Any index family — IVF-PQ codes, the lexical BM25 postings store —
-    publishes through this one code path so the store contract tests
-    cover them all.
+    Every index family publishes its segmented versions
+    (:func:`publish_segments`) through this one code path, so the store
+    contract tests cover them all.
 
     - **writers never break readers**: the new version lands in its own
       ``v-<seq>-<token>`` directory; publication is ONE atomic rename of
@@ -378,6 +401,13 @@ def publish_version(
 
 # ---------------------------------------------------------------------------
 # segmented store: membership versions + tombstone deletion
+
+
+def new_segment(root: str) -> "tuple[str, str]":
+    """``(name, path)`` of a fresh segment directory under ``root/segs``;
+    the name is what a membership list (``segments.json``) records."""
+    name = f"seg-{uuid.uuid4().hex[:12]}"
+    return name, f"{root}/segs/{name}"
 
 
 def gc_unreferenced_segments(spark, root: str) -> None:

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalars import decimal_mean
-from .atomic_swap import current_segments, publish_segments, publish_version
+from .atomic_swap import current_segments, new_segment, publish_segments
 from .caching import tracked_persist
 
 
@@ -917,6 +917,8 @@ def ivfpq_write_index(
       ``ReadSchema`` has no vector column).
 
     One shuffle (repartition by cell) sizes one output file per cell.
+    ``path`` must not exist: every caller hands it a fresh segment
+    directory, so the write refuses to replace a table.
     """
     codes = emb.select(
         F.col(cell_col).alias("cell"),
@@ -926,91 +928,9 @@ def ivfpq_write_index(
             for s, c in enumerate(_code_cols(codebooks, vec_col))
         ],
     )
-    codes.repartition("cell").write.mode("overwrite").partitionBy(
+    codes.repartition("cell").write.mode("errorifexists").partitionBy(
         "cell"
     ).parquet(path)
-
-
-def ivfpq_persisted_topk(
-    spark,
-    index_path: str,
-    emb: DataFrame,
-    codebooks: list[list[list[float]]],
-    query: list[float],
-    query_id: int,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-) -> DataFrame:
-    """Serve top-k from the PERSISTED cell-partitioned code index
-    (:func:`ivfpq_write_index`): rank cells against the corpus centroids,
-    collect the nprobe probe cells (a model-sized driver fetch — nprobe
-    scalars), then read ONLY those partitions of the code table and
-    ADC-score them. The scan is the whole query cost: nprobe/nlist of
-    the directories × 4 bytes per vector, finished by a
-    ``TakeOrderedAndProject`` top-k."""
-    from .similarity import ivf_probe_cells
-
-    probes = [
-        r["cell"]
-        for r in ivf_probe_cells(
-            emb, query_id, nprobe, id_col=id_col, vec_col=vec_col,
-            cell_col=cell_col,
-        )
-        .select("cell")
-        .collect()
-    ]
-    scan = (
-        spark.read.parquet(index_path)
-        .filter(F.col("cell").isin(probes))
-        .filter(F.col(id_col) != query_id)
-    )
-    dist = _adc_dist(codebooks, query)
-    return (
-        scan.withColumn("adc_dist", F.round(dist, 6))
-        .orderBy("adc_dist", id_col)
-        .limit(k)
-        .select(id_col, "adc_dist")
-    )
-
-
-# ---------------------------------------------------------------------------
-# multi-process index store: immutable versions + manifest-pointer publish
-# (the protocol is ``atomic_swap.publish_version``/``resolve_version``)
-
-
-def ivfpq_publish_index(
-    emb: DataFrame,
-    codebooks: list[list[list[float]]],
-    root: str,
-    retain: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    fingerprint: "str | None" = None,
-) -> str:
-    """Write a NEW immutable version of the cell-partitioned code index
-    under ``root`` (``ivfpq_write_index`` does the cell-partitioned
-    write) and atomically publish it via a manifest pointer — the
-    multi-process refresh contract the in-process
-    :func:`ivfpq_write_index` path cannot give (round-10 VERDICT #4).
-    The publish, race handling and retention GC are
-    ``atomic_swap.publish_version``; readers resolve the current version
-    with ``atomic_swap.resolve_version``. Returns the published version
-    path.
-    """
-    return publish_version(
-        emb.sparkSession,
-        root,
-        lambda vpath: ivfpq_write_index(
-            emb, codebooks, vpath,
-            id_col=id_col, vec_col=vec_col, cell_col=cell_col,
-        ),
-        retain=retain,
-        fingerprint=fingerprint,
-    )
 
 
 def ivfpq_incremental_rerank_topk(
@@ -1090,141 +1010,20 @@ def ivfpq_incremental_rerank_topk(
     )
 
 
-def ivfpq_write_residual_index(
-    emb: DataFrame,
-    path: str,
-    m: int = 4,
-    k: int = 8,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    codebooks: "list[list[list[float]]] | None" = None,
-) -> "list[list[list[float]]]":
-    """Materialize the RESIDUAL-encoded serving index: cell-partitioned
-    parquet of residual PQ codes plus the coarse centroid table the
-    residuals were taken against — self-contained, so a serving tier
-    needs only this directory and the (model-sized) codebooks. Same
-    storage-layer savings as :func:`ivfpq_write_index` (4-byte codes,
-    cell-directory pruning) at residual encoding's lower distortion
-    (committed audits: residual beats raw at every SF at identical code
-    size). Returns the fitted (or passed-through) codebooks."""
-    from .caching import tracked_persist
-    from .similarity import ivf_cell_centroids
-
-    # persisted: cents is read by the residual join AND written out
-    # below; res feeds the (iterative) fit and the codes projection —
-    # without the caches the centroid aggregation + broadcast join
-    # chain re-executed once per consumer
-    cents = tracked_persist(
-        ivf_cell_centroids(emb, cell_col=cell_col, vec_col=vec_col)
-    )
-    res = tracked_persist(
-        residual_vectors(
-            emb, cents, id_col=id_col, vec_col=vec_col, cell_col=cell_col
-        )
-    )
-    if codebooks is None:
-        codebooks = pq_fit(
-            res.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-            ),
-            m=m, k=k, n_iter=n_iter,
-        )
-    codes = res.select(
-        F.col(cell_col).alias("cell"),
-        F.col(id_col),
-        *[
-            c.alias(f"code_{s}")
-            for s, c in enumerate(_code_cols(codebooks, vec_col))
-        ],
-    )
-    codes.repartition("cell").write.mode("errorifexists").partitionBy(
-        "cell"
-    ).parquet(f"{path}/codes")
-    cents.write.mode("errorifexists").parquet(f"{path}/centroids")
-    return codebooks
-
-
-def ivfpq_residual_persisted_topk(
-    spark,
-    index_path: str,
-    codebooks: list[list[list[float]]],
-    query: list[float],
-    query_id: int,
-    topk: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Serve residual-IVF-PQ top-k from the PERSISTED index: the coarse
-    probe ranks the stored centroid table against the query driver-side
-    (nlist rows — model-sized; the same sequential IEEE fold as the
-    in-process probe, ties to the lowest cell), the cell-keyed ADC LUT
-    ships as a literal map (nprobe × m × k doubles), and the scan reads
-    ONLY the probed cells' code partitions. Value-identical to
-    :func:`ivfpq_residual_topk` over the same model — the registry twin
-    shares its oracle."""
-    cent_rows = spark.read.parquet(f"{index_path}/centroids").collect()
-    cmap = {
-        int(r["cell"]): [float(v) for v in r["centroid"]]
-        for r in cent_rows
-    }
-    dists = []
-    for c, cv in cmap.items():
-        d = 0.0
-        for a, b in zip(query, cv):
-            d = d + (float(a) - b) * (float(a) - b)
-        dists.append((d, c))
-    probed = [c for _d, c in sorted(dists)[:nprobe]]
-    m, kk = len(codebooks), len(codebooks[0])
-    lut_entries = []
-    for c in probed:
-        qres = [float(a) - b for a, b in zip(query, cmap[c])]
-        flat = []
-        for s, cb in enumerate(codebooks):
-            d_sub = len(cb[0])
-            qs = qres[s * d_sub : (s + 1) * d_sub]
-            for code_centroid in cb:
-                d = 0.0
-                for a, b in zip(qs, code_centroid):
-                    d = d + (a - b) * (a - b)
-                flat.append(d)
-        lut_entries += [F.lit(c), F.lit([float(v) for v in flat])]
-    lutmap = F.create_map(*lut_entries)
-    scan = (
-        spark.read.parquet(f"{index_path}/codes")
-        .filter(F.col("cell").isin(probed))
-        .filter(F.col(id_col) != query_id)
-    )
-    lut_arr = F.element_at(lutmap, F.col("cell"))
-    terms = [
-        F.element_at(lut_arr, F.lit(s * kk) + F.col(f"code_{s}") + 1)
-        for s in range(m)
-    ]
-    dist = terms[0]
-    for t in terms[1:]:
-        dist = dist + t
-    return (
-        scan.withColumn("adc_dist", F.round(dist, 6))
-        .orderBy("adc_dist", id_col)
-        .limit(topk)
-        .select(id_col, "adc_dist")
-    )
-
-
 # ---------------------------------------------------------------------------
-# segmented code store: membership versions + tombstone deletion
+# segmented code store: every persisted ANN index
 #
-# The BM25 segmented store's layout applied to ANN codes (round-13
-# VERDICT #2): immutable code segments under ``root/segs/<seg>/`` (each a
-# cell-partitioned table in the ivfpq_write_index shape), versions that
-# are just a membership list plus an optional tombstone table — so the
-# store finally supports the full lifecycle publish → admit* → DELETE →
-# compact without ever re-encoding a surviving vector. The membership
+# Each persisted code index (raw and residual) is a segmented store:
+# immutable code segments under ``root/segs/<seg>/`` (each a
+# cell-partitioned table written by ivfpq_write_index), versions that are
+# just a membership list plus an optional tombstone table and any
+# version tables (the residual index's centroids) — so the store
+# supports the full lifecycle publish → admit* → DELETE → compact
+# without ever re-encoding a surviving vector. A plain publish is the
+# one-segment, tombstone-free case. Segment naming, the membership
 # publish, current-version read and segment GC are
-# ``atomic_swap.publish_segments``/``current_segments``; the streamed
-# batch admit is ``atomic_swap.admit_batch``.
+# ``atomic_swap.new_segment``/``publish_segments``/``current_segments``;
+# the streamed batch admit is ``atomic_swap.admit_batch``.
 
 
 def _read_code_segments(spark, root: str, segs: "list[str]") -> DataFrame:
@@ -1252,17 +1051,15 @@ def ivfpq_publish_segmented(
     """Base publish of the SEGMENTED code store: encode the whole corpus
     once into a single cell-partitioned code segment (the
     :func:`ivfpq_write_index` layout under ``root/segs/<seg>``) and
-    publish the one-segment membership."""
-    import uuid
-
-    spark = emb.sparkSession
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
+    publish the one-segment membership. Returns the published version
+    path."""
+    seg, seg_path = new_segment(root)
     ivfpq_write_index(
-        emb, codebooks, f"{root}/segs/{seg}",
+        emb, codebooks, seg_path,
         id_col=id_col, vec_col=vec_col, cell_col=cell_col,
     )
     return publish_segments(
-        spark, root, [seg], retain=retain, fingerprint=fingerprint
+        emb.sparkSession, root, [seg], retain=retain, fingerprint=fingerprint
     )
 
 
@@ -1289,6 +1086,37 @@ def ivfpq_delete_ids(
     )
 
 
+def _code_topk(
+    spark,
+    root: str,
+    segs: "list[str]",
+    tomb: "DataFrame | None",
+    probes: list,
+    query_id: int,
+    dist,
+    k: int,
+    id_col: str,
+) -> DataFrame:
+    """ADC top-k over the ``probes`` cells of the live code segments:
+    the cell predicate prunes each segment's ``cell=`` directories, the
+    query id drops, tombstoned ids drop via one broadcast anti-join, and
+    ``dist`` (an ADC column over ``code_*``) ranks the survivors with a
+    ``TakeOrderedAndProject`` on 6dp distance and id."""
+    scan = (
+        _read_code_segments(spark, root, segs)
+        .filter(F.col("cell").isin(probes))
+        .filter(F.col(id_col) != query_id)
+    )
+    if tomb is not None:
+        scan = scan.join(F.broadcast(tomb), id_col, "left_anti")
+    return (
+        scan.withColumn("adc_dist", F.round(dist, 6))
+        .orderBy("adc_dist", id_col)
+        .limit(k)
+        .select(id_col, "adc_dist")
+    )
+
+
 def ivfpq_segmented_topk(
     spark,
     root: str,
@@ -1302,11 +1130,15 @@ def ivfpq_segmented_topk(
     vec_col: str = "embedding",
     cell_col: str = "label",
 ) -> DataFrame:
-    """Serve top-k from the segmented code store: the same coarse probe +
-    partition-pruned ADC scan as :func:`ivfpq_persisted_topk`, except the
-    scan multi-paths every live segment (each segment's ``cell=`` layout
-    prunes independently) and deleted ids drop via one broadcast
-    anti-join against the version's tombstone table."""
+    """Serve top-k from the current version of the segmented code store:
+    rank cells against the corpus centroids, collect the nprobe probe
+    cells (a model-sized driver fetch — nprobe scalars), then read ONLY
+    those partitions of every live segment and ADC-score them. The scan
+    is the whole query cost: nprobe/nlist of each segment's directories
+    × 4 bytes per vector, never the vector column (plan-tested:
+    ``PartitionFilters`` carries the cell predicate, ``ReadSchema`` has
+    no vector column). Deleted ids drop via one broadcast anti-join
+    against the version's tombstone table."""
     from .similarity import ivf_probe_cells
 
     _, segs, tomb = current_segments(spark, root, "ivfpq_segmented_topk")
@@ -1319,19 +1151,9 @@ def ivfpq_segmented_topk(
         .select("cell")
         .collect()
     ]
-    scan = (
-        _read_code_segments(spark, root, segs)
-        .filter(F.col("cell").isin(probes))
-        .filter(F.col(id_col) != query_id)
-    )
-    if tomb is not None:
-        scan = scan.join(F.broadcast(tomb), id_col, "left_anti")
-    dist = _adc_dist(codebooks, query)
-    return (
-        scan.withColumn("adc_dist", F.round(dist, 6))
-        .orderBy("adc_dist", id_col)
-        .limit(k)
-        .select(id_col, "adc_dist")
+    return _code_topk(
+        spark, root, segs, tomb, probes, query_id,
+        _adc_dist(codebooks, query), k, id_col,
     )
 
 
@@ -1347,19 +1169,133 @@ def ivfpq_compact_segments(
     into one cell-partitioned segment, folding tombstoned ids out
     physically, and publish the clean single-segment membership with no
     tombstone table."""
-    import uuid
-
     _, segs, tomb = current_segments(spark, root, "ivfpq_compact_segments")
     src = _read_code_segments(spark, root, segs)
     if tomb is not None:
         src = src.join(F.broadcast(tomb), id_col, "left_anti")
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
+    seg, seg_path = new_segment(root)
     (
         src.repartition("cell")
         .write.mode("errorifexists")
         .partitionBy("cell")
-        .parquet(f"{root}/segs/{seg}")
+        .parquet(seg_path)
     )
     return publish_segments(
         spark, root, [seg], retain=retain, fingerprint=fingerprint
+    )
+
+
+def ivfpq_publish_residual(
+    emb: DataFrame,
+    root: str,
+    m: int = 4,
+    k: int = 8,
+    n_iter: int = 2,
+    retain: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    cell_col: str = "label",
+    fingerprint: "str | None" = None,
+) -> "tuple[str, list[list[list[float]]]]":
+    """Publish the RESIDUAL-encoded serving index as a one-segment store:
+    the segment holds the residual PQ codes in the
+    :func:`ivfpq_write_index` layout, and the version holds the coarse
+    centroid table the residuals were taken against — self-contained,
+    so a serving tier needs only this store and the (model-sized)
+    codebooks. Same storage-layer savings as the raw-coded store
+    (4-byte codes, cell-directory pruning) at residual encoding's lower
+    distortion (committed audits: residual beats raw at every SF at
+    identical code size). Returns ``(version path, fitted codebooks)``."""
+    from .similarity import ivf_cell_centroids
+
+    # persisted: cents is read by the residual join AND written out as
+    # the version table; res feeds the (iterative) fit and the codes
+    # projection — without the caches the centroid aggregation +
+    # broadcast join chain re-executed once per consumer
+    cents = tracked_persist(
+        ivf_cell_centroids(emb, cell_col=cell_col, vec_col=vec_col)
+    )
+    res = tracked_persist(
+        residual_vectors(
+            emb, cents, id_col=id_col, vec_col=vec_col, cell_col=cell_col
+        )
+    )
+    codebooks = pq_fit(
+        res.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        ),
+        m=m, k=k, n_iter=n_iter,
+    )
+    seg, seg_path = new_segment(root)
+    ivfpq_write_index(
+        res, codebooks, seg_path,
+        id_col=id_col, vec_col=vec_col, cell_col=cell_col,
+    )
+    vpath = publish_segments(
+        emb.sparkSession, root, [seg], retain=retain, fingerprint=fingerprint,
+        write_tables=lambda v: cents.write.mode("errorifexists").parquet(
+            f"{v}/centroids"
+        ),
+    )
+    return vpath, codebooks
+
+
+def ivfpq_residual_persisted_topk(
+    spark,
+    root: str,
+    codebooks: list[list[list[float]]],
+    query: list[float],
+    query_id: int,
+    topk: int = 10,
+    nprobe: int = 2,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Serve residual-IVF-PQ top-k from the current version of the
+    residual store (:func:`ivfpq_publish_residual`): the coarse probe
+    ranks the version's centroid table against the query driver-side
+    (nlist rows — model-sized; the same sequential IEEE fold as the
+    in-process probe, ties to the lowest cell), the cell-keyed ADC LUT
+    ships as a literal map (nprobe × m × k doubles), and the scan reads
+    ONLY the probed cells' code partitions. Value-identical to
+    :func:`ivfpq_residual_topk` over the same model — the registry twin
+    shares its oracle."""
+    vpath, segs, tomb = current_segments(
+        spark, root, "ivfpq_residual_persisted_topk"
+    )
+    cent_rows = spark.read.parquet(f"{vpath}/centroids").collect()
+    cmap = {
+        int(r["cell"]): [float(v) for v in r["centroid"]]
+        for r in cent_rows
+    }
+    dists = []
+    for c, cv in cmap.items():
+        d = 0.0
+        for a, b in zip(query, cv):
+            d = d + (float(a) - b) * (float(a) - b)
+        dists.append((d, c))
+    probed = [c for _d, c in sorted(dists)[:nprobe]]
+    m, kk = len(codebooks), len(codebooks[0])
+    lut_entries = []
+    for c in probed:
+        qres = [float(a) - b for a, b in zip(query, cmap[c])]
+        flat = []
+        for s, cb in enumerate(codebooks):
+            d_sub = len(cb[0])
+            qs = qres[s * d_sub : (s + 1) * d_sub]
+            for code_centroid in cb:
+                d = 0.0
+                for a, b in zip(qs, code_centroid):
+                    d = d + (a - b) * (a - b)
+                flat.append(d)
+        lut_entries += [F.lit(c), F.lit([float(v) for v in flat])]
+    lut_arr = F.element_at(F.create_map(*lut_entries), F.col("cell"))
+    terms = [
+        F.element_at(lut_arr, F.lit(s * kk) + F.col(f"code_{s}") + 1)
+        for s in range(m)
+    ]
+    dist = terms[0]
+    for t in terms[1:]:
+        dist = dist + t
+    return _code_topk(
+        spark, root, segs, tomb, probed, query_id, dist, topk, id_col
     )

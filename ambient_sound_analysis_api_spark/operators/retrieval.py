@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import letter_tokens
 from .atomic_swap import (
-    current_segments, publish_segments, publish_version, resolve_version,
+    current_segments, new_segment, publish_segments, resolve_version,
 )
 
 BM25_K1 = 1.2
@@ -95,7 +95,7 @@ def _bm25_score_topk(
     """Shared BM25 scoring tail over prepared inputs — ``tf`` (doc_id,
     term, tf) already filtered to the query terms, ``df_tbl`` (term, df),
     ``dl`` (doc_id, dl), ``stats`` (1 row: n_docs, sum_dl). One
-    arithmetic for the recompute, persisted-index and segmented-index
+    arithmetic for the recompute, segmented-store and streamed-store
     paths, so they are value-equal by construction (the hash-checked
     twin contract). Determinism: 6dp-rounded ``ln`` idf, 6dp-rounded
     per-term scores summed in DECIMAL, fixed-point rank key with doc_id
@@ -537,172 +537,25 @@ def bm25_rm3_topk(
     return bm25_topk(docs, terms, k=k, k1=k1, b=b)
 
 
-def bm25_write_index(docs: DataFrame, path: str) -> None:
-    """Materialize the lexical serving index: the post-tokenize artifacts
-    ``bm25_topk`` rebuilds per call, written once (round-11 VERDICT #7 —
-    the ``ivfpq_write_index`` pattern applied to sparse retrieval).
-
-    Four tables under ``path``:
-
-    - ``postings/`` — (term, doc_id, tf), RANGE-partitioned on term and
-      sorted within partitions, so every file carries a tight term
-      min/max and a query's ``term IN (...)`` predicate skips all but
-      the matching files at the parquet footer level (the lexical
-      equivalent of cell-directory pruning; term-value directories
-      would mint a directory per vocabulary entry);
-    - ``termstats/`` — (term, df), vocabulary-sized, same layout;
-    - ``doclens/`` — (doc_id, dl);
-    - ``stats/`` — ONE row (n_docs, sum_dl).
-
-    The corpus tokenize runs HERE, once; serving never touches the text
-    column again.
-    """
-    tf = term_frequencies(docs)
-    (
-        tf.repartitionByRange(8, "term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("errorifexists")
-        .parquet(f"{path}/postings")
-    )
-    (
-        tf.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .repartitionByRange(4, "term")
-        .sortWithinPartitions("term")
-        .write.mode("errorifexists")
-        .parquet(f"{path}/termstats")
-    )
-    dl = docs.select(
-        "doc_id", F.size(letter_tokens(F.col("text"))).alias("dl")
-    )
-    dl.write.mode("errorifexists").parquet(f"{path}/doclens")
-    dl.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
-    ).write.mode("errorifexists").parquet(f"{path}/stats")
-
-
-def bm25_publish_index(
-    docs: DataFrame,
-    root: str,
-    retain: int = 2,
-    fingerprint: "str | None" = None,
-) -> str:
-    """Publish a new immutable version of the BM25 index under ``root``
-    via the shared manifest-pointer store (``atomic_swap.publish_version``
-    — atomic rename, concurrent-writer total order, retention GC).
-    Returns the published version path."""
-    return publish_version(
-        docs.sparkSession,
-        root,
-        lambda vpath: bm25_write_index(docs, vpath),
-        retain=retain,
-        fingerprint=fingerprint,
-    )
-
-
-def bm25_persisted_topk(
-    spark,
-    index_path: str,
-    query_terms: list[str],
-    k: int = 20,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
-    """BM25 top-k served from the PERSISTED index: the plan scans the
-    postings/termstats parquet (term predicate pushed to the scan — the
-    range-sorted files skip at the footer) plus the doclens table and
-    the 1-row stats broadcast; the corpus text column is never read and
-    nothing re-tokenizes. Scoring arithmetic is textually identical to
-    :func:`bm25_topk`, so the two paths are value-equal (hash-checked
-    by the registry twin) — recompute for ad-hoc audits, this for the
-    serving tier.
-    """
-    terms = [t.lower() for t in query_terms]
-    tf = spark.read.parquet(f"{index_path}/postings").filter(
-        F.col("term").isin(terms)
-    )
-    df_tbl = spark.read.parquet(f"{index_path}/termstats").filter(
-        F.col("term").isin(terms)
-    )
-    dl = spark.read.parquet(f"{index_path}/doclens")
-    stats = spark.read.parquet(f"{index_path}/stats")
-    return _bm25_score_topk(tf, df_tbl, dl, stats, k=k, k1=k1, b=b)
-
-
-def rm3_persisted_expansion_terms(
-    spark,
-    index_path: str,
-    seed_terms: list[str],
-    fb_k: int = 10,
-    n_expand: int = 3,
-    min_len: int = 4,
-) -> list[str]:
-    """RM3 expansion selection from the PERSISTED index: the feedback
-    docs' content-term counts are Σ tf over their postings rows — the
-    identical number :func:`rm3_expansion_terms` gets by re-tokenizing
-    the feedback documents, read instead from the index (token counts
-    ARE what postings store). Zero text reads; the feedback semi-join is
-    a ``fb_k``-row broadcast against the postings scan."""
-    from ..functions.text import STOPWORDS
-
-    seed = [t.lower() for t in seed_terms]
-    fb_ids = bm25_persisted_topk(
-        spark, index_path, seed, k=fb_k
-    ).select("doc_id")
-    excluded = set(seed) | set(STOPWORDS)
-    counts = (
-        spark.read.parquet(f"{index_path}/postings")
-        .join(F.broadcast(fb_ids), "doc_id", "left_semi")
-        .filter(F.length("term") >= min_len)
-        .filter(~F.col("term").isin(sorted(excluded)))
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("term"))
-        .limit(n_expand)
-    )
-    return [r.term for r in counts.collect()]
-
-
-def bm25_rm3_persisted_topk(
-    spark,
-    index_path: str,
-    seed_terms: list[str],
-    k: int = 20,
-    fb_k: int = 10,
-    n_expand: int = 3,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
-    """Two-pass RM3 retrieval served ENTIRELY from the persisted index:
-    seed pass, feedback-term selection, and expanded pass all read
-    postings/termstats/doclens/stats — the corpus text column is never
-    touched (vs :func:`bm25_rm3_topk`, which tokenizes twice). Value-
-    equal to the recompute path by construction; the registry twin
-    hash-checks it against the same oracle."""
-    expansion = rm3_persisted_expansion_terms(
-        spark, index_path, seed_terms, fb_k=fb_k, n_expand=n_expand
-    )
-    terms = [t.lower() for t in seed_terms] + expansion
-    return bm25_persisted_topk(spark, index_path, terms, k=k, k1=k1, b=b)
-
 # ---------------------------------------------------------------------------
-# segmented lexical index: incremental admission without corpus re-tokenize
+# segmented lexical index: the persisted BM25 store
 #
-# ``bm25_publish_index`` rebuilds the whole index per version — a growing
-# corpus re-tokenizes everything on every refresh (round-12 VERDICT #3).
-# The segmented store is the Lucene-shaped fix: postings and doclens live
-# in IMMUTABLE SEGMENTS under ``root/segs/`` (one per admitted batch; the
-# tokenize cost of an admit is O(delta), never O(corpus)); each published
-# version is just a ``segments.json`` membership list plus the
-# vocabulary-sized merged termstats and the 1-row merged stats — both
-# algebraic sums of per-segment partials (the ``daily_partials`` /
-# ``merge_partials_monthly`` pattern from operators/aggregations.py).
+# Every persisted BM25 index is a segmented store, the Lucene shape:
+# postings and doclens live in IMMUTABLE SEGMENTS under ``root/segs/``
+# (one per publish or admitted batch; the tokenize cost of an admit is
+# O(delta), never O(corpus)); each published version is just a
+# ``segments.json`` membership list plus the vocabulary-sized merged
+# termstats and the 1-row merged stats — both algebraic sums of
+# per-segment partials (the ``daily_partials`` /
+# ``merge_partials_monthly`` pattern from operators/aggregations.py). A
+# whole-corpus publish is the one-segment, tombstone-free case.
 # Publication rides the SAME segmented manifest-pointer store as the
 # IVF-PQ code store (``atomic_swap.publish_segments`` over
 # ``publish_version``), so the atomicity/race/retention contract tests
 # cover it too; the streamed batch admit is ``atomic_swap.admit_batch``.
-# Serving multi-path-reads every live segment's postings in ONE scan
-# (term predicate still pushed to each range-sorted file's footer).
+# Serving resolves the current version once and multi-path-reads every
+# live segment's postings in ONE scan (term predicate still pushed to
+# each range-sorted file's footer).
 #
 # Hash-equality with a full rebuild holds by algebra: with append-only
 # disjoint doc_ids, ∪ segment tf == full-corpus tf, Σ segment df == full
@@ -768,16 +621,14 @@ def bm25_publish_segmented(
     """Base publish of the segmented store: one segment holding the whole
     starting corpus; the version's merged termstats/stats ARE the
     segment's partials. Returns the published version path."""
-    import uuid
-
     spark = docs.sparkSession
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
-    bm25_write_segment(docs, f"{root}/segs/{seg}")
+    seg, seg_path = new_segment(root)
+    bm25_write_segment(docs, seg_path)
     return publish_segments(
         spark, root, [seg], retain=retain, fingerprint=fingerprint,
         write_tables=_write_merged_stats(
-            spark.read.parquet(f"{root}/segs/{seg}/termstats"),
-            spark.read.parquet(f"{root}/segs/{seg}/stats"),
+            spark.read.parquet(f"{seg_path}/termstats"),
+            spark.read.parquet(f"{seg_path}/stats"),
         ),
     )
 
@@ -801,8 +652,6 @@ def bm25_admit_delta(
     single-writer admits (concurrent VERSION writers stay safe via the
     manifest total order, but a concurrent admit's not-yet-published
     segment is invisible to the GC's liveness scan)."""
-    import uuid
-
     spark = delta_docs.sparkSession
     if resolve_version(spark, root) is None:
         return bm25_publish_segmented(
@@ -811,17 +660,17 @@ def bm25_admit_delta(
     vpath, seg_names, tomb = current_segments(
         spark, root, "bm25_admit_delta"
     )
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
-    bm25_write_segment(delta_docs, f"{root}/segs/{seg}")
+    seg, seg_path = new_segment(root)
+    bm25_write_segment(delta_docs, seg_path)
     merged_ts = (
         spark.read.parquet(f"{vpath}/termstats")
-        .unionByName(spark.read.parquet(f"{root}/segs/{seg}/termstats"))
+        .unionByName(spark.read.parquet(f"{seg_path}/termstats"))
         .groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
     )
     merged_st = (
         spark.read.parquet(f"{vpath}/stats")
-        .unionByName(spark.read.parquet(f"{root}/segs/{seg}/stats"))
+        .unionByName(spark.read.parquet(f"{seg_path}/stats"))
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),
@@ -915,6 +764,28 @@ def bm25_delete_docs(
     )
 
 
+def _bm25_version_tables(spark, root: str, version):
+    """``(postings, doclens, termstats, stats)`` of one resolved version
+    ``(vpath, segs, tombstones)`` of the segmented store (as
+    :func:`~.atomic_swap.current_segments` returns it): one multi-path
+    scan of every live segment's postings and one of its doclens, with
+    tombstoned docs anti-joined (takedown-sized broadcast), plus the
+    version's merged termstats and 1-row stats. df/avgdl/N need no
+    read-time correction — a delete publish already adjusted them."""
+    vpath, segs, tomb = version
+    tf = spark.read.parquet(*[f"{root}/segs/{s}/postings" for s in segs])
+    dl = spark.read.parquet(*[f"{root}/segs/{s}/doclens" for s in segs])
+    if tomb is not None:
+        tf = tf.join(F.broadcast(tomb), "doc_id", "left_anti")
+        dl = dl.join(F.broadcast(tomb), "doc_id", "left_anti")
+    return (
+        tf,
+        dl,
+        spark.read.parquet(f"{vpath}/termstats"),
+        spark.read.parquet(f"{vpath}/stats"),
+    )
+
+
 def bm25_segmented_topk(
     spark,
     root: str,
@@ -922,31 +793,91 @@ def bm25_segmented_topk(
     k: int = 20,
     k1: float = BM25_K1,
     b: float = BM25_B,
+    version=None,
 ) -> DataFrame:
-    """BM25 top-k served from the SEGMENTED store's current version: one
-    multi-path postings scan over every live segment (term predicate
-    pushed to each range-sorted file), one multi-path doclens scan, the
-    merged termstats filtered to the query terms, and the 1-row merged
-    stats — the corpus text column is never read and nothing
-    re-tokenizes, no matter how many admits built the index. Scoring is
-    the shared :func:`_bm25_score_topk` arithmetic, so the result is
-    hash-equal to a full rebuild (registry twin pins it)."""
-    vpath, segs, tomb = current_segments(spark, root, "bm25_segmented_topk")
+    """BM25 top-k served from the SEGMENTED store under ``root``: the
+    postings scan of every live segment (term predicate pushed to each
+    range-sorted file's footer), the doclens scan, the merged termstats
+    filtered to the query terms, and the 1-row merged stats — the corpus
+    text column is never read and nothing re-tokenizes, no matter how
+    many admits built the index. Reads ``version`` (a resolved
+    ``current_segments`` tuple) when given, else the current version.
+    Scoring is the shared :func:`_bm25_score_topk` arithmetic, so the
+    result is hash-equal to a full rebuild (registry twins pin it)."""
+    if version is None:
+        version = current_segments(spark, root, "bm25_segmented_topk")
+    tf, dl, termstats, stats = _bm25_version_tables(spark, root, version)
     terms = [t.lower() for t in query_terms]
-    tf = spark.read.parquet(
-        *[f"{root}/segs/{s}/postings" for s in segs]
-    ).filter(F.col("term").isin(terms))
-    dl = spark.read.parquet(*[f"{root}/segs/{s}/doclens" for s in segs])
-    if tomb is not None:
-        # takedown-sized broadcast anti-join; df/avgdl/N need no
-        # correction — the delete publish already adjusted them
-        tf = tf.join(F.broadcast(tomb), "doc_id", "left_anti")
-        dl = dl.join(F.broadcast(tomb), "doc_id", "left_anti")
-    df_tbl = spark.read.parquet(f"{vpath}/termstats").filter(
-        F.col("term").isin(terms)
+    return _bm25_score_topk(
+        tf.filter(F.col("term").isin(terms)),
+        termstats.filter(F.col("term").isin(terms)),
+        dl, stats, k=k, k1=k1, b=b,
     )
-    stats = spark.read.parquet(f"{vpath}/stats")
-    return _bm25_score_topk(tf, df_tbl, dl, stats, k=k, k1=k1, b=b)
+
+
+def rm3_persisted_expansion_terms(
+    spark,
+    root: str,
+    version,
+    seed_terms: list[str],
+    fb_k: int = 10,
+    n_expand: int = 3,
+    min_len: int = 4,
+) -> list[str]:
+    """RM3 expansion selection from ``version`` (a resolved
+    ``current_segments`` tuple) of the segmented store under ``root``:
+    the feedback docs' content-term counts are Σ tf over their postings
+    rows — the identical number :func:`rm3_expansion_terms` gets by
+    re-tokenizing the feedback documents, read instead from the index
+    (token counts ARE what postings store). Zero text reads; the
+    feedback semi-join is a ``fb_k``-row broadcast against the postings
+    scan."""
+    from ..functions.text import STOPWORDS
+
+    seed = [t.lower() for t in seed_terms]
+    fb_ids = bm25_segmented_topk(
+        spark, root, seed, k=fb_k, version=version
+    ).select("doc_id")
+    excluded = set(seed) | set(STOPWORDS)
+    counts = (
+        _bm25_version_tables(spark, root, version)[0]
+        .join(F.broadcast(fb_ids), "doc_id", "left_semi")
+        .filter(F.length("term") >= min_len)
+        .filter(~F.col("term").isin(sorted(excluded)))
+        .groupBy("term")
+        .agg(F.sum("tf").alias("cnt"))
+        .orderBy(F.col("cnt").desc(), F.col("term"))
+        .limit(n_expand)
+    )
+    return [r.term for r in counts.collect()]
+
+
+def bm25_rm3_persisted_topk(
+    spark,
+    root: str,
+    seed_terms: list[str],
+    k: int = 20,
+    fb_k: int = 10,
+    n_expand: int = 3,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """Two-pass RM3 retrieval served ENTIRELY from the segmented store:
+    seed pass, feedback-term selection, and expanded pass all read
+    postings/termstats/doclens/stats — the corpus text column is never
+    touched (vs :func:`bm25_rm3_topk`, which tokenizes twice). The store
+    is resolved once, so both passes and the feedback count read the
+    same version even across a concurrent publish. Value-equal to the
+    recompute path by construction; the registry twin hash-checks it
+    against the same oracle."""
+    version = current_segments(spark, root, "bm25_rm3_persisted_topk")
+    expansion = rm3_persisted_expansion_terms(
+        spark, root, version, seed_terms, fb_k=fb_k, n_expand=n_expand
+    )
+    terms = [t.lower() for t in seed_terms] + expansion
+    return bm25_segmented_topk(
+        spark, root, terms, k=k, k1=k1, b=b, version=version
+    )
 
 
 def bm25_compact_segments(
@@ -969,12 +900,10 @@ def bm25_compact_segments(
     its membership still references) survives until retention GC ages it
     out — the standard crash-safe publish contract. Returns the new
     version path."""
-    import uuid
-
     vpath, segs, tomb = current_segments(
         spark, root, "bm25_compact_segments"
     )
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
+    seg, seg_path = new_segment(root)
     postings_src = spark.read.parquet(
         *[f"{root}/segs/{s}/postings" for s in segs]
     )
@@ -997,24 +926,24 @@ def bm25_compact_segments(
         .repartitionByRange(8, "term")
         .sortWithinPartitions("term", "doc_id")
         .write.mode("errorifexists")
-        .parquet(f"{root}/segs/{seg}/postings")
+        .parquet(f"{seg_path}/postings")
     )
     (
         doclens_src
         .write.mode("errorifexists")
-        .parquet(f"{root}/segs/{seg}/doclens")
+        .parquet(f"{seg_path}/doclens")
     )
     # the new segment's algebraic partials ARE the current merged tables
     spark.read.parquet(f"{vpath}/termstats").write.mode(
         "errorifexists"
-    ).parquet(f"{root}/segs/{seg}/termstats")
+    ).parquet(f"{seg_path}/termstats")
     spark.read.parquet(f"{vpath}/stats").write.mode(
         "errorifexists"
-    ).parquet(f"{root}/segs/{seg}/stats")
+    ).parquet(f"{seg_path}/stats")
     return publish_segments(
         spark, root, [seg], retain=retain, fingerprint=fingerprint,
         write_tables=_write_merged_stats(
-            spark.read.parquet(f"{root}/segs/{seg}/termstats"),
-            spark.read.parquet(f"{root}/segs/{seg}/stats"),
+            spark.read.parquet(f"{seg_path}/termstats"),
+            spark.read.parquet(f"{seg_path}/stats"),
         ),
     )

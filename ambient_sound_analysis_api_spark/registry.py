@@ -137,12 +137,14 @@ def _artifact(sf_dir: str, table: str, kind: str, *params, build):
     silently wrong), and the store holds one entry per key.
 
     ``prev`` is the artifact being replaced, ``None`` on the first build.
-    Fits ignore it. Index stores take their root from it and publish a
-    new immutable version there: the manifest pointer flips atomically
-    and a lazy DataFrame over the old version keeps reading until
-    retention GC (``operators/pq.py::ivfpq_publish_index``). ``fp`` is
-    the fingerprint the artifact is stored under; stores stamp
-    ``repr(fp)`` into their manifests.
+    Fits ignore it. Index stores are segmented stores: the artifact is
+    the store root (with the codebooks for the residual store), and a
+    rebuild takes the root from ``prev`` and publishes a new version
+    there (``operators/atomic_swap.py::publish_segments``). The manifest
+    pointer flips atomically and a lazy DataFrame over the old version's
+    segments keeps reading until retention GC. ``fp`` is the fingerprint
+    the artifact is stored under; stores stamp ``repr(fp)`` into their
+    manifests.
 
     The helper does one ``get`` and one set and never iterates the store,
     so concurrent callers cannot trip over each other. Two racing misses
@@ -5960,10 +5962,11 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_emb_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN serving from the PERSISTED index
-    (``operators/pq.py::ivfpq_write_index`` + ``ivfpq_persisted_topk``):
-    the cell-partitioned 4-byte-code table is written ONCE per dataset
-    (fingerprint-keyed store, atexit-reclaimed) and every query is a
+    """ANN serving from the PERSISTED index (``_ivfpq_seg_topk`` over
+    ``operators/pq.py::ivfpq_publish_segmented`` /
+    ``ivfpq_segmented_topk``): the cell-partitioned 4-byte-code table is
+    published ONCE per dataset as a one-segment store
+    (fingerprint-keyed, atexit-reclaimed) and every query is a
     partition-pruned scan of nprobe cell DIRECTORIES reading only the
     code columns — both of the IVF-PQ architecture's savings realized at
     the storage layer instead of per query (the ``ivfpq_topk`` family
@@ -5972,51 +5975,39 @@ def q_emb_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector column. The oracle replays the fitted chains + centroid probe
     + ADC over the logical candidate set — codes are deterministic, so
     serving from disk or from the formula is value-identical."""
-    from .operators.pq import ivfpq_persisted_topk, ivfpq_publish_index
-
-    emb = _table(spark, sf_dir, "embeddings")
-    books = _pq_books(sf_dir, emb)
-
-    def publish(prev, fp):
-        root = _store_root(prev and prev[0], "ivfpq_store_")
-        return root, ivfpq_publish_index(
-            emb, books, root, retain=2, fingerprint=repr(fp)
-        )
-
-    _, path = _artifact(
-        sf_dir, "embeddings", "cellidx", 4, 8, 2, build=publish
-    )
-    qid, query = _min_id_vector(emb)
-    return ivfpq_persisted_topk(
-        spark, path, emb, books, query, query_id=qid, k=12, nprobe=3
-    ).orderBy("adc_dist", "vec_id")
+    return _ivfpq_seg_topk(spark, sf_dir, "cellidx")
 
 
-def _ivfpq_seg_del_root(
-    spark: SparkSession, sf_dir: str, kind: str, compact: bool
-) -> "tuple[str, list]":
-    """Get-or-build the SEGMENTED code store with a tombstone delete:
-    publish the whole corpus as one code segment, then
-    ``ivfpq_delete_ids`` of every ``vec_id % 9 == 4`` — optionally
-    followed by a compaction that folds the tombstones out. Returns
-    ``(root, codebooks)``; fit is frozen at publish time (deletes never
-    refit)."""
+def _ivfpq_seg_topk(
+    spark: SparkSession, sf_dir: str, kind: str, delete: bool = False,
+    compact: bool = False,
+) -> DataFrame:
+    """Serve the min-id vector's top-12 (nprobe 3) from the SEGMENTED
+    code store ``kind``, built on first use (``_artifact``): publish the
+    whole corpus as one code segment; ``delete`` then tombstones every
+    ``vec_id % 9 == 4`` (``ivfpq_delete_ids``) and ``compact`` folds the
+    tombstones out. The fit is frozen at publish time (deletes never
+    refit). The embeddings table is read once for the build and the
+    serve."""
     from .operators.pq import (
         ivfpq_compact_segments, ivfpq_delete_ids, ivfpq_publish_segmented,
+        ivfpq_segmented_topk,
     )
 
     emb = _table(spark, sf_dir, "embeddings")
     books = _pq_books(sf_dir, emb)
+    prefix = "ivfpq_store_" if kind == "cellidx" else f"{kind}_"
 
     def publish(prev, fp):
-        root = _store_root(prev, f"{kind}_")
+        root = _store_root(prev, prefix)
         ivfpq_publish_segmented(
             emb, books, root, retain=2, fingerprint=repr(fp)
         )
-        ivfpq_delete_ids(
-            emb.filter(F.col("vec_id") % 9 == 4).select("vec_id"),
-            root, retain=2, fingerprint=repr(fp),
-        )
+        if delete:
+            ivfpq_delete_ids(
+                emb.filter(F.col("vec_id") % 9 == 4).select("vec_id"),
+                root, retain=2, fingerprint=repr(fp),
+            )
         if compact:
             ivfpq_compact_segments(
                 spark, root, retain=2, fingerprint=repr(fp)
@@ -6024,7 +6015,10 @@ def _ivfpq_seg_del_root(
         return root
 
     root = _artifact(sf_dir, "embeddings", kind, 4, 8, 2, build=publish)
-    return root, books
+    qid, query = _min_id_vector(emb)
+    return ivfpq_segmented_topk(
+        spark, root, emb, books, query, query_id=qid, k=12, nprobe=3
+    ).orderBy("adc_dist", "vec_id")
 
 
 _IVFPQ_DELETE_SQL = f"""
@@ -6076,14 +6070,7 @@ def q_emb_ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fitted chains + probe + ADC over the SURVIVING candidate set, so
     the hash check is the done criterion: delete-in-place == serve over
     the corpus without the deleted ids."""
-    from .operators.pq import ivfpq_segmented_topk
-
-    emb = _table(spark, sf_dir, "embeddings")
-    root, books = _ivfpq_seg_del_root(spark, sf_dir, "ivfdel", compact=False)
-    qid, query = _min_id_vector(emb)
-    return ivfpq_segmented_topk(
-        spark, root, emb, books, query, query_id=qid, k=12, nprobe=3
-    ).orderBy("adc_dist", "vec_id")
+    return _ivfpq_seg_topk(spark, sf_dir, "ivfdel", delete=True)
 
 
 @register(
@@ -6100,14 +6087,9 @@ def q_emb_ivfpq_delete_compacted(
     tests/test_ivfpq_delete.py). Same surviving-corpus oracle as the
     delete twin: delete → compact → serve stays hash-equal, now with
     zero serve-time anti-join."""
-    from .operators.pq import ivfpq_segmented_topk
-
-    emb = _table(spark, sf_dir, "embeddings")
-    root, books = _ivfpq_seg_del_root(spark, sf_dir, "ivfdelc", compact=True)
-    qid, query = _min_id_vector(emb)
-    return ivfpq_segmented_topk(
-        spark, root, emb, books, query, query_id=qid, k=12, nprobe=3
-    ).orderBy("adc_dist", "vec_id")
+    return _ivfpq_seg_topk(
+        spark, sf_dir, "ivfdelc", delete=True, compact=True
+    )
 
 
 @register(
@@ -6782,37 +6764,35 @@ def q_emb_ivfpq_residual_persisted_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Residual-IVF-PQ served from the PERSISTED cell-partitioned code
-    store (``operators.pq.ivfpq_write_residual_index`` /
-    ``ivfpq_residual_persisted_topk``): residual codes + the coarse
-    centroid table written once per dataset (memoized), every query then
-    a partition-pruned scan of the probed cells' 4-byte codes with a
-    cell-keyed literal ADC LUT — the storage-layer completion of the
-    residual family (the audits proved residual beats raw at identical
-    code size at every SF; this is the shape that serves it). Identical
-    model and probe as ``emb_ivfpq_residual_topk`` → the SAME oracle, so
-    the persisted path is hash-equal to the in-process one."""
-    import uuid
-
+    store (``operators.pq.ivfpq_publish_residual`` /
+    ``ivfpq_residual_persisted_topk``): residual codes as one segment +
+    the coarse centroid table as a version table, published once per
+    dataset (fingerprint-keyed), every query then a partition-pruned
+    scan of the probed cells' 4-byte codes with a cell-keyed literal ADC
+    LUT — the storage-layer completion of the residual family (the
+    audits proved residual beats raw at identical code size at every
+    SF; this is the shape that serves it). Identical model and probe as
+    ``emb_ivfpq_residual_topk`` → the SAME oracle, so the persisted path
+    is hash-equal to the in-process one."""
     from .operators.pq import (
-        ivfpq_residual_persisted_topk, ivfpq_write_residual_index,
+        ivfpq_publish_residual, ivfpq_residual_persisted_topk,
     )
 
     emb = _table(spark, sf_dir, "embeddings")
 
-    def write(prev, fp):
+    def publish(prev, fp):
         root = _store_root(prev and prev[0], "respq_idx_")
-        # fresh subdir per (re)build: the writes are errorifexists and a
-        # regenerated dataset must not collide with the stale version
-        path = f"{root}/v-{uuid.uuid4().hex[:8]}"
-        books = ivfpq_write_residual_index(emb, path, m=4, k=8, n_iter=2)
-        return root, path, books
+        _, books = ivfpq_publish_residual(
+            emb, root, m=4, k=8, n_iter=2, retain=2, fingerprint=repr(fp)
+        )
+        return root, books
 
-    _, path, books = _artifact(
-        sf_dir, "embeddings", "respq-idx", 4, 8, 2, build=write
+    root, books = _artifact(
+        sf_dir, "embeddings", "respq-idx", 4, 8, 2, build=publish
     )
     qid, query = _min_id_vector(emb)
     return ivfpq_residual_persisted_topk(
-        spark, path, books, query, qid, topk=10, nprobe=2
+        spark, root, books, query, qid, topk=10, nprobe=2
     )
 
 
@@ -15052,38 +15032,37 @@ def q_retrieval_bm25_persisted_topk(
 ) -> DataFrame:
     """Lexical retrieval served from the PERSISTED inverted index
     (round-11 VERDICT #7 — the ``emb_ivfpq_persisted_topk`` pattern
-    applied to BM25): ``operators.retrieval.bm25_publish_index`` writes
-    the post-tokenize artifacts ONCE per dataset (range-sorted postings
-    + termstats for footer-level file skipping on the term predicate,
-    doclens, 1-row corpus stats) into the shared manifest-pointer
-    version store; every query is then a pushed-down postings scan —
-    the corpus text column is never read and nothing re-tokenizes
-    (plan-pinned in ``tests/test_plans.py``). Same query terms, same
-    scoring arithmetic, same ORACLE as ``text_bm25_topk``: the
-    recompute path and the serve path are hash-equal by construction,
-    and the committed twin proves it."""
-    from .operators.retrieval import bm25_persisted_topk
+    applied to BM25): ``operators.retrieval.bm25_publish_segmented``
+    writes the post-tokenize artifacts ONCE per dataset as a one-segment
+    store (range-sorted postings for footer-level file skipping on the
+    term predicate, doclens, and the version's termstats + 1-row corpus
+    stats); every query is then a pushed-down postings scan through
+    ``bm25_segmented_topk`` — the corpus text column is never read and
+    nothing re-tokenizes (plan-pinned in ``tests/test_plans.py``). Same
+    query terms, same scoring arithmetic, same ORACLE as
+    ``text_bm25_topk``: the recompute path and the serve path are
+    hash-equal by construction, and the committed twin proves it."""
+    from .operators.retrieval import bm25_segmented_topk
 
-    path = _bm25_index_path(spark, sf_dir)
-    return bm25_persisted_topk(
-        spark, path, ["vector", "hash", "merge"], k=20
+    root = _bm25_index_root(spark, sf_dir)
+    return bm25_segmented_topk(
+        spark, root, ["vector", "hash", "merge"], k=20
     )
 
 
-def _bm25_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Get-or-publish the persisted BM25 index for a dataset, shared by
-    the plain and RM3 serve twins (``_artifact``)."""
-    from .operators.retrieval import bm25_publish_index
+def _bm25_index_root(spark: SparkSession, sf_dir: str) -> str:
+    """Get-or-publish the one-segment BM25 store over the whole corpus,
+    shared by the plain and RM3 serve twins (``_artifact``)."""
+    from .operators.retrieval import bm25_publish_segmented
 
     docs = _table(spark, sf_dir, "documents")
 
     def publish(prev, fp):
-        root = _store_root(prev and prev[0], "bm25_store_")
-        return root, bm25_publish_index(
-            docs, root, retain=2, fingerprint=repr(fp)
-        )
+        root = _store_root(prev, "bm25_store_")
+        bm25_publish_segmented(docs, root, retain=2, fingerprint=repr(fp))
+        return root
 
-    return _artifact(sf_dir, "documents", "bm25idx", build=publish)[1]
+    return _artifact(sf_dir, "documents", "bm25idx", build=publish)
 
 
 def _bm25_seg_root(
@@ -15269,16 +15248,17 @@ def q_retrieval_rm3_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexical index (completing round-11 VERDICT #7): seed pass, feedback
     content-term selection (Σ tf over the feedback docs\' postings — the
     identical count the recompute path gets by re-tokenizing), and the
-    expanded second pass all read the published
-    postings/termstats/doclens/stats tables; the corpus text column is
-    never touched, where ``retrieval_rm3_expansion`` tokenizes the
-    corpus twice. Same seed query, same oracle (shared
-    ``_RM3_TOPK_SQL``) — hash-equal to the recompute path."""
+    expanded second pass all read one resolved version of the
+    one-segment store's postings/termstats/doclens/stats tables; the
+    corpus text column is never touched, where
+    ``retrieval_rm3_expansion`` tokenizes the corpus twice. Same seed
+    query, same oracle (shared ``_RM3_TOPK_SQL``) — hash-equal to the
+    recompute path."""
     from .operators.retrieval import bm25_rm3_persisted_topk
 
-    path = _bm25_index_path(spark, sf_dir)
+    root = _bm25_index_root(spark, sf_dir)
     return bm25_rm3_persisted_topk(
-        spark, path, ["vector", "hash", "merge"], k=20, fb_k=10, n_expand=3
+        spark, root, ["vector", "hash", "merge"], k=20, fb_k=10, n_expand=3
     )
 
 

@@ -10,11 +10,12 @@ its target's existence is the replay gate.
 Store layout: ``<root>/batch=<id>/{postings,doclens}/*.parquet`` — ONE
 rename commits both tables atomically (they share the staged directory),
 which the two-table split of the manifest-store layout cannot give a
-single micro-batch. Serving reads every admitted batch with one
-glob-path scan per table and derives query-term df and corpus stats
-FROM THE INDEX ROWS (never the text), so streamed admission is
-hash-equal to a one-shot ``bm25_topk`` over the same documents — the
-batch-equivalence contract, oracle-checked by ``streaming_bm25_ingest``.
+single micro-batch. Serving reads every admitted batch
+(``atomic_swap.admitted_batches``) with one multi-path scan per table
+and derives query-term df and corpus stats FROM THE INDEX ROWS (never
+the text), so streamed admission is hash-equal to a one-shot
+``bm25_topk`` over the same documents — the batch-equivalence contract,
+oracle-checked by ``streaming_bm25_ingest``.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.atomic_swap import admit_batch
+from ..operators.atomic_swap import admit_batch, admitted_batches
 from ..operators.retrieval import (
     BM25_B, BM25_K1, _bm25_score_topk, term_frequencies,
 )
@@ -76,7 +77,7 @@ def bm25_streamed_topk(
     b: float = BM25_B,
     takedown_root: str | None = None,
 ) -> DataFrame:
-    """BM25 top-k over the streamed store: one glob scan of every
+    """BM25 top-k over the streamed store: one multi-path scan of every
     admitted batch's postings (term predicate pushed to the range-sorted
     files), one of the doclens; query-term df aggregates from the
     filtered postings stream and the 1-row corpus stats from doclens —
@@ -90,11 +91,16 @@ def bm25_streamed_topk(
     corpus stats derive — so df, N and avgdl all reflect the surviving
     corpus and the serve is hash-equal to a from-scratch build without
     the deleted docs."""
+    batches = admitted_batches(spark, store_root)
+    if not batches:
+        raise ValueError(
+            f"bm25_streamed_topk: no batch admitted under {store_root}"
+        )
     terms = [t.lower() for t in query_terms]
-    tf = spark.read.parquet(f"{store_root}/batch=*/postings").filter(
+    tf = spark.read.parquet(*[f"{p}/postings" for p in batches]).filter(
         F.col("term").isin(terms)
     )
-    dl = spark.read.parquet(f"{store_root}/batch=*/doclens")
+    dl = spark.read.parquet(*[f"{p}/doclens" for p in batches])
     if takedown_root is not None:
         from .takedown import read_streamed_takedowns
 

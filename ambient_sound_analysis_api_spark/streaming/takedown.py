@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.atomic_swap import admit_batch, path_exists
+from ..operators.atomic_swap import admit_batch, admitted_batches
 
 
 def admit_takedown_batch(
@@ -88,10 +88,7 @@ def read_streamed_takedowns(
     common case — most serves carry no tombstones, and None lets the
     caller skip the anti-join entirely instead of anti-joining an empty
     frame)."""
-    if not path_exists(spark, takedown_root):
+    batches = admitted_batches(spark, takedown_root)
+    if not batches:
         return None
-    return (
-        spark.read.parquet(f"{takedown_root}/batch=*")
-        .select(id_col)
-        .distinct()
-    )
+    return spark.read.parquet(*batches).select(id_col).distinct()

@@ -1,8 +1,8 @@
 """The store module (operators/atomic_swap.py): the staging + atomic-swap
 primitive the streaming rollup and HLL stores rewrite through (the staged
 copy replaces the table via renames, and no staging or old copy is left
-behind), the batch admit's lost-race branch, and a guard that keeps the
-filesystem protocol in that one module.
+behind), the batch admit's lost-race branch and its batch listing, and a
+guard that keeps the filesystem protocol in that one module.
 """
 
 from __future__ import annotations
@@ -53,6 +53,18 @@ def test_admit_batch_lost_race_drops_staging(spark, tmp_path):
     assert sorted(os.listdir(target)) == ["winner.parquet"]
     with open(os.path.join(target, "winner.parquet")) as fh:
         assert fh.read() == "winner"
+
+
+def test_admitted_batches_lists_committed_in_id_order(spark, tmp_path):
+    """The read half of the batch admit lists committed ``batch=<id>``
+    directories by numeric id (10 after 2) and never a staging dir."""
+    root = str(tmp_path / "store")
+    for name in ("batch=10", "batch=2", ".staging-batch-3-deadbeef0123"):
+        os.makedirs(os.path.join(root, name))
+    assert atomic_swap.admitted_batches(spark, root) == [
+        f"{root}/batch=2", f"{root}/batch=10",
+    ]
+    assert atomic_swap.admitted_batches(spark, str(tmp_path / "none")) == []
 
 
 def test_store_protocol_lives_in_one_module():

@@ -282,3 +282,29 @@ def test_compaction_folds_tombstones_out(spark, tmp_path):
         *[f"{root}/segs/{s}/doclens" for s in segs]
     )
     assert live_dl.filter(F.col("doc_id").isin(1, 4)).count() == 0
+
+
+def test_rm3_persisted_resolves_the_store_once(
+    spark, tmp_path, monkeypatch
+):
+    """An RM3 serve resolves the store ONCE: the seed pass, the feedback
+    count and the expanded pass all read that one version, and the
+    result equals the recompute path."""
+    root = str(tmp_path / "bm25seg")
+    R.bm25_publish_segmented(_full(spark), root, retain=2)
+    real = R.current_segments
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(R, "current_segments", counting)
+    got = R.bm25_rm3_persisted_topk(
+        spark, root, ["vector"], k=5, fb_k=3, n_expand=2
+    ).collect()
+    assert len(calls) == 1
+    want = R.bm25_rm3_topk(
+        _full(spark), ["vector"], k=5, fb_k=3, n_expand=2
+    ).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]

@@ -689,8 +689,8 @@ def test_ivfpq_persisted_serve_prunes_partitions_and_columns(spark, sf_dir):
     fn(spark, sf_dir)  # build + memoize the index store
     df = fn(spark, sf_dir)  # served from the persisted index
     plan = explain_str(df, "formatted")
-    # the scan really reads a published VERSION of the stored index
-    assert "ivfpq_store_" in plan and "/v-" in plan
+    # the scan really reads a published SEGMENT of the stored index
+    assert "ivfpq_store_" in plan and "/segs/seg-" in plan
     # the index scan prunes on cell and reads no vector column
     assert "cell IN" in plan or "cell#" in plan.split("PartitionFilters")[1].splitlines()[0]
     read_schemas = [
@@ -736,7 +736,7 @@ def test_residual_persisted_serve_prunes_partitions_and_columns(
     fn(spark, sf_dir)  # build + memoize the index store
     df = fn(spark, sf_dir)  # served from the persisted index
     plan = explain_str(df, "formatted")
-    assert "respq_idx_" in plan and "/v-" in plan
+    assert "respq_idx_" in plan and "/segs/seg-" in plan
     assert (
         "cell IN" in plan
         or "cell#" in plan.split("PartitionFilters")[1].splitlines()[0]

@@ -62,21 +62,24 @@ def test_persisted_index_refresh_keeps_old_version_readable(
     """ADVICE round-10 scenario, end-to-end at the registry level: a
     dataset regenerated in place republishes the persisted code index as
     a NEW version in the same store — a lazy DataFrame returned BEFORE
-    the regeneration keeps collecting (its version directory is retained
-    by the manifest store, never rmtree'd under it), and the serve path
+    the regeneration keeps collecting (its version's segment is retained
+    by the store's GC grace, never rmtree'd under it), and the serve path
     flips to the new version."""
     import os
 
     from ambient_sound_analysis_api_spark import registry as R
+    from ambient_sound_analysis_api_spark.operators import atomic_swap
 
     q = R.queries()["emb_ivfpq_persisted_topk"]
     before = q(spark, sf_dir)
     skey = (os.path.join(sf_dir, "embeddings.parquet"), "cellidx", 4, 8, 2)
-    fp1, (root, v1) = R._ARTIFACTS[skey]
+    fp1, root = R._ARTIFACTS[skey]
     # the store root is owned by the process-level dir the atexit hook
     # removes
     assert os.path.dirname(root) == R._store_parent()
-    lazy_old = spark.read.parquet(v1)
+    v1, segs1, _ = atomic_swap.current_segments(spark, root, "test")
+    seg_old = f"{root}/segs/{segs1[0]}"
+    lazy_old = spark.read.parquet(seg_old)
     n_old = lazy_old.count()
 
     # simulate in-place regeneration: same path, new fingerprint
@@ -88,10 +91,11 @@ def test_persisted_index_refresh_keeps_old_version_readable(
 
     monkeypatch.setattr(R, "_dataset_fingerprint", fake_fp)
     after = q(spark, sf_dir)
-    fp2, (root2, v2) = R._ARTIFACTS[skey]
-    assert root2 == root and v2 != v1 and fp2 != fp1
-    # the pre-refresh lazy handle still reads its immutable version
-    assert os.path.exists(v1)
+    fp2, root2 = R._ARTIFACTS[skey]
+    v2, segs2, _ = atomic_swap.current_segments(spark, root2, "test")
+    assert root2 == root and v2 != v1 and segs2 != segs1 and fp2 != fp1
+    # the pre-refresh lazy handle still reads its immutable segment
+    assert os.path.exists(v1) and os.path.exists(seg_old)
     assert lazy_old.count() == n_old
     # both serves return the same 12-row top-k (same data after all)
     assert before.count() == after.count() == 12
