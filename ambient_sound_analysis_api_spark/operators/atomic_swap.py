@@ -57,7 +57,6 @@ import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.utils import AnalysisException
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -162,13 +161,13 @@ def read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
     treating that as empty would permanently lose history (the rollup
     store) or undercount (the HLL store). :func:`recover_path` renames
     the newest complete sibling copy back first; only when no complete
-    copy exists anywhere is None returned."""
-    try:
-        return spark.read.parquet(store_path)
-    except AnalysisException:
-        if recover_path(spark, store_path) is not None:
-            return spark.read.parquet(store_path)
+    copy exists anywhere is None returned. The existence check keeps
+    Spark from reading (and logging a ``FileNotFoundException`` for) a
+    store that was never written."""
+    recover_path(spark, store_path)
+    if not path_exists(spark, store_path):
         return None
+    return spark.read.parquet(store_path)
 
 
 # ---------------------------------------------------------------------------

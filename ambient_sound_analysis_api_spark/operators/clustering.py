@@ -6,14 +6,17 @@ assignment is exactly the block key that keeps the pairwise comparison from
 going O(n²). The reference engine has no clustering surface; this module is
 part of the LLM-pipeline extension charter (SURVEY.md §7.7).
 
-Spark-first decomposition of Lloyd's algorithm:
+The fit is ``pq.pq_fit`` with one subspace — the one Lloyd's loop in
+the package:
 
-- **assign** — per-row argmin over k broadcast centroid literals, each
-  distance a JVM ``zip_with``/``aggregate`` fold (codegen, no Python, no
-  shuffle). Ties break to the lowest centroid index via
-  ``array_position``'s first-match semantics.
+- **assign** — per-row argmin over k centroid literals, each distance a
+  JVM ``zip_with``/``aggregate`` fold parsed from the SQL text of
+  ``pq._sqdist_sql`` (codegen, no Python, no shuffle). Ties break to the
+  lowest centroid index via ``array_position``'s first-match semantics.
+  :func:`assign_clusters` and the rebalance operators build their
+  distance arrays from the same text.
 - **update** — ``posexplode`` the vectors and aggregate per (cluster, dim)
-  with :func:`decimal_mean`: decimal sums are ORDER-INDEPENDENT, so the
+  with ``decimal_mean``: decimal sums are ORDER-INDEPENDENT, so the
   centroids — and therefore every downstream assignment — are bit-identical
   across runs, partitionings, and cluster sizes. A double ``avg`` here
   would make the whole fit nondeterministic at the last ulp, which is
@@ -21,33 +24,24 @@ Spark-first decomposition of Lloyd's algorithm:
 - the only driver-side state is the k×dim centroid table (bounded by model
   size, not data size) — the same footprint a 1000-executor run would have.
 
-Each iteration is one scan + one (cluster, dim)-keyed partial aggregation;
-``n_iter`` is fixed (no convergence collect), so the job graph is static.
-At 100 TB you'd persist the input once and raise ``n_iter``; nothing else
-changes.
+Each iteration is one scan of the persisted input + one (cluster,
+dim)-keyed partial aggregation; ``n_iter`` is fixed (no convergence
+collect), so the job graph is static.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalars import decimal_mean
+from .caching import tracked_persist
+from .pq import _sqdist_sql, pq_fit
+from .similarity import exact_sqdist
 
 
-def _sqdist_to(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance from an array column to a literal centroid —
-    a sequential JVM fold (deterministic summation order)."""
-    c = F.array(*[F.lit(float(v)) for v in centroid])
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            c,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _dists(vec_col: str, centroids: list[list[float]]) -> F.Column:
+    """Array of squared-L2 distances from ``vec_col`` to each centroid."""
+    return F.expr(_sqdist_sql(f"`{vec_col}`", centroids))
 
 
 def assign_clusters(
@@ -63,8 +57,7 @@ def assign_clusters(
     ``array_position`` returns the FIRST minimum, so distance ties resolve
     to the lowest centroid index deterministically.
     """
-    dists = F.array(*[_sqdist_to(F.col(vec_col), c) for c in centroids])
-    out = emb.withColumn("_dists", dists).withColumn(
+    out = emb.withColumn("_dists", _dists(vec_col, centroids)).withColumn(
         out_col,
         (F.array_position(F.col("_dists"), F.array_min(F.col("_dists"))) - 1).cast(
             "int"
@@ -89,31 +82,12 @@ def kmeans_fit(
 
     Returns the centroid table as plain Python lists (k × dim — model-sized,
     never data-sized). A cluster that receives no points keeps its previous
-    centroid (standard Lloyd's degenerate-cluster handling).
+    centroid (standard Lloyd's degenerate-cluster handling). This is
+    :func:`..pq.pq_fit` with one subspace.
     """
-    init = emb.orderBy(id_col).limit(k).select(vec_col).collect()
-    centroids = [[float(x) for x in r[0]] for r in init]
-    if len(centroids) < k:
-        raise ValueError(f"need at least k={k} rows, got {len(centroids)}")
-    dim = len(centroids[0])
-    for _ in range(n_iter):
-        assigned = assign_clusters(emb, centroids, vec_col=vec_col)
-        stats = (
-            assigned.select(
-                "cluster", F.posexplode(F.col(vec_col)).alias("pos", "x")
-            )
-            .groupBy("cluster", "pos")
-            .agg(decimal_mean(F.col("x"), scale=12, precision=32).alias("m"))
-            .collect()
-        )
-        new = [list(c) for c in centroids]
-        for r in stats:
-            if r["pos"] == 0:
-                new[r["cluster"]] = [0.0] * dim
-        for r in stats:
-            new[r["cluster"]][r["pos"]] = float(r["m"])
-        centroids = new
-    return centroids
+    return pq_fit(
+        emb, m=1, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
+    )[0]
 
 
 def kmeans_predict(
@@ -168,14 +142,11 @@ def rebalance_fixpoint(
     """
     from pyspark.sql import Window
 
-    from .caching import tracked_persist
-
     k = len(centroids)
     if k < 2:
         raise ValueError("rebalance_fixpoint needs >= 2 centroids")
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    dists = F.array(*[_sqdist_to(F.col(vec_col), c) for c in centroids])
     # preference list: (d, cell) structs sorted ascending — struct order
     # gives the d-then-lowest-cell tie-break the one-pass variant uses.
     # d is snapped to DECIMAL(15,9) (repo convention: never rank on raw
@@ -190,7 +161,7 @@ def rebalance_fixpoint(
     )
     state = tracked_persist(
         emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_dists", dists)
+        .withColumn("_dists", _dists(vec_col, centroids))
         .select(
             id_col,
             pref.alias("_pref"),
@@ -417,53 +388,32 @@ def kcenter_greedy(
     (max over points of min-distance-to-centers, ties to the lowest id).
 
     Scale shape: each of the k−1 rounds is ONE scan computing the running
-    min-distance (a codegen decimal fold against the newest center as a
-    literal array) followed by a 1-row ``TakeOrderedAndProject`` collect —
-    driver traffic is k rows (model-sized, the k-means-centroid
-    contract); nothing quadratic ever forms.
+    min-distance (a codegen :func:`..similarity.exact_sqdist` fold against
+    the newest center as a literal array) followed by a 1-row
+    ``TakeOrderedAndProject`` collect — driver traffic is k rows
+    (model-sized, the k-means-centroid contract); nothing quadratic ever
+    forms.
 
-    Cross-engine determinism: vectors snap to DECIMAL(15,9) once; squared
-    distances are exact decimal sums (order-independent), so the argmax
-    and its tie-break reproduce bit-for-bit in the SQL oracle.
+    Cross-engine determinism: squared distances are exact decimal sums
+    over DECIMAL(15,9)-snapped operands (order-independent), so the
+    argmax and its tie-break reproduce bit-for-bit in the SQL oracle.
 
     Returns one row per chosen center: ``(pick, vec_id, min_dist)`` —
     ``min_dist`` is the (6dp-rounded, squared L2) distance to the
     previously chosen set at selection time; NULL for the seed.
     """
     spark = emb.sparkSession
-    base = emb.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double"), 9).cast("decimal(15,9)"),
-        ).alias("xd"),
-    )
+    df = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("x"))
 
     def dist_to(center_vals: list) -> F.Column:
-        c = F.array(
-            *[
-                F.lit(v).cast("decimal(15,9)")
-                for v in center_vals
-            ]
-        )
-        term = F.zip_with(
-            F.col("xd"),
-            c,
-            lambda a, b: ((a - b) * (a - b)).cast("decimal(38,18)"),
-        )
-        zero = F.lit(0).cast("decimal(38,18)")
-        return F.aggregate(
-            term, zero, lambda acc, v: (acc + v).cast("decimal(38,18)")
-        )
+        return exact_sqdist(F.col("x"), F.lit([float(v) for v in center_vals]))
 
-    seed_rows = base.orderBy("id").limit(1).collect()
+    seed_rows = df.orderBy("id").limit(1).collect()
     if not seed_rows:
         raise ValueError("kcenter_greedy: input has no rows")
     seed = seed_rows[0]
     picks = [(1, int(seed["id"]), None)]
-    centers = [seed["xd"]]
-    # seeded all-NULL; F.least skips NULLs, so round 1's least(dmin, d) = d
-    df = base.withColumn("dmin", F.lit(None).cast("decimal(38,18)"))
+    centers = [seed["x"]]
     prev = None
     # try/finally so the live persisted round frame(s) are released even
     # when a round raises (the k-exceeds-rows ValueError, or a collect
@@ -477,10 +427,11 @@ def kcenter_greedy(
             # round's cache is released once the new one is materialized
             # (its data was folded into this round's dmin); lineage depth
             # grows by one select per round — model-sized k keeps that flat.
+            d = dist_to(centers[-1])
             df = df.select(
                 "id",
-                "xd",
-                F.least(F.col("dmin"), dist_to(centers[-1])).alias("dmin"),
+                "x",
+                (d if t == 2 else F.least(F.col("dmin"), d)).alias("dmin"),
             ).persist()
             nxt_rows = (
                 df.filter(~F.col("id").isin([p[1] for p in picks]))
@@ -498,7 +449,7 @@ def kcenter_greedy(
                 )
             nxt = nxt_rows[0]
             picks.append((t, int(nxt["id"]), nxt["dmin"]))
-            centers.append(nxt["xd"])
+            centers.append(nxt["x"])
     finally:
         if prev is not None:
             prev.unpersist()
@@ -553,12 +504,9 @@ def rebalance_overflow(
     """
     from pyspark.sql import Window
 
-    from .caching import tracked_persist
-
     k = len(centroids)
     if k < 2:
         raise ValueError("rebalance_overflow needs >= 2 centroids")
-    dists = F.array(*[_sqdist_to(F.col(vec_col), c) for c in centroids])
     prim = (F.array_position(F.col("_dists"), F.array_min(F.col("_dists"))) - 1).cast("int")
     # second nearest: mask the primary slot to +inf, argmin again
     masked = F.expr(
@@ -567,7 +515,7 @@ def rebalance_overflow(
     )
     assigned = (
         emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_dists", dists)
+        .withColumn("_dists", _dists(vec_col, centroids))
         .withColumn("_prim", prim)
         .withColumn("_pd", F.array_min(F.col("_dists")))
         .withColumn("_masked", masked)

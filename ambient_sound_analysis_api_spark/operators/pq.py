@@ -10,12 +10,12 @@ scan.
 
 Scale shape:
 
-- **fit**: m independent k-means fits over dimension slices — reuses
-  ``clustering.kmeans_fit`` (deterministic lowest-id seeding,
-  order-independent DECIMAL centroid means), so the whole model is
-  bit-reproducible and even SQL-expressible (the registry oracle unrolls
-  all m fits as chained CTEs). Model size is m × k × d_sub floats —
-  driver-resident by design.
+- **fit**: m independent k-means fits over dimension slices, fused into
+  one Lloyd's loop (deterministic lowest-id seeding, order-independent
+  DECIMAL centroid means), so the whole model is bit-reproducible and
+  even SQL-expressible (the registry oracle unrolls all m fits as
+  chained CTEs). ``clustering.kmeans_fit`` is this loop at m=1. Model
+  size is m × k × d_sub floats — driver-resident by design.
 - **encode**: ONE narrow projection — per subspace an argmin over k
   literal centroids, all inside whole-stage codegen (``slice`` +
   ``zip_with``/``aggregate`` folds). No shuffle, no joins, no Python; at
@@ -34,6 +34,12 @@ from pyspark.sql import functions as F
 from ..functions.scalars import decimal_mean
 from .atomic_swap import current_segments, new_segment, publish_segments
 from .caching import tracked_persist
+from .similarity import (
+    exact_sqdist,
+    exact_topk,
+    ivf_cell_centroids,
+    ivf_probe_cells,
+)
 
 
 def _dlit(v: float) -> str:
@@ -43,17 +49,22 @@ def _dlit(v: float) -> str:
     return repr(float(v)) + "D"
 
 
-def _sqdist_sql(vec_sql: str, centroid: list[float]) -> str:
-    """SQL text of the squared-L2 fold ``clustering._sqdist_to`` builds
-    through the DSL — same zip_with/aggregate tree, same cast-to-double
-    per element, same 0.0 seed and left fold, so the parsed expression
-    is evaluation-identical to the Column version."""
-    arr = "array(" + ",".join(_dlit(v) for v in centroid) + ")"
-    return (
-        f"aggregate(zip_with({vec_sql}, {arr}, (x, y) -> "
-        "(cast(x as double) - y) * (cast(x as double) - y)), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
+def _sqdist_sql(vec_sql: str, centroids: list[list[float]]) -> str:
+    """SQL text of the distance array from the array expression
+    ``vec_sql`` to each literal centroid: per centroid one squared-L2
+    ``zip_with``/``aggregate`` fold (cast-to-double per element, 0.0
+    seed, left fold in element order — deterministic summation). The
+    one squared-L2 kernel of PQ encoding and k-means assignment
+    (``clustering.assign_clusters`` and the rebalance operators)."""
+    folds = []
+    for c in centroids:
+        arr = "array(" + ",".join(_dlit(v) for v in c) + ")"
+        folds.append(
+            f"aggregate(zip_with({vec_sql}, {arr}, (x, y) -> "
+            "(cast(x as double) - y) * (cast(x as double) - y)), "
+            "0.0D, (acc, v) -> acc + v)"
+        )
+    return "array(" + ",".join(folds) + ")"
 
 
 def _code_cols(
@@ -66,15 +77,15 @@ def _code_cols(
     Each subspace's expression is assembled as ONE SQL string and parsed
     with ``F.expr``: the Column-DSL construction issued ~25 py4j calls
     per centroid (~800 per m=4×k=8 encode, measured ~2 s of driver time
-    PER INVOCATION before any job ran — guide §1.2: fix where the time
-    is). The parsed tree is the same slice/zip_with/aggregate/
-    array_position shape the DSL built; doubles are embedded via
-    ``repr`` + ``D`` suffix so every literal is bit-identical."""
+    PER INVOCATION before any job ran). The parsed tree is the same
+    slice/zip_with/aggregate/array_position shape the DSL built; doubles
+    are embedded via ``repr`` + ``D`` suffix so every literal is
+    bit-identical."""
     cols = []
     for s, cb in enumerate(codebooks):
         d_sub = len(cb[0])
         sub = f"slice(`{vec_col}`, {s * d_sub + 1}, {d_sub})"
-        dists = "array(" + ",".join(_sqdist_sql(sub, c) for c in cb) + ")"
+        dists = _sqdist_sql(sub, cb)
         cols.append(
             F.expr(
                 f"cast(array_position({dists}, array_min({dists})) - 1 "
@@ -94,8 +105,9 @@ def pq_fit(
     sample_frac: float | None = None,
 ) -> list[list[list[float]]]:
     """Fit m per-subspace codebooks (each k × dim/m) with the deterministic
-    k-means (lowest-id seeding, order-independent decimal centroid means —
-    numerically identical to running ``clustering.kmeans_fit`` per slice).
+    k-means (lowest-id seeding, order-independent decimal centroid means).
+    This is the one Lloyd's loop: ``clustering.kmeans_fit`` is the m=1
+    case. A cluster that receives no points keeps its previous centroid.
 
     All m fits are FUSED: each Lloyd's iteration is ONE scan — the m
     argmin assignments ride a single projection, one ``posexplode``
@@ -111,8 +123,6 @@ def pq_fit(
     train on ~1M sampled vectors while the cheap encode pass still covers
     the full corpus, which is how PQ indexes are built in practice.
     """
-    from .caching import tracked_persist
-
     if sample_frac is not None:
         from .sampling import N_BUCKETS, hash_bucket
 
@@ -200,32 +210,51 @@ def pq_encode(
     )
 
 
-def _adc_dist(
+def _adc_lut(
     codebooks: list[list[list[float]]], query: list[float]
-) -> F.Column:
-    """The ADC distance column over ``code_0..code_{m-1}``: per-subspace
-    query→centroid squared distances precomputed driver-side into literal
-    lookup arrays (model-sized: m×k floats), each row costing m
-    ``element_at`` lookups summed in fixed subspace order."""
-    terms = []
+) -> list[float]:
+    """The flat ADC lookup table (m·k floats, subspace-major): entry
+    ``s·k + c`` is the squared distance from the query's subspace-``s``
+    slice to centroid ``c`` of codebook ``s``, folded in element order
+    from 0.0 on the driver (model-sized)."""
+    lut = []
     for s, cb in enumerate(codebooks):
         d_sub = len(cb[0])
         qs = query[s * d_sub : (s + 1) * d_sub]
-        lut = []
         for c in cb:
             d = 0.0
             for a, b in zip(qs, c):
                 d = d + (float(a) - float(b)) * (float(a) - float(b))
             lut.append(d)
-        terms.append(
-            F.element_at(
-                F.lit([float(v) for v in lut]), F.col(f"code_{s}") + 1
-            )
-        )
-    dist = terms[0]
-    for t in terms[1:]:
-        dist = dist + t
+    return lut
+
+
+def _lut_dist(luts: list, key_col: "str | None", m: int, k: int) -> F.Column:
+    """The ADC distance column over ``code_0..code_{m-1}``: m
+    ``element_at`` lookups into a flat m·k LUT, summed in fixed subspace
+    order. ``luts`` is one LUT (``key_col`` None), or ``(key, lut)``
+    pairs shipped as one literal map keyed by ``key_col`` (per query or
+    per probed cell — model-sized)."""
+    if key_col is None:
+        lut = F.lit(luts)
+    else:
+        entries = []
+        for key, flat in luts:
+            entries += [F.lit(key), F.lit(flat)]
+        lut = F.element_at(F.create_map(*entries), F.col(key_col))
+    dist = F.element_at(lut, F.col("code_0") + 1)
+    for s in range(1, m):
+        dist = dist + F.element_at(lut, F.lit(s * k) + F.col(f"code_{s}") + 1)
     return dist
+
+
+def _adc_dist(
+    codebooks: list[list[list[float]]], query: list[float]
+) -> F.Column:
+    """The ADC distance column of one query (see :func:`_lut_dist`)."""
+    return _lut_dist(
+        _adc_lut(codebooks, query), None, len(codebooks), len(codebooks[0])
+    )
 
 
 def pq_adc_topk(
@@ -272,8 +301,6 @@ def ivfpq_topk(
     broadcast equi-join on the cell id, so with the table partitioned by
     ``cell_col`` the scan prunes to nprobe partitions' files before any
     distance math."""
-    from .similarity import ivf_probe_cells
-
     probes = ivf_probe_cells(
         emb, query_id, nprobe, id_col=id_col, vec_col=vec_col,
         cell_col=cell_col,
@@ -317,16 +344,13 @@ def ivfpq_recall_curve(
 
     Cross-engine determinism: ADC distances are 6dp-rounded before
     ranking with an id tie-break (the ``pq_adc_topk`` contract); the
-    exact baseline ranks on order-independent exact DECIMAL squared-L2
-    (operands snapped to DECIMAL(15,9) first — the ``kcenter_greedy``
-    contract), so the whole curve is SQL-oracle-checkable. ``recall_at_k``
+    exact baseline is ``similarity.exact_topk`` (order-independent exact
+    DECIMAL squared-L2), so the whole curve is SQL-oracle-checkable. ``recall_at_k``
     is hits/k of small integers — bit-identical IEEE division anywhere.
 
     Returns ``(nprobe, n_hits, recall_at_k)``, one row per swept nprobe.
     """
     from pyspark.sql import Window
-
-    from .similarity import ivf_cell_centroids
 
     spark = emb.sparkSession
     maxp = max(nprobes)
@@ -335,28 +359,12 @@ def ivfpq_recall_curve(
     q = emb.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("_qvec")
     )
-    # Cell-ranking key under the repo's cross-engine contract: snap both
-    # operands to DECIMAL(15,9), square exactly, sum exactly in DECIMAL —
-    # the same shape as the exact baseline below. A raw DOUBLE sum would
-    # fold in array order here but in unspecified GROUP BY order in the
-    # SQL oracle, so a near-ulp tie between two cells could flip
-    # ``cell_rank`` and flake the hash check.
-    csnap = F.transform(
-        F.col("centroid"), lambda c: F.round(c, 9).cast("decimal(15,9)")
-    )
-    qsnap = F.transform(
-        F.col("_qvec"),
-        lambda x: F.round(x.cast("double"), 9).cast("decimal(15,9)"),
-    )
-    sqd = F.aggregate(
-        F.zip_with(
-            csnap, qsnap, lambda a, b: ((a - b) * (a - b)).cast(
-                "decimal(38,18)"
-            )
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
+    # Cell-ranking key under the repo's cross-engine contract: exact
+    # decimal squared-L2, the same kernel as the exact baseline below. A
+    # raw DOUBLE sum would fold in array order here but in unspecified
+    # GROUP BY order in the SQL oracle, so a near-ulp tie between two
+    # cells could flip ``cell_rank`` and flake the hash check.
+    sqd = exact_sqdist(F.col("centroid"), F.col("_qvec"))
     wc = Window.orderBy(F.col("_d"), F.col("cell"))
     cells = (
         cent.crossJoin(F.broadcast(q))
@@ -394,32 +402,7 @@ def ivfpq_recall_curve(
         .filter(F.col("_rn") <= k)
     )
 
-    # exact float baseline: order-independent exact decimal squared-L2
-    xd = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double"), 9).cast("decimal(15,9)"),
-    )
-    base = emb.select(F.col(id_col), xd.alias("_xd"))
-    qd = base.filter(F.col(id_col) == query_id).select(
-        F.col("_xd").alias("_qd")
-    )
-    dexact = F.aggregate(
-        F.zip_with(
-            F.col("_xd"),
-            F.col("_qd"),
-            lambda a, b: ((a - b) * (a - b)).cast("decimal(38,18)"),
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
-    exact = (
-        base.filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(qd))
-        .select(F.col(id_col), dexact.alias("_de"))
-        .orderBy(F.col("_de"), F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col), F.lit(1).cast("long").alias("_hit"))
-    )
+    exact = exact_topk(emb, query_id, k, id_col=id_col, vec_col=vec_col)
 
     return (
         topn.join(F.broadcast(exact), id_col, "left")
@@ -495,12 +478,8 @@ def ivfpq_batch_topk(
     """
     from pyspark.sql import Window
 
-    from .similarity import ivf_cell_centroids
-
     spark = emb.sparkSession
     maxp = max(nprobes)
-    m = len(codebooks)
-    kk = len(codebooks[0])
 
     qrows = [
         (r[query_id_col], [float(x) for x in r[query_vec_col]])
@@ -524,21 +503,7 @@ def ivfpq_batch_topk(
         [(qid, qv) for qid, qv in qrows],
         f"{query_id_col} {qid_type}, _qvec array<double>",
     )
-    csnap = F.transform(
-        F.col("centroid"), lambda c: F.round(c, 9).cast("decimal(15,9)")
-    )
-    qsnap = F.transform(
-        F.col("_qvec"), lambda x: F.round(x, 9).cast("decimal(15,9)")
-    )
-    sqd = F.aggregate(
-        F.zip_with(
-            csnap, qsnap, lambda a, b: ((a - b) * (a - b)).cast(
-                "decimal(38,18)"
-            )
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
+    sqd = exact_sqdist(F.col("centroid"), F.col("_qvec"))
     wc = Window.partitionBy(query_id_col).orderBy(F.col("_d"), F.col("cell"))
     cells = (
         qb.crossJoin(F.broadcast(cent))
@@ -548,27 +513,10 @@ def ivfpq_batch_topk(
         .select(query_id_col, "cell", "cell_rank")
     )
 
-    # per-query flat ADC LUT (m·k partial squared distances), shipped as
-    # one literal map keyed by query id — model-sized: B × m × k doubles
-    lut_entries = []
-    for qid, qv in qrows:
-        flat = []
-        for s, cb in enumerate(codebooks):
-            d_sub = len(cb[0])
-            qs = qv[s * d_sub : (s + 1) * d_sub]
-            for c in cb:
-                d = 0.0
-                for a, b in zip(qs, c):
-                    d = d + (float(a) - float(b)) * (float(a) - float(b))
-                flat.append(d)
-        lut_entries += [F.lit(qid), F.lit([float(v) for v in flat])]
-    lutmap = F.create_map(*lut_entries)
-
     cand = emb.join(F.broadcast(cells), emb[cell_col] == F.col("cell"))
     if exclude_self:
         cand = cand.filter(F.col(id_col) != F.col(query_id_col))
     cand = cand.select(id_col, vec_col, query_id_col, "cell_rank")
-    lut_arr = F.element_at(lutmap, F.col(query_id_col))
     enc = cand.select(
         F.col(id_col),
         F.col(query_id_col),
@@ -578,13 +526,12 @@ def ivfpq_batch_topk(
             for s, c in enumerate(_code_cols(codebooks, vec_col))
         ],
     )
-    terms = [
-        F.element_at(lut_arr, F.lit(s * kk) + F.col(f"code_{s}") + 1)
-        for s in range(m)
-    ]
-    dist = terms[0]
-    for t in terms[1:]:
-        dist = dist + t
+    # per-query flat ADC LUT, shipped as one literal map keyed by query
+    # id — model-sized: B × m × k doubles
+    dist = _lut_dist(
+        [(qid, _adc_lut(codebooks, qv)) for qid, qv in qrows],
+        query_id_col, len(codebooks), len(codebooks[0]),
+    )
     scored = enc.withColumn("adc_dist", F.round(dist, 6))
 
     probes = spark.createDataFrame(
@@ -655,9 +602,6 @@ def ivfpq_residual_topk(
     ``codebooks`` (optional) bypasses the in-call residual ``pq_fit`` with
     an already-fitted model — the registry memoizes the fit per dataset
     so repeated audit invocations time the serve path, not Lloyd's."""
-    from .caching import tracked_persist
-    from .similarity import ivf_cell_centroids, ivf_probe_cells
-
     # persisted: the nlist-row centroid table feeds the probe ranking,
     # the driver-side cmap fetch, and the candidate residual join —
     # without the cache the corpus-wide centroid aggregation ran up to
@@ -676,11 +620,6 @@ def ivfpq_residual_topk(
             ),
             m=m, k=k, n_iter=n_iter,
         )
-    books = codebooks
-    # LUT stride derives from the model itself — a caller-supplied
-    # codebook with a different k than the fit params must not skew the
-    # element_at indexing below
-    m, k = len(books), len(books[0])
     probes = ivf_probe_cells(
         emb, query_id, nprobe, id_col=id_col, vec_col=vec_col,
         cell_col=cell_col, cents=cents,
@@ -690,20 +629,14 @@ def ivfpq_residual_topk(
         r["cell"]: [float(v) for v in r["centroid"]]
         for r in cents.filter(F.col("cell").isin(probed)).collect()
     }
-    lut_entries = []
-    for c in probed:
-        qres = [float(a) - b for a, b in zip(query, cmap[c])]
-        flat = []
-        for s, cb in enumerate(books):
-            d_sub = len(cb[0])
-            qs = qres[s * d_sub : (s + 1) * d_sub]
-            for code_centroid in cb:
-                d = 0.0
-                for a, b in zip(qs, code_centroid):
-                    d = d + (a - b) * (a - b)
-                flat.append(d)
-        lut_entries += [F.lit(c), F.lit([float(v) for v in flat])]
-    lutmap = F.create_map(*lut_entries)
+    # the query residual differs per probed cell, so the LUT is keyed by
+    # cell; its stride derives from the model itself — a caller-supplied
+    # codebook with a different k than the fit params must not skew it
+    qres = {c: [float(a) - b for a, b in zip(query, cmap[c])] for c in probed}
+    dist = _lut_dist(
+        [(c, _adc_lut(codebooks, qres[c])) for c in probed],
+        cell_col, len(codebooks), len(codebooks[0]),
+    )
 
     cand = emb.join(
         F.broadcast(probes), emb[cell_col] == F.col("cell")
@@ -717,17 +650,9 @@ def ivfpq_residual_topk(
         F.col(cell_col),
         *[
             c.alias(f"code_{s}")
-            for s, c in enumerate(_code_cols(books, vec_col))
+            for s, c in enumerate(_code_cols(codebooks, vec_col))
         ],
     )
-    lut_arr = F.element_at(lutmap, F.col(cell_col))
-    terms = [
-        F.element_at(lut_arr, F.lit(s * k) + F.col(f"code_{s}") + 1)
-        for s in range(m)
-    ]
-    dist = terms[0]
-    for t in terms[1:]:
-        dist = dist + t
     return (
         enc.withColumn("adc_dist", F.round(dist, 6))
         .orderBy("adc_dist", id_col)
@@ -766,21 +691,7 @@ def ivfpq_delta_index(
     """
     from pyspark.sql import Window
 
-    csnap = F.transform(
-        F.col("centroid"), lambda c: F.round(c, 9).cast("decimal(15,9)")
-    )
-    vsnap = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double"), 9).cast("decimal(15,9)"),
-    )
-    sqd = F.aggregate(
-        F.zip_with(
-            csnap, vsnap,
-            lambda a, b: ((a - b) * (a - b)).cast("decimal(38,18)"),
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
+    sqd = exact_sqdist(F.col("centroid"), F.col(vec_col))
     w = Window.partitionBy(id_col).orderBy(F.col("_d"), F.col("cell"))
     assigned = (
         new_emb.crossJoin(F.broadcast(cents))  # nlist-row centroid table
@@ -830,8 +741,7 @@ def ivfpq_incremental_topk(
     anti-join broadcasts the delta's id column (batch-sized) and is a
     no-op under the append-log discipline that guarantees disjoint ids.
     """
-    from .caching import tracked_persist
-    from .similarity import ivf_cell_centroids
+    from pyspark.sql import Window
 
     # model-sized (nlist rows) but consumed twice: probe ranking below
     # and the delta assignment — persist so the corpus-wide centroid
@@ -840,23 +750,7 @@ def ivfpq_incremental_topk(
         ivf_cell_centroids(emb, cell_col=cell_col, vec_col=vec_col)
     )
 
-    qarr = F.lit([float(x) for x in query])
-    csnap = F.transform(
-        F.col("centroid"), lambda c: F.round(c, 9).cast("decimal(15,9)")
-    )
-    qsnap = F.transform(
-        qarr, lambda x: F.round(x, 9).cast("decimal(15,9)")
-    )
-    sqd = F.aggregate(
-        F.zip_with(
-            csnap, qsnap,
-            lambda a, b: ((a - b) * (a - b)).cast("decimal(38,18)"),
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
-    from pyspark.sql import Window
-
+    sqd = exact_sqdist(F.col("centroid"), F.lit([float(x) for x in query]))
     wc = Window.orderBy(F.col("_d"), F.col("cell"))  # nlist rows: global ok
     probes = (
         cents.select("cell", sqd.alias("_d"))
@@ -982,23 +876,9 @@ def ivfpq_incremental_rerank_topk(
         F.broadcast(new_emb.select(id_col)), id_col, "left_anti"
     ).unionByName(new_emb.select(id_col, vec_col))
     cand = uni.join(F.broadcast(sl), id_col, "left_semi")
-    xd = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double"), 9).cast("decimal(15,9)"),
-    )
-    # snap the query via Spark's round (HALF_UP) — Python's round() is
-    # half-even and would diverge from the SQL oracle on exact ties
-    qsnap = F.transform(
-        F.lit([float(x) for x in query]),
-        lambda x: F.round(x.cast("double"), 9).cast("decimal(15,9)"),
-    )
-    dexact = F.aggregate(
-        F.zip_with(
-            xd, qsnap, lambda a, b: ((a - b) * (a - b)).cast("decimal(38,18)")
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
+    # the query snaps in Spark (HALF_UP) — Python's round() is half-even
+    # and would diverge from the SQL oracle on exact ties
+    dexact = exact_sqdist(F.col(vec_col), F.lit([float(x) for x in query]))
     return (
         cand.select(F.col(id_col), dexact.alias("_de"))
         .orderBy(F.col("_de"), F.col(id_col))
@@ -1139,8 +1019,6 @@ def ivfpq_segmented_topk(
     ``PartitionFilters`` carries the cell predicate, ``ReadSchema`` has
     no vector column). Deleted ids drop via one broadcast anti-join
     against the version's tombstone table."""
-    from .similarity import ivf_probe_cells
-
     _, segs, tomb = current_segments(spark, root, "ivfpq_segmented_topk")
     probes = [
         r["cell"]
@@ -1206,8 +1084,6 @@ def ivfpq_publish_residual(
     (4-byte codes, cell-directory pruning) at residual encoding's lower
     distortion (committed audits: residual beats raw at every SF at
     identical code size). Returns ``(version path, fitted codebooks)``."""
-    from .similarity import ivf_cell_centroids
-
     # persisted: cents is read by the residual join AND written out as
     # the version table; res feeds the (iterative) fit and the codes
     # projection — without the caches the centroid aggregation +
@@ -1267,35 +1143,15 @@ def ivfpq_residual_persisted_topk(
         int(r["cell"]): [float(v) for v in r["centroid"]]
         for r in cent_rows
     }
-    dists = []
-    for c, cv in cmap.items():
-        d = 0.0
-        for a, b in zip(query, cv):
-            d = d + (float(a) - b) * (float(a) - b)
-        dists.append((d, c))
-    probed = [c for _d, c in sorted(dists)[:nprobe]]
-    m, kk = len(codebooks), len(codebooks[0])
-    lut_entries = []
-    for c in probed:
-        qres = [float(a) - b for a, b in zip(query, cmap[c])]
-        flat = []
-        for s, cb in enumerate(codebooks):
-            d_sub = len(cb[0])
-            qs = qres[s * d_sub : (s + 1) * d_sub]
-            for code_centroid in cb:
-                d = 0.0
-                for a, b in zip(qs, code_centroid):
-                    d = d + (a - b) * (a - b)
-                flat.append(d)
-        lut_entries += [F.lit(c), F.lit([float(v) for v in flat])]
-    lut_arr = F.element_at(F.create_map(*lut_entries), F.col("cell"))
-    terms = [
-        F.element_at(lut_arr, F.lit(s * kk) + F.col(f"code_{s}") + 1)
-        for s in range(m)
-    ]
-    dist = terms[0]
-    for t in terms[1:]:
-        dist = dist + t
+    # the probe distances are the one-codebook LUT over the centroids
+    cells = list(cmap)
+    dists = _adc_lut([[cmap[c] for c in cells]], query)
+    probed = [c for _d, c in sorted(zip(dists, cells))[:nprobe]]
+    qres = {c: [float(a) - b for a, b in zip(query, cmap[c])] for c in probed}
+    dist = _lut_dist(
+        [(c, _adc_lut(codebooks, qres[c])) for c in probed],
+        "cell", len(codebooks), len(codebooks[0]),
+    )
     return _code_topk(
         spark, root, segs, tomb, probed, query_id, dist, topk, id_col
     )

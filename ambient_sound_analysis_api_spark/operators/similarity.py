@@ -30,6 +30,59 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def snap9(x: Column) -> Column:
+    """Snap a number to DECIMAL(15,9) (HALF_UP at 9 places, via double) —
+    the repo-wide cross-engine snap applied before any exact-decimal
+    arithmetic."""
+    return F.round(x.cast("double"), 9).cast("decimal(15,9)")
+
+
+def exact_sqdist(a: Column, b: Column) -> Column:
+    """Exact squared-L2 between two numeric arrays: each element snapped
+    by :func:`snap9`, squared differences in DECIMAL(38,18), summed
+    exactly. Decimal addition is associative, so the distance — and any
+    ranking on it — is a pure function of the values: the SQL oracle's
+    unordered ``GROUP BY`` sum reproduces it bit-for-bit, where a double
+    fold would differ by an ulp on near-ties."""
+    return F.aggregate(
+        F.zip_with(
+            F.transform(a, snap9),
+            F.transform(b, snap9),
+            lambda x, y: ((x - y) * (x - y)).cast("decimal(38,18)"),
+        ),
+        F.lit(0).cast("decimal(38,18)"),
+        lambda acc, v: (acc + v).cast("decimal(38,18)"),
+    )
+
+
+def exact_topk(
+    vecs: DataFrame,
+    query_id,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The exact top-``k`` ids nearest the in-table vector ``query_id``
+    by :func:`exact_sqdist` (the query row excluded, id tie-break) — the
+    baseline every ANN recall readout counts hits against. Returns
+    ``(id_col, _hit)`` with ``_hit`` a literal ``1L``, so a left join from
+    the approximate result sums hits with ``coalesce(_hit, 0)``."""
+    q = vecs.filter(F.col(id_col) == query_id).select(
+        F.col(vec_col).alias("_qv")
+    )
+    return (
+        vecs.filter(F.col(id_col) != query_id)
+        .crossJoin(F.broadcast(q))
+        .select(
+            F.col(id_col),
+            exact_sqdist(F.col(vec_col), F.col("_qv")).alias("_de"),
+        )
+        .orderBy(F.col("_de"), F.col(id_col))
+        .limit(k)
+        .select(F.col(id_col), F.lit(1).cast("long").alias("_hit"))
+    )
+
+
 def plane_projection(vec: Column, plane: Column) -> Column:
     """Exact-decimal projection of ``vec`` onto a small-integer ``plane``
     (weights in {-1, 0, +1}) — the SIGN decision of hyperplane LSH.
@@ -44,10 +97,7 @@ def plane_projection(vec: Column, plane: Column) -> Column:
     term = F.zip_with(
         vec,
         plane,
-        lambda x, w: (
-            F.round(x.cast("double"), 9).cast("decimal(15,9)")
-            * w.cast("decimal(2,0)")
-        ).cast("decimal(28,9)"),
+        lambda x, w: (snap9(x) * w.cast("decimal(2,0)")).cast("decimal(28,9)"),
     )
     zero = F.lit(0).cast("decimal(28,9)")
     return F.aggregate(

@@ -11211,29 +11211,7 @@ def q_emb_ivfpq_incremental_recall(
     ).select("vec_id")
 
     uni = emb.select("vec_id", "embedding").unionByName(new)
-    xd = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double"), 9).cast("decimal(15,9)"),
-    )
-    base = uni.select(F.col("vec_id"), xd.alias("_xd"))
-    qd = base.filter(F.col("vec_id") == qid).select(F.col("_xd").alias("_qd"))
-    dexact = F.aggregate(
-        F.zip_with(
-            F.col("_xd"),
-            F.col("_qd"),
-            lambda a, b: ((a - b) * (a - b)).cast("decimal(38,18)"),
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
-    exact = (
-        base.filter(F.col("vec_id") != qid)
-        .crossJoin(F.broadcast(qd))
-        .select(F.col("vec_id"), dexact.alias("_de"))
-        .orderBy(F.col("_de"), F.col("vec_id"))
-        .limit(10)
-        .select(F.col("vec_id"), F.lit(1).cast("long").alias("_hit"))
-    )
+    exact = similarity.exact_topk(uni, qid, 10)
     return top.join(F.broadcast(exact), "vec_id", "left").agg(
         F.sum(F.coalesce("_hit", F.lit(0))).alias("n_hits"),
     ).select(
@@ -13212,29 +13190,7 @@ def q_emb_ivfpq_incremental_recall_gate(
     ).select("vec_id")
 
     uni = emb.select("vec_id", "embedding").unionByName(new)
-    xd = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double"), 9).cast("decimal(15,9)"),
-    )
-    base = uni.select(F.col("vec_id"), xd.alias("_xd"))
-    qd = base.filter(F.col("vec_id") == qid).select(F.col("_xd").alias("_qd"))
-    dexact = F.aggregate(
-        F.zip_with(
-            F.col("_xd"),
-            F.col("_qd"),
-            lambda a, b: ((a - b) * (a - b)).cast("decimal(38,18)"),
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
-    exact = (
-        base.filter(F.col("vec_id") != qid)
-        .crossJoin(F.broadcast(qd))
-        .select(F.col("vec_id"), dexact.alias("_de"))
-        .orderBy(F.col("_de"), F.col("vec_id"))
-        .limit(10)
-        .select(F.col("vec_id"), F.lit(1).cast("long").alias("_hit"))
-    )
+    exact = similarity.exact_topk(uni, qid, 10)
     return top.join(F.broadcast(exact), "vec_id", "left").agg(
         F.sum(F.coalesce("_hit", F.lit(0))).alias("n_hits"),
     ).select(
@@ -14487,22 +14443,6 @@ def _clustered_fit(spark: SparkSession, sf_dir: str, skew: bool) -> tuple:
     return cent, ce
 
 
-def _snap9(col: Column) -> Column:
-    return F.round(col, 9).cast("decimal(15,9)")
-
-
-def _snap9_sqdist(a: Column, b: Column) -> Column:
-    """Exact decimal squared-L2 between two pre-snapped decimal arrays —
-    order-independent, so both engines agree bit-for-bit."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: ((x - y) * (x - y)).cast("decimal(38,18)")
-        ),
-        F.lit(0).cast("decimal(38,18)"),
-        lambda acc, v: (acc + v).cast("decimal(38,18)"),
-    )
-
-
 @register(
     "emb_ivf_clustered_recall_gate",
     f"""
@@ -14574,13 +14514,10 @@ def q_emb_ivf_clustered_recall_gate(
 
     cent, ce = _clustered_fit(spark, sf_dir, skew=False)
     qid = int(ce.agg(F.min("vec_id")).collect()[0][0])
-    ced = tracked_persist(
-        ce.select(
-            "vec_id",
-            F.transform(F.col("embedding"), _snap9).alias("_xd"),
-        )
+    ced = tracked_persist(ce.select("vec_id", "embedding"))
+    qd = ced.filter(F.col("vec_id") == qid).select(
+        F.col("embedding").alias("_qd")
     )
-    qd = ced.filter(F.col("vec_id") == qid).select(F.col("_xd").alias("_qd"))
     # cell probe: rank the 8 fitted centroids by exact decimal distance
     # to the query (model-sized — mirrors the oracle's cdist CTE)
     centdf = spark.createDataFrame(
@@ -14591,16 +14528,14 @@ def q_emb_ivf_clustered_recall_gate(
         centdf.crossJoin(F.broadcast(qd))
         .select(
             "cluster",
-            _snap9_sqdist(
-                F.transform(F.col("m"), _snap9), F.col("_qd")
-            ).alias("_d"),
+            similarity.exact_sqdist(F.col("m"), F.col("_qd")).alias("_d"),
         )
         .orderBy("_d", "cluster")
         .limit(2)
     )
     probed = [int(r["cluster"]) for r in probes.collect()]
     assigned = kmeans_predict(ce, cent)
-    dexact = _snap9_sqdist(F.col("_xd"), F.col("_qd"))
+    dexact = similarity.exact_sqdist(F.col("embedding"), F.col("_qd"))
     cand = (
         ced.join(
             assigned.filter(F.col("cluster").isin(probed)).select("vec_id"),
@@ -14613,15 +14548,8 @@ def q_emb_ivf_clustered_recall_gate(
         .limit(10)
         .select("vec_id")
     )
-    exact = (
-        ced.filter(F.col("vec_id") != qid)
-        .crossJoin(F.broadcast(qd))
-        .select("vec_id", dexact.alias("_d"))
-        .orderBy("_d", "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(True).alias("_hit"))
-    )
-    hits = F.sum(F.when(F.col("_hit"), 1).otherwise(0))
+    exact = similarity.exact_topk(ced, qid, 10)
+    hits = F.sum(F.coalesce("_hit", F.lit(0)))
     return cand.join(F.broadcast(exact), "vec_id", "left").agg(
         hits.cast("bigint").alias("n_hits"),
         (hits.cast("double") / F.lit(10.0)).alias("recall_at_10"),
@@ -15415,19 +15343,8 @@ def q_emb_ivfpq_clustered_adc_audit(
     top = ivfpq_topk(
         cec, books, query, qid, k=10, nprobe=2, cell_col="cluster"
     ).select("vec_id")
-    ced = ce.select(
-        "vec_id", F.transform(F.col("embedding"), _snap9).alias("_xd")
-    )
-    qd = ced.filter(F.col("vec_id") == qid).select(F.col("_xd").alias("_qd"))
-    exact = (
-        ced.filter(F.col("vec_id") != qid)
-        .crossJoin(F.broadcast(qd))
-        .select("vec_id", _snap9_sqdist(F.col("_xd"), F.col("_qd")).alias("_d"))
-        .orderBy("_d", "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(True).alias("_hit"))
-    )
-    hits = F.sum(F.when(F.col("_hit"), 1).otherwise(0))
+    exact = similarity.exact_topk(ce, qid, 10)
+    hits = F.sum(F.coalesce("_hit", F.lit(0)))
     return top.join(F.broadcast(exact), "vec_id", "left").agg(
         hits.cast("bigint").alias("n_hits"),
         (hits.cast("double") / F.lit(10.0)).alias("recall_at_10"),
@@ -15520,21 +15437,8 @@ def q_emb_ivfpq_residual_adc_audit(
         cec, query, qid, topk=10, nprobe=2, cell_col="cluster",
         codebooks=books,
     ).select("vec_id")
-    ced = ce.select(
-        "vec_id", F.transform(F.col("embedding"), _snap9).alias("_xd")
-    )
-    qd = ced.filter(F.col("vec_id") == qid).select(F.col("_xd").alias("_qd"))
-    exact = (
-        ced.filter(F.col("vec_id") != qid)
-        .crossJoin(F.broadcast(qd))
-        .select(
-            "vec_id", _snap9_sqdist(F.col("_xd"), F.col("_qd")).alias("_d")
-        )
-        .orderBy("_d", "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(True).alias("_hit"))
-    )
-    hits = F.sum(F.when(F.col("_hit"), 1).otherwise(0))
+    exact = similarity.exact_topk(ce, qid, 10)
+    hits = F.sum(F.coalesce("_hit", F.lit(0)))
     return top.join(F.broadcast(exact), "vec_id", "left").agg(
         hits.cast("bigint").alias("n_hits"),
         (hits.cast("double") / F.lit(10.0)).alias("recall_at_10"),
@@ -15624,24 +15528,9 @@ def q_emb_ivfpq_code_budget_curve(
     assigned = kmeans_predict(ce, cent).select("vec_id", "cluster")
     cec = ce.select("vec_id", "embedding").join(assigned, "vec_id")
     qid, query = _min_id_vector(ce)
-    ced = ce.select(
-        "vec_id", F.transform(F.col("embedding"), _snap9).alias("_xd")
-    )
-    qd = ced.filter(F.col("vec_id") == qid).select(F.col("_xd").alias("_qd"))
     # 10-row barrier: the exact baseline is joined once per swept budget
-    exact = (
-        ced.filter(F.col("vec_id") != qid)
-        .crossJoin(F.broadcast(qd))
-        .select(
-            "vec_id", _snap9_sqdist(F.col("_xd"), F.col("_qd")).alias("_d")
-        )
-        .orderBy("_d", "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(True).alias("_hit"))
-        .coalesce(1)
-        .localCheckpoint()
-    )
-    hits = F.sum(F.when(F.col("_hit"), 1).otherwise(0))
+    exact = similarity.exact_topk(ce, qid, 10).coalesce(1).localCheckpoint()
+    hits = F.sum(F.coalesce("_hit", F.lit(0)))
     outs = []
     for m in (8, 16):
         books = _clustered_respq_books(sf_dir, cec, m)

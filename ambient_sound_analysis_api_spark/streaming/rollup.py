@@ -26,7 +26,7 @@ from pyspark.sql.utils import AnalysisException
 
 from ..operators.aggregations import daily_partials
 from ..operators.atomic_swap import (
-    read_store, recover_path, staging_path, swap_in,
+    path_exists, read_store, recover_path, staging_path, swap_in,
 )
 
 _SUM_T = "decimal(38,2)"
@@ -40,6 +40,8 @@ def last_merged_batch(spark: SparkSession, store_path: str) -> int:
     replayed batch (the staged ``_meta`` travels with the staged parquet,
     so a recovered staging dir still carries its batch id)."""
     recover_path(spark, store_path)
+    if not path_exists(spark, f"{store_path}/_meta"):
+        return -1
     try:
         row = spark.read.json(f"{store_path}/_meta").first()
         return int(row["batch_id"])

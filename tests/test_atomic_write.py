@@ -1,15 +1,40 @@
 """The store module (operators/atomic_swap.py): the staging + atomic-swap
 primitive the streaming rollup and HLL stores rewrite through (the staged
 copy replaces the table via renames, and no staging or old copy is left
-behind), the batch admit's lost-race branch and its batch listing, and a
-guard that keeps the filesystem protocol in that one module.
+behind), the batch admit's lost-race branch and its batch listing, the
+never-written store read, and source guards that keep the filesystem
+protocol in that one module and each vector-distance kernel in one place.
 """
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 
 from ambient_sound_analysis_api_spark.operators import atomic_swap
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "ambient_sound_analysis_api_spark",
+)
+
+
+def _package_modules():
+    """(path relative to the package, AST, ids of docstring constants) for
+    every package module."""
+    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.FunctionDef,
+                                 ast.AsyncFunctionDef, ast.ClassDef))
+            and node.body and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        yield os.path.relpath(path, PKG), tree, docstrings
 
 
 def _no_staging_leftovers(tmp_path):
@@ -71,28 +96,10 @@ def test_store_protocol_lives_in_one_module():
     """Only operators/atomic_swap.py touches the filesystem protocol: no
     other package module names ``_fs_and_path`` or ``org.apache.hadoop``
     in code, or calls ``os.rename``. Needs no SparkSession."""
-    import ast
-    import glob
-
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "ambient_sound_analysis_api_spark",
-    )
     offenders = []
-    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
-        rel = os.path.relpath(path, pkg)
+    for rel, tree, docstrings in _package_modules():
         if rel == os.path.join("operators", "atomic_swap.py"):
             continue
-        with open(path) as fh:
-            tree = ast.parse(fh.read())
-        docstrings = {
-            id(node.body[0].value)
-            for node in ast.walk(tree)
-            if isinstance(node, (ast.Module, ast.FunctionDef,
-                                 ast.AsyncFunctionDef, ast.ClassDef))
-            and node.body and isinstance(node.body[0], ast.Expr)
-            and isinstance(node.body[0].value, ast.Constant)
-        }
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 hit = node.id == "_fs_and_path"
@@ -117,3 +124,53 @@ def test_store_protocol_lives_in_one_module():
     assert offenders == [], "store protocol outside atomic_swap.py: " + ", ".join(
         f"{rel}:{line}" for rel, line in sorted(offenders)
     )
+
+
+def test_vector_kernels_live_in_one_module_each():
+    """The exact-decimal squared-L2 (its ``decimal(38,18)`` accumulator)
+    is written only in operators/similarity.py, and the only Lloyd's
+    update loop (a ``for``/``while`` whose body calls ``decimal_mean``)
+    is ``pq.pq_fit``. Needs no SparkSession."""
+    offenders = []
+    for rel, tree, docstrings in _package_modules():
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+                and "decimal(38,18)" in node.value
+                and rel != os.path.join("operators", "similarity.py")
+            ):
+                offenders.append((rel, node.lineno, "decimal(38,18)"))
+            if (
+                isinstance(node, (ast.For, ast.While))
+                and rel != os.path.join("operators", "pq.py")
+                and any(
+                    isinstance(n, ast.Call)
+                    and "decimal_mean"
+                    in (getattr(n.func, "id", None), getattr(n.func, "attr", None))
+                    for n in ast.walk(node)
+                )
+            ):
+                offenders.append((rel, node.lineno, "Lloyd's loop"))
+    assert offenders == [], "vector kernel copied: " + ", ".join(
+        f"{rel}:{line} ({what})" for rel, line, what in sorted(offenders)
+    )
+
+
+def test_never_written_store_is_not_read(spark, tmp_path, monkeypatch):
+    """A store that was never written reads as None (``read_store``) and
+    batch -1 (``last_merged_batch``) without any ``spark.read``: reading a
+    missing path makes Spark log a ~60-line FileNotFoundException WARN."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from ambient_sound_analysis_api_spark.streaming.rollup import last_merged_batch
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("spark.read of a store that does not exist")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", refuse)
+    monkeypatch.setattr(DataFrameReader, "json", refuse)
+    store = str(tmp_path / "store")
+    assert atomic_swap.read_store(spark, store) is None
+    assert last_merged_batch(spark, store) == -1
