@@ -115,7 +115,7 @@ def recover_path(spark: SparkSession, path: str) -> str | None:
     newest complete copy (by modification time) is renamed back into
     place. Preferring the newest is correct for both streaming stores: a
     complete staging dir is the post-merge result (rollup's staged
-    ``_meta`` batch id travels with it, so a replayed batch is still
+    ``_batch_id`` file travels with it, so a replayed batch is still
     detected; the HLL store is idempotent by max-merge either way), and
     when the current swap's staging is incomplete the ``__old__`` copy
     wins, after which the at-least-once replay of the in-flight batch
@@ -257,10 +257,11 @@ def _list_index_manifests(spark, root: str) -> "list[tuple[int, str]]":
     return out
 
 
-def _read_small_file(spark, path: str) -> str:
-    """Read a small FS file (a manifest) through the JVM FileSystem API —
-    py4j passes byte arrays by value, so the copy-free route is commons-io
-    ``IOUtils.toString`` on the JVM side."""
+def read_small_file(spark, path: str) -> str:
+    """Read a small FS file (a manifest, a rollup store's batch id)
+    through the JVM FileSystem API — py4j passes byte arrays by value, so
+    the copy-free route is commons-io ``IOUtils.toString`` on the JVM
+    side."""
     fs, p = _fs_and_path(spark, path)
     stream = fs.open(p)
     try:
@@ -271,9 +272,10 @@ def _read_small_file(spark, path: str) -> str:
         stream.close()
 
 
-def _write_small_file(spark, path: str, text: str) -> None:
-    """Write a small FS file (segments.json) through the JVM FileSystem
-    API — same route as the manifest writes in :func:`publish_version`."""
+def write_small_file(spark, path: str, text: str) -> None:
+    """Write a small FS file (segments.json, a rollup store's batch id)
+    through the JVM FileSystem API — same route as the manifest writes in
+    :func:`publish_version`."""
     fs, p = _fs_and_path(spark, path)
     out = fs.create(p, False)
     try:
@@ -296,7 +298,7 @@ def resolve_version(spark, root: str) -> "tuple[int, str] | None":
     if not manifests:
         return None
     seq, mpath = manifests[-1]
-    doc = json.loads(_read_small_file(spark, mpath))
+    doc = json.loads(read_small_file(spark, mpath))
     return seq, f"{root}/{doc['version_dir']}"
 
 
@@ -376,7 +378,7 @@ def publish_version(
         if mseq > cutoff:
             continue
         try:
-            vdir = json.loads(_read_small_file(spark, mpath))["version_dir"]
+            vdir = json.loads(read_small_file(spark, mpath))["version_dir"]
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{vdir}"), True)
         except Exception:  # pragma: no cover - GC is best-effort
             pass
@@ -387,7 +389,7 @@ def publish_version(
     live = set()
     for mseq, mpath in _list_index_manifests(spark, root):
         try:
-            live.add(json.loads(_read_small_file(spark, mpath))["version_dir"])
+            live.add(json.loads(read_small_file(spark, mpath))["version_dir"])
         except Exception:  # pragma: no cover
             pass
     for st in froot.listStatus(rpath):
@@ -424,11 +426,11 @@ def gc_unreferenced_segments(spark, root: str) -> None:
     live: set[str] = set()
     try:
         for _seq, mpath in _list_index_manifests(spark, root):
-            doc = json.loads(_read_small_file(spark, mpath))
+            doc = json.loads(read_small_file(spark, mpath))
             sj_path = f"{root}/{doc['version_dir']}/segments.json"
             if not path_exists(spark, sj_path):
                 continue
-            sj = _read_small_file(spark, sj_path)
+            sj = read_small_file(spark, sj_path)
             live |= set(json.loads(sj)["segments"])
     except Exception:  # pragma: no cover - transient read failure
         return
@@ -467,7 +469,7 @@ def publish_segments(
             tombstones.write.mode("errorifexists").parquet(
                 f"{vpath}/tombstones"
             )
-        _write_small_file(
+        write_small_file(
             spark, f"{vpath}/segments.json",
             json.dumps({"segments": sorted(seg_names)}),
         )
@@ -500,6 +502,6 @@ def current_segments(
         raise ValueError(f"{caller}: nothing published under {root}")
     vpath = cur[1]
     segs = json.loads(
-        _read_small_file(spark, f"{vpath}/segments.json")
+        read_small_file(spark, f"{vpath}/segments.json")
     )["segments"]
     return vpath, segs, _read_tombstones(spark, vpath)

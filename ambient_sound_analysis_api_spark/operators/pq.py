@@ -28,6 +28,7 @@ Scale shape:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -133,62 +134,74 @@ def pq_fit(
     # persisted: Lloyd's scans the fit input n_iter+1 times (seeding
     # collect + one encode/update pass per iteration). For a residual
     # fit the input is itself a centroid-aggregation + broadcast-join
-    # pipeline, which re-executed per pass before this cache.
-    emb = tracked_persist(emb)
-    first = emb.orderBy(id_col).limit(k).select(vec_col).collect()
-    if len(first) < k:
-        raise ValueError(f"need at least k={k} rows, got {len(first)}")
-    dim = len(first[0][0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    books = [
-        [
-            [float(x) for x in row[0][s * d_sub : (s + 1) * d_sub]]
-            for row in first
+    # pipeline, which re-executed per pass before this cache. The fit
+    # returns plain lists, so nothing lazy outlives it: a cache it made
+    # is released on return, and a caller's own cache is left alone.
+    owned = emb.storageLevel == StorageLevel.NONE
+    if owned:
+        emb = emb.persist()
+    try:
+        first = emb.orderBy(id_col).limit(k).select(vec_col).collect()
+        if len(first) < k:
+            raise ValueError(f"need at least k={k} rows, got {len(first)}")
+        dim = len(first[0][0])
+        if dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        d_sub = dim // m
+        books = [
+            [
+                [float(x) for x in row[0][s * d_sub : (s + 1) * d_sub]]
+                for row in first
+            ]
+            for s in range(m)
         ]
-        for s in range(m)
-    ]
-    for _ in range(n_iter):
-        codes = F.array(*_code_cols(books, vec_col))
-        # Materialize the per-row code array BEFORE exploding: Generate
-        # re-evaluates sibling projections per output element, so without
-        # the persist the m×k distance folds would re-run dim times per
-        # row (the classic explode/lambda recompute trap). From the cache
-        # the codes are a stored column — the explode just references it.
-        enc = tracked_persist(
-            emb.select(codes.alias("_codes"), F.col(vec_col).alias("_v"))
-        )
-        try:
-            ex = enc.select(
-                F.col("_codes"), F.posexplode(F.col("_v")).alias("pos", "x")
-            ).select(
-                (F.col("pos") / d_sub).cast("int").alias("s"),
-                F.element_at(
-                    F.col("_codes"), (F.col("pos") / d_sub).cast("int") + 1
-                ).alias("code"),
-                (F.col("pos") % d_sub).alias("i"),
-                F.col("x"),
-            )
-            stats = (
-                ex.groupBy("s", "code", "i")
-                .agg(
-                    decimal_mean(F.col("x"), scale=12, precision=32).alias("m")
+        for _ in range(n_iter):
+            codes = F.array(*_code_cols(books, vec_col))
+            # Materialize the per-row code array BEFORE exploding: Generate
+            # re-evaluates sibling projections per output element, so
+            # without the persist the m×k distance folds would re-run dim
+            # times per row (the classic explode/lambda recompute trap).
+            # From the cache the codes are a stored column — the explode
+            # just references it.
+            enc = emb.select(
+                codes.alias("_codes"), F.col(vec_col).alias("_v")
+            ).persist()
+            try:
+                ex = enc.select(
+                    F.col("_codes"),
+                    F.posexplode(F.col("_v")).alias("pos", "x"),
+                ).select(
+                    (F.col("pos") / d_sub).cast("int").alias("s"),
+                    F.element_at(
+                        F.col("_codes"), (F.col("pos") / d_sub).cast("int") + 1
+                    ).alias("code"),
+                    (F.col("pos") % d_sub).alias("i"),
+                    F.col("x"),
                 )
-                .collect()
-            )
-        finally:
-            enc.unpersist()
-        new = [[list(c) for c in cb] for cb in books]
-        seen = set()
-        for r in stats:
-            if (r["s"], r["code"]) not in seen:
-                seen.add((r["s"], r["code"]))
-                new[r["s"]][r["code"]] = [0.0] * d_sub
-        for r in stats:
-            new[r["s"]][r["code"]][r["i"]] = float(r["m"])
-        books = new
-    return books
+                stats = (
+                    ex.groupBy("s", "code", "i")
+                    .agg(
+                        decimal_mean(
+                            F.col("x"), scale=12, precision=32
+                        ).alias("m")
+                    )
+                    .collect()
+                )
+            finally:
+                enc.unpersist()
+            new = [[list(c) for c in cb] for cb in books]
+            seen = set()
+            for r in stats:
+                if (r["s"], r["code"]) not in seen:
+                    seen.add((r["s"], r["code"]))
+                    new[r["s"]][r["code"]] = [0.0] * d_sub
+            for r in stats:
+                new[r["s"]][r["code"]][r["i"]] = float(r["m"])
+            books = new
+        return books
+    finally:
+        if owned:
+            emb.unpersist()
 
 
 def pq_encode(

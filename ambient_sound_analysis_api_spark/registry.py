@@ -6299,26 +6299,18 @@ def q_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     zero numeric drift."""
     from .operators.aggregations import merge_partials_monthly
     from .operators.atomic_swap import read_store
-    from .streaming.rollup import incremental_rollup_query
+    from .streaming.rollup import merge_partials_batch
+    from .streaming.windows import drain
 
     ev = _events(spark, sf_dir).select("event_type", "ts", "value")
     root = tempfile.mkdtemp(prefix="roll_")
     try:
         src, store, ckpt = f"{root}/src", f"{root}/store", f"{root}/ckpt"
         ev.repartition(4).write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        drain(
+            spark, src, ev.schema,
+            lambda b, i: merge_partials_batch(spark, b, i, store), ckpt,
         )
-        q = (
-            incremental_rollup_query(spark, stream, store)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
         # eager localCheckpoint materializes the (months × types)-sized
         # readout so the finally below can reclaim the dataset-sized temp
         # tree (src + checkpoint + store) — previously leaked per run
@@ -9911,7 +9903,8 @@ def q_streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the incremental merge loses nothing."""
     from .operators import sketches as sk
     from .operators.atomic_swap import read_store
-    from .streaming.hll import hll_rollup_query
+    from .streaming.hll import merge_register_batch
+    from .streaming.windows import drain
 
     ev = (
         _events(spark, sf_dir)
@@ -9926,19 +9919,10 @@ def q_streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         src, store, ckpt = f"{root}/src", f"{root}/store", f"{root}/ckpt"
         ev.repartition(4).write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        drain(
+            spark, src, ev.schema,
+            lambda b, i: merge_register_batch(spark, b, i, store), ckpt,
         )
-        q = (
-            hll_rollup_query(spark, stream, store)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
         # eager localCheckpoint of the (days × types)-sized estimates, so
         # the finally reclaims the dataset-sized temp tree (no leak per run)
         return sk.hll_estimate_from_registers(
@@ -12592,7 +12576,8 @@ def q_streaming_dual_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import sketches as sk
     from .operators.aggregations import merge_partials_monthly
     from .operators.atomic_swap import read_store
-    from .streaming.dual import dual_rollup_query
+    from .streaming.dual import dual_store_merge_batch
+    from .streaming.windows import drain
 
     ev = _events(spark, sf_dir).select("event_type", "ts", "value", "user_id")
     root = tempfile.mkdtemp(prefix="dualroll_")
@@ -12600,19 +12585,11 @@ def q_streaming_dual_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, ckpt = f"{root}/src", f"{root}/ckpt"
         pstore, hstore = f"{root}/partials", f"{root}/hll"
         ev.repartition(4).write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        drain(
+            spark, src, ev.schema,
+            lambda b, i: dual_store_merge_batch(spark, b, i, pstore, hstore),
+            ckpt,
         )
-        q = (
-            dual_rollup_query(spark, stream, pstore, hstore)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
         monthly = merge_partials_monthly(read_store(spark, pstore))
         regs = read_store(spark, hstore)
         month_regs = (
@@ -13247,7 +13224,8 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rename-race proofs). Temp tree reclaimed in ``finally`` after an
     eager localCheckpoint of the (batch-sized) readout."""
     from .operators.similarity import ivf_cell_centroids
-    from .streaming.ann import read_streamed_codes, streamed_ann_ingest
+    from .streaming.ann import admit_embedding_batch, read_streamed_codes
+    from .streaming.windows import drain
 
     emb = _table(spark, sf_dir, "embeddings")
     books = _pq_books(sf_dir, emb)
@@ -13265,18 +13243,13 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         half = F.floor(F.col("vec_id") / 10) % 2
         new.filter(half == 0).coalesce(1).write.mode("append").parquet(src)
         new.filter(half == 1).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(new.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        drain(
+            spark, src, new.schema,
+            lambda b, i: admit_embedding_batch(
+                spark, b, i, store, cents, books
+            ),
+            ckpt,
         )
-        q = (
-            streamed_ann_ingest(spark, stream, store, cents, books)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return (
             read_streamed_codes(spark, store)
             .select(
@@ -15142,7 +15115,8 @@ def q_streaming_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash check the batch-equivalence proof: streamed admission ==
     one-shot tokenize. Temp tree reclaimed in ``finally`` after an eager
     localCheckpoint of the k-row readout."""
-    from .streaming.lexical import bm25_streamed_topk, streamed_lexical_ingest
+    from .streaming.lexical import admit_document_batch, bm25_streamed_topk
+    from .streaming.windows import drain
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
     root = tempfile.mkdtemp(prefix="stream_bm25_")
@@ -15151,18 +15125,10 @@ def q_streaming_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         half = F.col("doc_id") % 2
         docs.filter(half == 0).coalesce(1).write.mode("append").parquet(src)
         docs.filter(half == 1).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        drain(
+            spark, src, docs.schema,
+            lambda b, i: admit_document_batch(spark, b, i, store), ckpt,
         )
-        q = (
-            streamed_lexical_ingest(spark, stream, store)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return bm25_streamed_topk(
             spark, store, ["vector", "hash", "merge"], k=20
         ).localCheckpoint()
@@ -15595,8 +15561,9 @@ def q_streaming_bm25_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed takedown == batch delete == from-scratch build over the
     surviving corpus. The reference has no deletion surface (append-only
     S3 archive, SURVEY.md §4) — extension charter."""
-    from .streaming.lexical import bm25_streamed_topk, streamed_lexical_ingest
-    from .streaming.takedown import streamed_takedown_ingest
+    from .streaming.lexical import admit_document_batch, bm25_streamed_topk
+    from .streaming.takedown import admit_takedown_batch
+    from .streaming.windows import drain
 
     docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
     root = tempfile.mkdtemp(prefix="stream_bm25_td_")
@@ -15606,36 +15573,21 @@ def q_streaming_bm25_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         half = F.col("doc_id") % 2
         docs.filter(half == 0).coalesce(1).write.mode("append").parquet(src)
         docs.filter(half == 1).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        drain(
+            spark, src, docs.schema,
+            lambda b, i: admit_document_batch(spark, b, i, store), ckpt,
         )
-        q = (
-            streamed_lexical_ingest(spark, stream, store)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         # the takedown feed: two files -> two micro-batches (split on a
         # digit that varies within the id set - every id is = 3 mod 7)
         td = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
         thalf = F.floor(F.col("doc_id") / 7) % 2
         td.filter(thalf == 0).coalesce(1).write.mode("append").parquet(tsrc)
         td.filter(thalf == 1).coalesce(1).write.mode("append").parquet(tsrc)
-        tstream = (
-            spark.readStream.schema(td.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tsrc)
+        drain(
+            spark, tsrc, td.schema,
+            lambda b, i: admit_takedown_batch(spark, b, i, troot, "doc_id"),
+            tckpt,
         )
-        tq = (
-            streamed_takedown_ingest(spark, tstream, troot, "doc_id")
-            .option("checkpointLocation", tckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        tq.awaitTermination()
         return bm25_streamed_topk(
             spark, store, ["vector", "hash", "merge"], k=20,
             takedown_root=troot,
@@ -15685,8 +15637,9 @@ def q_streaming_ann_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     reclamation stays with ``ivfpq_compact_segments`` (stream admits
     verdicts; batch compaction reclaims bytes)."""
     from .operators.similarity import ivf_cell_centroids
-    from .streaming.ann import read_streamed_codes, streamed_ann_ingest
-    from .streaming.takedown import streamed_takedown_ingest
+    from .streaming.ann import admit_embedding_batch, read_streamed_codes
+    from .streaming.takedown import admit_takedown_batch
+    from .streaming.windows import drain
 
     emb = _table(spark, sf_dir, "embeddings")
     books = _pq_books(sf_dir, emb)
@@ -15702,35 +15655,23 @@ def q_streaming_ann_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         half = F.floor(F.col("vec_id") / 10) % 2
         new.filter(half == 0).coalesce(1).write.mode("append").parquet(src)
         new.filter(half == 1).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(new.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        drain(
+            spark, src, new.schema,
+            lambda b, i: admit_embedding_batch(
+                spark, b, i, store, cents, books
+            ),
+            ckpt,
         )
-        q = (
-            streamed_ann_ingest(spark, stream, store, cents, books)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         orig = F.col("vec_id") - 1_000_000
         td = new.filter(orig % 30 == 3).select("vec_id")
         thalf = F.floor((F.col("vec_id") - 1_000_000) / 30) % 2
         td.filter(thalf == 0).coalesce(1).write.mode("append").parquet(tsrc)
         td.filter(thalf == 1).coalesce(1).write.mode("append").parquet(tsrc)
-        tstream = (
-            spark.readStream.schema(td.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tsrc)
+        drain(
+            spark, tsrc, td.schema,
+            lambda b, i: admit_takedown_batch(spark, b, i, troot, "vec_id"),
+            tckpt,
         )
-        tq = (
-            streamed_takedown_ingest(spark, tstream, troot, "vec_id")
-            .option("checkpointLocation", tckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        tq.awaitTermination()
         return (
             read_streamed_codes(spark, store, takedown_root=troot)
             .select(

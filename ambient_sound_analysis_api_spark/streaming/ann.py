@@ -56,29 +56,6 @@ def admit_embedding_batch(
     return admit_batch(spark, store_root, batch_id, write)
 
 
-def streamed_ann_ingest(
-    spark: SparkSession,
-    stream: DataFrame,
-    store_root: str,
-    cents: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Attach the exactly-once admission sink to a streaming DataFrame of
-    new embeddings; returns the (unstarted) ``DataStreamWriter`` so
-    callers choose the trigger (``availableNow`` for catch-up runs,
-    processing-time for live feeds)."""
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        admit_embedding_batch(
-            spark, batch_df, batch_id, store_root, cents, codebooks,
-            id_col=id_col, vec_col=vec_col,
-        )
-
-    return stream.writeStream.foreachBatch(admit)
-
-
 def read_streamed_codes(
     spark: SparkSession,
     store_root: str,

@@ -13,9 +13,10 @@ complementary replay defenses and the sink orders them so every crash
 point is covered:
 
 1. **partials store first** — NOT idempotent (a re-merge double-counts),
-   so it is gated by the committed ``batch_id`` in ``_meta``
-   (``rollup.merge_partials_batch`` returns False on replay). Its own
-   rename window is covered by ``atomic_swap.recover_path``.
+   so it is gated by the committed batch id in the store's
+   ``_batch_id`` file (``rollup.merge_partials_batch`` returns False on
+   replay). Its own rename window is covered by
+   ``atomic_swap.recover_path``.
 2. **HLL register store second** — idempotent by algebra
    (``max(max(S,B),B) = max(S,B)``), so replaying the batch after ANY
    crash point — before its swap, inside its rename window, or after a
@@ -70,21 +71,3 @@ def dual_store_merge_batch(
     )
     hllmod.merge_register_batch(spark, hb, batch_id, hll_store, key=user_col)
     return merged
-
-
-def dual_rollup_query(
-    spark: SparkSession,
-    stream: DataFrame,
-    partials_store: str,
-    hll_store: str,
-    **kwargs,
-):
-    """Attach the dual-store merge sink to a streaming DataFrame; returns
-    the (unstarted) ``DataStreamWriter`` so callers choose the trigger."""
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        dual_store_merge_batch(
-            spark, batch_df, batch_id, partials_store, hll_store, **kwargs
-        )
-
-    return stream.writeStream.foreachBatch(merge)

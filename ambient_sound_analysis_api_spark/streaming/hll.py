@@ -57,14 +57,3 @@ def merge_register_batch(
     staged = staging_path(store_path)
     merged.write.parquet(staged)
     swap_in(spark, staged, store_path)
-
-
-def hll_rollup_query(spark: SparkSession, stream_df: DataFrame, store_path: str):
-    """writeStream builder: ``stream_df`` must carry (event_type, day, and
-    the distinct key column); each micro-batch folds into the register
-    store via ``merge_register_batch``."""
-    return stream_df.writeStream.foreachBatch(
-        lambda batch_df, batch_id: merge_register_batch(
-            spark, batch_df, batch_id, store_path
-        )
-    )

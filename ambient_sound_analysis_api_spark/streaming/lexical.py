@@ -55,19 +55,6 @@ def admit_document_batch(
     return admit_batch(spark, store_root, batch_id, write)
 
 
-def streamed_lexical_ingest(
-    spark: SparkSession, stream: DataFrame, store_root: str
-):
-    """Attach the exactly-once admission sink to a streaming DataFrame
-    of documents; returns the (unstarted) ``DataStreamWriter`` so
-    callers choose the trigger."""
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        admit_document_batch(spark, batch_df, batch_id, store_root)
-
-    return stream.writeStream.foreachBatch(admit)
-
-
 def bm25_streamed_topk(
     spark: SparkSession,
     store_root: str,

@@ -10,26 +10,28 @@ re-read; monthly or yearly rollups derive from the store.
 
 Exactly-once: ``foreachBatch`` is at-least-once on retry, and partial
 merging is NOT idempotent (a re-delivered batch would double-count), so
-the store carries the last merged ``batch_id`` in an underscore-prefixed
-``_meta`` subdir (invisible to parquet discovery) and the swap is the
-staging + atomic-rename protocol from ``operators/atomic_swap.py`` — the
-id and the data commit in the same rename, so a replayed batch is
+the store carries the last merged ``batch_id`` in a small ``_batch_id``
+file (underscore-prefixed, so parquet discovery skips it) and the swap is
+the staging + atomic-rename protocol from ``operators/atomic_swap.py`` —
+the id and the data commit in the same rename, so a replayed batch is
 detected and skipped and a crash mid-merge leaves the previous store
-intact.
+intact. The id file is written and read through the filesystem API, with
+no Spark job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.aggregations import daily_partials
 from ..operators.atomic_swap import (
-    path_exists, read_store, recover_path, staging_path, swap_in,
+    path_exists, read_small_file, read_store, recover_path, staging_path,
+    swap_in, write_small_file,
 )
 
 _SUM_T = "decimal(38,2)"
+_BATCH_ID = "_batch_id"
 
 
 def last_merged_batch(spark: SparkSession, store_path: str) -> int:
@@ -37,16 +39,13 @@ def last_merged_batch(spark: SparkSession, store_path: str) -> int:
     commit). Runs the same rename-window recovery as
     ``atomic_swap.read_store`` FIRST: this is the replay gate, and reading
     -1 off a mid-swap crash would both lose history and double-merge the
-    replayed batch (the staged ``_meta`` travels with the staged parquet,
-    so a recovered staging dir still carries its batch id)."""
+    replayed batch (the staged ``_batch_id`` file travels with the staged
+    parquet, so a recovered staging dir still carries its batch id)."""
     recover_path(spark, store_path)
-    if not path_exists(spark, f"{store_path}/_meta"):
+    meta = f"{store_path}/{_BATCH_ID}"
+    if not path_exists(spark, meta):
         return -1
-    try:
-        row = spark.read.json(f"{store_path}/_meta").first()
-        return int(row["batch_id"])
-    except (AnalysisException, TypeError):
-        return -1
+    return int(read_small_file(spark, meta))
 
 
 def merge_partials_batch(
@@ -82,33 +81,6 @@ def merge_partials_batch(
         )
     staging = staging_path(store_path)
     merged.write.parquet(staging)
-    spark.createDataFrame([(batch_id,)], "batch_id long").coalesce(1).write.json(
-        f"{staging}/_meta"
-    )
+    write_small_file(spark, f"{staging}/{_BATCH_ID}", str(batch_id))
     swap_in(spark, staging, store_path)
     return True
-
-
-def incremental_rollup_query(
-    spark: SparkSession,
-    stream: DataFrame,
-    store_path: str,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    val_col: str = "value",
-):
-    """Attach the merge sink to a streaming DataFrame; returns the
-    (unstarted) ``DataStreamWriter`` so callers choose the trigger."""
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        merge_partials_batch(
-            spark,
-            batch_df,
-            batch_id,
-            store_path,
-            key_col=key_col,
-            ts_col=ts_col,
-            val_col=val_col,
-        )
-
-    return stream.writeStream.foreachBatch(merge)

@@ -64,22 +64,6 @@ def admit_takedown_batch(
     return admit_batch(spark, takedown_root, batch_id, write)
 
 
-def streamed_takedown_ingest(
-    spark: SparkSession,
-    stream: DataFrame,
-    takedown_root: str,
-    id_col: str,
-):
-    """Attach the exactly-once takedown sink to a streaming DataFrame of
-    ids; returns the (unstarted) ``DataStreamWriter`` so callers choose
-    the trigger."""
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        admit_takedown_batch(spark, batch_df, batch_id, takedown_root, id_col)
-
-    return stream.writeStream.foreachBatch(admit)
-
-
 def read_streamed_takedowns(
     spark: SparkSession, takedown_root: str, id_col: str
 ) -> "DataFrame | None":

@@ -3,7 +3,9 @@
 The reference is batch-only over archived data (SURVEY.md §2.10), but its
 window mean (A3) maps onto a streaming ``groupBy(window(ts, ...))`` with a
 watermark for late hydrophone packets; :func:`run_available_now` drives
-these transforms over a batch source for the registry's streaming queries.
+these transforms over a batch source for the registry's streaming queries,
+and :func:`drain` is the one ``foreachBatch`` runner every stream-fed
+store (rollups, ANN/BM25 ingest, takedowns) runs through.
 """
 
 from __future__ import annotations
@@ -105,8 +107,7 @@ def run_available_now(
     src_dir = tempfile.mkdtemp(prefix=f"{name}_src_")
     try:
         batch_df.write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        stream = spark.readStream.schema(schema).parquet(src_dir)
+        stream = spark.readStream.schema(batch_df.schema).parquet(src_dir)
         q = (
             transform(stream)
             .writeStream.format("memory")
@@ -119,3 +120,27 @@ def run_available_now(
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
     return spark.table(name)
+
+
+def drain(spark, src: str, schema, on_batch, checkpoint: str) -> None:
+    """Run ``on_batch(batch_df, batch_id)`` over every file under ``src``,
+    one file per micro-batch, and return once all of them are processed.
+
+    The file source reads ``src`` with ``schema`` (the staged frame's, so
+    no job infers it back from the files) and ``maxFilesPerTrigger=1``,
+    so a source staged as N files runs as N micro-batches with ids
+    0..N-1; ``trigger(availableNow=True)`` processes what is there and
+    stops. ``checkpoint`` records committed offsets: a run restarted on
+    the same checkpoint replays only the batches that never committed.
+    A failure inside ``on_batch`` stops the query and is re-raised here
+    (as a ``StreamingQueryException``)."""
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )

@@ -158,6 +158,24 @@ def test_vector_kernels_live_in_one_module_each():
     )
 
 
+def test_streams_start_in_one_module():
+    """``streaming/windows.py`` is the one module that starts a stream:
+    no other package module names ``readStream``, ``writeStream`` or
+    ``awaitTermination`` in code (every ``foreachBatch`` store runs
+    through ``windows.drain``). Needs no SparkSession."""
+    names = {"readStream", "writeStream", "awaitTermination"}
+    offenders = [
+        f"{rel}:{node.lineno} ({node.attr})"
+        for rel, tree, _ in _package_modules()
+        if rel != os.path.join("streaming", "windows.py")
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr in names
+    ]
+    assert offenders == [], "stream driven outside windows.py: " + ", ".join(
+        sorted(offenders)
+    )
+
+
 def test_never_written_store_is_not_read(spark, tmp_path, monkeypatch):
     """A store that was never written reads as None (``read_store``) and
     batch -1 (``last_merged_batch``) without any ``spark.read``: reading a

@@ -59,11 +59,11 @@ def test_admit_writes_only_delta_segment_and_serve_never_tokenizes(
     R.bm25_publish_segmented(_docs(spark, 0, 12), root, retain=2)
     R.bm25_admit_delta(_docs(spark, 12, 16), root, retain=2)
     from ambient_sound_analysis_api_spark.operators.atomic_swap import (
-        _read_small_file, resolve_version,
+        read_small_file, resolve_version,
     )
 
     _, vpath = resolve_version(spark, root)
-    segs = json.loads(_read_small_file(spark, f"{vpath}/segments.json"))[
+    segs = json.loads(read_small_file(spark, f"{vpath}/segments.json"))[
         "segments"
     ]
     assert len(segs) == 2
@@ -176,11 +176,11 @@ def test_compaction_preserves_results_and_membership(spark, tmp_path):
     ).collect()
     R.bm25_compact_segments(spark, root, retain=2)
     from ambient_sound_analysis_api_spark.operators.atomic_swap import (
-        _read_small_file, resolve_version,
+        read_small_file, resolve_version,
     )
 
     seq, vpath = resolve_version(spark, root)
-    segs = json.loads(_read_small_file(spark, f"{vpath}/segments.json"))[
+    segs = json.loads(read_small_file(spark, f"{vpath}/segments.json"))[
         "segments"
     ]
     assert len(segs) == 1
@@ -274,8 +274,10 @@ def test_compaction_folds_tombstones_out(spark, tmp_path):
     full = R.bm25_topk(survivors, ["vector", "hash", "merge"], k=20).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in full]
     # and the deleted ids are physically absent from the live segment
-    from ambient_sound_analysis_api_spark.operators.atomic_swap import _read_small_file
-    segs = _json.loads(_read_small_file(spark, f"{vpath}/segments.json"))[
+    from ambient_sound_analysis_api_spark.operators.atomic_swap import (
+        read_small_file,
+    )
+    segs = _json.loads(read_small_file(spark, f"{vpath}/segments.json"))[
         "segments"
     ]
     live_dl = spark.read.parquet(

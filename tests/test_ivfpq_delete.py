@@ -93,12 +93,12 @@ def test_compaction_folds_tombstones_out(spark, tmp_path):
     before = _serve(spark, root, emb, books)
     P.ivfpq_compact_segments(spark, root, retain=6)
     from ambient_sound_analysis_api_spark.operators.atomic_swap import (
-        _read_small_file, _read_tombstones, resolve_version,
+        read_small_file, _read_tombstones, resolve_version,
     )
 
     _, vpath = resolve_version(spark, root)
     assert _read_tombstones(spark, vpath) is None
-    segs = json.loads(_read_small_file(spark, f"{vpath}/segments.json"))[
+    segs = json.loads(read_small_file(spark, f"{vpath}/segments.json"))[
         "segments"
     ]
     assert len(segs) == 1

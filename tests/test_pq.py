@@ -57,6 +57,25 @@ def test_pq_fit_rejects_indivisible_dim(spark):
         pq_fit(emb, m=2, k=1, n_iter=1)
 
 
+def test_pq_fit_releases_only_its_own_cache(spark):
+    """The fit caches its input for the Lloyd's passes and releases that
+    cache on return; an input the caller persisted stays persisted."""
+    from pyspark import StorageLevel
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), float(i % 3)]) for i in range(6)],
+        "vec_id long, embedding array<float>",
+    )
+    pq_fit(emb, m=2, k=2, n_iter=1)
+    assert emb.storageLevel == StorageLevel.NONE
+    emb.persist()
+    try:
+        pq_fit(emb, m=2, k=2, n_iter=1)
+        assert emb.storageLevel != StorageLevel.NONE
+    finally:
+        emb.unpersist()
+
+
 def test_registry_pq_query_monotone(spark, sf_dir):
     rows = q_emb_pq_adc_topk(spark, sf_dir).collect()
     assert len(rows) == 20

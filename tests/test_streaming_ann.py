@@ -19,8 +19,8 @@ from ambient_sound_analysis_api_spark.operators.similarity import (
 from ambient_sound_analysis_api_spark.streaming.ann import (
     admit_embedding_batch,
     read_streamed_codes,
-    streamed_ann_ingest,
 )
+from ambient_sound_analysis_api_spark.streaming.windows import drain
 
 import pytest
 
@@ -72,18 +72,11 @@ def test_availablenow_stream_equals_one_shot_encode(spark, sf_dir, tmp_path):
         new.filter(F.col("vec_id") % 3 == part).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-    stream = (
-        spark.readStream.schema(new.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    drain(
+        spark, src, new.schema,
+        lambda b, i: admit_embedding_batch(spark, b, i, store, cents, books),
+        str(tmp_path / "ckpt"),
     )
-    q = (
-        streamed_ann_ingest(spark, stream, store, cents, books)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     streamed = read_streamed_codes(spark, store)
     # one directory per micro-batch, cell-partitioned within

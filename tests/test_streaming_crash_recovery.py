@@ -21,6 +21,7 @@ from ambient_sound_analysis_api_spark.operators.retrieval import bm25_topk
 from ambient_sound_analysis_api_spark.streaming.lexical import (
     admit_document_batch, bm25_streamed_topk,
 )
+from ambient_sound_analysis_api_spark.streaming.windows import drain
 
 TEXTS = [
     "vector hash merge engine spark parquet",
@@ -72,22 +73,8 @@ def test_bm25_stream_killed_mid_batch_resumes_hash_equal(spark, tmp_path):
             raise RuntimeError("injected crash after write, before commit")
         admit_document_batch(spark, batch_df, batch_id, store)
 
-    def start():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return (
-            stream.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    q = start()
     with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination()
+        drain(spark, src, schema, admit, ckpt)
     # post-crash: batch 0 committed, batch 1 only as hidden staging
     committed = [d for d in os.listdir(store) if d.startswith("batch=")]
     assert committed == ["batch=0"]
@@ -95,8 +82,7 @@ def test_bm25_stream_killed_mid_batch_resumes_hash_equal(spark, tmp_path):
 
     # restart on the SAME checkpoint: batch 1 replays and commits; the
     # crash debris stays invisible
-    q = start()
-    q.awaitTermination()
+    drain(spark, src, schema, admit, ckpt)
     committed = sorted(
         d for d in os.listdir(store) if d.startswith("batch=")
     )
@@ -147,27 +133,12 @@ def test_ann_stream_killed_mid_batch_resumes_hash_equal(
             raise RuntimeError("injected crash after write, before commit")
         admit_embedding_batch(spark, batch_df, batch_id, store, cents, books)
 
-    def start():
-        stream = (
-            spark.readStream.schema(new.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return (
-            stream.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    q = start()
     with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination()
+        drain(spark, src, new.schema, admit, ckpt)
     assert [
         d for d in os.listdir(store) if d.startswith("batch=")
     ] == ["batch=0"]
-    q = start()
-    q.awaitTermination()
+    drain(spark, src, new.schema, admit, ckpt)
     assert sorted(
         d for d in os.listdir(store) if d.startswith("batch=")
     ) == ["batch=0", "batch=1"]

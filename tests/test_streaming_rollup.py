@@ -9,11 +9,11 @@ from ambient_sound_analysis_api_spark.operators.aggregations import (
     daily_partials,
 )
 from ambient_sound_analysis_api_spark.streaming.rollup import (
-    incremental_rollup_query,
     last_merged_batch,
     merge_partials_batch,
     read_store,
 )
+from ambient_sound_analysis_api_spark.streaming.windows import drain
 
 
 def _norm(df):
@@ -28,22 +28,14 @@ def test_multi_batch_rollup_equals_direct(spark, sf_dir, tmp_path):
         "event_type", "ts", "value"
     )
     src = str(tmp_path / "src")
-    # several source files → maxFilesPerTrigger=1 gives several micro-batches
+    # several source files → one file per micro-batch gives several batches
     ev.repartition(4).write.parquet(src)
     store = str(tmp_path / "store")
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    drain(
+        spark, src, ev.schema,
+        lambda b, i: merge_partials_batch(spark, b, i, store),
+        str(tmp_path / "ckpt"),
     )
-    q = (
-        incremental_rollup_query(spark, stream, store)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
     assert last_merged_batch(spark, store) >= 1  # really ran multiple batches
     got = read_store(spark, store)
     want = daily_partials(ev)
@@ -65,6 +57,29 @@ def test_replayed_batch_is_skipped(spark, tmp_path):
     assert merge_partials_batch(spark, batch, 1, store) is True
     after = read_store(spark, store).collect()
     assert after[0].n == 2
+
+
+def test_batch_id_commits_without_spark_json_io(spark, tmp_path, monkeypatch):
+    """The committed batch id is a small file written and read through the
+    filesystem API: with Spark's JSON reader and writer disabled, two
+    batches merge and a replay of the last one is still skipped."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    def no_json(*a, **k):
+        raise AssertionError("Spark JSON I/O on the batch-id path")
+
+    monkeypatch.setattr(DataFrameReader, "json", no_json)
+    monkeypatch.setattr(DataFrameWriter, "json", no_json)
+    store = str(tmp_path / "store")
+    batch = spark.createDataFrame(
+        [("click", "2024-01-01 10:00:00", 1.0)],
+        "event_type string, ts string, value double",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    assert merge_partials_batch(spark, batch, 0, store) is True
+    assert merge_partials_batch(spark, batch, 1, store) is True
+    assert last_merged_batch(spark, store) == 1
+    assert merge_partials_batch(spark, batch, 1, store) is False
+    assert read_store(spark, store).collect()[0].n == 2
 
 
 def test_store_survives_failed_staging_write(spark, tmp_path, monkeypatch):
@@ -278,7 +293,7 @@ def test_rollup_store_crash_in_rename_window_skips_replay(
     spark, tmp_path, monkeypatch
 ):
     """The partials store is NOT idempotent, so the crash window matters
-    even more: the recovered staged copy carries its _meta batch id, and
+    even more: the recovered staged copy carries its _batch_id file, and
     the replayed batch must be SKIPPED (merging it twice would
     double-count)."""
     import ambient_sound_analysis_api_spark.streaming.rollup as rollupmod
@@ -479,7 +494,7 @@ def test_dual_store_streaming_end_to_end(spark, sf_dir, tmp_path):
     """The dual sink on real availableNow machinery over multiple
     micro-batches equals the direct batch aggregation for BOTH stores."""
     from ambient_sound_analysis_api_spark.streaming.dual import (
-        dual_rollup_query,
+        dual_store_merge_batch,
     )
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
@@ -489,19 +504,11 @@ def test_dual_store_streaming_end_to_end(spark, sf_dir, tmp_path):
     ev.repartition(3).write.parquet(src)
     pstore = str(tmp_path / "partials")
     hstore = str(tmp_path / "hll")
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    drain(
+        spark, src, ev.schema,
+        lambda b, i: dual_store_merge_batch(spark, b, i, pstore, hstore),
+        str(tmp_path / "ckpt"),
     )
-    q = (
-        dual_rollup_query(spark, stream, pstore, hstore)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
 
     from ambient_sound_analysis_api_spark.operators.sketches import (
         hll_estimate,
