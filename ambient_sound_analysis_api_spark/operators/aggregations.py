@@ -121,17 +121,14 @@ def daily_summary_series(summary: DataFrame) -> DataFrame:
     The ``count`` series is the *mean over band columns of per-bucket
     day-observation counts* ("mean contributing day-observation count",
     reference ``README.md:137``, ``app/services/get_aggregations.py:350,
-    354``) — mean-of-counts, not sum.
+    354``) — mean-of-counts, not sum. Rows come unordered; the caller
+    sorts (the serving payload is capped, so on the driver).
     """
-    return (
-        summary.groupBy("tod_s")
-        .agg(
-            F.avg("mean_value").alias("mean_series"),
-            F.avg("min_value").alias("min_series"),
-            F.avg("max_value").alias("max_series"),
-            F.avg("count_value").alias("count_series"),
-        )
-        .orderBy("tod_s")
+    return summary.groupBy("tod_s").agg(
+        F.avg("mean_value").alias("mean_series"),
+        F.avg("min_value").alias("min_series"),
+        F.avg("max_value").alias("max_series"),
+        F.avg("count_value").alias("count_series"),
     )
 
 
@@ -142,15 +139,11 @@ def daily_broadband(
 
     Parity with upstream ``create_broadband_daily_noise`` (called at
     ``app/services/get_aggregations.py:424-427``; semantics
-    ``upstream-notes.md:13``).
+    ``upstream-notes.md:13``). Rows come unordered; the caller sorts.
     """
     df = df.filter(is_finite(F.col("value")))
     group = [*(keys or []), F.to_date("ts").alias("day")]
-    return (
-        df.groupBy(*group)
-        .agg(_mean("value", exact).alias("mean_value"))
-        .orderBy(*[c for c in (keys or [])], "day")
-    )
+    return df.groupBy(*group).agg(_mean("value", exact).alias("mean_value"))
 
 
 def sessionize(

@@ -37,7 +37,14 @@ _TRACKED: list[DataFrame] = []
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register the handle for later ``release_caches``."""
+    """Persist ``df`` and register the handle for later ``release_caches``.
+
+    A frame whose plan is already cached is returned as is, untracked:
+    persisting it again would only log ``Asked to cache already cached
+    data``, and whoever cached it owns the release."""
+    sl = df.storageLevel
+    if sl.useMemory or sl.useDisk:
+        return df
     p = df.persist()
     with _LOCK:
         _TRACKED.append(p)

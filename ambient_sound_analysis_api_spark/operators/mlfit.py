@@ -123,13 +123,9 @@ def standardize(
     of expensive per-row chains (the quality-logit regex features ran
     twice per fit before this — once for stats, once when the projection
     materialized). The cached frame is the post-projection feature
-    columns only, so the cache is a few doubles per row. Callers that
-    already persisted the frame are detected via its storage level, so a
-    pre-cached input is not double-cached (round-14 ADVICE: the overlap
-    held two copies until release_caches)."""
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        df = tracked_persist(df)
+    columns only, so the cache is a few doubles per row; an input that is
+    already cached is used as is (see ``tracked_persist``)."""
+    df = tracked_persist(df)
     return apply_standardize(
         df, cols, standardize_stats(df, cols), label_cols
     )

@@ -11,8 +11,9 @@ only the bounded serving payload (≤ MAX_AGGREGATION_POINTS buckets, or a
 ≤31-day raw window) is ever collected, so the driver never materializes an
 unbounded result (contrast: the reference loads whole months into process
 memory, ``docs/upstream-notes.md:65-71``). Because that payload is bounded,
-an uncached request runs one Spark plan and one collect; ordering, the PSD
-pivot and the catalog preflight are plain Python over collected rows.
+an uncached request runs one Spark plan and one collect, and one stage when
+its pruned scan is one input split (``_scan``); ordering, the PSD pivot and
+the catalog preflight are plain Python over collected rows.
 
 An Engine serves a snapshot of ``root`` taken at construction: the catalog
 rows and the parquet listing of ``root/data`` are both read once in
@@ -110,6 +111,13 @@ class Engine:
         # one data frame: the parquet listing and schema inference run here,
         # not per request; every scan filters this frame
         self._frame = spark.read.parquet(f"{root}/data")
+        # the month partitions of that listing, and the input splits of
+        # each non-empty pruned scan keyed by its partition predicates:
+        # both bounded by the snapshot, whatever windows requests send
+        self._months = tuple(sorted({
+            f.rsplit("month=", 1)[1][:7] for f in self._frame.inputFiles()
+        }))
+        self._splits: dict[tuple, int] = {}
         # memoized request entry points (reference lru_cache sizes,
         # app/services/get_options.py:54, get_timeseries.py:233,287,
         # get_aggregations.py:310-548)
@@ -137,16 +145,35 @@ class Engine:
         end: datetime,
     ) -> DataFrame:
         """Pruned product scan: every predicate here lands on a partition
-        column or the parquet ``ts`` row-group stats — the Catalyst
-        replacement for the reference's filename pruning (SURVEY.md §4)."""
+        column (product, hydrophone and the listed months ``[start, end)``
+        touches) or the parquet ``ts`` row-group stats — the Catalyst
+        replacement for the reference's filename pruning (SURVEY.md §4).
+
+        A scan Spark plans as one input split runs one task either way, so
+        it is coalesced to one partition: that satisfies the aggregates'
+        and sorts' required distribution, no exchange is planned, and the
+        whole request runs as one stage."""
+        last = max(start, end - timedelta(microseconds=1))
+        lo, hi = (f"{t.year:04d}-{t.month:02d}" for t in (start, last))
+        months = tuple(m for m in self._months if lo <= m <= hi)
         df = self._data().filter(
             (F.col("freq_type") == freq_type)
             & (F.col("delta_t") == delta_t)
             & (normalize_hydrophone(F.col("hydrophone")) == hydrophone_slug)
+            & F.col("month").isin(*months)
         )
         if delta_f is not None:
             df = df.filter(F.col("delta_f") == delta_f)
-        return ts_ops.window_filter(df, start, end)
+        scan = ts_ops.window_filter(df, start, end)
+        # the split count depends only on the partition predicates and the
+        # listing snapshot; planning it starts no job
+        key = (freq_type, delta_f, delta_t, hydrophone_slug, months)
+        splits = self._splits.get(key)
+        if splits is None:
+            splits = scan.rdd.getNumPartitions()
+            if splits:  # an empty scan's slug or product may be any string
+                self._splits[key] = splits
+        return scan.coalesce(1) if splits == 1 else scan
 
     def _matching_file_count(
         self, slug: str, freq_type: str, delta_f: int | None, delta_t: int,
@@ -475,6 +502,7 @@ class Engine:
             agg.daily_summary(scan, INTERVALS[interval])
         ).collect()
         check_point_cap(len(series), "daily summary")
+        series.sort(key=lambda r: r["tod_s"])
 
         def tod_label(s: int) -> str:
             return f"{s // 3600:02d}:{s % 3600 // 60:02d}:{s % 60:02d}"
@@ -510,6 +538,7 @@ class Engine:
         scan = self._scan("broadband", None, delta_t, slug, start, end)
         days = agg.daily_broadband(scan).collect()
         check_point_cap(len(days), "daily broadband summary")
+        days.sort(key=lambda r: r["day"])
         return {
             "hydrophone": slug, "num_days": num_days,
             "points": [

@@ -485,9 +485,13 @@ def test_aqe_skew_join_split_engages_on_hot_key(spark):
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             "spark.sql.autoBroadcastJoinThreshold",
             "spark.sql.adaptive.coalescePartitions.enabled",
+            "spark.sql.shuffle.partitions",
         )
     }
     try:
+        # enough shuffle partitions for a median to split against, whatever
+        # the core count the session's default was derived from
+        conf.set("spark.sql.shuffle.partitions", "8")
         conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         conf.set(

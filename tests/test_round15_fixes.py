@@ -76,3 +76,19 @@ def test_bpe_apply_long_merge_list_truncates_lineage(spark):
     long_out = seqs(lm.bpe_apply(docs, merges).collect())
     short_out = seqs(lm.bpe_apply(docs, [("a", "b")]).collect())
     assert long_out == short_out
+
+
+def test_tracked_persist_skips_an_already_cached_plan(spark):
+    """A frame whose plan is already cached comes back as is and untracked:
+    persisting it again would only log 'Asked to cache already cached
+    data', and the owner of the first cache releases it."""
+    from ambient_sound_analysis_api_spark.operators import caching
+
+    first = caching.tracked_persist(spark.range(5).selectExpr("id * 3 AS x"))
+    try:
+        tracked = len(caching._TRACKED)
+        again = spark.range(5).selectExpr("id * 3 AS x")
+        assert caching.tracked_persist(again) is again
+        assert len(caching._TRACKED) == tracked
+    finally:
+        first.unpersist()

@@ -3,7 +3,7 @@ from __future__ import annotations
 import json
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -17,6 +17,7 @@ from ambient_sound_analysis_api_spark.errors import (
 from ambient_sound_analysis_api_spark.http_api import _jsonable
 from ambient_sound_analysis_api_spark.serving import Engine, _json_float
 from ambient_sound_analysis_api_spark.sources.domain import materialize_domain
+from ambient_sound_analysis_api_spark.sources.ingest import write_partitioned
 
 START = datetime(2024, 1, 5)
 END = datetime(2024, 1, 12)
@@ -126,7 +127,7 @@ def dense_engine(spark, tmp_path_factory):
         F.when(F.col("id") % 2 == 0, 63.0).otherwise(125.0).alias("band_hz"),
         (F.col("id") % 89).cast("double").alias("value"),
     )
-    broadband.unionByName(psd).write.parquet(f"{root}/data")
+    write_partitioned(broadband.unionByName(psd), f"{root}/data")
     spark.createDataFrame(
         [
             ("archive/dense/20240105T000000_20240205T000000_1s_broadband.parquet",),
@@ -142,7 +143,7 @@ def test_point_cap_rejected_before_any_collect(dense_engine, monkeypatch):
     must be rejected by the DF-side preflight — `.collect()` must never run,
     so the driver never materializes the oversized result (VERDICT r1
     'What's wrong' #2)."""
-    from pyspark.sql import DataFrame
+    from pyspark.sql.classic.dataframe import DataFrame
 
     from ambient_sound_analysis_api_spark.errors import PointCapExceededError
 
@@ -278,17 +279,19 @@ ROUTE_CALLS = (
      {"num_days": 30}),
 )
 
-# Spark jobs one uncached request runs on the module test domain; a plan
-# regression (an extra collect, a global sort, a per-request listing)
-# raises a count above its pin
+# Spark jobs one uncached request runs on the module test domain, where
+# every pruned scan is one file and so one split: scan, aggregates and
+# driver-side sort run as one stage. A plan regression (an extra collect,
+# a global sort, an exchange, a per-request listing) raises a count above
+# its pin
 JOB_PINS = {
     "broadband_timeseries": 1,
-    "psd_timeseries": 2,
-    "broadband_aggregation": 2,
-    "band_aggregation": 2,
-    "psd_heatmap": 2,
-    "daily_summary": 5,
-    "daily_broadband_summary": 4,
+    "psd_timeseries": 1,
+    "broadband_aggregation": 1,
+    "band_aggregation": 1,
+    "psd_heatmap": 1,
+    "daily_summary": 1,
+    "daily_broadband_summary": 1,
 }
 
 
@@ -364,11 +367,14 @@ def parity_engine(spark, tmp_path_factory):
         (t[2], 63.0, 2.0), (t[2], 63.0, 4.0), (t[2], 125.0, 5.0),
         (t[3], 250.0, nan),
     ]
-    spark.createDataFrame(
-        [("PARITY", 1, "octave_bands", 3, ts, b, v) for ts, b, v in cells],
-        "hydrophone string, delta_t int, freq_type string, delta_f int, "
-        "ts timestamp, band_hz double, value double",
-    ).write.parquet(f"{root}/data")
+    write_partitioned(
+        spark.createDataFrame(
+            [("PARITY", 1, "octave_bands", 3, ts, b, v) for ts, b, v in cells],
+            "hydrophone string, delta_t int, freq_type string, delta_f int, "
+            "ts timestamp, band_hz double, value double",
+        ),
+        f"{root}/data",
+    )
     spark.createDataFrame(
         [("archive/parity/20240105T000000_20240106T000000_1s_3oct.parquet",)],
         "key string",
@@ -407,3 +413,138 @@ def test_band_aggregation_nonfinite_band_and_empty_range(parity_engine):
         parity_engine.band_aggregation(
             "parity", START, END, interval="1h", band_low=9e5, band_high=9e6
         )
+
+
+def test_split_count_memoized_per_partition_predicates(spark, engine):
+    """The split count is planned once per (product, hydrophone, listed
+    months): a second request on the same ones adds no memo entry, even
+    over a longer window, and a scan with no files adds none."""
+    eng = Engine(spark, engine.root)
+    eng._broadband_aggregation("click", START, END)
+    assert len(eng._splits) == 1
+    eng._broadband_timeseries("click", START + timedelta(hours=5), END)
+    eng._broadband_aggregation("click", datetime(2023, 1, 1), END, interval="1d")
+    eng._daily_broadband_summary("no_such_hydrophone", START, num_days=3)
+    assert len(eng._splits) == 1
+    eng._broadband_timeseries("view", START, END)
+    assert len(eng._splits) == 2
+
+
+@pytest.fixture(scope="module")
+def two_month_engine(spark, tmp_path_factory):
+    """Two days of 10 s broadband and two-band PSD across a month boundary:
+    each product is one file per month, so a window over the boundary is a
+    two-split scan."""
+    import pyspark.sql.functions as F
+
+    root = str(tmp_path_factory.mktemp("two_month_domain"))
+    t0 = int(datetime(2024, 1, 31, tzinfo=timezone.utc).timestamp())
+    n = 2 * 8640
+    common = [
+        F.lit("EDGE").alias("hydrophone"),
+        F.lit(1).cast("int").alias("delta_t"),
+        F.timestamp_seconds(F.lit(t0) + F.col("id") * 10).alias("ts"),
+    ]
+    broadband = spark.range(n).select(
+        *common,
+        F.lit("broadband").alias("freq_type"),
+        F.lit(None).cast("int").alias("delta_f"),
+        F.lit(None).cast("double").alias("band_hz"),
+        (F.col("id") % 97 / 7).alias("value"),
+    )
+    psd = spark.range(n).select(
+        *common,
+        F.lit("octave_bands").alias("freq_type"),
+        F.lit(3).cast("int").alias("delta_f"),
+        F.when(F.col("id") % 2 == 0, 63.0).otherwise(125.0).alias("band_hz"),
+        (F.col("id") % 89 / 3).alias("value"),
+    )
+    write_partitioned(broadband.unionByName(psd), f"{root}/data")
+    spark.createDataFrame(
+        [
+            ("archive/edge/20240131T000000_20240202T000000_1s_broadband.parquet",),
+            ("archive/edge/20240131T000000_20240202T000000_1s_3oct.parquet",),
+        ],
+        "key string",
+    ).write.parquet(f"{root}/archive_keys.parquet")
+    return Engine(spark, root)
+
+
+def _assert_close(a, b, rel=1e-12):
+    """Equal payloads, floats within ``rel`` relative."""
+    if isinstance(a, float):
+        assert b == pytest.approx(a, rel=rel, abs=0)
+    elif isinstance(a, (list, tuple)):
+        assert len(a) == len(b)
+        for x, y in zip(a, b):
+            _assert_close(x, y, rel)
+    elif isinstance(a, dict):
+        assert a.keys() == b.keys()
+        for k in a:
+            _assert_close(a[k], b[k], rel)
+    else:
+        assert a == b
+
+
+def test_multi_split_scan_keeps_its_exchange(spark, two_month_engine, monkeypatch):
+    """A window over two month files is a two-split scan: it keeps Spark's
+    own plan, an Exchange before the aggregates, and its payloads equal
+    the forced one-stage plan's."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    orig = DataFrame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    start, end = datetime(2024, 1, 31, 12), datetime(2024, 2, 1, 12)
+    calls = (
+        ("psd_timeseries", (start, end), {}),
+        ("broadband_aggregation", (start, end), {"interval": "1h"}),
+        ("band_aggregation", (start, end),
+         {"interval": "1h", "band_low": 60, "band_high": 200}),
+        ("psd_heatmap", (start, end), {"interval": "1h"}),
+        ("daily_summary", (datetime(2024, 1, 31),), {"num_days": 2}),
+        ("daily_broadband_summary", (datetime(2024, 1, 31),), {"num_days": 2}),
+    )
+
+    def serve(eng):
+        plans.clear()
+        out = [getattr(eng, f"_{r}")("edge", *a, **kw) for r, a, kw in calls]
+        return out, list(plans)
+
+    multi, multi_plans = serve(two_month_engine)
+    assert set(two_month_engine._splits.values()) == {2}
+    assert len(multi_plans) == len(calls)
+    assert all("Exchange" in p for p in multi_plans), multi_plans
+
+    forced = Engine(spark, two_month_engine.root)
+    forced._splits.update(dict.fromkeys(two_month_engine._splits, 1))
+    single, single_plans = serve(forced)
+    assert not any("Exchange" in p for p in single_plans), single_plans
+    assert multi[0]["values"] and multi[-1]["points"]
+    _assert_close(multi, single)
+
+
+def _partition_filters(df) -> str:
+    """The partition filters of the one file scan under ``df``."""
+    scan = df._jdf.queryExecution().sparkPlan().collectLeaves().head()
+    return scan.partitionFilters().mkString(", ")
+
+
+def test_request_scan_prunes_months(two_month_engine):
+    """A request's scan filters the ``month`` partition column to the listed
+    months its ``[start, end)`` window touches: an end on a month boundary
+    excludes that month, and months with no files are left out."""
+    scan = two_month_engine._scan
+    jan = _partition_filters(
+        scan("broadband", None, 1, "EDGE", datetime(2024, 1, 31, 23), datetime(2024, 2, 1))
+    )
+    assert "month" in jan and "2024-01" in jan and "2024-02" not in jan, jan
+    both = _partition_filters(
+        scan("broadband", None, 1, "EDGE", datetime(2023, 12, 1), datetime(2024, 2, 1, 0, 0, 1))
+    )
+    assert "2024-01" in both and "2024-02" in both and "2023-12" not in both, both
