@@ -11,9 +11,9 @@ only the bounded serving payload (≤ MAX_AGGREGATION_POINTS buckets, or a
 ≤31-day raw window) is ever collected, so the driver never materializes an
 unbounded result (contrast: the reference loads whole months into process
 memory, ``docs/upstream-notes.md:65-71``). Because that payload is bounded,
-an uncached request runs one Spark plan and one collect, and one stage when
-its pruned scan is one input split (``_scan``); ordering, the PSD pivot and
-the catalog preflight are plain Python over collected rows.
+an uncached request runs one Spark plan, one collect and one stage (the
+pruned scan is coalesced to one partition, ``_scan``); ordering, the PSD
+pivot and the catalog preflight are plain Python over collected rows.
 
 An Engine serves a snapshot of ``root`` taken at construction: the catalog
 rows and the parquet listing of ``root/data`` are both read once in
@@ -52,6 +52,7 @@ from .operators.planner import (
 )
 from .operators.validation import integrity_probe, validate_request
 from .sources.catalog import build_catalog
+from .sources.ingest import month_key
 
 _ISO = "yyyy-MM-dd'T'HH:mm:ss"
 
@@ -111,13 +112,6 @@ class Engine:
         # one data frame: the parquet listing and schema inference run here,
         # not per request; every scan filters this frame
         self._frame = spark.read.parquet(f"{root}/data")
-        # the month partitions of that listing, and the input splits of
-        # each non-empty pruned scan keyed by its partition predicates:
-        # both bounded by the snapshot, whatever windows requests send
-        self._months = tuple(sorted({
-            f.rsplit("month=", 1)[1][:7] for f in self._frame.inputFiles()
-        }))
-        self._splits: dict[tuple, int] = {}
         # memoized request entry points (reference lru_cache sizes,
         # app/services/get_options.py:54, get_timeseries.py:233,287,
         # get_aggregations.py:310-548)
@@ -145,35 +139,27 @@ class Engine:
         end: datetime,
     ) -> DataFrame:
         """Pruned product scan: every predicate here lands on a partition
-        column (product, hydrophone and the listed months ``[start, end)``
-        touches) or the parquet ``ts`` row-group stats — the Catalyst
-        replacement for the reference's filename pruning (SURVEY.md §4).
+        column (product, hydrophone and the months ``[start, end)`` touches)
+        or the parquet ``ts`` row-group stats — the Catalyst replacement for
+        the reference's filename pruning (SURVEY.md §4).
 
-        A scan Spark plans as one input split runs one task either way, so
-        it is coalesced to one partition: that satisfies the aggregates'
-        and sorts' required distribution, no exchange is planned, and the
-        whole request runs as one stage."""
+        The scan is coalesced to one partition: that satisfies the
+        aggregates' required distribution, so no exchange is planned and
+        scan and aggregates run as one stage and one job. A ≤31-day window
+        is one or two month files of one product, so the one task reads
+        little, and the exchange it saves would cost a job; a long daily
+        request (``num_days`` is unbounded, as in the reference) reads all
+        its months in that task."""
         last = max(start, end - timedelta(microseconds=1))
-        lo, hi = (f"{t.year:04d}-{t.month:02d}" for t in (start, last))
-        months = tuple(m for m in self._months if lo <= m <= hi)
         df = self._data().filter(
             (F.col("freq_type") == freq_type)
             & (F.col("delta_t") == delta_t)
             & (normalize_hydrophone(F.col("hydrophone")) == hydrophone_slug)
-            & F.col("month").isin(*months)
+            & F.col("month").between(month_key(start), month_key(last))
         )
         if delta_f is not None:
             df = df.filter(F.col("delta_f") == delta_f)
-        scan = ts_ops.window_filter(df, start, end)
-        # the split count depends only on the partition predicates and the
-        # listing snapshot; planning it starts no job
-        key = (freq_type, delta_f, delta_t, hydrophone_slug, months)
-        splits = self._splits.get(key)
-        if splits is None:
-            splits = scan.rdd.getNumPartitions()
-            if splits:  # an empty scan's slug or product may be any string
-                self._splits[key] = splits
-        return scan.coalesce(1) if splits == 1 else scan
+        return ts_ops.window_filter(df, start, end).coalesce(1)
 
     def _matching_file_count(
         self, slug: str, freq_type: str, delta_f: int | None, delta_t: int,

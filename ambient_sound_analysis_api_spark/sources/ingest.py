@@ -18,12 +18,22 @@ stats on ``ts`` for intra-file pruning the reference lacks
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def month_key(t: datetime) -> str:
+    """The ``month`` partition value ``write_partitioned`` gives a row at
+    ``t``; ``yyyy-MM`` strings sort in month order, so a range over them
+    prunes month partitions."""
+    return f"{t.year:04d}-{t.month:02d}"
+
+
 def write_partitioned(df: DataFrame, root: str, mode: str = "overwrite") -> None:
-    """Write a long-form table in the prunable layout described above."""
+    """Write a long-form table in the prunable layout described above
+    (the Spark pattern of ``month_key``)."""
     (
         df.withColumn("month", F.date_format("ts", "yyyy-MM"))
         .repartition("hydrophone", "month")

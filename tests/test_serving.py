@@ -415,26 +415,11 @@ def test_band_aggregation_nonfinite_band_and_empty_range(parity_engine):
         )
 
 
-def test_split_count_memoized_per_partition_predicates(spark, engine):
-    """The split count is planned once per (product, hydrophone, listed
-    months): a second request on the same ones adds no memo entry, even
-    over a longer window, and a scan with no files adds none."""
-    eng = Engine(spark, engine.root)
-    eng._broadband_aggregation("click", START, END)
-    assert len(eng._splits) == 1
-    eng._broadband_timeseries("click", START + timedelta(hours=5), END)
-    eng._broadband_aggregation("click", datetime(2023, 1, 1), END, interval="1d")
-    eng._daily_broadband_summary("no_such_hydrophone", START, num_days=3)
-    assert len(eng._splits) == 1
-    eng._broadband_timeseries("view", START, END)
-    assert len(eng._splits) == 2
-
-
 @pytest.fixture(scope="module")
 def two_month_engine(spark, tmp_path_factory):
     """Two days of 10 s broadband and two-band PSD across a month boundary:
-    each product is one file per month, so a window over the boundary is a
-    two-split scan."""
+    each product is one file per month, so a window over the boundary scans
+    two files."""
     import pyspark.sql.functions as F
 
     root = str(tmp_path_factory.mktemp("two_month_domain"))
@@ -486,10 +471,10 @@ def _assert_close(a, b, rel=1e-12):
         assert a == b
 
 
-def test_multi_split_scan_keeps_its_exchange(spark, two_month_engine, monkeypatch):
-    """A window over two month files is a two-split scan: it keeps Spark's
-    own plan, an Exchange before the aggregates, and its payloads equal
-    the forced one-stage plan's."""
+def test_two_file_scan_runs_one_stage(two_month_engine, monkeypatch):
+    """A window over two month files runs each route as one stage, no
+    Exchange planned, and its payloads equal those of Spark's own exchange
+    plan for the uncoalesced scan."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     plans: list[str] = []
@@ -511,40 +496,37 @@ def test_multi_split_scan_keeps_its_exchange(spark, two_month_engine, monkeypatc
         ("daily_broadband_summary", (datetime(2024, 1, 31),), {"num_days": 2}),
     )
 
-    def serve(eng):
+    def serve():
         plans.clear()
-        out = [getattr(eng, f"_{r}")("edge", *a, **kw) for r, a, kw in calls]
+        out = [getattr(two_month_engine, f"_{r}")("edge", *a, **kw) for r, a, kw in calls]
         return out, list(plans)
 
-    multi, multi_plans = serve(two_month_engine)
-    assert set(two_month_engine._splits.values()) == {2}
-    assert len(multi_plans) == len(calls)
-    assert all("Exchange" in p for p in multi_plans), multi_plans
-
-    forced = Engine(spark, two_month_engine.root)
-    forced._splits.update(dict.fromkeys(two_month_engine._splits, 1))
-    single, single_plans = serve(forced)
-    assert not any("Exchange" in p for p in single_plans), single_plans
-    assert multi[0]["values"] and multi[-1]["points"]
-    _assert_close(multi, single)
+    one_stage, one_stage_plans = serve()
+    assert len(one_stage_plans) == len(calls)
+    assert not any("Exchange" in p for p in one_stage_plans), one_stage_plans
+    monkeypatch.setattr(DataFrame, "coalesce", lambda self, n: self)
+    exchanged, exchanged_plans = serve()
+    assert all("Exchange" in p for p in exchanged_plans), exchanged_plans
+    assert one_stage[0]["values"] and one_stage[-1]["points"]
+    _assert_close(exchanged, one_stage)
 
 
-def _partition_filters(df) -> str:
-    """The partition filters of the one file scan under ``df``."""
-    scan = df._jdf.queryExecution().sparkPlan().collectLeaves().head()
-    return scan.partitionFilters().mkString(", ")
+def _scan_leaf(df):
+    """The one file scan under ``df``'s physical plan."""
+    return df._jdf.queryExecution().sparkPlan().collectLeaves().head()
 
 
 def test_request_scan_prunes_months(two_month_engine):
-    """A request's scan filters the ``month`` partition column to the listed
-    months its ``[start, end)`` window touches: an end on a month boundary
-    excludes that month, and months with no files are left out."""
+    """A request's scan filters the ``month`` partition column to the months
+    its ``[start, end)`` window touches: an end on a month boundary excludes
+    that month, and a range reaching past the listed months reads them."""
     scan = two_month_engine._scan
-    jan = _partition_filters(
+    jan = _scan_leaf(
         scan("broadband", None, 1, "EDGE", datetime(2024, 1, 31, 23), datetime(2024, 2, 1))
     )
-    assert "month" in jan and "2024-01" in jan and "2024-02" not in jan, jan
-    both = _partition_filters(
+    assert "month" in jan.partitionFilters().mkString(", ")
+    assert jan.selectedPartitions().partitionCount() == 1
+    both = _scan_leaf(
         scan("broadband", None, 1, "EDGE", datetime(2023, 12, 1), datetime(2024, 2, 1, 0, 0, 1))
     )
-    assert "2024-01" in both and "2024-02" in both and "2023-12" not in both, both
+    assert both.selectedPartitions().partitionCount() == 2
