@@ -130,7 +130,6 @@ def make_handler(
     """
 
     class Handler(BaseHTTPRequestHandler):
-        # route → (engine method name, param spec); spec = (name, cast, default)
         def do_GET(self) -> None:  # noqa: N802 (stdlib naming)
             url = urlparse(self.path)
             params = parse_qs(url.query)

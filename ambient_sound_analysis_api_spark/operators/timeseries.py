@@ -14,7 +14,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalars import is_finite
+from ..functions.scalars import is_finite, iso_format
 
 
 def window_filter(df: DataFrame, start: datetime, end: datetime,
@@ -219,7 +219,7 @@ def cusum_changepoint(
         F.when(~pre, F.lit(1))
     )
     return split.agg(
-        F.date_format(F.first("_cp"), "yyyy-MM-dd'T'HH:mm:ss").alias("cp_ts"),
+        iso_format(F.first("_cp")).alias("cp_ts"),
         F.first("_mag").alias("max_abs_cusum"),
         F.round(mean_pre, 6).alias("mean_pre"),
         F.round(mean_post, 6).alias("mean_post"),

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .errors import RequestValidationError, UnknownHydrophoneError
-from .functions.scalars import is_finite, normalize_hydrophone
+from .functions.scalars import is_finite, iso_format, normalize_hydrophone
 from .operators import aggregations as agg
 from .operators import timeseries as ts_ops
 from .operators.planner import (
@@ -53,8 +53,6 @@ from .operators.planner import (
 from .operators.validation import integrity_probe, validate_request
 from .sources.catalog import build_catalog
 from .sources.ingest import month_key
-
-_ISO = "yyyy-MM-dd'T'HH:mm:ss"
 
 
 def _memoized(fn, maxsize: int):
@@ -94,13 +92,11 @@ class Engine:
         self.spark = spark
         self.root = root
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # Archive-key source is pluggable (sources/listing.py), resolved
-        # through auto_lister — the selection point that makes the
-        # executor-sharded walk the default whenever the namespace exposes
-        # prefixes. Production: Engine(key_lister=auto_lister(
+        # Archive-key source is pluggable (sources/listing.py). The default
+        # reads the staged parquet manifest; production lists the bucket
+        # executor-side, one task per prefix: Engine(key_lister=auto_lister(
         # pager_factory=lambda: s3_pager(boto3.client('s3'), bucket),
-        # prefixes=[f'archive/{h}/' for h in hydros])); the sandbox
-        # default resolves to the staged parquet listing.
+        # prefixes=[f'archive/{h}/' for h in hydros])).
         if key_lister is None:
             from .sources.listing import auto_lister
 
@@ -272,7 +268,7 @@ class Engine:
         pts_df = (
             self._scan("broadband", None, delta_t, slug, start, end)
             .filter(is_finite(F.col("value")))
-            .select(F.date_format("ts", _ISO).alias("ts"), "value")
+            .select(iso_format(F.col("ts")).alias("ts"), "value")
         )
         points = sorted((r["ts"], float(r["value"])) for r in pts_df.collect())
         integrity_probe(
@@ -364,7 +360,7 @@ class Engine:
             bucketed, start, end, INTERVALS[interval], "broadband aggregation"
         )
         buckets = bucketed.select(
-            F.date_format("bucket_ts", _ISO).alias("t"), "mean_value"
+            iso_format(F.col("bucket_ts")).alias("t"), "mean_value"
         ).collect()
         check_point_cap(len(buckets), "broadband aggregation")
         points = _finite_points(buckets)
@@ -404,7 +400,7 @@ class Engine:
             bucketed, start, end, INTERVALS[interval], "band aggregation"
         )
         buckets = bucketed.select(
-            F.date_format("bucket_ts", _ISO).alias("t"), "mean_value"
+            iso_format(F.col("bucket_ts")).alias("t"), "mean_value"
         ).collect()
         check_point_cap(len(buckets), "band aggregation")
         # no finite bucket: tell "no band in range" (a 400) apart from

@@ -1,6 +1,5 @@
 from .catalog import (  # noqa: F401
     FILENAME_PATTERN,
     build_catalog,
-    keys_from_listing,
     parse_archive_keys,
 )

@@ -6,19 +6,19 @@ Replaces the reference's inventory scan (``_scan_hydrophone_archive``,
 ``docs/upstream-notes.md:23, 139-144``) are parsed with ``regexp_extract``
 and aggregated into a tiny coverage catalog
 ``(hydrophone, freq_type, delta_f, delta_t, first_start, last_end,
-file_count)`` that is broadcast-joined against requests for preflight
-validation (reference ``app/services/get_timeseries.py:101-184``).
+file_count)``. ``serving.Engine`` collects it once; preflight validation
+(``operators/validation.py``, reference
+``app/services/get_timeseries.py:101-184``) and ``/options`` read those
+rows in Python.
 
-Scale note: the catalog is bounded by the number of archive *files* (one per
-hydrophone-product-month), i.e. thousands of rows at 100 TB of data — it is
-always broadcastable and is the partition-pruning index for every scan.
+Scale note: the catalog is bounded by the number of archive *products*,
+and its input by the number of archive *files* (one per
+hydrophone-product-month), i.e. thousands of keys at 100 TB of data.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalars import normalize_hydrophone
@@ -30,36 +30,6 @@ FILENAME_PATTERN = (
     r"([0-9]{8}T[0-9]{6})_([0-9]{8}T[0-9]{6})_([0-9]+)s_([a-z0-9]+)\.parquet$"
 )
 _TS_FORMAT = "yyyyMMdd'T'HHmmss"
-
-
-def keys_from_listing(
-    spark: SparkSession, keys: Iterable[str], chunk_size: int = 250_000
-) -> DataFrame:
-    """Driver-side object listing → single-column DataFrame of keys.
-
-    Mirrors the reference's boto3 listing boundary
-    (``app/services/get_options.py:103``); on a real deployment this is a
-    ``hadoopFS.listStatus`` / S3 inventory-manifest read instead.
-
-    Listings above ``chunk_size`` convert in chunks (Arrow-batched via
-    pandas — ~15% faster than the pickle path and one bounded batch per
-    chunk) unioned into one plan, so the conversion never builds a second
-    full-listing copy in Python. Probed at 1M keys in NOTES.md; for
-    listings that dwarf driver memory entirely, use
-    ``listing.PaginatedKeyLister(stage_dir=...)``, which streams chunks
-    to parquet and reads them back as an ordinary splittable scan."""
-    import pandas as pd
-
-    keys = keys if isinstance(keys, list) else list(keys)
-    if not keys:
-        return spark.createDataFrame([], "key string")
-    out: DataFrame | None = None
-    for lo in range(0, len(keys), chunk_size):
-        part = spark.createDataFrame(
-            pd.DataFrame({"key": keys[lo : lo + chunk_size]})
-        )
-        out = part if out is None else out.unionAll(part)
-    return out
 
 
 def parse_archive_keys(keys_df: DataFrame, key_col: str = "key") -> DataFrame:

@@ -1,23 +1,22 @@
 """Archive key listing adapters: where the catalog's keys come from.
 
-The reference builds its inventory from a driver-side paginated S3 listing
+The reference builds its inventory from a paginated S3 listing
 (``app/services/get_options.py:103`` — boto3 ``list_objects_v2`` pages).
 The engine keeps that boundary behind a tiny interface so the *production*
 wiring is a constructor argument, not a rewrite:
 
 - :class:`ParquetKeyLister` — reads a staged ``archive_keys.parquet``
-  (this sandbox's stand-in, written by ``sources.domain.materialize_domain``).
-- :class:`PaginatedKeyLister` — drives any ``(prefix, token) ->
-  (keys, next_token)`` pager to exhaustion, then hands the keys to
-  ``catalog.keys_from_listing``. :func:`s3_pager` adapts a boto3-style
-  client's public ``list_objects_v2`` shape to that pager signature without
-  importing any SDK (the client is injected, so tests use a fake).
+  (the default, written by ``sources.domain.materialize_domain``).
+- :class:`ShardedKeyLister` — walks any ``(prefix, token) ->
+  (keys, next_token)`` pager to exhaustion inside Spark tasks, one task
+  per prefix shard; :func:`s3_pager` adapts a boto3-style client's public
+  ``list_objects_v2`` shape to that pager signature without importing any
+  SDK (the client is injected, so tests use a fake).
 
 Scale note: the listing is bounded by archive *file* count (one file per
-hydrophone-product-month — thousands of keys at 100 TB of data), so a
-driver-side listing loop matches the reference's behavior and is never the
-bottleneck; the result feeds ``build_catalog``, which is broadcast-sized by
-construction.
+hydrophone-product-month — thousands of keys at 100 TB of data), and its
+keys stream out of the tasks as Arrow batches, so no key list is built on
+the driver; the result feeds ``build_catalog``, one row per product.
 """
 
 from __future__ import annotations
@@ -26,14 +25,12 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import keys_from_listing
-
 # (prefix, continuation_token) -> (keys_in_page, next_token_or_None)
 Pager = Callable[[str, "str | None"], "tuple[list[str], str | None]"]
 
 
 class ParquetKeyLister:
-    """Keys from a staged single-column parquet file (sandbox default)."""
+    """Keys from a staged single-column parquet file (the default)."""
 
     def __init__(self, path: str):
         self.path = path
@@ -42,127 +39,35 @@ class ParquetKeyLister:
         return spark.read.parquet(self.path).select("key")
 
 
-class PaginatedKeyLister:
-    """Keys from a paginated object listing (the production S1 edge).
-
-    ``pager`` is called per prefix with a continuation token (``None``
-    first) and must return ``(keys, next_token)``; ``None`` ends that
-    prefix. ``max_pages`` bounds runaway pagination (a pager that never
-    returns ``None`` fails loudly instead of looping forever).
-
-    Driver memory is BOUNDED by ``chunk_size``, not the listing: pages
-    accumulate in a buffer that flushes every ``chunk_size`` keys —
-    either into an Arrow-batched in-plan chunk (default; the full key set
-    then lives JVM-side as union'd local relations, fine into the
-    low millions — 1M-key probe in NOTES.md) or, with ``stage_dir`` set,
-    into parquet chunk files read back as one ordinary splittable scan
-    (constant driver footprint; the "stage the inventory manifest"
-    production shape for listings that dwarf driver memory).
-    """
-
-    def __init__(
-        self,
-        pager: Pager,
-        prefixes: Iterable[str] = ("",),
-        max_pages: int = 10_000,
-        chunk_size: int = 250_000,
-        stage_dir: "str | None" = None,
-    ):
-        self.pager = pager
-        self.prefixes = list(prefixes)
-        self.max_pages = max_pages
-        self.chunk_size = chunk_size
-        self.stage_dir = stage_dir
-
-    def _flush(self, spark: SparkSession, buf: list, out: list) -> None:
-        if not buf:
-            return
-        if self.stage_dir is None:
-            df = keys_from_listing(spark, buf, chunk_size=self.chunk_size)
-            out.append(df)
-        else:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            pq.write_table(
-                pa.table({"key": pa.array(buf, type=pa.string())}),
-                f"{self.stage_dir}/keys_chunk_{len(out):06d}.parquet",
-            )
-            out.append(None)  # count staged chunks
-        buf.clear()
-
-    def list_keys(self, spark: SparkSession) -> DataFrame:
-        import os
-
-        if self.stage_dir is not None:
-            os.makedirs(self.stage_dir, exist_ok=True)
-            # drop chunk files left over from a previous (interrupted or
-            # larger) run: this run only overwrites indexes it reaches, so
-            # stale higher-index chunks would silently re-enter the read.
-            for entry in os.scandir(self.stage_dir):
-                if entry.name.startswith("keys_chunk_") and entry.name.endswith(
-                    ".parquet"
-                ):
-                    os.unlink(entry.path)
-        buf: list[str] = []
-        chunks: list = []
-        for prefix in self.prefixes:
-            token: str | None = None
-            for _ in range(self.max_pages):
-                page, token = self.pager(prefix, token)
-                buf.extend(page)
-                if len(buf) >= self.chunk_size:
-                    self._flush(spark, buf, chunks)
-                if token is None:
-                    break
-            else:
-                raise RuntimeError(
-                    f"listing for prefix {prefix!r} exceeded "
-                    f"{self.max_pages} pages without completing"
-                )
-        self._flush(spark, buf, chunks)
-        if self.stage_dir is not None:
-            if not chunks:
-                return spark.createDataFrame([], "key string")
-            return spark.read.parquet(self.stage_dir).select("key")
-        if not chunks:
-            return spark.createDataFrame([], "key string")
-        out = chunks[0]
-        for df in chunks[1:]:
-            out = out.unionAll(df)
-        return out
-
-
 class ShardedKeyLister:
-    """Executor-side prefix-sharded listing: page-walking fans out as one
-    task per prefix shard instead of a single driver loop.
+    """Keys from a paginated object listing (the production S1 edge),
+    walked executor-side: one task per prefix shard.
 
-    The driver-side :class:`PaginatedKeyLister` is memory-bounded
-    (chunked/staged) but still O(n_keys) driver TIME — one Python loop
-    pulls every page. At 10M+ keys that serial walk is minutes of driver
-    wall while the cluster idles. Here the shard list (hash prefixes,
-    per-source prefixes — whatever partitions the namespace) becomes a
-    tiny DataFrame, ``mapInPandas`` walks each shard's pages inside its
-    own task, and keys stream out as ordinary Arrow batches: no key list
-    ever materializes on the driver OR whole in an executor (pages yield
-    as they arrive), and listing throughput scales with executor count
-    exactly like every other stage.
+    The shard list (hash prefixes, per-source prefixes — whatever
+    partitions the namespace) becomes a tiny DataFrame, ``mapInPandas``
+    walks each shard's pages inside its own task, and keys stream out as
+    ordinary Arrow batches: no key list ever materializes on the driver OR
+    whole in an executor (pages yield as they arrive), and listing
+    throughput scales with executor count like every other stage. A
+    namespace with no prefix structure is the one shard ``""``: one task
+    walks every page.
 
     ``pager_factory`` is a zero-arg callable constructed ON THE EXECUTOR
-    (serialized by closure pickling) returning the same ``(prefix, token)
-    -> (keys, next_token)`` pager contract — a live client (boto3 etc.)
+    (serialized by closure pickling) returning the ``(prefix, token) ->
+    (keys, next_token)`` pager: the token is ``None`` on the first call,
+    and a ``None`` next token ends that prefix. A live client (boto3 etc.)
     is NOT picklable, so the factory builds one per task (the standard
-    client-per-task pattern). The driver-path lister stays the fallback
-    for un-shardable namespaces (no listable prefix structure).
+    client-per-task pattern). Python workers must be able to import this
+    package when the factory calls into it (e.g. :func:`s3_pager`).
 
-    ``max_pages`` bounds runaway pagination per shard; the failure
-    surfaces as a task error, same contract as the driver path.
+    ``max_pages`` bounds runaway pagination per shard: a pager that never
+    returns ``None`` fails the task loudly instead of looping forever.
     """
 
     def __init__(
         self,
         pager_factory: Callable[[], Pager],
-        prefixes: Iterable[str],
+        prefixes: Iterable[str] = ("",),
         max_pages: int = 10_000,
     ):
         self.pager_factory = pager_factory
@@ -203,88 +108,33 @@ class ShardedKeyLister:
 def auto_lister(
     *,
     path: "str | None" = None,
-    pager: "Pager | None" = None,
     pager_factory: "Callable[[], Pager] | None" = None,
-    prefixes: "Iterable[str] | None" = None,
+    prefixes: Iterable[str] = ("",),
     max_pages: int = 10_000,
-    chunk_size: "int | None" = None,
-    stage_dir: "str | None" = None,
 ):
-    """Select the widest lister the namespace supports — the wired entry
-    point ``Engine``/probes construct through, so the executor-sharded
-    path is the DEFAULT whenever it is available rather than an opt-in
-    parked next to the driver loop:
+    """The lister ``Engine`` and the probes construct through:
 
-    - ``pager_factory`` + ``prefixes`` → :class:`ShardedKeyLister`
-      (executor-side fan-out: one task per prefix shard; 10M-key probe
-      6.8 s / 111 MB vs 13.3 s / 186 MB driver-side — NOTES.md round 9);
-    - ``pager_factory`` without prefixes, or a plain ``pager`` →
-      :class:`PaginatedKeyLister` (the driver loop; an un-shardable
-      namespace has no parallel walk to offer);
-    - ``path`` → :class:`ParquetKeyLister` (staged manifest).
+    - ``path`` → :class:`ParquetKeyLister` (staged manifest);
+    - ``pager_factory`` → :class:`ShardedKeyLister` over ``prefixes``
+      (``max_pages`` bounds each shard's walk).
 
     Exactly one key source must be given. A live client must come through
-    ``pager_factory`` (built per task, closure-pickled); a ``pager``
-    holding one client stays driver-side by construction.
-
-    ``chunk_size``/``stage_dir`` tune DRIVER staging and only apply to
-    the :class:`PaginatedKeyLister` paths; the executor-sharded lister
-    has no driver accumulation to stage and the manifest lister reads an
-    already-staged parquet. Setting either together with
-    ``pager_factory`` + ``prefixes`` OR with ``path=`` raises rather
-    than silently ignoring a tuning the caller believes is in effect
-    (ADVICE round-10).
+    ``pager_factory``: it is built per task on the executor, because a
+    live client does not pickle.
     """
-    given = [x is not None for x in (path, pager, pager_factory)]
-    if sum(given) != 1:
-        raise ValueError(
-            "auto_lister: pass exactly one of path=, pager=, pager_factory="
-        )
-    if path is not None and (chunk_size is not None or stage_dir is not None):
-        # same no-silent-drop contract as the sharded branch below: the
-        # manifest lister reads an already-staged parquet and has no
-        # driver accumulation for these knobs to tune
-        raise ValueError(
-            "auto_lister: chunk_size/stage_dir tune driver staging and "
-            "have no effect on the ParquetKeyLister selected by path=; "
-            "drop them"
-        )
-    plist = list(prefixes) if prefixes is not None else []
-    if pager_factory is not None and plist:
-        if chunk_size is not None or stage_dir is not None:
-            raise ValueError(
-                "auto_lister: chunk_size/stage_dir tune driver staging and "
-                "have no effect on the executor-sharded lister selected by "
-                "pager_factory+prefixes; drop them (or use pager=/no "
-                "prefixes to force the driver path)"
-            )
-        return ShardedKeyLister(pager_factory, plist, max_pages=max_pages)
-    if chunk_size is None:
-        chunk_size = 250_000
-    if pager_factory is not None:
-        return PaginatedKeyLister(
-            pager_factory(),
-            max_pages=max_pages,
-            chunk_size=chunk_size,
-            stage_dir=stage_dir,
-        )
-    if pager is not None:
-        return PaginatedKeyLister(
-            pager,
-            prefixes=plist or ("",),
-            max_pages=max_pages,
-            chunk_size=chunk_size,
-            stage_dir=stage_dir,
-        )
-    return ParquetKeyLister(path)
+    if (path is None) == (pager_factory is None):
+        raise ValueError("auto_lister: pass exactly one of path=, pager_factory=")
+    if path is not None:
+        return ParquetKeyLister(path)
+    return ShardedKeyLister(pager_factory, prefixes, max_pages=max_pages)
 
 
 def s3_pager(client, bucket: str) -> Pager:
     """Adapt a boto3-style client (public ``list_objects_v2`` call shape:
     Bucket/Prefix/ContinuationToken → Contents/IsTruncated/
-    NextContinuationToken) to the :class:`PaginatedKeyLister` pager
-    signature. The client is injected — no SDK import here, so the sandbox
-    tests drive this with a fake and production passes the real client."""
+    NextContinuationToken) to the :class:`ShardedKeyLister` pager
+    signature. The client is injected — no SDK import here, so the tests
+    drive this with a fake and production passes the real client."""
 
     def page(prefix: str, token: "str | None"):
         kwargs = {"Bucket": bucket, "Prefix": prefix}

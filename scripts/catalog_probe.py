@@ -1,22 +1,15 @@
-"""Catalog-at-scale probe: drive ``PaginatedKeyLister`` over ~1M synthetic
-archive keys and show the catalog build is time- and driver-memory-bounded.
+"""Catalog-at-scale probe: list ~1M synthetic archive keys through
+``ShardedKeyLister`` and show the catalog build is time- and
+driver-memory-bounded.
 
-The driver-side listing loop is the engine's one unavoidable O(n_keys)
-driver step (mirroring the reference's boto3 pagination); this probe pins
-its cost envelope at 1000x the realistic archive size (the reference's
-real archive is thousands of keys). Two modes:
+The walk mirrors the reference's boto3 pagination, executor-side: one
+task per hydrophone prefix (50 shards of 1000-key pages), keys stream out
+as Arrow batches, so driver time is O(shards) task scheduling and no key
+list is built on the driver. The probe pins the cost envelope at 1000x the
+realistic archive size (the reference's real archive is thousands of
+keys).
 
-  - in-plan chunks (default): pages flush every ``chunk_size`` keys into
-    Arrow-batched local relations unioned into one plan;
-  - ``--stage``: chunks stream to parquet and read back as one splittable
-    scan — constant driver footprint, the inventory-manifest shape.
-
-  - ``--sharded``: executor-side prefix-sharded walking
-    (``ShardedKeyLister``) — one task per hydrophone prefix, keys stream
-    out as Arrow batches; driver time drops from O(n_keys) to O(shards)
-    task scheduling.
-
-Usage: python scripts/catalog_probe.py [n_keys] [--stage|--sharded]
+Usage: python scripts/catalog_probe.py [n_keys]
 Prints RES lines for NOTES.md.
 """
 
@@ -25,7 +18,6 @@ from __future__ import annotations
 import os
 import resource
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -36,8 +28,6 @@ from ambient_sound_analysis_api_spark.sources.catalog import (  # noqa: E402
     build_catalog,
 )
 from ambient_sound_analysis_api_spark.sources.listing import (  # noqa: E402
-    PaginatedKeyLister,
-    ShardedKeyLister,
     auto_lister,
 )
 
@@ -47,102 +37,58 @@ def rss_mb() -> int:
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    stage = "--stage" in sys.argv[1:]
-    sharded = "--sharded" in sys.argv[1:]
-    n_keys = int(args[0]) if args else 1_000_000
+    n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     page_size = 1000
-    n_pages = n_keys // page_size
+    # reference-grammar keys archive/{hydro}/{start}_{end}_{dt}s_{suffix}.parquet,
+    # partitioned by hydrophone prefix: 50 shards, each walking n_keys/50
+    # keys in 1000-key pages inside its task
+    n_shards = 50
+    per_shard = n_keys // n_shards
+    shard_pages = per_shard // page_size
 
     spark = get_spark("catalog-probe")
 
-    if sharded:
-        # same key grammar, partitioned by hydrophone prefix: 50 shards,
-        # each walking n_keys/50 keys in 1000-key pages inside its task
-        n_shards = 50
-        per_shard = n_keys // n_shards
-        shard_pages = per_shard // page_size
+    def factory():
+        def pager(prefix, token):
+            hydro = prefix.rstrip("/").rsplit("/", 1)[-1]
+            i = int(token) if token else 0
+            base = i * page_size
+            keys = []
+            for j in range(page_size):
+                k = base + j
+                month = (k % 12) + 1
+                dt = (k % 4) + 1
+                suffix = ("broadband", "3oct", "50hz")[k % 3]
+                keys.append(
+                    f"archive/{hydro}/2024{month:02d}01T000000_"
+                    f"2024{month:02d}28T000000_{dt}s_{suffix}.parquet"
+                )
+            return keys, (str(i + 1) if i + 1 < shard_pages else None)
 
-        def factory():
-            def pager(prefix, token):
-                hydro = prefix.rstrip("/").rsplit("/", 1)[-1]
-                i = int(token) if token else 0
-                base = i * page_size
-                keys = []
-                for j in range(page_size):
-                    k = base + j
-                    month = (k % 12) + 1
-                    dt = (k % 4) + 1
-                    suffix = ("broadband", "3oct", "50hz")[k % 3]
-                    keys.append(
-                        f"archive/{hydro}/2024{month:02d}01T000000_"
-                        f"2024{month:02d}28T000000_{dt}s_{suffix}.parquet"
-                    )
-                return keys, (str(i + 1) if i + 1 < shard_pages else None)
+        return pager
 
-            return pager
-
-        print("RES mode: sharded-executor")
-        print("RES rss_before_mb:", rss_mb())
-        # through the wired selection point (Engine's path): a
-        # prefix-bearing namespace auto-selects the executor-sharded walk
-        lister = auto_lister(
-            pager_factory=factory,
-            prefixes=[f"archive/hydro{i:02d}/" for i in range(n_shards)],
-            max_pages=shard_pages + 1,
-        )
-        assert isinstance(lister, ShardedKeyLister)
-        t0 = time.time()
-        keys_df = lister.list_keys(spark)
-        n_listed = keys_df.count()
-        t1 = time.time()
-        print(f"RES list_{n_keys}_keys_s:", round(t1 - t0, 2),
-              "listed:", n_listed)
-        print("RES rss_after_listing_mb:", rss_mb())
-        cat = build_catalog(lister.list_keys(spark))
-        rows = cat.count()
-        t2 = time.time()
-        print("RES build_catalog_s:", round(t2 - t1, 2), "catalog_rows:", rows)
-        print("RES total_s:", round(t2 - t0, 2))
-        print("RES rss_peak_mb:", rss_mb())
-        assert rows > 0 and n_listed == n_keys
-        return 0
-
-    # reference-grammar keys: archive/{hydro}/{start}_{end}_{dt}s_{suffix}.parquet
-    def pager(prefix: str, token: "str | None"):
-        i = int(token) if token else 0
-        base = i * page_size
-        keys = []
-        for j in range(page_size):
-            k = base + j
-            hydro = f"hydro{k % 50:02d}"
-            month = (k % 12) + 1
-            dt = (k % 4) + 1
-            suffix = ("broadband", "3oct", "50hz")[k % 3]
-            keys.append(
-                f"archive/{hydro}/2024{month:02d}01T000000_"
-                f"2024{month:02d}28T000000_{dt}s_{suffix}.parquet"
-            )
-        return keys, (str(i + 1) if i + 1 < n_pages else None)
-
-    print(f"RES mode: {'staged-parquet' if stage else 'in-plan-chunks'}")
+    print("RES mode: sharded-executor")
     print("RES rss_before_mb:", rss_mb())
-    stage_dir = tempfile.mkdtemp(prefix="catprobe_") if stage else None
-    lister = PaginatedKeyLister(
-        pager, max_pages=n_pages + 1, chunk_size=250_000, stage_dir=stage_dir
+    # through the selection point Engine uses
+    lister = auto_lister(
+        pager_factory=factory,
+        prefixes=[f"archive/hydro{i:02d}/" for i in range(n_shards)],
+        max_pages=shard_pages + 1,
     )
     t0 = time.time()
     keys_df = lister.list_keys(spark)
+    n_listed = keys_df.count()
     t1 = time.time()
-    print(f"RES list_{n_keys}_keys_s:", round(t1 - t0, 2))
+    print(f"RES list_{n_keys}_keys_s:", round(t1 - t0, 2),
+          "listed:", n_listed)
     print("RES rss_after_listing_mb:", rss_mb())
-    cat = build_catalog(keys_df)
+    cat = build_catalog(lister.list_keys(spark))
     rows = cat.count()
     t2 = time.time()
     print("RES build_catalog_s:", round(t2 - t1, 2), "catalog_rows:", rows)
     print("RES total_s:", round(t2 - t0, 2))
     print("RES rss_peak_mb:", rss_mb())
-    assert rows > 0
+    assert rows > 0 and n_listed == n_keys
     return 0
 
 

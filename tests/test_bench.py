@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, DataFrameWriter
+from pyspark.sql import DataFrameWriter
+from pyspark.sql.classic.dataframe import DataFrame
 
 import bench
 from ambient_sound_analysis_api_spark.registry import queries

@@ -2,9 +2,10 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pandas as pd
+
 from ambient_sound_analysis_api_spark.sources.catalog import (
     build_catalog,
-    keys_from_listing,
     parse_archive_keys,
 )
 
@@ -21,14 +22,18 @@ KEYS = [
 ]
 
 
+def _keys(spark):
+    return spark.createDataFrame(pd.DataFrame({"key": KEYS}))
+
+
 def test_parse_skips_malformed_and_filters(spark):
-    parsed = parse_archive_keys(keys_from_listing(spark, KEYS)).collect()
+    parsed = parse_archive_keys(_keys(spark)).collect()
     assert len(parsed) == 4
     assert all(r["hydrophone"] == "ORCASOUND_LAB" for r in parsed)
 
 
 def test_catalog_coverage(spark):
-    cat = build_catalog(keys_from_listing(spark, KEYS)).collect()
+    cat = build_catalog(_keys(spark)).collect()
     by_key = {(r["freq_type"], r["delta_f"], r["delta_t"]): r for r in cat}
     bb = by_key[("broadband", None, 1)]
     assert bb["file_count"] == 2

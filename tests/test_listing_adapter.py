@@ -1,9 +1,9 @@
 """Tests for the pluggable archive-key listing boundary (sources/listing.py).
 
 A fake three-page pager and a fake boto3-shaped client prove the production
-S1 edge (paginated listing → keys DF → catalog) without any SDK: the same
-``PaginatedKeyLister`` wired into ``Engine(key_lister=...)`` must serve
-requests identically to the staged-parquet default.
+S1 edge (paginated listing → keys DF → catalog) without any SDK: the
+executor-side ``ShardedKeyLister`` wired into ``Engine(key_lister=...)``
+must serve requests identically to the staged-parquet default.
 """
 
 from __future__ import annotations
@@ -12,8 +12,9 @@ import pytest
 
 from ambient_sound_analysis_api_spark.sources.catalog import build_catalog
 from ambient_sound_analysis_api_spark.sources.listing import (
-    PaginatedKeyLister,
     ParquetKeyLister,
+    ShardedKeyLister,
+    auto_lister,
     s3_pager,
 )
 
@@ -25,25 +26,25 @@ KEYS = [
 ]
 
 
-def _three_page_pager(calls):
+def test_paginated_lister_exhausts_pages_and_builds_catalog(spark):
+    # the factory is pickled by value to the worker, so it is defined here
+    # (a module-level one pickles by reference to this test module)
     pages = [KEYS[:2], KEYS[2:3], KEYS[3:]]
 
-    def pager(prefix, token):
-        calls.append((prefix, token))
-        i = 0 if token is None else int(token)
-        next_token = str(i + 1) if i + 1 < len(pages) else None
-        return pages[i], next_token
+    def three_pages():
+        def pager(prefix, token):
+            i = 0 if token is None else int(token)
+            next_token = str(i + 1) if i + 1 < len(pages) else None
+            return pages[i], next_token
 
-    return pager
+        return pager
 
-
-def test_paginated_lister_exhausts_pages_and_builds_catalog(spark):
-    calls = []
-    lister = PaginatedKeyLister(_three_page_pager(calls), prefixes=["archive/"])
-    keys_df = lister.list_keys(spark)
-    assert [r["key"] for r in keys_df.collect()] == KEYS
-    # pagination: token threaded page to page, None terminates
-    assert calls == [("archive/", None), ("archive/", "1"), ("archive/", "2")]
+    # one shard walks every page in one task; the exact page order shows
+    # the token was threaded page to page and None ended the walk
+    for prefix in ("archive/", ""):
+        lister = ShardedKeyLister(three_pages, prefixes=[prefix])
+        keys_df = lister.list_keys(spark)
+        assert [r["key"] for r in keys_df.collect()] == KEYS
     cat = build_catalog(keys_df).collect()
     assert {(r["hydrophone"], r["freq_type"]) for r in cat} == {
         ("CLICK", "broadband"), ("VIEW", "octave_bands"),
@@ -51,15 +52,7 @@ def test_paginated_lister_exhausts_pages_and_builds_catalog(spark):
     assert all(r["file_count"] >= 1 for r in cat)  # malformed key dropped
 
 
-def test_runaway_pager_fails_loudly(spark):
-    lister = PaginatedKeyLister(
-        lambda prefix, token: ([], "again"), max_pages=5
-    )
-    with pytest.raises(RuntimeError, match="exceeded 5 pages"):
-        lister.list_keys(spark)
-
-
-def test_s3_pager_adapts_boto3_shape(spark):
+def test_s3_pager_adapts_boto3_shape():
     class FakeClient:
         def __init__(self):
             self.requests = []
@@ -76,79 +69,12 @@ def test_s3_pager_adapts_boto3_shape(spark):
                     "IsTruncated": False}
 
     client = FakeClient()
-    lister = PaginatedKeyLister(
-        s3_pager(client, "noise-archive"), prefixes=["archive/"]
-    )
-    assert [r["key"] for r in lister.list_keys(spark).collect()] == KEYS
+    page = s3_pager(client, "noise-archive")
+    assert page("archive/", None) == (KEYS[:2], "t2")
+    assert page("archive/", "t2") == (KEYS[2:], None)
     assert client.requests[0] == {"Bucket": "noise-archive",
                                   "Prefix": "archive/"}
     assert client.requests[1]["ContinuationToken"] == "t2"
-
-
-def test_engine_accepts_injected_lister(spark, sf_dir, tmp_path):
-    """Engine(key_lister=PaginatedKeyLister(...)) serves identically to the
-    staged-parquet default — the production wiring is one argument."""
-    from ambient_sound_analysis_api_spark.serving import Engine
-    from ambient_sound_analysis_api_spark.sources.domain import (
-        materialize_domain,
-    )
-
-    root = str(tmp_path / "root")
-    materialize_domain(spark, sf_dir, root)
-    staged = [
-        r["key"]
-        for r in ParquetKeyLister(f"{root}/archive_keys.parquet")
-        .list_keys(spark)
-        .collect()
-    ]
-
-    def one_page(prefix, token):
-        return staged, None
-
-    e_default = Engine(spark, root)
-    e_injected = Engine(spark, root, key_lister=PaginatedKeyLister(one_page))
-    assert e_injected.options() == e_default.options()
-
-
-def test_paginated_lister_chunked_flush_matches_unchunked(spark):
-    """chunk_size smaller than the listing: the buffer flushes mid-
-    pagination and the union of chunks must equal the one-shot listing."""
-    from ambient_sound_analysis_api_spark.sources.listing import (
-        PaginatedKeyLister,
-    )
-
-    def pager(prefix, token):
-        i = int(token) if token else 0
-        keys = [f"archive/h/{i:03d}_{j:03d}.parquet" for j in range(10)]
-        return keys, (str(i + 1) if i + 1 < 7 else None)
-
-    small = PaginatedKeyLister(pager, chunk_size=25)
-    big = PaginatedKeyLister(pager, chunk_size=10_000)
-    a = sorted(r["key"] for r in small.list_keys(spark).collect())
-    b = sorted(r["key"] for r in big.list_keys(spark).collect())
-    assert a == b and len(a) == 70
-
-
-def test_paginated_lister_stage_dir_streams_to_parquet(spark, tmp_path):
-    """stage_dir: chunks land as parquet files (constant driver footprint)
-    and read back as one scan with the same keys."""
-    import os
-
-    from ambient_sound_analysis_api_spark.sources.listing import (
-        PaginatedKeyLister,
-    )
-
-    def pager(prefix, token):
-        i = int(token) if token else 0
-        keys = [f"archive/h/{i:03d}_{j:03d}.parquet" for j in range(10)]
-        return keys, (str(i + 1) if i + 1 < 7 else None)
-
-    stage = str(tmp_path / "stage")
-    lister = PaginatedKeyLister(pager, chunk_size=25, stage_dir=stage)
-    got = sorted(r["key"] for r in lister.list_keys(spark).collect())
-    assert len(got) == 70 and got[0].startswith("archive/h/")
-    chunk_files = [f for f in os.listdir(stage) if f.endswith(".parquet")]
-    assert len(chunk_files) == 3  # 25+25+20
 
 
 def test_parse_archive_keys_malformed_skip_is_unconditional(spark):
@@ -177,45 +103,11 @@ def test_parse_archive_keys_malformed_skip_is_unconditional(spark):
     assert [r["key"] for r in rows2] == [r["key"] for r in rows]
 
 
-def test_paginated_lister_stage_dir_cleans_stale_chunks(spark, tmp_path):
-    """Chunk files left by a previous (interrupted or larger) run must not
-    re-enter the listing: a later, smaller run only overwrites the chunk
-    indexes it reaches, so without the startup cleanup the stale
-    higher-index chunks would contribute duplicate/phantom keys."""
-    from ambient_sound_analysis_api_spark.sources.listing import (
-        PaginatedKeyLister,
-    )
-
-    def big_pager(prefix, token):
-        i = int(token) if token else 0
-        keys = [f"archive/h/{i:03d}_{j:03d}.parquet" for j in range(10)]
-        return keys, (str(i + 1) if i + 1 < 7 else None)
-
-    def small_pager(prefix, token):
-        return [f"archive/s/{j:03d}.parquet" for j in range(5)], None
-
-    stage = str(tmp_path / "stage")
-    PaginatedKeyLister(big_pager, chunk_size=25, stage_dir=stage).list_keys(
-        spark
-    ).count()  # leaves 3 chunk files behind
-    got = sorted(
-        r["key"]
-        for r in PaginatedKeyLister(
-            small_pager, chunk_size=25, stage_dir=stage
-        ).list_keys(spark).collect()
-    )
-    assert len(got) == 5 and all(k.startswith("archive/s/") for k in got)
-
-
 def test_sharded_lister_matches_driver_lister(spark):
-    """Executor-side sharded walking must produce exactly the key set the
-    driver-side lister produces over the same prefixes, and the plan must
+    """Executor-side sharded walking must produce exactly the key set a
+    driver-side Python walk of the same pages produces, and the plan must
     be the Arrow mapInPandas fan-out (one task per shard), not a
     driver-built local relation."""
-    from ambient_sound_analysis_api_spark.sources.listing import (
-        PaginatedKeyLister,
-        ShardedKeyLister,
-    )
 
     def factory():
         def pager(prefix, token):
@@ -226,36 +118,29 @@ def test_sharded_lister_matches_driver_lister(spark):
         return pager
 
     prefixes = [f"archive/h{i:02d}/" for i in range(8)]
+    expected = sorted(
+        f"{p}{i:02d}_{j}.parquet"
+        for p in prefixes for i in range(3) for j in range(5)
+    )
     sharded = ShardedKeyLister(factory, prefixes=prefixes)
-    driver = PaginatedKeyLister(factory(), prefixes=prefixes)
-    a = sorted(r["key"] for r in sharded.list_keys(spark).collect())
-    b = sorted(r["key"] for r in driver.list_keys(spark).collect())
-    assert a == b and len(a) == 8 * 3 * 5
+    assert sorted(r["key"] for r in sharded.list_keys(spark).collect()) == expected
+    assert len(expected) == 8 * 3 * 5
     # the listing itself runs executor-side
     plan = sharded.list_keys(spark)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
 
 
 def test_sharded_lister_runaway_pager_fails_loudly(spark):
-    from ambient_sound_analysis_api_spark.sources.listing import (
-        ShardedKeyLister,
-    )
-
     def factory():
         return lambda prefix, token: (["k"], "again")
 
     lister = ShardedKeyLister(factory, prefixes=["a/"], max_pages=4)
-    import pytest as _pytest
 
-    with _pytest.raises(Exception, match="exceeded 4 pages"):
+    with pytest.raises(Exception, match="exceeded 4 pages"):
         lister.list_keys(spark).count()
 
 
 def test_sharded_lister_feeds_catalog(spark):
-    from ambient_sound_analysis_api_spark.sources.listing import (
-        ShardedKeyLister,
-    )
-
     def factory():
         def pager(prefix, token):
             hydro = prefix.split("/")[1]
@@ -272,65 +157,62 @@ def test_sharded_lister_feeds_catalog(spark):
     assert {r["hydrophone"] for r in cat} == {"CLICK", "VIEW"}
 
 
-def test_auto_lister_selection_rules(spark, tmp_path):
-    """auto_lister picks the widest lister the namespace supports:
-    factory+prefixes → executor-sharded; factory alone or plain pager →
-    driver pagination; path → staged parquet. Exactly one source."""
-    import pytest as _pytest
-
-    from ambient_sound_analysis_api_spark.sources.listing import (
-        PaginatedKeyLister,
-        ParquetKeyLister,
-        ShardedKeyLister,
-        auto_lister,
-    )
+def test_auto_lister_selection_rules():
+    """auto_lister: path → staged parquet; pager_factory → executor walk
+    (one shard "" unless prefixes are given). Exactly one source."""
 
     def factory():
         return lambda prefix, token: ([f"{prefix}x.parquet"], None)
 
-    assert isinstance(
-        auto_lister(pager_factory=factory, prefixes=["a/", "b/"]),
-        ShardedKeyLister,
-    )
-    assert isinstance(
-        auto_lister(pager_factory=factory), PaginatedKeyLister
-    )
-    assert isinstance(
-        auto_lister(pager=factory(), prefixes=["a/"]), PaginatedKeyLister
-    )
     assert isinstance(auto_lister(path="/x/keys.parquet"), ParquetKeyLister)
-    with _pytest.raises(ValueError, match="exactly one"):
+    sharded = auto_lister(pager_factory=factory, prefixes=["a/", "b/"])
+    assert isinstance(sharded, ShardedKeyLister)
+    assert sharded.prefixes == ["a/", "b/"]
+    one_shard = auto_lister(pager_factory=factory, max_pages=7)
+    assert isinstance(one_shard, ShardedKeyLister)
+    assert one_shard.prefixes == [""] and one_shard.max_pages == 7
+    with pytest.raises(ValueError, match="exactly one"):
         auto_lister()
-    with _pytest.raises(ValueError, match="exactly one"):
-        auto_lister(path="/x", pager=factory())
-    # driver-staging knobs on the executor-sharded path raise instead of
-    # silently doing nothing (ADVICE round-10)
-    with _pytest.raises(ValueError, match="driver staging"):
-        auto_lister(
-            pager_factory=factory, prefixes=["a/"], chunk_size=1000
-        )
-    with _pytest.raises(ValueError, match="driver staging"):
-        auto_lister(
-            pager_factory=factory, prefixes=["a/"], stage_dir="/tmp/x"
-        )
-    # ...but they still apply on the driver-paginated paths
-    assert isinstance(
-        auto_lister(pager=factory(), chunk_size=1000), PaginatedKeyLister
-    )
+    with pytest.raises(ValueError, match="exactly one"):
+        auto_lister(path="/x", pager_factory=factory)
+    # pager= is not a parameter: a live client comes through pager_factory
+    with pytest.raises(TypeError):
+        auto_lister(pager=factory())
 
 
-def test_engine_through_auto_selected_sharded_lister(spark, sf_dir, tmp_path):
-    """The catalog/serving path rides the executor-sharded lister when
-    the namespace exposes prefixes: Engine(key_lister=auto_lister(
-    pager_factory=..., prefixes=...)) serves identically to the staged
-    default — the round-9 infra win on the default path, not parked."""
+def test_engine_accepts_injected_lister(spark, sf_dir, tmp_path):
+    """Engine(key_lister=ShardedKeyLister(...)) with one shard walking every
+    key serves identically to the staged-parquet default — the production
+    wiring is one argument."""
     from ambient_sound_analysis_api_spark.serving import Engine
     from ambient_sound_analysis_api_spark.sources.domain import (
         materialize_domain,
     )
-    from ambient_sound_analysis_api_spark.sources.listing import (
-        ShardedKeyLister,
-        auto_lister,
+
+    root = str(tmp_path / "root")
+    materialize_domain(spark, sf_dir, root)
+    staged = [
+        r["key"]
+        for r in ParquetKeyLister(f"{root}/archive_keys.parquet")
+        .list_keys(spark)
+        .collect()
+    ]
+
+    def one_page():
+        return lambda prefix, token: (staged, None)
+
+    e_default = Engine(spark, root)
+    e_injected = Engine(spark, root, key_lister=ShardedKeyLister(one_page))
+    assert e_injected.options() == e_default.options()
+
+
+def test_engine_through_auto_selected_sharded_lister(spark, sf_dir, tmp_path):
+    """Prefix-sharded through a fake boto3 client that s3_pager adapts
+    inside each task, the executor-side walk serves identically to the
+    staged default."""
+    from ambient_sound_analysis_api_spark.serving import Engine
+    from ambient_sound_analysis_api_spark.sources.domain import (
+        materialize_domain,
     )
 
     root = str(tmp_path / "root")
@@ -348,16 +230,24 @@ def test_engine_through_auto_selected_sharded_lister(spark, sf_dir, tmp_path):
         for h in hydros
     }
 
-    def factory():
-        def pager(prefix, token):
-            return by_prefix.get(prefix, []), None
+    class FakeClient:
+        """One key per page, so every shard threads continuation tokens."""
 
-        return pager
+        def list_objects_v2(self, Bucket, Prefix, ContinuationToken="0"):
+            keys = by_prefix.get(Prefix, [])
+            i = int(ContinuationToken)
+            more = i + 1 < len(keys)
+            return {
+                "Contents": [{"Key": k} for k in keys[i:i + 1]],
+                "IsTruncated": more,
+                "NextContinuationToken": str(i + 1) if more else None,
+            }
 
-    lister = auto_lister(
-        pager_factory=factory, prefixes=sorted(by_prefix)
+    sharded = auto_lister(
+        pager_factory=lambda: s3_pager(FakeClient(), "noise-archive"),
+        prefixes=sorted(by_prefix),
     )
-    assert isinstance(lister, ShardedKeyLister)
+    assert isinstance(sharded, ShardedKeyLister)
     e_default = Engine(spark, root)
-    e_sharded = Engine(spark, root, key_lister=lister)
+    e_sharded = Engine(spark, root, key_lister=sharded)
     assert e_sharded.options() == e_default.options()

@@ -453,17 +453,6 @@ def test_evalmetrics_input_guards(spark):
         calibration_bins(df, F.col("s"), F.col("y") == 1, n_bins=0)
 
 
-def test_auto_lister_rejects_staging_knobs_on_path(tmp_path):
-    import pytest as _pytest
-
-    from ambient_sound_analysis_api_spark.sources.listing import auto_lister
-
-    with _pytest.raises(ValueError, match="chunk_size/stage_dir"):
-        auto_lister(path=str(tmp_path / "m.parquet"), chunk_size=1000)
-    with _pytest.raises(ValueError, match="chunk_size/stage_dir"):
-        auto_lister(path=str(tmp_path / "m.parquet"), stage_dir=str(tmp_path))
-
-
 def test_calibration_clamps_out_of_domain_scores(spark):
     from ambient_sound_analysis_api_spark.operators.evalmetrics import (
         calibration_bins,
